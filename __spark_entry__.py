@@ -16,6 +16,7 @@ order by a unique key last.
 from __future__ import annotations
 
 import os
+import warnings
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,6 +44,14 @@ def _prep(spark: SparkSession, sf_dir: str):
         pass
 
 
+def _warn_uncertified(view: str, exc: Exception) -> None:
+    # the view still answers correctly without its certificate, but its
+    # queries lose the shadow-column codegen route: say so, loudly
+    warnings.warn(f"view {view} left uncertified (queries over it keep "
+                  f"the Python kernels): {type(exc).__name__}: {exc}",
+                  RuntimeWarning, stacklevel=2)
+
+
 def _make_views(spark: SparkSession):
     # derived deterministic geometry views (FIXTURES.md F7 pattern)
     spark.sql("""
@@ -58,8 +67,8 @@ def _make_views(spark: SparkSession):
         # codegen, and the now-unused ST_Point constructor prunes away)
         from sedona_db_spark.plans.sql_rewrite import certify_point_view
         certify_point_view(spark, "cust_pts", {"geom": ("px", "py")})
-    except Exception:
-        pass
+    except Exception as e:
+        _warn_uncertified("cust_pts", e)
     # clustered geography probe points (geo_skew_join_clustered): the
     # same rows the query previously built inline, now as a view with
     # shadow lon/lat so the geography point certificate (one verified
@@ -82,8 +91,8 @@ def _make_views(spark: SparkSession):
             certify_geog_point_view
         certify_geog_point_view(spark, "geo_skew_pts",
                                 {"geog": ("glon", "glat")})
-    except Exception:
-        pass
+    except Exception as e:
+        _warn_uncertified("geo_skew_pts", e)
     spark.sql("""
       CREATE OR REPLACE TEMP VIEW nation_boxes AS
       SELECT n_nationkey, n_name,

@@ -134,24 +134,6 @@ def line_dup_stats(df: DataFrame, text_col: str = "text",
         .alias("dup_char_frac"))
 
 
-def _gram_hashes(toks, n: int):
-    """xxhash64 of every token n-gram of an array column — fully native
-    (sequence -> slice -> concat_ws -> xxhash64), one value per window.
-
-    NOTE: kept for reference/fallback, but decontaminate uses the Arrow
-    kernel below — Spark evaluates higher-order functions (transform/
-    slice lambdas) on the INTERPRETED expression path, measured ~10x
-    slower than the batched Python kernel at sf10 (17.7 s vs 1.7 s for
-    21M grams)."""
-    count = F.size(toks) - (n - 1)
-    return F.when(
-        count >= 1,
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(count, F.lit(1))),
-            lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i, n))))
-    ).otherwise(F.array().cast("array<bigint>"))
-
-
 # Java's \s character class, exactly ([ \t\n\x0B\f\r], ASCII-only): the
 # kernel below must tokenize bit-identically to functions.text.tokens()
 # (split(lower(trim(text)), '\\s+')) or decontamination joins diverge
@@ -282,9 +264,10 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 13,
     collect degrades to the explode -> hash equi-join -> anti/left-join
     plan, which shuffles only 64-bit hashes and ids.  Gram hashing is a
     batched Python kernel by measurement, not accident: the native
-    higher-order-function formulation (_gram_hashes) runs on Spark's
-    interpreted expression path and was 10x slower at sf10 (17.7 s vs
-    1.7 s for 21M grams)."""
+    higher-order-function formulation (sequence -> slice -> concat_ws ->
+    xxhash64 in a transform lambda) runs on Spark's interpreted
+    expression path and was 10x slower at sf10 (17.7 s vs 1.7 s for 21M
+    grams)."""
     if mode not in ("remove", "flag"):
         raise ValueError(f"mode must be 'remove' or 'flag', got {mode!r}")
     btc = bench_text_col or text_col

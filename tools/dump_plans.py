@@ -1,9 +1,11 @@
-"""Dump .explain("formatted") for declared queries to plans/r11/.
+"""Dump .explain("formatted") for declared queries into a directory.
 
-Usage: python tools/dump_plans.py <suffix> [query ...]
-Writes plans/r11/<query>_<suffix>.txt for each named query (default: all
-bench HEADLINE queries).  Runs at $SPARK_GRAFT_SF_DIR (default sf0.1)
-so plans match the bench's AQE/stats decisions.
+Usage: python tools/dump_plans.py <out_dir> <suffix> [query ...]
+Writes <out_dir>/<query>_<suffix>.txt for each named query (default: all
+bench HEADLINE queries), creating <out_dir> if needed; e.g.
+``python tools/dump_plans.py plans/r12 after``.  Runs at
+$SPARK_GRAFT_SF_DIR (default sf0.1) so plans match the bench's AQE/stats
+decisions.
 """
 
 from __future__ import annotations
@@ -15,8 +17,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_dir, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     import __spark_entry__ as entrymod
@@ -27,8 +31,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     entrymod._prep(spark, sf_dir)
     qs = entrymod.queries()
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r11")
     os.makedirs(out_dir, exist_ok=True)
     for name in names or HEADLINE:
         df = qs[name](spark, sf_dir)
