@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sedona_db_spark.operators.result_cache import stats_memo
+
 R_EARTH_M = 6371008.8                       # IUGG mean radius
 M_PER_DEG = math.pi * R_EARTH_M / 180.0     # meridian meters per degree
 
@@ -486,10 +488,7 @@ def _probe_extent_deg(df: DataFrame, col: str, n: int = 64) -> list[float]:
     semantic hash like the skew histogram (r11): repeated builds of the
     same join shape were paying one Spark job per side per build."""
     from sedona_db_spark.geom import core
-    from sedona_db_spark.operators.spatial_join import (
-        _plan_key, _stats_memo_get, _stats_memo_put)
-    mkey = ("geoext", _plan_key(df), col, n)
-    memo = _stats_memo_get(mkey)
+    memo, remember = stats_memo("geoext", df, col, n)
     if memo is not None:
         return list(memo)
     exts = []
@@ -512,7 +511,7 @@ def _probe_extent_deg(df: DataFrame, col: str, n: int = 64) -> list[float]:
                         lon_span * math.cos(math.radians(
                             min(abs(mid), 89.0)))))
     out = sorted(exts)
-    _stats_memo_put(mkey, list(out))
+    remember(list(out))
     return out
 
 
@@ -550,7 +549,9 @@ def geography_relation_join(
         raise ValueError(
             f"unsupported geography join predicate {predicate!r} "
             f"(supported: {sorted(set(_RELATION_SQL))} or distance_m)")
-    from sedona_db_spark.operators.spatial_join import normalize_how
+    from sedona_db_spark.operators.spatial_join import (join_mode_from_inner,
+                                                        normalize_how,
+                                                        tag_row_ids)
     how_n = normalize_how(how)
     rcols = {c: (f"right_{c}" if c in left.columns else c)
              for c in right.columns}
@@ -560,12 +561,11 @@ def geography_relation_join(
         return _geography_relation_inner(left, right_r, left_geom, g2,
                                          predicate, distance_m, cell_deg,
                                          lonlat1=left_lonlat)
-    from sedona_db_spark.plans.sql_rewrite import _lattice_from_inner
-    return _lattice_from_inner(
-        left, right_r, how_n,
-        lambda l2, r2: _geography_relation_inner(
-            l2, r2, left_geom, g2, predicate, distance_m, cell_deg,
-            lonlat1=left_lonlat))
+    l2, lids, r2, rids = tag_row_ids(how_n, left, right_r, "__lat")
+    inner = _geography_relation_inner(l2, r2, left_geom, g2, predicate,
+                                      distance_m, cell_deg,
+                                      lonlat1=left_lonlat)
+    return join_mode_from_inner(how_n, inner, l2, lids, r2, rids)
 
 
 def _skew_hot_cells(ldf: DataFrame, g1: str, cover_pad, spark) -> dict:
@@ -604,11 +604,7 @@ def _skew_hot_cells(ldf: DataFrame, g1: str, cover_pad, spark) -> dict:
                 "spark.sedona_db.geography_join.skew_target_rows must be "
                 f"an integer row count, got {raw!r}")
         target = 2_000_000
-    from sedona_db_spark.operators.spatial_join import (_plan_key,
-                                                        _stats_memo_get,
-                                                        _stats_memo_put)
-    key = ("geoskew", _plan_key(ldf), g1, target)
-    memo = _stats_memo_get(key)
+    memo, remember = stats_memo("geoskew", ldf, g1, target)
     if memo is not None:
         return dict(memo)
     from sedona_db_spark.plans.width import planned_size_bytes
@@ -634,7 +630,7 @@ def _skew_hot_cells(ldf: DataFrame, g1: str, cover_pad, spark) -> dict:
     for r in rows:
         est = int(r["count"] / frac)
         hot[int(r["__gc"])] = int(min(max(est // target + 1, 2), 64))
-    _stats_memo_put(key, dict(hot))
+    remember(dict(hot))
     return hot
 
 

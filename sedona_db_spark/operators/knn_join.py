@@ -30,6 +30,8 @@ from pyspark.sql import types as T
 from sedona_db_spark.functions.kernels import _decode, _fast_points
 from sedona_db_spark.geom import algorithms as alg
 from sedona_db_spark.geom import core
+from sedona_db_spark.operators.result_cache import (BoundedPersistPool,
+                                                    stats_memo)
 
 
 class _GridIndex:
@@ -307,14 +309,12 @@ def knn_join(
     # path-choice probe: scans at most threshold+1 rows, never a full
     # count; memoized on the analyzed-plan hash (a stale verdict picks
     # a path, never changes results — both paths are exact)
-    from sedona_db_spark.operators.spatial_join import (
-        _plan_key, _stats_memo_get, _stats_memo_put)
-    nkey = ("knnpath", _plan_key(objects), int(broadcast_threshold))
-    n_small = _stats_memo_get(nkey)
+    n_small, remember = stats_memo("knnpath", objects,
+                                   int(broadcast_threshold))
     if n_small is None:
         try:
             n_small = objects.limit(broadcast_threshold + 1).count()
-            _stats_memo_put(nkey, n_small)
+            remember(n_small)
         except Exception:
             n_small = None
     if n_small is None or n_small > broadcast_threshold:
@@ -527,8 +527,6 @@ def knn_join(
 # referenced, losing its caching on interleaved calls, and was not
 # thread-safe (round-6 advisor).  Frames older than that are unpersisted:
 # their dependent results recompute correctly, just without the cache.
-from sedona_db_spark.operators.result_cache import BoundedPersistPool
-
 # 2 frames/call x 2 recent calls
 _PARTITIONED_POOL = BoundedPersistPool(keep=4)
 
@@ -643,10 +641,7 @@ def knn_join_partitioned(
     # evicted it, the frame recomputes — slower, never wrong.  Stats
     # steer grid sizing and plan choice only: round B's completion
     # bound and the per-row exact-mode guards own correctness.
-    from sedona_db_spark.operators.spatial_join import (
-        _plan_key, _stats_memo_get, _stats_memo_put)
-    obkey = ("knnob", _plan_key(obj), ogeom)
-    memo = _stats_memo_get(obkey)
+    memo, remember = stats_memo("knnob", obj, ogeom)
     if memo is not None:
         ob, stats = memo
     else:
@@ -658,7 +653,7 @@ def knn_join_partitioned(
             F.max(F.length(ogeom)).alias("maxlen"),
             F.min((F.col("__ocls") == 2).cast("int")).alias("allrect")
         ).collect()[0]
-        _stats_memo_put(obkey, (ob, stats))
+        remember((ob, stats))
     if stats["n"] == 0:
         empty_schema = qb.drop("__qid", "__qx", "__qy", "__qhd").schema
         return queries.sparkSession.createDataFrame([], empty_schema)
@@ -673,13 +668,12 @@ def knn_join_partitioned(
     # extra complete scan of a possibly-100TB table before any real work.
     # The probe decides the PLAN; a per-row guard in the native branch
     # below keeps correctness if a non-point row hides past the probe.
-    qkey = ("knnq", _plan_key(queries), query_geom)
-    qry_nonpoint = _stats_memo_get(qkey)
+    qry_nonpoint, remember = stats_memo("knnq", queries, query_geom)
     if qry_nonpoint is None:
         qprobe = [r[0] for r in queries.select(F.length(query_geom))
                   .limit(4096).collect()]
         qry_nonpoint = any(l is not None and l != 21 for l in qprobe)
-        _stats_memo_put(qkey, qry_nonpoint)
+        remember(qry_nonpoint)
     exact_mode = obj_nonpoint or qry_nonpoint
     import math as _math
     if grid_cells is None:

@@ -1,4 +1,8 @@
-"""Bounded FIFO of persisted result DataFrames.
+"""Plan-keyed caches: the plan key, the plan-stats memo and the bounded
+FIFO of persisted result DataFrames.
+
+All three key on :func:`plan_key`, the analyzed plan's fingerprint;
+:func:`reset` empties every one of them (cold measurements, teardown).
 
 Operators that hand a persist()-ed DataFrame back to the caller (KNN join
 intermediates, minhash/simhash/near-dup pair sets) enroll it here instead of
@@ -16,9 +20,79 @@ retention window is the idiomatic substitute.
 from __future__ import annotations
 
 import threading
-from collections import deque
+import weakref
+from collections import OrderedDict, deque
 
 from pyspark.sql import DataFrame
+
+
+def plan_key(df: DataFrame):
+    """(semantic hash, size fingerprint) of the analyzed plan — stable
+    across re-construction of the same logical query, different for
+    different inputs; None when the plan cannot be reached.
+
+    The size fingerprint (Catalyst's analyzed-plan sizeInBytes, a
+    driver-side metadata scalar — r11 verdict #2b / advisor) invalidates
+    entries when the underlying files change under an identical logical
+    plan: an append grows the estimate, so the next identical call
+    re-probes instead of serving stats (or a persisted frame) captured
+    against the old file set.  A same-size in-place rewrite is the one
+    shape this misses — the same blind spot any name/metadata
+    fingerprint has without content hashing.  inputFiles() would also
+    work but ships every file name to Python per call (unbounded at
+    100 TB); the stats scalar is one RPC."""
+    try:
+        qe = df._jdf.queryExecution()
+        h = qe.analyzed().semanticHash()
+    except Exception:
+        return None
+    try:
+        # ANALYZED-plan stats: reflects the leaf file sizes (what the
+        # fingerprint needs) without running the optimizer per probe
+        sz = int(str(qe.analyzed().stats().sizeInBytes()))
+    except Exception:
+        sz = -1
+    return (h, sz)
+
+
+# ---------------------------------------------------------------------
+# bounded plan-stats memo: repeated construction of the same join
+# (bench reps, iterative pipelines) re-ran the build-side LIMIT probe
+# and the sampled-quantile scan every call (~1.5 s/call at sf10).
+# Only decisions that stay SAFE under data change are memoized: grid
+# edges and skew histograms (balance-only), path-choice probes such as
+# the "build side is large" verdict (every path is correct at any
+# size), and plan-shape certificates.  FIFO-bounded, no persisted
+# state — a stale entry can cost balance or speed, never rows.
+# ---------------------------------------------------------------------
+_STATS: "OrderedDict[tuple, object]" = OrderedDict()
+_STATS_LOCK = threading.Lock()
+_STATS_CAP = 64
+
+
+def stats_memo(kind: str, df: DataFrame, *extra):
+    """``(value, remember)`` for the plan fact ``kind`` about ``df``
+    (further key parts in ``extra``): ``value`` is the memoized entry
+    or None, ``remember(v)`` stores ``v`` under the same key.  Fails
+    closed: when df's plan key is unavailable nothing is served and
+    ``remember`` stores nothing."""
+    pk = plan_key(df)
+    if pk is None:
+        return None, lambda v: None
+    key = (kind, pk) + extra
+    with _STATS_LOCK:
+        value = _STATS.get(key)
+
+    def remember(v) -> None:
+        with _STATS_LOCK:
+            _STATS[key] = v
+            while len(_STATS) > _STATS_CAP:
+                _STATS.popitem(last=False)
+    return value, remember
+
+
+# every live pool, for reset()
+_POOLS: "weakref.WeakSet[BoundedPersistPool]" = weakref.WeakSet()
 
 
 class BoundedPersistPool:
@@ -33,36 +107,24 @@ class BoundedPersistPool:
     got 3x slower once eviction started killing the shared entry each
     call).  One pool slot per distinct plan fixes both: re-enrollment
     refreshes recency, eviction only ever releases plans nobody re-built
-    recently.  Frames whose semantic hash is unavailable fall back to an
-    always-enroll object key (never wrongly shared, only wrongly
-    retained, and the window bounds that)."""
+    recently.  The key's size fingerprint invalidates a slot when files
+    change under an identical plan (r12, verdict #2b): the stale
+    persisted frame is then evicted by the window instead of serving old
+    cached blocks to a plan-identical rebuild.  Frames whose plan key is
+    unavailable fall back to an always-enroll object key (never wrongly
+    shared, only wrongly retained, and the window bounds that)."""
 
     def __init__(self, keep: int):
         self._keep = keep
         self._frames: "dict[object, DataFrame]" = {}
         self._order: deque = deque()
         self._lock = threading.Lock()
-
-    @staticmethod
-    def _key(df: DataFrame):
-        # (semantic hash, size fingerprint): the stats scalar
-        # invalidates the slot when files change under an identical
-        # plan (r12, verdict #2b) — the stale persisted frame is then
-        # evicted by the window instead of serving old cached blocks
-        # to a plan-identical rebuild
-        try:
-            qe = df._jdf.queryExecution()
-            h = qe.analyzed().semanticHash()
-        except Exception:
-            return id(df)
-        try:
-            sz = int(str(qe.analyzed().stats().sizeInBytes()))
-        except Exception:
-            sz = -1
-        return (h, sz)
+        _POOLS.add(self)
 
     def persist(self, df: DataFrame) -> DataFrame:
-        key = self._key(df)
+        key = plan_key(df)
+        if key is None:
+            key = id(df)
         with self._lock:
             stored = self._frames.get(key)
         if stored is not None:
@@ -113,6 +175,16 @@ class BoundedPersistPool:
                 f.unpersist()
             except Exception:
                 pass
+
+
+def reset() -> None:
+    """Empty every plan-keyed cache: unpersist the frames of every
+    BoundedPersistPool and drop the plan-stats memo, so the next builds
+    re-probe and re-execute from their inputs."""
+    for pool in list(_POOLS):
+        pool.clear()
+    with _STATS_LOCK:
+        _STATS.clear()
 
 
 # Pair-set results (minhash / simhash / embedding near-dup): callers usually

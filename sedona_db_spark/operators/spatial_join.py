@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 from sedona_db_spark.functions import get_udf
 from sedona_db_spark.functions.kernels import _decode, _fast_points
 from sedona_db_spark.geom import algorithms as alg
+from sedona_db_spark.operators.result_cache import stats_memo
 
 _PREDICATES = {
     "intersects": alg.intersects,
@@ -144,6 +145,88 @@ def normalize_how(how: str) -> str:
     if how_n not in _HOW_SUPPORTED:
         raise NotImplementedError(f"unsupported spatial join how={how!r}")
     return how_n
+
+
+# modes that keep rows of the left / right side, i.e. need its row ids
+_LEFT_ID_MODES = ("left", "full", "left_semi", "left_anti")
+_RIGHT_ID_MODES = ("right", "full", "right_semi", "right_anti")
+
+
+def tag_row_ids(how: str, left: DataFrame, right: DataFrame, prefix: str,
+                l_exclude: tuple = (), r_exclude: tuple = ()) -> tuple:
+    """``(left_t, lids, right_t, rids)``: content_row_id tags (named
+    ``<prefix>_lid``/``<prefix>_rid``) on the sides whose rows the
+    normalized mode ``how`` keeps; a side it does not keep is returned
+    untouched with no ids.  ``l_exclude``/``r_exclude``: columns left
+    out of the content hash — only for columns the caller PROVED
+    functionally determined by the rest (see content_row_id)."""
+    lids: list[str] = []
+    rids: list[str] = []
+    if how in _LEFT_ID_MODES:
+        left, lids = content_row_id(left, f"{prefix}_lid", exclude=l_exclude)
+    if how in _RIGHT_ID_MODES:
+        right, rids = content_row_id(right, f"{prefix}_rid",
+                                     exclude=r_exclude)
+    return left, lids, right, rids
+
+
+def join_mode_from_inner(how: str, inner: DataFrame,
+                         left: DataFrame | None, lids: list[str],
+                         right: DataFrame | None, rids: list[str],
+                         inner_rids: list[str] | None = None) -> DataFrame:
+    """Any join-type-lattice mode from an inner join plus row ids — the
+    shape the reference's SpatialJoinExec uses: its probe-side visited
+    bitmap marks matched rows and outer/semi/anti emit from the bitmap
+    after the probe pass (reference rust/sedona-spatial-join/src/
+    exec.rs:235-240, src/utils/join_utils.rs:60-80).  Here the "bitmap"
+    is the distinct id set recovered from the inner result — a
+    shuffle-sized structure, never driver state, so every mode inherits
+    the inner path's 100 TB story unchanged.
+
+    ``left``/``right``: the frames semi/anti/unmatched rows come from,
+    tagged with id columns ``lids``/``rids`` (content_row_id, so the
+    plan branches that re-evaluate a side agree even above a shuffle);
+    a side the mode does not keep may be None.  ``inner`` is the inner
+    join of the tagged sides and carries the same ids — the right ones
+    under ``inner_rids`` when a collision rename moved them (they are
+    aliased back onto ``rids`` for the id joins).  The id columns are
+    dropped from the output; outer modes pad the unmatched rows with
+    NULLs onto ``inner``'s columns."""
+    how = normalize_how(how)
+    r_in = inner_rids if inner_rids is not None else rids
+
+    def matched_l() -> DataFrame:
+        # distinct-on-id = reference "emit probe row once however many
+        # build rows matched" (join_utils.rs:60-80)
+        return inner.select(*lids).distinct()
+
+    def matched_r() -> DataFrame:
+        if inner_rids is None:
+            return inner.select(*rids).distinct()
+        return inner.select(*[F.col(o).alias(r)
+                              for o, r in zip(inner_rids, rids)]).distinct()
+
+    if how in ("left_semi", "left_anti"):
+        return left.join(matched_l(), lids, how).drop(*lids)
+    if how in ("right_semi", "right_anti"):
+        return right.join(matched_r(), rids, "left_" + how[len("right_"):]) \
+            .drop(*rids)
+
+    def pad(df: DataFrame) -> DataFrame:
+        for c in inner.columns:
+            if c not in df.columns:
+                df = df.withColumn(c, F.lit(None))
+        return df.select(inner.columns)
+
+    parts = [inner]
+    if how in ("left", "full"):
+        parts.append(pad(left.join(matched_l(), lids, "left_anti")))
+    if how in ("right", "full"):
+        parts.append(pad(right.join(matched_r(), rids, "left_anti")))
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out.drop(*(lids + r_in))
 
 
 def _content_id_exprs(col_names, schema=None) -> tuple:
@@ -411,68 +494,6 @@ def _prefixed(df: DataFrame, prefix: str) -> DataFrame:
     return df.select([F.col(c).alias(f"{prefix}{c}") for c in df.columns])
 
 
-# ---------------------------------------------------------------------
-# bounded plan-stats memo: repeated construction of the same join
-# (bench reps, iterative pipelines) re-ran the build-side LIMIT probe
-# and the sampled-quantile scan every call (~1.5 s/call at sf10).
-# Only decisions that stay SAFE under data change are memoized:
-# grid edges (balance-only) and the "build side is large" verdict
-# (the partitioned path is correct at any size).  FIFO-bounded, no
-# persisted state — a stale entry can cost balance, never rows.
-# ---------------------------------------------------------------------
-import threading as _threading
-from collections import OrderedDict as _OrderedDict
-
-_STATS_MEMO: "_OrderedDict[tuple, object]" = _OrderedDict()
-_STATS_MEMO_LOCK = _threading.Lock()
-_STATS_MEMO_CAP = 64
-
-
-def _plan_key(df: DataFrame):
-    """(semantic hash, size fingerprint) of the analyzed plan — stable
-    across re-construction of the same logical query, different for
-    different inputs.
-
-    The size fingerprint (Catalyst's optimized-plan sizeInBytes, a
-    driver-side metadata scalar — r11 verdict #2b / advisor) invalidates
-    memo entries when the underlying files change under an identical
-    logical plan: an append grows the estimate, so the next identical
-    call re-probes instead of serving stats (or a persisted frame)
-    captured against the old file set.  A same-size in-place rewrite is
-    the one shape this misses — the same blind spot any name/metadata
-    fingerprint has without content hashing.  inputFiles() would also
-    work but ships every file name to Python per call (unbounded at
-    100 TB); the stats scalar is one RPC."""
-    try:
-        qe = df._jdf.queryExecution()
-        h = qe.analyzed().semanticHash()
-    except Exception:
-        return None
-    try:
-        # ANALYZED-plan stats: reflects the leaf file sizes (what the
-        # fingerprint needs) without running the optimizer per probe
-        sz = int(str(qe.analyzed().stats().sizeInBytes()))
-    except Exception:
-        sz = -1
-    return (h, sz)
-
-
-def _stats_memo_get(key):
-    if key[1] is None:          # plan hash unavailable: never memoize
-        return None
-    with _STATS_MEMO_LOCK:
-        return _STATS_MEMO.get(key)
-
-
-def _stats_memo_put(key, value) -> None:
-    if key[1] is None:
-        return
-    with _STATS_MEMO_LOCK:
-        _STATS_MEMO[key] = value
-        while len(_STATS_MEMO) > _STATS_MEMO_CAP:
-            _STATS_MEMO.popitem(last=False)
-
-
 # Rectangle fast-path refine (tiny-broadcast regime): when EVERY build
 # geometry is an axis-aligned rectangle — verified exactly by one agg
 # over the (≤2000-row) build side, never sampled — the exact predicate
@@ -532,12 +553,11 @@ def _point_constructor_certified(df: DataFrame, geom_col: str) -> bool:
     from the PLAN's alias structure alone (never from data), so a memo
     hit under changed data is still exact — the constructor runs per
     row whatever the rows are."""
-    mkey = ("ptcert", _plan_key(df), geom_col)
-    memo = _stats_memo_get(mkey)
+    memo, remember = stats_memo("ptcert", df, geom_col)
     if memo is not None:
         return memo
     res = _point_constructor_certified_impl(df, geom_col)
-    _stats_memo_put(mkey, res)
+    remember(res)
     return res
 
 
@@ -675,8 +695,7 @@ def _rect_fast_refine(cand: DataFrame, left: DataFrame, left_geom: str,
     if predicate in ("within", "intersects"):
         certified = l_cert or _point_constructor_certified(left, left_geom)
     if predicate in ("within", "intersects") and not certified:
-        lkey = ("rectfast_l", _plan_key(left), left_geom)
-        l_ok = _stats_memo_get(lkey)
+        l_ok, remember = stats_memo("rectfast_l", left, left_geom)
         if l_ok is None:
             # probe the probe side: 64 rows, driver-side decode
             try:
@@ -689,11 +708,10 @@ def _rect_fast_refine(cand: DataFrame, left: DataFrame, left_geom: str,
             l_ok = all(g is not None and g.gt == core.POINT
                        and not g.has_z and not g.has_m
                        and g.data is not None for g in gs)
-            _stats_memo_put(lkey, l_ok)
+            remember(l_ok)
         if not l_ok:
             return None
-    rkey = ("rectfast_r", _plan_key(rb))
-    allrect = _stats_memo_get(rkey)
+    allrect, remember = stats_memo("rectfast_r", rb)
     if allrect is None:
         # exact build-side verdict: one agg pass, bounded by the caller
         # (broadcast-tiny rows, or the partitioned path's 64 MB stats gate)
@@ -702,7 +720,7 @@ def _rect_fast_refine(cand: DataFrame, left: DataFrame, left_geom: str,
             F.min((F.col("__rbox.cls") == 2).cast("int")).alias("allrect")
         ).first()
         allrect = bool(row["n"]) and row["allrect"] == 1
-        _stats_memo_put(rkey, allrect)
+        remember(allrect)
     if not allrect:
         return None
     # formulas as single SQL strings (round 12, the sim_label
@@ -800,95 +818,32 @@ def spatial_join(
         raise ValueError(f"unknown spatial predicate {predicate!r}")
     how = normalize_how(how)
     if how != "inner":
-        # Non-inner modes = inner core + row-id bookkeeping, the same
-        # shape the reference's SpatialJoinExec uses: its probe-side
-        # visited-bitmap marks matched rows and outer/semi/anti emit
-        # from the bitmap after the probe pass
-        # (/root/reference/rust/sedona-spatial-join/src/exec.rs:235-240,
-        #  src/utils/join_utils.rs:60-80).  Here the "bitmap" is a
-        # distinct row-id set recovered from the inner result — a
-        # shuffle-sized structure, never driver state, so the mode
-        # lattice inherits the inner path's 100 TB story unchanged.
-        # Ids are content-derived (content_row_id) so the two plan
-        # branches referencing the tagged side agree even above a
-        # shuffle (ADVICE r8: positional ids permute between branch
-        # re-evaluations and silently corrupt outer/semi/anti results).
-        need_l = how in ("left", "full", "left_semi", "left_anti")
-        need_r = how in ("right", "full", "right_semi", "right_anti")
-        lids: list[str] = []
-        rids: list[str] = []
-        left_t, right_t = left, right
-        if need_l:
-            # a shadow-certified geometry is bit-determined by its
-            # shadow doubles, so it can stay out of the content hash —
-            # letting Catalyst prune its (Python) constructor from the
-            # lattice branches that only read the ids
-            left_t, lids = content_row_id(
-                left, "__sj_lid",
-                exclude=(left_geom,) if left_xy else ())
-        if need_r:
-            right_t, rids = content_row_id(
-                right, "__sj_rid",
-                exclude=(right_geom,) if right_xy else ())
+        # Non-inner modes = inner core + row-id bookkeeping
+        # (join_mode_from_inner).  A shadow-certified geometry is
+        # bit-determined by its shadow doubles, so it can stay out of
+        # the content hash — letting Catalyst prune its (Python)
+        # constructor from the lattice branches that only read the ids
+        left_t, lids, right_t, rids = tag_row_ids(
+            how, left, right, "__sj",
+            l_exclude=(left_geom,) if left_xy else (),
+            r_exclude=(right_geom,) if right_xy else ())
         inner = spatial_join(left_t, right_t, left_geom, right_geom,
                              predicate, distance, "inner", grid_cells,
                              broadcast_threshold, rect_fast_path,
                              left_xy=left_xy, right_xy=right_xy)
-        if how == "left_semi":
-            # distinct-on-id = reference "emit probe row once however
-            # many build rows matched" (join_utils.rs:60-80)
-            return left_t.join(inner.select(*lids).distinct(), lids,
-                               "left_semi").drop(*lids)
-        if how == "left_anti":
-            return left_t.join(inner.select(*lids).distinct(), lids,
-                               "left_anti").drop(*lids)
-        # right-side ids may have been prefixed on collision — resolve
-        rids_out = [r if r in inner.columns else f"right_{r}" for r in rids]
-        if how == "right_semi":
-            return right_t.join(
-                inner.select(*[F.col(o).alias(r) for o, r in
-                               zip(rids_out, rids)]).distinct(), rids,
-                "left_semi").drop(*rids)
-        if how == "right_anti":
-            return right_t.join(
-                inner.select(*[F.col(o).alias(r) for o, r in
-                               zip(rids_out, rids)]).distinct(), rids,
-                "left_anti").drop(*rids)
+        # the inner join prefixed right-side names that collide with the
+        # left's; unmatched right rows take the same renames so the
+        # outer union lines up by name
 
-        def _pad(df: DataFrame) -> DataFrame:
-            for c in inner.columns:
-                if c not in df.columns:
-                    df = df.withColumn(c, F.lit(None))
-            return df.select(inner.columns)
-
-        parts = [inner]
-        if how in ("left", "full"):
-            unmatched = left_t.join(inner.select(*lids).distinct(), lids,
-                                    "left_anti")
-            parts.append(_pad(unmatched))
+        def renamed(c: str) -> str:
+            return f"right_{c}" if c in left_t.columns else c
+        rids_out = [renamed(r) for r in rids]
         if how in ("right", "full"):
-            # unmatched right rows re-use the inner result's collision
-            # renames so the union lines up by name
-            rcols_t = {c: (f"right_{c}" if c in left_t.columns else c)
-                       for c in right_t.columns}
-            unmatched = right_t.select(
-                [F.col(c).alias(a) for c, a in rcols_t.items()])
-            rids_u = [rcols_t[r] for r in rids]
-            unmatched = unmatched.join(
-                inner.select(*[F.col(o).alias(u) for o, u in
-                               zip(rids_out, rids_u)]).distinct(),
-                rids_u, "left_anti")
-            # unmatched carries ids under rids_u; inner under rids_out —
-            # line them up before the union pads missing columns
-            for u, o in zip(rids_u, rids_out):
-                if u != o:
-                    unmatched = unmatched.withColumnRenamed(u, o)
-            parts.append(_pad(unmatched))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        drop = (lids if need_l else []) + (rids_out if need_r else [])
-        return out.drop(*drop)
+            right_t = right_t.select(
+                [F.col(c).alias(renamed(c)) for c in right_t.columns])
+            rids = rids_out
+        return join_mode_from_inner(how, inner, left_t, lids, right_t, rids,
+                                    inner_rids=rids_out)
 
     # disambiguate columns (one selectExpr round trip — a list of
     # aliased F.col()s costs 2 RPCs per column at construction)
@@ -922,7 +877,8 @@ def spatial_join(
     # Path choice probe: limit-capped count scans at most threshold+1 rows
     # (a plain count() would be a full pass over the build side at 100 TB).
     n_small = None
-    if _stats_memo_get(("nsmall", _plan_key(right_r), broadcast_threshold)):
+    large, remember = stats_memo("nsmall", right_r, broadcast_threshold)
+    if large:
         # memoized "build side is large" verdict: skip the probe job.
         # Only the LARGE outcome is ever memoized — the partitioned path
         # stays safe if the underlying files grow or shrink, while a
@@ -934,8 +890,7 @@ def spatial_join(
         except Exception:
             pass
         if n_small is not None and n_small > broadcast_threshold:
-            _stats_memo_put(("nsmall", _plan_key(right_r),
-                             broadcast_threshold), True)
+            remember(True)
 
     # Two broadcast regimes (reference single-partition in-memory mode,
     # prepare.rs:62-117): a tiny build side joins fastest as a JVM
@@ -992,8 +947,7 @@ def spatial_join(
     # balance-only — a stale entry can skew cell occupancy, never rows —
     # so a bounded memo keyed on the analyzed plan is safe; the empty-
     # left short-circuit below IS correctness and is never memoized.
-    grid_key = ("grid", _plan_key(lb), left_geom, nx)
-    memo = _stats_memo_get(grid_key)
+    memo, remember = stats_memo("grid", lb, left_geom, nx)
     if memo is not None:
         n_left = 1
         qx, qy = memo
@@ -1026,7 +980,7 @@ def spatial_join(
             lb.join(rb, F.lit(False)), left_geom, rgeom, predicate, distance
         ).drop("__lbox", "__rbox")
     if memo is None:
-        _stats_memo_put(grid_key, (list(qx), list(qy)))
+        remember((list(qx), list(qy)))
     xbreaks = sorted(set(qx))
     ybreaks = sorted(set(qy))
     ny = len(ybreaks) + 1
@@ -1706,6 +1660,14 @@ def spatial_join_bucketed(
     same_grid = (right_meta is not None
                  and right_meta["xbreaks"] == xbreaks
                  and right_meta["ybreaks"] == ybreaks and expand == 0.0)
+
+    def r_home() -> Column:
+        # a second layout's row sits in its home cell exactly once
+        return F.col(rcols["__cell"]) == F.expr(
+            f"{_bucket_sql('`' + rcols['__bx0'] + '`', right_meta['xbreaks'])} "
+            f"* {int(right_meta['ny'])}L "
+            f"+ {_bucket_sql('`' + rcols['__by0'] + '`', right_meta['ybreaks'])}")
+
     if right_meta is not None:
         rb = right_r.withColumn("__rbox", F.struct(
             F.col(rcols["__bx0"]).alias("xmin"),
@@ -1719,11 +1681,7 @@ def spatial_join_bucketed(
             # different grid (or a distance pad): keep each original row
             # once and re-explode NATIVELY from the stored bbox — no
             # Python pass, but this side does shuffle
-            rhome = F.expr(
-                f"{_bucket_sql('`' + rcols['__bx0'] + '`', right_meta['xbreaks'])} "
-                f"* {int(right_meta['ny'])}L "
-                f"+ {_bucket_sql('`' + rcols['__by0'] + '`', right_meta['ybreaks'])}")
-            rb = rb.filter(F.col(rcols["__cell"]) == rhome)
+            rb = rb.filter(r_home())
             re_ = rb.withColumn("__rcell", F.explode(F.expr(_cells_sql(
                 "__rbox.xmin", "__rbox.ymin", "__rbox.xmax",
                 "__rbox.ymax", expand, xbreaks, ybreaks, ny))))
@@ -1737,7 +1695,7 @@ def spatial_join_bucketed(
 
     orig_cols = [c for c in lt.columns if c not in _LAYOUT_COLS]
 
-    def _inner(l_tagged: DataFrame, extra: list[str]) -> DataFrame:
+    def _candidates(l_tagged: DataFrame) -> DataFrame:
         cond = (
             (F.col("__cell") == F.col("__rcell")) &
             (F.col("__bx0") - expand <= F.col("__rbox.xmax")) &
@@ -1754,7 +1712,10 @@ def spatial_join_bucketed(
             f"{_bucket_sql(f'greatest(__bx0, (__rbox.xmin) - {_d})', xbreaks)}"
             f" * {int(ny)}L "
             f"+ {_bucket_sql(f'greatest(__by0, (__rbox.ymin) - {_d})', ybreaks)}")
-        cand = cand.filter(F.col("__cell") == ref_cell)
+        return cand.filter(F.col("__cell") == ref_cell)
+
+    def _inner(l_tagged: DataFrame, extra: list[str]) -> DataFrame:
+        cand = _candidates(l_tagged)
         out_cols = orig_cols + extra + \
             [rcols[c] for c in right_df.columns if rcols[c] not in rlayout]
         joined = None
@@ -1808,58 +1769,14 @@ def spatial_join_bucketed(
     if how_n == "inner":
         return _inner(lt, [])
 
-    if how_n in ("right_semi", "right_anti"):
-        # ids over the right side's ORIGINAL columns; exploded copies
-        # (same-grid second layout) share ids by design
-        rids = ["__sjb_rid1", "__sjb_rid2"]
-        r_orig_cols = [rcols[c] for c in right_df.columns
-                       if rcols[c] not in rlayout]
-        if any(_type_has_map(re_.schema[c].dataType) for c in r_orig_cols):
-            raise NotImplementedError(
-                "non-inner bucketed spatial joins need hashable row "
-                "content; map-typed columns are unsupported here — use "
-                "spatial_join")
-        rid_exprs = _content_id_exprs(r_orig_cols, re_.schema)
-        re_t = re_.withColumn(rids[0], rid_exprs[0]) \
-                  .withColumn(rids[1], rid_exprs[1])
-        if right_meta is not None:
-            rhome = F.expr(
-                f"{_bucket_sql('`' + rcols['__bx0'] + '`', right_meta['xbreaks'])} "
-                f"* {int(right_meta['ny'])}L "
-                f"+ {_bucket_sql('`' + rcols['__by0'] + '`', right_meta['ybreaks'])}")
-            r_orig = right_r.filter(F.col(rcols["__cell"]) == rhome) \
-                .drop(*rlayout)
-        else:
-            r_orig = right_r
-        r_orig = r_orig.withColumn(rids[0], rid_exprs[0]) \
-                       .withColumn(rids[1], rid_exprs[1])
-        cond = (
-            (F.col("__cell") == F.col("__rcell")) &
-            (F.col("__bx0") - expand <= F.col("__rbox.xmax")) &
-            (F.col("__rbox.xmin") <= F.col("__bx1") + expand) &
-            (F.col("__by0") - expand <= F.col("__rbox.ymax")) &
-            (F.col("__rbox.ymin") <= F.col("__by1") + expand)
-        )
-        cand = lt.join(re_t, cond, "inner")
-        _d = _dlit(expand)
-        ref_cell = F.expr(
-            f"{_bucket_sql(f'greatest(__bx0, (__rbox.xmin) - {_d})', xbreaks)}"
-            f" * {int(ny)}L "
-            f"+ {_bucket_sql(f'greatest(__by0, (__rbox.ymin) - {_d})', ybreaks)}")
-        cand = cand.filter(F.col("__cell") == ref_cell)
-        matched = _apply_refine(cand, left_geom, rgeom, predicate,
-                                distance).select(*rids).distinct()
-        mode = "left_semi" if how_n == "right_semi" else "left_anti"
-        return r_orig.join(matched, rids, mode).drop(*rids)
-
     # lattice: content-derived ids over the ORIGINAL columns — exploded
     # copies of a row share the id by design, so the distinct-id set
     # means "matched at least once" and orig-side joins keep exact
     # per-row multiplicity (see content_row_id)
     lids = ["__sjb_lid1", "__sjb_lid2"]
     rids = ["__sjb_rid1", "__sjb_rid2"]
-    need_l = how_n in ("left", "full", "left_semi", "left_anti")
-    need_r = how_n in ("right", "full")
+    need_l = how_n in _LEFT_ID_MODES
+    need_r = how_n in _RIGHT_ID_MODES
     # exploded layout copies and home copies are linked ONLY by content
     # ids, so there is no checkpoint fallback here: map-typed columns
     # (unhashable) fail loud instead of wrong
@@ -1878,9 +1795,10 @@ def spatial_join_bucketed(
             .withColumn(lids[1], id_exprs[1])
     r_orig = None
     if need_r:
-        # right/full outer preserve the NON-layout side: tag the
-        # exploded right stream with content ids (re_ is a closure of
-        # _inner, so retagging here flows into the candidate join)
+        # right modes preserve the NON-layout side: tag the exploded
+        # right stream with content ids (re_ is a closure of
+        # _candidates, so retagging here flows into the candidate join);
+        # exploded copies (same-grid second layout) share ids by design
         r_orig_cols = [rcols[c] for c in right_df.columns
                        if rcols[c] not in rlayout]
         if any(_type_has_map(re_.schema[c].dataType)
@@ -1892,43 +1810,16 @@ def spatial_join_bucketed(
         rid_exprs = _content_id_exprs(r_orig_cols, re_.schema)
         re_ = re_.withColumn(rids[0], rid_exprs[0]) \
                  .withColumn(rids[1], rid_exprs[1])
-        if right_meta is not None:
-            rhome = F.expr(
-                f"{_bucket_sql('`' + rcols['__bx0'] + '`', right_meta['xbreaks'])} "
-                f"* {int(right_meta['ny'])}L "
-                f"+ {_bucket_sql('`' + rcols['__by0'] + '`', right_meta['ybreaks'])}")
-            r_orig = right_r.filter(F.col(rcols["__cell"]) == rhome) \
-                .drop(*rlayout)
-        else:
-            r_orig = right_r
+        r_orig = right_r if right_meta is None \
+            else right_r.filter(r_home()).drop(*rlayout)
         r_orig = r_orig.withColumn(rids[0], rid_exprs[0]) \
                        .withColumn(rids[1], rid_exprs[1])
-    inner = _inner(lt_t, (lids if need_l else []) +
-                   (rids if need_r else []))
-    if how_n == "left_semi":
-        return orig.join(inner.select(*lids).distinct(), lids,
-                         "left_semi").drop(*lids)
-    if how_n == "left_anti":
-        return orig.join(inner.select(*lids).distinct(), lids,
-                         "left_anti").drop(*lids)
-
-    # left / right / full outer
-    def _pad(df: DataFrame, like: DataFrame) -> DataFrame:
-        for c in like.columns:
-            if c not in df.columns:
-                df = df.withColumn(c, F.lit(None))
-        return df.select(like.columns)
-
-    parts = [inner]
-    if how_n in ("left", "full"):
-        unmatched = orig.join(inner.select(*lids).distinct(), lids,
-                              "left_anti")
-        parts.append(_pad(unmatched, inner))
-    if how_n in ("right", "full"):
-        unmatched_r = r_orig.join(inner.select(*rids).distinct(), rids,
-                                  "left_anti")
-        parts.append(_pad(unmatched_r, inner))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.drop(*lids, *rids)
+    if how_n in ("right_semi", "right_anti"):
+        # only the matched right ids are read: the general refine over
+        # the raw candidates, no output projection
+        inner = _apply_refine(_candidates(lt), left_geom, rgeom, predicate,
+                              distance)
+    else:
+        inner = _inner(lt_t, (lids if need_l else []) +
+                       (rids if need_r else []))
+    return join_mode_from_inner(how_n, inner, orig, lids, r_orig, rids)

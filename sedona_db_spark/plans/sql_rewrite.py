@@ -905,10 +905,9 @@ def _rewrite(spark, sql, toks, vanilla_sql):
         # shadow-certified geometries stay out of the lattice content
         # hash (bit-determined by their shadow doubles), so the
         # constructor prunes from the id-only branches
-        joined = _lattice_from_inner(
-            ldf, rdf_r, m.how, _refined_inner,
-            l_exclude=(g1,) if sxy1 else (),
-            r_exclude=(g2,) if sxy2 else ())
+        joined = _lattice(ldf, rdf_r, m.how, _refined_inner,
+                          l_exclude=(g1,) if sxy1 else (),
+                          r_exclude=(g2,) if sxy2 else ())
     else:
         joined = _build_join(spark, m, spatial, ldf, rdf_r, g1, g2,
                              sxy1=sxy1, sxy2=sxy2)
@@ -1011,61 +1010,17 @@ def _probe_geog_points(df, col, n=64) -> bool:
     return all(len(v) == 21 for v in vals)
 
 
-def _lattice_from_inner(ldf, rdf_r, how, inner_fn,
-                        l_exclude: tuple = (),
-                        r_exclude: tuple = ()) -> DataFrame:
-    """Assemble any join-type-lattice mode from an inner-join builder by
-    row-id match tracking — the same probe-bitmap shape
-    operators.spatial_join uses (exec.rs:235-240).  ``rdf_r`` columns
-    are already collision-renamed by the caller, so ids never clash.
-    Ids are content-derived (content_row_id) so both plan branches that
-    reference a tagged side agree even above a shuffle (ADVICE r8).
-    ``l_exclude``/``r_exclude``: columns left out of the content hash —
-    only for columns the caller PROVED functionally determined by the
-    rest (shadow-certified geometries), see content_row_id."""
-    from pyspark.sql import functions as F
-
-    from sedona_db_spark.operators.spatial_join import content_row_id
-    need_l = how in ("left", "full", "left_semi", "left_anti")
-    need_r = how in ("right", "full", "right_semi", "right_anti")
-    lids: list[str] = []
-    rids: list[str] = []
-    l2, r2 = ldf, rdf_r
-    if need_l:
-        l2, lids = content_row_id(ldf, "__lat_lid", exclude=l_exclude)
-    if need_r:
-        r2, rids = content_row_id(rdf_r, "__lat_rid", exclude=r_exclude)
-    inner = inner_fn(l2, r2)
-    if how == "left_semi":
-        return l2.join(inner.select(*lids).distinct(), lids,
-                       "left_semi").drop(*lids)
-    if how == "left_anti":
-        return l2.join(inner.select(*lids).distinct(), lids,
-                       "left_anti").drop(*lids)
-    if how == "right_semi":
-        return r2.join(inner.select(*rids).distinct(), rids,
-                       "left_semi").drop(*rids)
-    if how == "right_anti":
-        return r2.join(inner.select(*rids).distinct(), rids,
-                       "left_anti").drop(*rids)
-
-    def _pad(df: DataFrame) -> DataFrame:
-        for c in inner.columns:
-            if c not in df.columns:
-                df = df.withColumn(c, F.lit(None))
-        return df.select(inner.columns)
-
-    parts = [inner]
-    if how in ("left", "full"):
-        parts.append(_pad(l2.join(inner.select(*lids).distinct(), lids,
-                                  "left_anti")))
-    if how in ("right", "full"):
-        parts.append(_pad(r2.join(inner.select(*rids).distinct(), rids,
-                                  "left_anti")))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.drop(*(lids + rids))
+def _lattice(ldf, rdf_r, how, inner_fn, l_exclude: tuple = (),
+             r_exclude: tuple = ()) -> DataFrame:
+    """Join mode ``how`` from the inner-join builder ``inner_fn`` over
+    content-id-tagged sides (operators.spatial_join.join_mode_from_inner).
+    ``rdf_r`` columns are already collision-renamed by the caller, so
+    ids never clash."""
+    from sedona_db_spark.operators.spatial_join import (join_mode_from_inner,
+                                                        tag_row_ids)
+    l2, lids, r2, rids = tag_row_ids(how, ldf, rdf_r, "__lat",
+                                     l_exclude, r_exclude)
+    return join_mode_from_inner(how, inner_fn(l2, r2), l2, lids, r2, rids)
 
 
 def _build_geography_dwithin(spark, ldf, rdf_r, g1, g2, dist) -> DataFrame:
@@ -1296,7 +1251,7 @@ def _build_join(spark, m, spatial, ldf, rdf_r, g1, g2,
                 if m.how == "inner":
                     return _build_geography_dwithin(spark, ldf, rdf_r,
                                                     g1, g2, dist)
-                return _lattice_from_inner(
+                return _lattice(
                     ldf, rdf_r, m.how,
                     lambda l2, r2: _build_geography_dwithin(
                         spark, l2, r2, g1, g2, dist))
@@ -1327,7 +1282,7 @@ def _build_join(spark, m, spatial, ldf, rdf_r, g1, g2,
             raise _Decline
         if m.how == "inner":
             return builder(ldf, rdf_r)
-        return _lattice_from_inner(ldf, rdf_r, m.how, builder)
+        return _lattice(ldf, rdf_r, m.how, builder)
 
     routed = _try_layout_route(spark, m, spatial, ldf, rdf_r, g1, g2)
     if routed is not None:
@@ -2076,7 +2031,7 @@ def _shadow_cast_sql(col: str) -> str:
     return f"CAST({col} AS DOUBLE)"
 
 
-def _point_cert_checks(cols, shadow):
+def _point_cert_checks(cols, shadow, kind: str = "planar"):
     """Per-column bad-row predicates for point certification (one
     scan).  The cheap native guard (length + header bytes) proves
     21-byte LE point WKB; the VECTORIZED ST_X/ST_Y kernels prove the
@@ -2089,11 +2044,15 @@ def _point_cert_checks(cols, shadow):
     bit-for-bit: SQL `=` plus a string-form sign-of-zero refinement
     ("-0.0" vs "0.0"; division tricks throw under ANSI mode), and NULL
     geometry rows must have NULL shadows so substitution preserves
-    kernel NULL semantics."""
-    from sedona_db_spark.plans.native_point import point_guard_sql
+    kernel NULL semantics.
+
+    ``kind``: "planar" (plain point WKB) or "geog" (geography-TAGGED
+    point WKB, additionally inside the non-pole band — see
+    certify_geog_point_view)."""
+    guard, _desc, pole_band = _cert_kind(kind)
     checks = []
     for i, c in enumerate(cols):
-        ok = (f"({point_guard_sql(c)} AND ST_X({c}) IS NOT NULL "
+        ok = (f"({guard(c)} AND ST_X({c}) IS NOT NULL "
               f"AND ST_Y({c}) IS NOT NULL")
         if shadow and c in shadow:
             # the shadow may be stored as DECIMAL (e.g. decimal-typed
@@ -2109,14 +2068,27 @@ def _point_cert_checks(cols, shadow):
             null_ok = f"({c} IS NULL AND {xc} IS NULL AND {yc} IS NULL)"
         else:
             null_ok = f"{c} IS NULL"
+        if pole_band:
+            ok += f" AND abs(ST_Y({c})) < 90.0D - 1.0e-9"
         ok += ")"
         checks.append(f"sum(CASE WHEN NOT ({null_ok} OR {ok}) "
                       f"THEN 1 ELSE 0 END) AS bad_{i}")
     return checks
 
 
-def _point_cert_scan(spark, relation: str, cols, shadow, what: str):
-    checks = _point_cert_checks(cols, shadow)
+def _cert_kind(kind: str):
+    """(header guard SQL builder, value description, pole band?) of a
+    certificate kind."""
+    if kind == "geog":
+        return (_geog_point_guard_sql,
+                "non-pole NaN-free tagged 2D point WKB", True)
+    from sedona_db_spark.plans.native_point import point_guard_sql
+    return point_guard_sql, "NaN-free 2D LE point WKB", False
+
+
+def _point_cert_scan(spark, relation: str, cols, shadow, what: str,
+                     kind: str = "planar"):
+    checks = _point_cert_checks(cols, shadow, kind)
     row = spark.sql(
         f"SELECT {', '.join(checks)} FROM {relation}").first()
     for i, c in enumerate(cols):
@@ -2124,7 +2096,7 @@ def _point_cert_scan(spark, relation: str, cols, shadow, what: str):
         if bad:
             raise ValueError(
                 f"{what}({relation}): column {c} has {bad} rows that "
-                f"are not NaN-free 2D LE point WKB"
+                f"are not {_cert_kind(kind)[1]}"
                 + (" with bit-equal shadow coordinates"
                    if shadow and c in shadow else "")
                 + " — refusing to stamp the certificate")
@@ -2155,14 +2127,14 @@ def certify_point_table(spark, table: str, cols: list[str],
                   f"('sedona.point.shadow' = '{sval}')")
 
 
-def certify_point_view(spark, view: str, shadow: dict) -> None:
-    """certify_point_table for a (temp) view, which has no table
-    properties: verify the same predicate in one scan, then register
-    the shadow map in a session-level dict keyed by the view's CURRENT
-    analyzed plan string — a later CREATE OR REPLACE changes the plan
-    text and silently invalidates the certificate (fail-closed)."""
-    cols = list(shadow)
-    _point_cert_scan(spark, view, cols, shadow, "certify_point_view")
+def _certify_view(spark, view: str, shadow: dict, kind: str,
+                  what: str) -> None:
+    """Verify ``shadow``'s columns of ``view`` in one scan, then register
+    the shadow map in the session's view-certificate registry under
+    (view, kind), stamped with the view's CURRENT analyzed plan string —
+    a later CREATE OR REPLACE changes the plan text and silently
+    invalidates the certificate (fail-closed)."""
+    _point_cert_scan(spark, view, list(shadow), shadow, what, kind)
     fp = _view_fingerprint(spark, view)
     if fp is None:
         return
@@ -2170,7 +2142,14 @@ def certify_point_view(spark, view: str, shadow: dict) -> None:
     if reg is None:
         reg = {}
         spark._sedona_point_view_shadows = reg
-    reg[view] = (dict(shadow), fp)
+    reg[(view, kind)] = (dict(shadow), fp)
+
+
+def certify_point_view(spark, view: str, shadow: dict) -> None:
+    """certify_point_table for a (temp) view, which has no table
+    properties: the same predicate, registered as a "planar" view
+    certificate (see _certify_view)."""
+    _certify_view(spark, view, shadow, "planar", "certify_point_view")
 
 
 # geography edge tag in the WKB type word (core._SD_GEOG): byte 4 of a
@@ -2199,51 +2178,14 @@ def certify_geog_point_view(spark, view: str, shadow: dict) -> None:
     probe side's covering cell, salt and refine inputs natively from
     the shadows, letting the geography constructor prune out of the
     plan entirely."""
-    checks = []
-    cols = list(shadow)
-    for i, c in enumerate(cols):
-        xc, yc = (_shadow_cast_sql(x) for x in shadow[c])
-        ok = (f"({_geog_point_guard_sql(c)} AND ST_X({c}) IS NOT NULL "
-              f"AND ST_Y({c}) IS NOT NULL"
-              f" AND ST_X({c}) = {xc} AND ST_Y({c}) = {yc}"
-              f" AND (ST_X({c}) != 0.0D OR CAST(ST_X({c}) AS STRING)"
-              f" = CAST({xc} AS STRING))"
-              f" AND (ST_Y({c}) != 0.0D OR CAST(ST_Y({c}) AS STRING)"
-              f" = CAST({yc} AS STRING))"
-              f" AND abs(ST_Y({c})) < 90.0D - 1.0e-9)")
-        null_ok = f"({c} IS NULL AND {xc} IS NULL AND {yc} IS NULL)"
-        checks.append(f"sum(CASE WHEN NOT ({null_ok} OR {ok}) "
-                      f"THEN 1 ELSE 0 END) AS bad_{i}")
-    row = spark.sql(f"SELECT {', '.join(checks)} FROM {view}").first()
-    for i, c in enumerate(cols):
-        if row[f"bad_{i}"]:
-            raise ValueError(
-                f"certify_geog_point_view({view}): column {c} has "
-                f"{row[f'bad_{i}']} rows that are not non-pole NaN-free "
-                "tagged 2D point WKB with bit-equal shadow coordinates "
-                "— refusing to stamp the certificate")
-    fp = _view_fingerprint(spark, view)
-    if fp is None:
-        return
-    reg = getattr(spark, "_sedona_geog_point_view_shadows", None)
-    if reg is None:
-        reg = {}
-        spark._sedona_geog_point_view_shadows = reg
-    reg[view] = (dict(shadow), fp)
+    _certify_view(spark, view, shadow, "geog", "certify_geog_point_view")
 
 
 def geog_shadow_xy_for_view(spark, view: str, col: str):
     """Live certified geography shadow ``(lon_col, lat_col)`` for a
     view's geography column, or None (fingerprint-checked: a CREATE OR
     REPLACE that changes the view silently invalidates)."""
-    reg = getattr(spark, "_sedona_geog_point_view_shadows", None)
-    if not reg or view not in reg:
-        return None
-    shadow, fp = reg[view]
-    if col not in shadow:
-        return None
-    cur = _view_fingerprint(spark, view)
-    return tuple(shadow[col]) if cur is not None and cur == fp else None
+    return _view_shadow(spark, view, col, "geog")
 
 
 def _view_fingerprint(spark, view: str) -> str | None:
@@ -2257,13 +2199,15 @@ def _view_fingerprint(spark, view: str) -> str | None:
     return re.sub(r"#\d+", "#", s)
 
 
-def _view_shadow(spark, table: str, col: str):
-    """(x_col, y_col) for a view column certified by
-    certify_point_view, if the view's plan is unchanged; else None."""
+def _view_shadow(spark, table: str, col: str, kind: str = "planar"):
+    """(x_col, y_col) for a view column holding a ``kind`` certificate
+    (certify_point_view / certify_geog_point_view), if the view's plan
+    is unchanged; else None."""
     reg = getattr(spark, "_sedona_point_view_shadows", None)
-    if not reg or table not in reg:
+    ent = reg.get((table, kind)) if reg else None
+    if ent is None:
         return None
-    shadow, fp = reg[table]
+    shadow, fp = ent
     if col not in shadow:
         return None
     cur = _view_fingerprint(spark, table)
@@ -2498,8 +2442,7 @@ def rewrite_certified_scalar(spark, sql: str, vanilla_sql) -> str | None:
         if key in cert_memo:
             return cert_memo[key]
         out = None
-        xy = _view_shadow(spark, tbl, col) \
-            or _point_table_shadow(spark, tbl, col)
+        xy = _relation_shadow(spark, tbl, col)
         if xy and xy[0] in schemas[alias] and xy[1] in schemas[alias]:
             out = ("shadow",) + tuple(xy)
         else:

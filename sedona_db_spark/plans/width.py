@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from sedona_db_spark.operators.result_cache import stats_memo
+
 # below this estimated input size, single-digit task counts are cheaper
 # than the widening shuffle (a 4 MB point table is ~150k rows — one
 # Arrow batch of kernel work)
@@ -56,13 +58,7 @@ def widen_if_starved(df: DataFrame, min_bytes: int = MIN_WIDEN_BYTES,
     (``_jdf.rdd()``), not the python-wrapped ``df.rdd`` whose
     construction costs several extra round trips.  A stale memo can only
     mis-steer the widening choice, never correctness."""
-    try:
-        from sedona_db_spark.operators.spatial_join import (
-            _plan_key, _stats_memo_get, _stats_memo_put)
-        mkey = ("widen", _plan_key(df), min_bytes, min_fraction)
-        memo = _stats_memo_get(mkey)
-    except Exception:
-        mkey, memo, _stats_memo_put = None, None, None
+    memo, remember = stats_memo("widen", df, min_bytes, min_fraction)
     if memo is not None:
         return df.repartition(memo) if memo else df
     try:
@@ -79,6 +75,5 @@ def widen_if_starved(df: DataFrame, min_bytes: int = MIN_WIDEN_BYTES,
             return df
         if nparts < max(int(width * min_fraction), 1):
             verdict = width
-    if mkey is not None and _stats_memo_put is not None:
-        _stats_memo_put(mkey, verdict)
+    remember(verdict)
     return df.repartition(width) if verdict else df

@@ -20,7 +20,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DEFAULT_CONFS = {
+# Confs that are runtime-settable (plain SQL confs) and must hold even when
+# the caller built a bare SparkSession themselves (e.g. the external driver).
+_RUNTIME_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -42,10 +44,16 @@ _DEFAULT_CONFS = {
     # scans target defaultParallelism splits.  Large tables are unaffected
     # (their size/parallelism term already exceeds both floors).
     "spark.sql.files.openCostInBytes": str(512 * 1024),
-    "spark.ui.enabled": "false",
     # driver testdata events.parquet carries timestamp[ns]; read as long
     # and convert to TimestampType in load_tables
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+# Builder-time defaults: every runtime conf plus the confs that only take
+# effect when the session (or its JVM) is created.
+_DEFAULT_CONFS = {
+    **_RUNTIME_CONFS,
+    "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
     # local-mode latency: no locality wait (single host), Kryo for the
     # broadcast/shuffle serialization path
@@ -114,29 +122,6 @@ def register_all(spark: SparkSession) -> SparkSession:
     from sedona_db_spark.plans.sql_rewrite import install_sql_rewrite
     install_sql_rewrite(spark)
     return spark
-
-
-# Confs that are runtime-settable (plain SQL confs) and must hold even when
-# the caller built a bare SparkSession themselves (e.g. the external driver).
-_RUNTIME_CONFS = {
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # see the open-cost note in _DEFAULT_CONFS (runtime-settable SQL conf)
-    "spark.sql.files.openCostInBytes": str(512 * 1024),
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.parquet.filterPushdown": "true",
-    # 24 MB: small dims (nation/region/customer at bench SFs) still
-    # broadcast, but AQE can no longer convert a multi-million-row fact
-    # side into a driver-built hash relation (observed: 6M-row lineitem
-    # broadcast at 64 MB turned TPC-H Q3 into a 6 s driver stall).
-    # Operators that KNOW a side is small use explicit F.broadcast(),
-    # which bypasses this threshold.
-    "spark.sql.autoBroadcastJoinThreshold": str(24 * 1024 * 1024),
-}
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:

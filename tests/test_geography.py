@@ -1001,7 +1001,8 @@ def test_pole_to_pole_edge_covers_all_longitudes():
 
 def test_geography_relation_join_rejects_unknown_how(spark):
     """Round-9 review: an unknown join type must fail loud, not fall
-    through _lattice_from_inner to silent inner-join semantics."""
+    through the join-mode lattice (join_mode_from_inner) to silent
+    inner-join semantics."""
     import pytest as _pytest
 
     from sedona_db_spark.operators.geography_join import (

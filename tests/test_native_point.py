@@ -168,22 +168,31 @@ def test_shadow_certification_refusals(spark):
 
 
 def test_view_shadow_invalidated_by_replace(spark):
-    """certify_point_view's certificate dies with the view definition:
-    CREATE OR REPLACE with different content must fail the fingerprint
-    so the rewrite falls back to the kernel (fail-closed)."""
+    """A view certificate dies with the view definition, for both kinds
+    (certify_point_view / certify_geog_point_view): CREATE OR REPLACE
+    with different content must fail the fingerprint so the rewrite
+    falls back to the kernel (fail-closed).  A certificate is only ever
+    served by its own kind's lookup."""
     from sedona_db_spark.plans.sql_rewrite import (
-        certify_point_view, _view_shadow)
-    spark.sql("""CREATE OR REPLACE TEMP VIEW np_vshadow AS
-                 SELECT CAST(id AS DOUBLE) vx, CAST(-id AS DOUBLE) vy,
-                        ST_Point(CAST(id AS DOUBLE), CAST(-id AS DOUBLE)) g
-                 FROM range(10)""")
-    certify_point_view(spark, "np_vshadow", {"g": ("vx", "vy")})
-    assert _view_shadow(spark, "np_vshadow", "g") == ("vx", "vy")
-    spark.sql("""CREATE OR REPLACE TEMP VIEW np_vshadow AS
-                 SELECT CAST(id AS DOUBLE) vx, CAST(id AS DOUBLE) vy,
-                        ST_Point(CAST(id AS DOUBLE), CAST(id AS DOUBLE)) g
-                 FROM range(10)""")
-    assert _view_shadow(spark, "np_vshadow", "g") is None
+        _view_shadow, certify_geog_point_view, certify_point_view,
+        geog_shadow_xy_for_view)
+    kinds = [("ST_Point", certify_point_view, _view_shadow,
+              geog_shadow_xy_for_view),
+             ("ST_GeogPoint", certify_geog_point_view,
+              geog_shadow_xy_for_view, _view_shadow)]
+    for ctor, certify, lookup, other_lookup in kinds:
+        spark.sql(f"""CREATE OR REPLACE TEMP VIEW np_vshadow AS
+                  SELECT CAST(id AS DOUBLE) vx, CAST(-id AS DOUBLE) vy,
+                         {ctor}(CAST(id AS DOUBLE), CAST(-id AS DOUBLE)) g
+                  FROM range(10)""")
+        certify(spark, "np_vshadow", {"g": ("vx", "vy")})
+        assert lookup(spark, "np_vshadow", "g") == ("vx", "vy")
+        assert other_lookup(spark, "np_vshadow", "g") is None
+        spark.sql(f"""CREATE OR REPLACE TEMP VIEW np_vshadow AS
+                  SELECT CAST(id AS DOUBLE) vx, CAST(id AS DOUBLE) vy,
+                         {ctor}(CAST(id AS DOUBLE), CAST(id AS DOUBLE)) g
+                  FROM range(10)""")
+        assert lookup(spark, "np_vshadow", "g") is None
     spark.catalog.dropTempView("np_vshadow")
 
 

@@ -1491,6 +1491,55 @@ def test_persist_pool_plan_keyed_no_self_eviction(spark):
         f.unpersist()
 
 
+def test_plan_cache_reset_clears_every_pool_and_memo(spark):
+    """One reset empties every plan-keyed cache: frames persisted through
+    two different pools (one of them the LM tokenization pool that cold
+    measurements once missed) are unpersisted, and the stats memo stops
+    serving."""
+    from sedona_db_spark.functions import text
+    from sedona_db_spark.operators import result_cache
+    a = result_cache.PAIR_RESULT_POOL.persist(
+        spark.range(50).selectExpr("id * 7 AS x"))
+    b = text._LM_POOL.persist(spark.range(50).selectExpr("id * 11 AS x"))
+    a.count(), b.count()
+    assert a.is_cached and b.is_cached
+    _, remember = result_cache.stats_memo("reset_test", a)
+    remember(True)
+    assert result_cache.stats_memo("reset_test", a)[0] is True
+    result_cache.reset()
+    for f in (a, b):
+        assert not f.is_cached
+        assert not f.storageLevel.useMemory
+    assert result_cache.stats_memo("reset_test", a)[0] is None
+
+
+def test_stats_memo_fails_closed_without_plan_key(spark):
+    """A frame whose plan key cannot be computed is never stored or
+    served: its remember() is a no-op and a lookup always misses."""
+    from sedona_db_spark.operators import result_cache
+
+    class _NoPlan:
+        def queryExecution(self):
+            raise RuntimeError("plan unavailable")
+
+    class _Frame:
+        _jdf = _NoPlan()
+
+    bad = _Frame()
+    assert result_cache.plan_key(bad) is None
+    n = len(result_cache._STATS)
+    value, remember = result_cache.stats_memo("failclosed", bad, 1)
+    assert value is None
+    remember("stored?")
+    assert len(result_cache._STATS) == n
+    assert result_cache.stats_memo("failclosed", bad, 1)[0] is None
+    # control: a frame with a reachable plan is stored and served
+    good = spark.range(3)
+    _, remember = result_cache.stats_memo("failclosed", good, 1)
+    remember("stored")
+    assert result_cache.stats_memo("failclosed", good, 1)[0] == "stored"
+
+
 def test_webp_predictor_fuzz_libwebp_parity():
     """Round-7 advisor regression: predictor mode 11 tie-break (ties -> T)
     and mode 13 truncate-toward-zero division only show up under fuzz —

@@ -5,12 +5,13 @@ pools, so the committed number partially measures a warm cache.  This
 tool reports both:
 
 - warm: reps run back-to-back, pools intact (the bench's protocol);
-- cold: PAIR_RESULT_POOL / SIG_FRAME_POOL / the partitioned-KNN pool
-  are cleared (frames unpersisted) and the plan-stats memo dropped
-  before EACH rep, so every rep rebuilds and re-executes from the parquet
-  inputs.  Session-level warmup (JVM codegen, python workers, parquet
-  footers) stays warm in both — the decomposition isolates exactly the
-  pool effect.
+- cold: every plan-keyed persist pool (pair sets, signature frames,
+  partitioned KNN, LM tokenization) is cleared (frames unpersisted) and
+  the plan-stats memo dropped before EACH rep (``result_cache.reset``),
+  so every rep rebuilds and re-executes from the parquet inputs.
+  Session-level warmup (JVM codegen, python workers, parquet footers)
+  stays warm in both — the decomposition isolates exactly the pool
+  effect.
 
 Usage: python tools/bench_cold.py [sf_dir] name [name...]
 """
@@ -24,16 +25,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _clear_pools():
-    from sedona_db_spark.operators import dedup, knn_join, result_cache
-    from sedona_db_spark.operators import spatial_join as sj
-    result_cache.PAIR_RESULT_POOL.clear()
-    result_cache.SIG_FRAME_POOL.clear()
-    knn_join._PARTITIONED_POOL.clear()
-    with sj._STATS_MEMO_LOCK:
-        sj._STATS_MEMO.clear()
-
-
 def main():
     args = sys.argv[1:]
     sf_dir = "/root/testdata/sf0.1"
@@ -41,6 +32,7 @@ def main():
         sf_dir, args = args[0], args[1:]
     import __spark_entry__ as entry
     from sedona_db_spark import get_spark
+    from sedona_db_spark.operators import result_cache
     spark = get_spark("bench_cold")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
@@ -53,7 +45,7 @@ def main():
             best = None
             for _ in range(3):
                 if cold:
-                    _clear_pools()
+                    result_cache.reset()
                 t0 = time.time()
                 fn(spark, sf_dir).write.mode("overwrite") \
                     .format("noop").save()
