@@ -1,7 +1,8 @@
-"""Plan-keyed caches: the plan key, the plan-stats memo and the bounded
-FIFO of persisted result DataFrames.
+"""Plan-keyed caches: the plan key, the bounded memos (the plan-stats
+memo here, the SQL rewrite memos in ``plans/sql_rewrite.py``) and the
+bounded FIFO of persisted result DataFrames.
 
-All three key on :func:`plan_key`, the analyzed plan's fingerprint;
+All of them key on :func:`plan_key`, the analyzed plan's fingerprint;
 :func:`reset` empties every one of them (cold measurements, teardown).
 
 Operators that hand a persist()-ed DataFrame back to the caller (KNN join
@@ -55,6 +56,46 @@ def plan_key(df: DataFrame):
     return (h, sz)
 
 
+# every live memo and pool, for reset()
+_CACHES: "weakref.WeakSet" = weakref.WeakSet()
+
+
+class BoundedMemo:
+    """Thread-safe dict that drops its oldest entry past ``cap``
+    (FIFO); registered for :func:`reset`.  ``on_evict(key, value)`` is
+    called for every entry dropped, by eviction or :meth:`clear`."""
+
+    def __init__(self, cap: int, on_evict=None):
+        self._cap = cap
+        self._on_evict = on_evict
+        self._d: "OrderedDict[object, object]" = OrderedDict()
+        self._lock = threading.Lock()
+        _CACHES.add(self)
+
+    def __len__(self) -> int:
+        return len(self._d)
+
+    def get(self, key, default=None):
+        with self._lock:
+            return self._d.get(key, default)
+
+    def put(self, key, value) -> None:
+        with self._lock:
+            self._d[key] = value
+            gone = [self._d.popitem(last=False)
+                    for _ in range(len(self._d) - self._cap)]
+        self._evicted(gone)
+
+    def clear(self) -> None:
+        with self._lock:
+            gone, self._d = list(self._d.items()), OrderedDict()
+        self._evicted(gone)
+
+    def _evicted(self, items) -> None:
+        for key, value in items if self._on_evict else ():
+            self._on_evict(key, value)
+
+
 # ---------------------------------------------------------------------
 # bounded plan-stats memo: repeated construction of the same join
 # (bench reps, iterative pipelines) re-ran the build-side LIMIT probe
@@ -65,9 +106,7 @@ def plan_key(df: DataFrame):
 # size), and plan-shape certificates.  FIFO-bounded, no persisted
 # state — a stale entry can cost balance or speed, never rows.
 # ---------------------------------------------------------------------
-_STATS: "OrderedDict[tuple, object]" = OrderedDict()
-_STATS_LOCK = threading.Lock()
-_STATS_CAP = 64
+_STATS = BoundedMemo(64)
 
 
 def stats_memo(kind: str, df: DataFrame, *extra):
@@ -80,19 +119,7 @@ def stats_memo(kind: str, df: DataFrame, *extra):
     if pk is None:
         return None, lambda v: None
     key = (kind, pk) + extra
-    with _STATS_LOCK:
-        value = _STATS.get(key)
-
-    def remember(v) -> None:
-        with _STATS_LOCK:
-            _STATS[key] = v
-            while len(_STATS) > _STATS_CAP:
-                _STATS.popitem(last=False)
-    return value, remember
-
-
-# every live pool, for reset()
-_POOLS: "weakref.WeakSet[BoundedPersistPool]" = weakref.WeakSet()
+    return _STATS.get(key), lambda v: _STATS.put(key, v)
 
 
 class BoundedPersistPool:
@@ -119,7 +146,7 @@ class BoundedPersistPool:
         self._frames: "dict[object, DataFrame]" = {}
         self._order: deque = deque()
         self._lock = threading.Lock()
-        _POOLS.add(self)
+        _CACHES.add(self)
 
     def persist(self, df: DataFrame) -> DataFrame:
         key = plan_key(df)
@@ -179,12 +206,11 @@ class BoundedPersistPool:
 
 def reset() -> None:
     """Empty every plan-keyed cache: unpersist the frames of every
-    BoundedPersistPool and drop the plan-stats memo, so the next builds
-    re-probe and re-execute from their inputs."""
-    for pool in list(_POOLS):
-        pool.clear()
-    with _STATS_LOCK:
-        _STATS.clear()
+    BoundedPersistPool and drop every BoundedMemo (the plan-stats memo
+    and each session's SQL rewrite memo), so the next builds re-probe,
+    re-plan and re-execute from their inputs."""
+    for cache in list(_CACHES):
+        cache.clear()
 
 
 # Pair-set results (minhash / simhash / embedding near-dup): callers usually

@@ -1814,12 +1814,6 @@ def spatial_join_bucketed(
             else right_r.filter(r_home()).drop(*rlayout)
         r_orig = r_orig.withColumn(rids[0], rid_exprs[0]) \
                        .withColumn(rids[1], rid_exprs[1])
-    if how_n in ("right_semi", "right_anti"):
-        # only the matched right ids are read: the general refine over
-        # the raw candidates, no output projection
-        inner = _apply_refine(_candidates(lt), left_geom, rgeom, predicate,
-                              distance)
-    else:
-        inner = _inner(lt_t, (lids if need_l else []) +
-                       (rids if need_r else []))
+    inner = _inner(lt_t, (lids if need_l else []) +
+                   (rids if need_r else []))
     return join_mode_from_inner(how_n, inner, orig, lids, r_orig, rids)

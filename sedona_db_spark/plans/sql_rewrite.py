@@ -42,8 +42,12 @@ from __future__ import annotations
 
 import hashlib
 import re
+import warnings
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+
+from sedona_db_spark.operators.result_cache import BoundedMemo, plan_key
 
 # ----------------------------------------------------------------------
 # tokenizer
@@ -509,7 +513,12 @@ def _is_equi_conjunct(toks, lo, hi, aliases, schemas) -> bool:
 # the rewrite
 # ----------------------------------------------------------------------
 
-_VIEW_PREFIX = "__sedona_sql_join_"
+def _join_view_name(key) -> str:
+    """Temp-view name of a rewrite's join, from its memo key (query text,
+    plan confs, plan key): a memo hit replays the view built for exactly
+    those relations, never a join rebuilt under another version."""
+    return "__sedona_sql_join_" + hashlib.sha1(
+        repr(key).encode()).hexdigest()[:12]
 
 
 class _Match:
@@ -624,9 +633,14 @@ def _find_match(toks, depths, spark, vanilla_sql):
 
 
 def _resolve_df(spark, vanilla_sql, rel: _Rel) -> DataFrame:
-    if rel.is_subquery:
-        return vanilla_sql(rel.text)
-    df = spark.table(rel.text)
+    # a name the catalog does not hold (a CTE, an outer reference) is a
+    # shape the matcher does not cover, not a rewrite fault
+    try:
+        if rel.is_subquery:
+            return vanilla_sql(rel.text)
+        df = spark.table(rel.text)
+    except AnalysisException:
+        raise _Decline
     # A bucketed layout table stores one PHYSICAL copy per covering grid
     # cell; inside the rewrite a bare reference always means the LOGICAL
     # rows (r10 advisor: a query that fell off the cell route — extra
@@ -643,35 +657,63 @@ def _resolve_df(spark, vanilla_sql, rel: _Rel) -> DataFrame:
     return df
 
 
-def try_rewrite(spark: SparkSession, sql: str, vanilla_sql) -> DataFrame | None:
-    """Attempt the spatial-join rewrite; None means 'use vanilla'."""
+def _map_alias_refs(span, aliases, out_name, prefix="") -> list[str]:
+    """Rewrite ``alias.col`` references to ``aliases`` within a token
+    span onto the join view's column names (``prefix`` qualifies them)."""
+    res, i = [], 0
+    while i < len(span):
+        t = span[i]
+        if (_is_ident(t) and _unquote(t) in aliases and i + 2 < len(span)
+                and span[i + 1] == "." and _is_ident(span[i + 2])):
+            col = out_name(_unquote(t), _unquote(span[i + 2]))
+            res.append(f"{prefix}`{col}`")
+            i += 3
+            continue
+        res.append(t)
+        i += 1
+    return res
+
+
+def _run_over_view(joined, vname, out, vanilla_sql) -> DataFrame:
+    """Register ``joined`` as ``vname`` and run the rebuilt query tokens
+    ``out`` over it, tagged with their text for the rewrite memo."""
+    joined.createOrReplaceTempView(vname)
+    rewritten = _render(out)
+    result = vanilla_sql(rewritten)
+    result._sedona_rewritten_sql = rewritten
+    return result
+
+
+def try_rewrite(spark: SparkSession, sql: str, vanilla_sql,
+                vname: str) -> DataFrame | None:
+    """Attempt the spatial-join rewrite, registering the join under the
+    temp view ``vname``; None means 'use vanilla'."""
     if not _PRECHECK.search(sql):
         return None
     toks = _tokenize(sql)
     if toks is None:
         return None
     try:
-        return _rewrite(spark, sql, toks, vanilla_sql)
+        return _rewrite(spark, sql, toks, vanilla_sql, vname)
     except _Decline:
         pass
     try:
-        return _rewrite_exists(spark, sql, toks, vanilla_sql)
+        return _rewrite_exists(spark, sql, toks, vanilla_sql, vname)
     except _Decline:
         pass
     try:
-        return _rewrite_chain(spark, sql, toks, vanilla_sql)
+        return _rewrite_chain(spark, sql, toks, vanilla_sql, vname)
     except _Decline:
         return None
 
 
-def _rewrite(spark, sql, toks, vanilla_sql):
+def _rewrite(spark, sql, toks, vanilla_sql, vname):
     depths = _depths(toks)
     m = _find_match(toks, depths, spark, vanilla_sql)
 
     ldf = _resolve_df(spark, vanilla_sql, m.rel1)
     rdf = _resolve_df(spark, vanilla_sql, m.rel2)
     aliases = (m.rel1.alias, m.rel2.alias)
-    schemas = {m.rel1.alias: set(ldf.columns), m.rel2.alias: set(rdf.columns)}
 
     # column pruning through the rewrite boundary: the join view would
     # otherwise drag every source column through the operator's Arrow/
@@ -844,40 +886,25 @@ def _rewrite(spark, sql, toks, vanilla_sql):
             return col
         return rmap.get(col, col)
 
-    def map_refs(span: list[str]) -> list[str]:
-        """Rewrite alias-qualified references within a token span."""
-        res = []
-        i = 0
-        while i < len(span):
-            t = span[i]
-            if (_is_ident(t) and _unquote(t) in aliases and i + 2 < len(span)
-                    and span[i + 1] == "." and _is_ident(span[i + 2])):
-                res.append(f"`{out_name(_unquote(t), _unquote(span[i + 2]))}`")
-                i += 3
-                continue
-            res.append(t)
-            i += 1
-        return res
-
-    lgeom = {a: c for a, c in zip(spatial.arg_rels, spatial.arg_cols)}
-    g1 = lgeom.get(m.rel1.alias)
-    g2 = rmap.get(lgeom.get(m.rel2.alias), lgeom.get(m.rel2.alias))
+    g1 = geom_by_alias.get(m.rel1.alias)
+    g2_src = geom_by_alias.get(m.rel2.alias)
+    g2 = rmap.get(g2_src, g2_src)
 
     # shadow tuples resolved onto the operator-side column names
     sxy1 = shadows.get(m.rel1.alias, {}).get(g1)
-    sxy2 = shadows.get(m.rel2.alias, {}).get(lgeom.get(m.rel2.alias))
+    sxy2 = shadows.get(m.rel2.alias, {}).get(g2_src)
     if sxy2 is not None:
         sxy2 = (rmap.get(sxy2[0], sxy2[0]), rmap.get(sxy2[1], sxy2[1]))
 
     def _map_span(lo, hi):
-        """map_refs over a conjunct span, with certified-scalar calls
+        """_map_alias_refs over a conjunct span, with certified-scalar calls
         substituted by native shadow arithmetic first (round 12)."""
         seg = toks[lo:hi]
         if shadows:
             sub = _subst_certified_calls(seg, shadows, aliases, schemas)
             if sub is not None:
                 seg = sub
-        return map_refs(seg)
+        return _map_alias_refs(seg, aliases, out_name)
 
     if spatial.dist_col is not None:
         da, dc = spatial.dist_col
@@ -912,27 +939,14 @@ def _rewrite(spark, sql, toks, vanilla_sql):
         joined = _build_join(spark, m, spatial, ldf, rdf_r, g1, g2,
                              sxy1=sxy1, sxy2=sxy2)
 
-    # -------- register the view and rebuild the query text
-    # the conf suffix keeps views built under different plan-affecting
-    # session options (knn tie-breakers) from overwriting each other —
-    # the rewrite memo replays text referencing THIS name
-    vname = _VIEW_PREFIX + hashlib.sha1(
-        (sql + _plan_conf_fingerprint(spark)).encode()).hexdigest()[:12]
-    joined.createOrReplaceTempView(vname)
-
+    # -------- rebuild the query text over the join view: the FROM span
+    # [from_idx, join_end) becomes the view; in comma form the spatial
+    # conjunct becomes TRUE inside the surviving WHERE
     out = []
-    skip_spans = []
-    if m.comma_form:
-        # FROM span = [from_idx, join_end); spatial conjunct replaced by
-        # TRUE inside the surviving WHERE
-        skip_spans.append((m.from_idx, m.join_end))
-    else:
-        skip_spans.append((m.from_idx, m.join_end))
-
     i = 0
     n = len(toks)
     while i < n:
-        if skip_spans and i == skip_spans[0][0]:
+        if i == m.from_idx:
             out.append("FROM")
             out.append(vname)
             if not m.comma_form and rest:
@@ -941,13 +955,13 @@ def _rewrite(spark, sql, toks, vanilla_sql):
                 parts = []
                 for (lo, hi) in rest:
                     parts.append("( " + _render(_map_span(lo, hi)) + " )")
-                nxt = skip_spans[0][1]
+                nxt = m.join_end
                 if nxt < n and toks[nxt].upper() == "WHERE":
                     out.extend(["WHERE", " AND ".join(parts), "AND"])
                     i = nxt + 1
                     continue
                 out.extend(["WHERE", " AND ".join(parts)])
-            i = skip_spans[0][1]
+            i = m.join_end
             continue
         if (m.comma_form and not spatial.keep_refine
                 and spatial_span[0] <= i < spatial_span[1]):
@@ -970,10 +984,7 @@ def _rewrite(spark, sql, toks, vanilla_sql):
         out.append(t)
         i += 1
 
-    rewritten = _render(out)
-    result = vanilla_sql(rewritten)
-    result._sedona_rewritten_sql = rewritten
-    return result
+    return _run_over_view(joined, vname, out, vanilla_sql)
 
 
 def _probe_geography(df, col, n=64):
@@ -989,9 +1000,9 @@ def _probe_geography(df, col, n=64):
 
 
 def _plan_conf_fingerprint(spark) -> str:
-    """Plan-affecting session options, folded into view names and the
-    rewrite memo key (a view or memo entry built under one setting must
-    never serve a query run under another)."""
+    """Plan-affecting session options, folded into the rewrite memo key
+    (a memo entry built under one setting must never serve a query run
+    under another)."""
     try:
         return "|ties=" + str(spark.conf.get(
             "spark.sedona_db.spatial_join.knn_include_tie_breakers",
@@ -1381,7 +1392,7 @@ def _build_join(spark, m, spatial, ldf, rdf_r, g1, g2,
 # ----------------------------------------------------------------------
 
 
-def _rewrite_exists(spark, sql, toks, vanilla_sql):
+def _rewrite_exists(spark, sql, toks, vanilla_sql, vname):
     depths = _depths(toks)
     n = len(toks)
     for i in range(n):
@@ -1411,14 +1422,15 @@ def _rewrite_exists(spark, sql, toks, vanilla_sql):
             try:
                 return _build_exists(spark, sql, toks, depths, rel1,
                                      (i, j), (lo, hi),
-                                     (p + 2, hi - 1), neg, vanilla_sql)
+                                     (p + 2, hi - 1), neg, vanilla_sql,
+                                     vname)
             except _Decline:
                 continue
     raise _Decline
 
 
 def _build_exists(spark, sql, toks, depths, rel1, from_span, conj_span,
-                  sub_span, neg, vanilla_sql):
+                  sub_span, neg, vanilla_sql, vname):
     from pyspark.sql import functions as F
     n = len(toks)
     sub_lo, sub_hi = sub_span
@@ -1501,11 +1513,6 @@ def _build_exists(spark, sql, toks, depths, rel1, from_span, conj_span,
     g2 = rmap.get(lgeom.get(rel2.alias), lgeom.get(rel2.alias))
     joined = _build_join(spark, m, spatial, ldf, rdf_r, g1, g2)
 
-    vname = _VIEW_PREFIX + hashlib.sha1(
-        ("exists:" + sql
-         + _plan_conf_fingerprint(spark)).encode()).hexdigest()[:12]
-    joined.createOrReplaceTempView(vname)
-
     out = []
     i = 0
     f_lo, f_hi = from_span
@@ -1523,10 +1530,7 @@ def _build_exists(spark, sql, toks, depths, rel1, from_span, conj_span,
             continue
         out.append(toks[i])
         i += 1
-    rewritten = _render(out)
-    result = vanilla_sql(rewritten)
-    result._sedona_rewritten_sql = rewritten
-    return result
+    return _run_over_view(joined, vname, out, vanilla_sql)
 
 
 # ----------------------------------------------------------------------
@@ -1544,7 +1548,7 @@ def _build_exists(spark, sql, toks, depths, rel1, from_span, conj_span,
 # ----------------------------------------------------------------------
 
 
-def _rewrite_chain(spark, sql, toks, vanilla_sql):
+def _rewrite_chain(spark, sql, toks, vanilla_sql, vname):
     depths = _depths(toks)
     n = len(toks)
     for i in range(n):
@@ -1617,14 +1621,14 @@ def _rewrite_chain(spark, sql, toks, vanilla_sql):
             where_span = (j + 1, k)
         try:
             return _chain_rewrite(spark, toks, depths, i, rels, ons,
-                                  from_end, where_span, vanilla_sql)
+                                  from_end, where_span, vanilla_sql, vname)
         except _Decline:
             continue
     raise _Decline
 
 
 def _chain_rewrite(spark, toks, depths, from_idx, rels, ons, from_end,
-                   where_span, vanilla_sql):
+                   where_span, vanilla_sql, vname):
     from pyspark.sql import functions as F
 
     aliases = [r.alias for r in rels]
@@ -1731,33 +1735,12 @@ def _chain_rewrite(spark, toks, depths, from_idx, rels, ons, from_end,
 
     joined = _build_join(spark, m, spatial, ldf, rdf_r, g1, g2)
 
-    vname = _VIEW_PREFIX + hashlib.sha1(
-        ("chain:" + _render(toks)
-         + _plan_conf_fingerprint(spark)).encode()).hexdigest()[:12]
-    joined.createOrReplaceTempView(vname)
-
     pair = {first_alias, second_alias}
 
     def out_name(alias, col):
         if alias == first_alias:
             return col
         return rmap.get(col, col)
-
-    def map_span(span):
-        # view-qualified (unlike the single-join path, other relations
-        # survive in the FROM, so bare column names could be ambiguous)
-        res, k2 = [], 0
-        while k2 < len(span):
-            t = span[k2]
-            if (_is_ident(t) and _unquote(t) in pair and k2 + 2 < len(span)
-                    and span[k2 + 1] == "." and _is_ident(span[k2 + 2])):
-                res.append(
-                    f"`{vname}`.`{out_name(_unquote(t), _unquote(span[k2 + 2]))}`")
-                k2 += 3
-                continue
-            res.append(t)
-            k2 += 1
-        return res
 
     surviving = [r for r in rels if r.alias not in pair]
     skip_hi = where_span[1] if where_span else from_end
@@ -1778,7 +1761,10 @@ def _chain_rewrite(spark, toks, depths, from_idx, rels, ons, from_end,
             parts = [_render(toks[r.start:r.end]) for r in surviving]
             parts.append(vname)
             out.append(" , ".join(parts))
-            wparts = ["( " + _render(map_span(toks[lo:hi])) + " )"
+            # view-qualified (unlike the single-join path, other
+            # relations survive in the FROM: bare names could clash)
+            wparts = ["( " + _render(_map_alias_refs(
+                toks[lo:hi], pair, out_name, f"`{vname}`.")) + " )"
                       for (lo, hi) in rest]
             if wparts:
                 out.append("WHERE")
@@ -1815,10 +1801,7 @@ def _chain_rewrite(spark, toks, depths, from_idx, rels, ons, from_end,
         out.append(t)
         k += 1
 
-    rewritten = _render(out)
-    result = vanilla_sql(rewritten)
-    result._sedona_rewritten_sql = rewritten
-    return result
+    return _run_over_view(joined, vname, out, vanilla_sql)
 
 
 # ----------------------------------------------------------------------
@@ -2131,18 +2114,15 @@ def _certify_view(spark, view: str, shadow: dict, kind: str,
                   what: str) -> None:
     """Verify ``shadow``'s columns of ``view`` in one scan, then register
     the shadow map in the session's view-certificate registry under
-    (view, kind), stamped with the view's CURRENT analyzed plan string —
-    a later CREATE OR REPLACE changes the plan text and silently
-    invalidates the certificate (fail-closed)."""
+    (view, kind), stamped with the view's CURRENT plan key — a later
+    CREATE OR REPLACE, or a file appended under the view's path, changes
+    the key and silently invalidates the certificate (fail-closed)."""
     _point_cert_scan(spark, view, list(shadow), shadow, what, kind)
-    fp = _view_fingerprint(spark, view)
-    if fp is None:
-        return
-    reg = getattr(spark, "_sedona_point_view_shadows", None)
-    if reg is None:
-        reg = {}
-        spark._sedona_point_view_shadows = reg
-    reg[(view, kind)] = (dict(shadow), fp)
+    fp = plan_key(spark.table(view))
+    if fp is not None:
+        if not hasattr(spark, "_sedona_point_view_shadows"):
+            spark._sedona_point_view_shadows = {}
+        spark._sedona_point_view_shadows[(view, kind)] = (dict(shadow), fp)
 
 
 def certify_point_view(spark, view: str, shadow: dict) -> None:
@@ -2183,35 +2163,25 @@ def certify_geog_point_view(spark, view: str, shadow: dict) -> None:
 
 def geog_shadow_xy_for_view(spark, view: str, col: str):
     """Live certified geography shadow ``(lon_col, lat_col)`` for a
-    view's geography column, or None (fingerprint-checked: a CREATE OR
-    REPLACE that changes the view silently invalidates)."""
+    view's geography column, or None (plan-key-checked: a CREATE OR
+    REPLACE or a file append that changes the view silently
+    invalidates)."""
     return _view_shadow(spark, view, col, "geog")
-
-
-def _view_fingerprint(spark, view: str) -> str | None:
-    """Analyzed-plan text with expression ids stripped: stable across
-    re-analysis (each spark.table() call mints fresh ids) but changed
-    by any CREATE OR REPLACE that alters the view's definition."""
-    try:
-        s = spark.table(view)._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return None
-    return re.sub(r"#\d+", "#", s)
 
 
 def _view_shadow(spark, table: str, col: str, kind: str = "planar"):
     """(x_col, y_col) for a view column holding a ``kind`` certificate
     (certify_point_view / certify_geog_point_view), if the view's plan
-    is unchanged; else None."""
-    reg = getattr(spark, "_sedona_point_view_shadows", None)
-    ent = reg.get((table, kind)) if reg else None
-    if ent is None:
-        return None
-    shadow, fp = ent
+    key is unchanged; else None."""
+    reg = getattr(spark, "_sedona_point_view_shadows", {})
+    shadow, fp = reg.get((table, kind), ({}, None))   # fp is never None
     if col not in shadow:
         return None
-    cur = _view_fingerprint(spark, table)
-    return tuple(shadow[col]) if cur is not None and cur == fp else None
+    try:
+        return tuple(shadow[col]) if plan_key(spark.table(table)) == fp \
+            else None
+    except Exception:       # the view is gone
+        return None
 
 
 def _point_table_shadow(spark, table: str, col: str):
@@ -2232,7 +2202,7 @@ def _point_table_shadow(spark, table: str, col: str):
 
 def _relation_shadow(spark, tbl: str, col: str):
     """Live certified shadow ``(x_col, y_col)`` for a named relation's
-    point column, from the session view registry (fingerprint-checked)
+    point column, from the session view registry (plan-key-checked)
     or the write-time table property — None when uncertified."""
     return _view_shadow(spark, tbl, col) or _point_table_shadow(spark, tbl, col)
 
@@ -2264,7 +2234,7 @@ def _subst_certified_calls(span: list[str], shadows: dict,
     substitute the coordinates (bit-equal by certificate), sqrt-form
     distance, the dwithin ``<= d + 1e-12`` kernel boundary.  Emitted
     references stay alias-qualified token triples (``a . px``) so the
-    caller's map_refs pass renames them onto the joined view.
+    caller's _map_alias_refs pass renames them onto the joined view.
 
     ``shadows``: alias -> {geom_col: (x_col, y_col)}.  Returns the new
     token list, or None when nothing substituted (callers keep the
@@ -2666,12 +2636,40 @@ def peephole_scalar(sql: str) -> str | None:
 # session installation
 # ----------------------------------------------------------------------
 
-def clear_rewrite_cache(spark: SparkSession) -> None:
-    """Forget memoized rewrites (call when table registrations change —
-    the cached join views captured the previously-resolved plans)."""
-    cache = getattr(spark, "_sedona_sql_rewrite_cache", None)
-    if cache is not None:
-        cache.clear()
+def _route(spark, query: str, vanilla, vname: str):
+    """The rewrite of ``query``: a routed DataFrame (its join registered
+    as ``vname``), a rewritten text to run vanilla, or None (decline)."""
+    peeped = peephole_scalar(query)
+    text = peeped if peeped is not None else query
+    out = try_rewrite(spark, text, vanilla, vname)
+    if out is not None:
+        return out
+    # scalar spatial calls over certified all-point columns -> native
+    # bit-extraction arithmetic (runs on the peepholed text, so both
+    # rewrites compose)
+    return rewrite_certified_scalar(spark, text, vanilla) or peeped
+
+
+def _warn_rewrite_failed(exc: Exception) -> None:
+    # a rewrite bug must not pass for a decline: the vanilla plan is
+    # correct but may be a Python-predicate nested-loop join
+    warnings.warn(f"spatial SQL rewrite failed, answering with the vanilla "
+                  f"plan: {type(exc).__name__}: {exc}", RuntimeWarning,
+                  stacklevel=3)
+
+
+def _is_query(sql: str) -> bool:
+    """Whether ``sql`` is a plain query, which ``spark.sql`` only
+    analyses; a command (INSERT, CTAS, CREATE VIEW) runs at once, so it
+    must never run again for a plan key.  Anything odd is a command."""
+    toks = _tokenize(sql)
+    if not toks or toks[0].upper() not in ("SELECT", "WITH", "FROM",
+                                           "VALUES", "TABLE", "("):
+        return False
+    # WITH ... INSERT, FROM s INSERT ... (multi-insert)
+    return not any(d == 0 and t.upper() in ("INSERT", "UPDATE", "DELETE",
+                                            "MERGE")
+                   for t, d in zip(toks, _depths(toks)))
 
 
 def install_sql_rewrite(spark: SparkSession) -> None:
@@ -2679,79 +2677,65 @@ def install_sql_rewrite(spark: SparkSession) -> None:
     operators.  Idempotent per session; vanilla behavior for every
     non-matching query (including parameterized sql(..., args)).
 
-    Successful rewrites are memoized per query text: the matcher's
-    eager work (plan-size estimates, the operators' path-choice probes)
-    runs once, and repeated calls replay the rewritten SQL against the
-    already-registered join view.  ``load_tables`` clears the memo —
-    re-registering a table must not serve a join captured against the
-    old one."""
-    if getattr(spark, "_sedona_sql_rewrite_installed", False):
+    Rewrites and declines of queries are memoized on (query text, plan
+    confs, ``plan_key`` of the query's vanilla analyzed plan, which
+    inlines every view, table and file listing it reads), so a replaced
+    view, an appended file or a changed conf is a new key; a hit replays
+    the rewritten SQL against the join view named from its key, which is
+    dropped with the entry.  Commands and queries without a plan key are
+    routed per call, never memoized; a rewrite that raises warns and
+    answers vanilla, unmemoized."""
+    if getattr(spark, "_sedona_sql_rewrite_memo", None) is not None:
         return
     vanilla = spark.sql
-    cache: dict[str, str | None] = {}
-    spark._sedona_sql_rewrite_cache = cache
+
+    def _drop_join_view(key, routed) -> None:
+        if routed is not None:
+            try:
+                spark.catalog.dropTempView(_join_view_name(key))
+            except Exception:
+                pass            # session already stopped
+
+    memo = BoundedMemo(256, on_evict=_drop_join_view)
     _MISS = object()
-
-    def _remember(key, text):
-        while len(cache) >= 256:
-            cache.pop(next(iter(cache)))
-        cache[key] = text
-
-    def _plan_confs() -> str:
-        # plan-affecting session options must key the memo: a stale view
-        # built under the other setting would silently override the conf
-        return _plan_conf_fingerprint(spark)
 
     def sql(query, *args, **kwargs):
         if args or kwargs or not isinstance(query, str):
             return vanilla(query, *args, **kwargs)
         if _OVERLOAD_PRECHECK.search(query):
             try:
-                ov = rewrite_relate_pattern(query)
-            except Exception:
-                ov = None
-            if ov is not None:
-                query = ov
+                query = rewrite_relate_pattern(query) or query
+            except Exception as exc:
+                _warn_rewrite_failed(exc)
         if not (_PRECHECK.search(query) or _PEEP_PRECHECK.search(query)
                 or _CERT_PRECHECK.search(query)):
             return vanilla(query)
-        query_key = (query, _plan_confs())
-        hit = cache.get(query_key, _MISS)
-        if hit is not _MISS:
-            # None memoizes a DECLINE: the matcher's eager work (plan
-            # resolution, stats probes) runs once per query text, not
-            # per call — scalar ST_Distance queries hit this path
-            return vanilla(query if hit is None else hit)
-        try:
-            peeped = peephole_scalar(query)
-        except Exception:
-            peeped = None
-        text = peeped if peeped is not None else query
-        if _PRECHECK.search(text):
+        base = pk = None
+        if _is_query(query):
             try:
-                out = try_rewrite(spark, text, vanilla)
+                base = vanilla(query)
             except Exception:
-                out = None
-            if out is not None:
-                rw = getattr(out, "_sedona_rewritten_sql", None)
-                if rw is not None:
-                    _remember(query_key, rw)
-                return out
-        # scalar spatial calls over certified all-point columns -> native
-        # bit-extraction arithmetic (runs on the peepholed text, so both
-        # rewrites compose; memoized like every other text rewrite)
+                pass            # re-raised by the vanilla answer below
+            pk = plan_key(base) if base is not None else None
+        key = (query, _plan_conf_fingerprint(spark), pk)
+        hit = memo.get(key, _MISS)       # pk None is never stored
+        if hit is None:          # a memoized decline
+            return base
+        if hit is not _MISS:
+            return vanilla(hit)
         try:
-            cert_text = rewrite_certified_scalar(spark, text, vanilla)
-        except Exception:
-            cert_text = None
-        if cert_text is not None:
-            _remember(query_key, cert_text)
-            return vanilla(cert_text)
-        if peeped is not None:
-            _remember(query_key, peeped)
-            return vanilla(peeped)
-        _remember(query_key, None)
-        return vanilla(query)
+            out = _route(spark, query, vanilla, _join_view_name(key))
+        except Exception as exc:
+            _warn_rewrite_failed(exc)
+            return base if base is not None else vanilla(query)
+        routed = getattr(out, "_sedona_rewritten_sql", out)
+        if pk is not None:
+            memo.put(key, routed)
+        if isinstance(out, DataFrame):
+            return out
+        if routed is not None:
+            return vanilla(routed)
+        return base if base is not None else vanilla(query)
 
     spark.sql = sql
-    spark._sedona_sql_rewrite_installed = True
+    spark._sedona_sql_rewrite_memo = memo

@@ -152,10 +152,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
     PARQUET_TYPE_ILLEGAL) before the first read.
     """
     apply_runtime_confs(spark)
-    # re-registering tables invalidates memoized spatial-join rewrites
-    # (their views captured the previously-resolved table plans)
-    from sedona_db_spark.plans.sql_rewrite import clear_rewrite_cache
-    clear_rewrite_cache(spark)
     names = [
         "region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "documents", "embeddings",

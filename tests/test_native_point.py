@@ -170,7 +170,7 @@ def test_shadow_certification_refusals(spark):
 def test_view_shadow_invalidated_by_replace(spark):
     """A view certificate dies with the view definition, for both kinds
     (certify_point_view / certify_geog_point_view): CREATE OR REPLACE
-    with different content must fail the fingerprint so the rewrite
+    with different content must change the plan key so the rewrite
     falls back to the kernel (fail-closed).  A certificate is only ever
     served by its own kind's lookup."""
     from sedona_db_spark.plans.sql_rewrite import (
@@ -194,6 +194,32 @@ def test_view_shadow_invalidated_by_replace(spark):
                   FROM range(10)""")
         assert lookup(spark, "np_vshadow", "g") is None
     spark.catalog.dropTempView("np_vshadow")
+
+
+def test_view_shadow_invalidated_by_parquet_append(spark, tmp_path):
+    """A file appended under a certified ``parquet.`dir``` view changes
+    the view's plan key, so the certificate stops serving: an appended
+    NaN x is a NULL point to the kernel but a NaN shadow, and ST_X must
+    keep answering NULL."""
+    from sedona_db_spark.plans.sql_rewrite import (
+        _view_shadow, certify_point_view)
+    d = str(tmp_path / "pts")
+    spark.createDataFrame([(i, float(i), 2.0) for i in range(8)],
+                          "k long, x double, y double").write.parquet(d)
+    spark.sql(f"""CREATE OR REPLACE TEMP VIEW np_vappend AS
+                  SELECT k, x, y, ST_Point(x, y) AS g FROM parquet.`{d}`""")
+    certify_point_view(spark, "np_vappend", {"g": ("x", "y")})
+    assert _view_shadow(spark, "np_vappend", "g") == ("x", "y")
+    q = "SELECT k, ST_X(g) AS gx FROM np_vappend"
+    plan = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan, plan      # served by the shadow
+    spark.createDataFrame([(99, float("nan"), 2.0)],
+                          "k long, x double, y double") \
+        .write.mode("append").parquet(d)
+    assert _view_shadow(spark, "np_vappend", "g") is None
+    got = {r["k"]: r["gx"] for r in spark.sql(q).collect()}
+    assert got[99] is None and got[3] == 3.0 and len(got) == 9
+    spark.catalog.dropTempView("np_vappend")
 
 
 def test_certified_scalar_rewrite_fires_and_matches(spark):

@@ -1,5 +1,7 @@
 """Distributed operator tests: spatial joins, KNN, dedup, similarity."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -1494,8 +1496,10 @@ def test_persist_pool_plan_keyed_no_self_eviction(spark):
 def test_plan_cache_reset_clears_every_pool_and_memo(spark):
     """One reset empties every plan-keyed cache: frames persisted through
     two different pools (one of them the LM tokenization pool that cold
-    measurements once missed) are unpersisted, and the stats memo stops
-    serving."""
+    measurements once missed) are unpersisted, the stats memo stops
+    serving, and a repeated spatial SQL text re-runs the rewrite (a
+    fresh rewrite tags its frame with ``_sedona_rewritten_sql``; a memo
+    replay does not)."""
     from sedona_db_spark.functions import text
     from sedona_db_spark.operators import result_cache
     a = result_cache.PAIR_RESULT_POOL.persist(
@@ -1506,11 +1510,22 @@ def test_plan_cache_reset_clears_every_pool_and_memo(spark):
     _, remember = result_cache.stats_memo("reset_test", a)
     remember(True)
     assert result_cache.stats_memo("reset_test", a)[0] is True
+    spark.sql("""CREATE OR REPLACE TEMP VIEW reset_pts AS
+                 SELECT id, ST_Point(CAST(id AS DOUBLE), 0.0D) AS geom
+                 FROM range(5)""")
+    spark.sql("""CREATE OR REPLACE TEMP VIEW reset_box AS SELECT
+                 ST_GeomFromText('POLYGON ((0 -1, 2 -1, 2 1, 0 1, 0 -1))')
+                 AS geom""")
+    q = ("SELECT p.id FROM reset_pts p JOIN reset_box b "
+         "ON ST_Intersects(p.geom, b.geom)")
+    assert hasattr(spark.sql(q), "_sedona_rewritten_sql")
+    assert not hasattr(spark.sql(q), "_sedona_rewritten_sql")
     result_cache.reset()
     for f in (a, b):
         assert not f.is_cached
         assert not f.storageLevel.useMemory
     assert result_cache.stats_memo("reset_test", a)[0] is None
+    assert hasattr(spark.sql(q), "_sedona_rewritten_sql")
 
 
 def test_stats_memo_fails_closed_without_plan_key(spark):
@@ -2023,6 +2038,17 @@ def test_bucketed_layout_join_all_modes(spark, cust_pts, boxes):
     da = sorted((r["c_custkey"], r["n_nationkey"]) for r in dgot.collect())
     db = sorted((r["c_custkey"], r["n_nationkey"]) for r in dref.collect())
     assert da == db
+    # the right modes refine through the same chooser as every other
+    # mode: the distance form takes the native stored-shape-class branch
+    for how, kw in (("right_anti", {"predicate": "within"}),
+                    ("right_semi", {"distance": 3.0})):
+        got = spatial_join_bucketed(spark, "t_layout_ops", bx, how=how, **kw)
+        ref = spatial_join(cust, bx, how=how, **kw)
+        assert sorted(r["n_nationkey"] for r in got.collect()) == \
+            sorted(r["n_nationkey"] for r in ref.collect())
+        if "distance" in kw:
+            plan = got._jdf.queryExecution().optimizedPlan().toString()
+            assert re.search(r"__bcls#\d+ = 1\)", plan), plan
 
 
 def test_bucketed_layout_append_keeps_grid(spark, cust_pts, boxes):

@@ -6,6 +6,8 @@ Spark's default pair-explosion plan (condition-less BroadcastNestedLoopJoin
 + per-pair Python filter).
 """
 
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1604,3 +1606,175 @@ def test_content_row_id_exclude_keeps_ids_stable(spark):
     ra = sorted(tuple(r[i] for i in ids) for r in ta.select(*ids).collect())
     rb = sorted(tuple(r[i] for i in ids) for r in tb.select(*ids).collect())
     assert ra == rb and len(ra) == 50
+
+
+# ----------------------------------------------------------------------
+# the rewrite memo is keyed on the query's plan key: answers never depend
+# on which relations an earlier call with the same text read
+# ----------------------------------------------------------------------
+
+def _memo_points(spark, view="rw_pts"):
+    spark.sql(f"""CREATE OR REPLACE TEMP VIEW {view} AS
+                  SELECT id, ST_Point(CAST(id AS DOUBLE) + 0.5, 1.0D) AS geom
+                  FROM range(10)""")
+
+
+def _memo_box(spark, x0, view="rw_box"):
+    spark.sql(f"""CREATE OR REPLACE TEMP VIEW {view} AS
+                  SELECT 1 AS bid, ST_GeomFromText('POLYGON (({x0} 0,
+                  {x0 + 3} 0, {x0 + 3} 3, {x0} 3, {x0} 0))') AS geom""")
+
+
+def _ids(df):
+    return sorted(r[0] for r in df.collect())
+
+
+def test_memo_sees_view_replace_and_restore(spark):
+    """The same text after CREATE OR REPLACE of a relation it reads
+    answers over the new relation (the memo used to replay the join view
+    captured at the first call), and A -> B -> A replays A's own join
+    view, not the one rebuilt under B (view names derive from the key)."""
+    _memo_points(spark)
+    q = "SELECT p.id FROM rw_pts p JOIN rw_box b ON ST_Intersects(p.geom, b.geom)"
+    # restoring A is a memo hit: the replayed text carries no rewrite tag
+    for x0, want, fresh in ((0, [0, 1, 2], True), (5, [5, 6, 7], True),
+                            (0, [0, 1, 2], False)):
+        _memo_box(spark, x0)
+        got = spark.sql(q)
+        assert hasattr(got, "_sedona_rewritten_sql") == fresh
+        assert _ids(got) == _ids(_vanilla(spark, q)) == want
+
+
+def test_memo_sees_parquet_append(spark, tmp_path):
+    """A file appended under a ``parquet.`dir``` view changes the
+    query's plan key, so the same text re-plans over the new file set."""
+    d = str(tmp_path / "pts")
+    spark.range(10).selectExpr("id", "CAST(id AS DOUBLE) + 0.5 AS x") \
+        .write.parquet(d)
+    spark.sql(f"""CREATE OR REPLACE TEMP VIEW rw_fpts AS
+                  SELECT id, ST_Point(x, 1.0D) AS geom FROM parquet.`{d}`""")
+    _memo_box(spark, 0, "rw_box3")
+    q = ("SELECT p.id FROM rw_fpts p JOIN rw_box3 b "
+         "ON ST_Intersects(p.geom, b.geom)")
+    assert _ids(spark.sql(q)) == [0, 1, 2]
+    spark.createDataFrame([(20, 1.25), (21, 2.75)], "id long, x double") \
+        .write.mode("append").parquet(d)
+    assert _ids(spark.sql(q)) == _ids(_vanilla(spark, q)) == [0, 1, 2, 20, 21]
+
+
+def test_memo_hit_starts_no_job(spark):
+    """A repeated text over unchanged relations is a memo hit: its
+    construction starts no Spark job (no probe, no certificate scan)."""
+    _memo_points(spark, "rw_pts4")
+    _memo_box(spark, 0, "rw_box4")
+    q = ("SELECT p.id, b.bid FROM rw_pts4 p JOIN rw_box4 b "
+         "ON ST_DWithin(p.geom, b.geom, 0.5)")
+    from sedona_db_spark.operators import result_cache
+    result_cache.reset()          # no stats memoized by earlier tests
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    first = spark.sql(q)
+    assert set(tracker.getJobIdsForGroup()) > before    # the miss probes
+    want = _ids(first)
+    before = set(tracker.getJobIdsForGroup())
+    again = spark.sql(q)
+    assert set(tracker.getJobIdsForGroup()) == before
+    assert not hasattr(again, "_sedona_rewritten_sql")   # replayed text
+    assert _ids(again) == want == _ids(_vanilla(spark, q))
+
+
+def test_rewrite_crash_warns_and_is_not_memoized(spark, monkeypatch):
+    """An unexpected exception inside the rewrite is loud (RuntimeWarning
+    naming it), answers with the vanilla plan, and is not memoized as a
+    decline: once the fault is gone the same text routes."""
+    from sedona_db_spark.plans import sql_rewrite
+    _memo_points(spark, "rw_pts5")
+    _memo_box(spark, 0, "rw_box5")
+    q = ("SELECT p.id FROM rw_pts5 p JOIN rw_box5 b "
+         "ON ST_Intersects(p.geom, b.geom)")
+
+    def boom(*a, **k):
+        raise RuntimeError("rewrite bug")
+
+    monkeypatch.setattr(sql_rewrite, "_rewrite", boom)
+    with pytest.warns(RuntimeWarning, match="RuntimeError: rewrite bug"):
+        df = spark.sql(q)
+    assert not hasattr(df, "_sedona_rewritten_sql")
+    assert _ids(df) == _ids(_vanilla(spark, q)) == [0, 1, 2]
+    monkeypatch.undo()
+    routed = spark.sql(q)
+    assert getattr(routed, "_sedona_rewritten_sql", None)
+    assert _ids(routed) == [0, 1, 2]
+    # a relation the catalog does not hold (a CTE name) is a quiet
+    # decline, not a fault
+    cte = "WITH c AS (SELECT * FROM rw_pts5) " + q.replace("rw_pts5", "c")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        assert _ids(spark.sql(cte)) == [0, 1, 2]
+
+
+def _count(spark, table):
+    return spark.table(table).count()
+
+
+def test_commands_through_the_wrapper_run_once(spark):
+    """``spark.sql`` runs a command as soon as it is called, so the
+    wrapper never runs one again to take a plan key: an INSERT whose
+    spatial scalar is rewritten, or whose join routes, adds each row
+    once, and a spatial CTAS or CREATE TEMP VIEW does not fail on a
+    second run with 'already exists'."""
+    _memo_points(spark, "rw_pts6")
+    _memo_box(spark, 0, "rw_box6")
+    dist = ("ST_Distance(ST_Point(CAST(id AS DOUBLE), 0.0D), "
+            "ST_Point(0.0D, 0.0D))")
+    for t in ("rw_ins", "rw_ins_join", "rw_ctas"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    try:
+        spark.sql("CREATE TABLE rw_ins (d DOUBLE) USING parquet")
+        spark.sql("CREATE TABLE rw_ins_join (id BIGINT) USING parquet")
+        ins = f"INSERT INTO rw_ins SELECT {dist} FROM range(5)"
+        ins_join = ("INSERT INTO rw_ins_join SELECT p.id FROM rw_pts6 p "
+                    "JOIN rw_box6 b ON ST_Intersects(p.geom, b.geom)")
+        for n in (1, 2):      # the second call of the same text too
+            spark.sql(ins)
+            spark.sql(ins_join)
+            assert _count(spark, "rw_ins") == 5 * n
+            assert _count(spark, "rw_ins_join") == 3 * n
+        assert sorted(r[0] for r in spark.table("rw_ins").collect()) == \
+            [0.0, 0.0, 1.0, 1.0, 2.0, 2.0, 3.0, 3.0, 4.0, 4.0]
+        spark.sql(f"CREATE TABLE rw_ctas USING parquet AS "
+                  f"SELECT {dist} AS d FROM range(3)")
+        assert _count(spark, "rw_ctas") == 3
+        spark.sql(f"CREATE TEMP VIEW rw_cview AS SELECT {dist} AS d "
+                  f"FROM range(4)")
+        assert _count(spark, "rw_cview") == 4
+    finally:
+        spark.catalog.dropTempView("rw_cview")
+        for t in ("rw_ins", "rw_ins_join", "rw_ctas"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_join_views_dropped_with_their_memo_entries(spark, monkeypatch):
+    """Every data version of a repeated text registers its own join
+    view; the view goes when its memo entry is evicted or reset, so a
+    text re-run over a moving view keeps the catalog bounded."""
+    from sedona_db_spark.operators import result_cache
+
+    def join_views():
+        return {t.name for t in spark.catalog.listTables()
+                if t.name.startswith("__sedona_sql_join_")}
+
+    result_cache.reset()
+    before = join_views()
+    monkeypatch.setattr(spark._sedona_sql_rewrite_memo, "_cap", 2)
+    _memo_points(spark, "rw_pts7")
+    q = ("SELECT p.id FROM rw_pts7 p JOIN rw_box7 b "
+         "ON ST_Intersects(p.geom, b.geom)")
+    for x0 in range(6):
+        _memo_box(spark, x0, "rw_box7")
+        got = spark.sql(q)
+        assert hasattr(got, "_sedona_rewritten_sql")
+        assert _ids(got) == [x0, x0 + 1, x0 + 2]
+        assert len(join_views() - before) <= 2
+    result_cache.reset()
+    assert join_views() - before == set()

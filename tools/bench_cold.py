@@ -7,8 +7,9 @@ tool reports both:
 - warm: reps run back-to-back, pools intact (the bench's protocol);
 - cold: every plan-keyed persist pool (pair sets, signature frames,
   partitioned KNN, LM tokenization) is cleared (frames unpersisted) and
-  the plan-stats memo dropped before EACH rep (``result_cache.reset``),
-  so every rep rebuilds and re-executes from the parquet inputs.
+  the plan-stats memo and the SQL rewrite memos dropped before EACH rep
+  (``result_cache.reset``), so every rep re-plans, rebuilds and
+  re-executes from the parquet inputs.
   Session-level warmup (JVM codegen, python workers, parquet footers)
   stays warm in both — the decomposition isolates exactly the pool
   effect.

@@ -6,14 +6,37 @@ bench HEADLINE queries), creating <out_dir> if needed; e.g.
 ``python tools/dump_plans.py plans/r12 after``.  Runs at
 $SPARK_GRAFT_SF_DIR (default sf0.1) so plans match the bench's AQE/stats
 decisions.
+
+The dump is normalized so that two runs of the same code are
+byte-identical and plan identity is a plain ``diff -r``: expression ids
+(``#N``), ``plan_id=N`` and ``MapPartitionsRDD[N]`` counters, and the
+checkout's own path (tables written under it print their location) are
+replaced by fixed placeholders.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+_RUN_COUNTERS = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"MapPartitionsRDD\[\d+\]"), "MapPartitionsRDD[N]"),
+]
+
+
+def normalize(txt: str) -> str:
+    """Plan text with the per-run counters and the checkout path
+    replaced by placeholders."""
+    txt = txt.replace(ROOT, "<checkout>")
+    for pat, repl in _RUN_COUNTERS:
+        txt = pat.sub(repl, txt)
+    return txt
 
 
 def main() -> None:
@@ -38,7 +61,7 @@ def main() -> None:
             df._jdf.queryExecution(), "formatted")
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(txt)
+            f.write(normalize(txt))
         print(f"wrote {path}")
     spark.stop()
 
