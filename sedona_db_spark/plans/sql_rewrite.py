@@ -17,6 +17,10 @@ logical optimizer rules ``MergeSpatialFilterIntoJoin`` +
 - ``FROM a, b WHERE ST_Pred(...)`` / CROSS JOIN + WHERE -> same (the
   reference merges the filter into the join first; optimizer.rs:197-261)
 - ``ON ST_DWithin(a.g, b.g, d)`` -> distance join
+- ``WHERE [NOT] EXISTS (SELECT .. FROM b WHERE ST_Pred(a.g, b.g) ..)``
+  -> the same route as ``LEFT SEMI/ANTI JOIN``, and all-inner FROM
+  chains of 3+ relations -> the spatial pair through the operator, the
+  rest through Catalyst's hash joins (the matcher banner lists shapes)
 - ``ON ST_KNN(q.g, o.g, k, use_spheroid)`` -> ``knn_join`` (inner only).
   Conjuncts above the join keep SQL placement, so an object-side filter
   applies AFTER neighbor selection — the reference pins exactly this
@@ -43,6 +47,7 @@ from __future__ import annotations
 import hashlib
 import re
 import warnings
+from collections import namedtuple
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -139,6 +144,10 @@ _RS_PRED_NAMES = {
     "RS_CONTAINS": "contains",
     "RS_WITHIN": "within",
 }
+
+# the spatial join predicate calls (the comparison form aside)
+_SPATIAL_CALLS = set(_PRED_NAMES) | set(_RS_PRED_NAMES) | {"ST_DWITHIN",
+                                                           "ST_KNN"}
 
 _PRECHECK = re.compile(
     r"\b(?:ST_(INTERSECTS|CONTAINS|WITHIN|COVERS|COVERED_?BY|TOUCHES|CROSSES|"
@@ -316,17 +325,32 @@ def _qualified_ref(toks, lo, hi, aliases, schemas):
     return None
 
 
+# integer literal suffixes -> magnitude of the type's most negative value
+_INT_SUFFIX_MAX = {"L": 2 ** 63, "S": 2 ** 15, "Y": 2 ** 7}
+_NUM_LITERAL = re.compile(r"(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?(BD|D|L|S|Y)?",
+                          re.I)
+
+
 def _literal_number(toks, lo, hi):
+    """A (negated) numeric literal span -> the double vanilla Spark hands
+    the kernel, else None.  Plain, ``D`` and ``BD`` literals are the
+    decimal's nearest double; ``L``/``S``/``Y`` integers must fit their
+    type; ``F`` (a float32, rounded before the kernel sees it) is not a
+    literal here, so its conjunct declines."""
     span = toks[lo:hi]
-    if len(span) == 1 and re.fullmatch(r"[\d.eE+-]+", span[0]):
-        try:
-            return float(span[0])
-        except ValueError:
-            return None
+    sign = 1
     if len(span) == 2 and span[0] == "-":
-        v = _literal_number(toks, lo + 1, hi)
-        return -v if v is not None else None
-    return None
+        sign, span = -1, span[1:]
+    m = _NUM_LITERAL.fullmatch(span[0]) if len(span) == 1 else None
+    if m is None:
+        return None
+    body, exp, suffix = m.group(1), m.group(2), (m.group(3) or "").upper()
+    if suffix in _INT_SUFFIX_MAX:
+        if not body.isdigit() or exp \
+                or int(body) > _INT_SUFFIX_MAX[suffix] - (sign > 0):
+            return None
+        return float(sign * int(body))
+    return sign * float(body + (exp or ""))
 
 
 def _parse_distance_comparison(toks, lo, hi, aliases, schemas):
@@ -386,8 +410,7 @@ def _parse_spatial_conjunct(toks, lo, hi, aliases, schemas):
     if hi - lo < 4 or toks[lo + 1] != "(" or toks[hi - 1] != ")":
         return _parse_distance_comparison(toks, lo, hi, aliases, schemas)
     fname = toks[lo].upper()
-    if (fname not in _PRED_NAMES and fname not in _RS_PRED_NAMES
-            and fname not in ("ST_DWITHIN", "ST_KNN")):
+    if fname not in _SPATIAL_CALLS:
         return _parse_distance_comparison(toks, lo, hi, aliases, schemas)
     # split args on top-level commas inside the call
     d = 0
@@ -491,9 +514,11 @@ def _refs_relations(toks, lo, hi, aliases, schemas) -> set[str]:
     return out
 
 
-def _is_equi_conjunct(toks, lo, hi, aliases, schemas) -> bool:
-    """x = y with x and y from different join sides (reference declines
-    the spatial rewrite then — optimizer.rs:253-257)."""
+def _is_equi_conjunct(toks, lo, hi, aliases, schemas, pair) -> bool:
+    """x = y with x and y from the two different relations of ``pair``
+    (reference declines the spatial rewrite then — optimizer.rs:253-257);
+    equi keys touching any other relation are what a chain keeps for
+    Catalyst's hash joins."""
     d = 0
     for j in range(lo, hi):
         t = toks[j]
@@ -504,9 +529,213 @@ def _is_equi_conjunct(toks, lo, hi, aliases, schemas) -> bool:
         elif d == 0 and t == "=":
             lhs = _refs_relations(toks, lo, j, aliases, schemas)
             rhs = _refs_relations(toks, j + 1, hi, aliases, schemas)
-            if lhs and rhs and lhs != rhs:
+            if lhs and rhs and lhs != rhs and (lhs | rhs) <= set(pair):
                 return True
     return False
+
+
+# ----------------------------------------------------------------------
+# the matcher: one FROM-clause scanner for every routed shape
+#
+#   FROM a <join word> b ON c1 AND ...    two relations: the join word
+#                                         picks the mode, across the whole
+#                                         lattice (INNER / LEFT / RIGHT /
+#                                         FULL / SEMI / ANTI)
+#   FROM a, b / a CROSS JOIN b WHERE ...  inner; the conjuncts live in the
+#                                         WHERE (the reference merges the
+#                                         filter into the join first,
+#                                         optimizer.rs:197-261)
+#   FROM a JOIN b ON .. JOIN c ON ..      three or more relations, all
+#   / FROM a, b, c WHERE ...              inner (inner joins commute and
+#                                         associate, so every ON conjunct
+#                                         is a WHERE conjunct): the spatial
+#                                         conjunct picks the pair, the
+#                                         other relations stay in the FROM
+#                                         and Catalyst re-derives their
+#                                         hash joins
+#   FROM a WHERE .. [NOT] EXISTS (        normalized onto FROM a LEFT
+#     SELECT .. FROM b WHERE ..)          SEMI/ANTI JOIN b' ON <the one
+#                                         spatial or a-naming conjunct>,
+#                                         where b' is b pre-filtered by
+#                                         the others
+#                                         (reference SpatialJoinExec
+#                                         LeftSemi/LeftAnti; vanilla Spark
+#                                         cannot decorrelate a Python-UDF
+#                                         predicate)
+#
+# Every shape then runs the one pair-join core (_rewrite).  The matcher
+# declines NATURAL / USING / LATERAL joins, repeated aliases, a 3+ chain
+# with an outer/semi/anti join word or a bare ``*`` (the output column
+# order would follow the view, not the FROM list), an EXISTS subquery with
+# joins / GROUP BY / ... or with other than exactly one spatial or
+# outer-naming conjunct, and top-level OR / NOT in a conjunct list.  The core
+# declines when no conjunct is spatial, spatial conjuncts name different
+# pairs, an equi key links the pair (hash join wins — reference
+# optimizer.rs:253-257), KNN sits outside an inner join or a radius
+# column lives outside the pair.
+# ----------------------------------------------------------------------
+
+# join words -> the mode of the join they introduce; "cross" (a comma or
+# CROSS JOIN) is an inner join whose condition lives in the WHERE clause
+_JOIN_KINDS = {
+    (",",): "cross", ("CROSS", "JOIN"): "cross",
+    ("JOIN",): "inner", ("INNER", "JOIN"): "inner",
+    ("LEFT", "JOIN"): "left", ("LEFT", "OUTER", "JOIN"): "left",
+    ("RIGHT", "JOIN"): "right", ("RIGHT", "OUTER", "JOIN"): "right",
+    ("FULL", "JOIN"): "full", ("FULL", "OUTER", "JOIN"): "full",
+    ("SEMI", "JOIN"): "left_semi", ("LEFT", "SEMI", "JOIN"): "left_semi",
+    ("ANTI", "JOIN"): "left_anti", ("LEFT", "ANTI", "JOIN"): "left_anti",
+}
+
+
+def _join_kind(toks, j):
+    """(mode, index past the words) of the join words at token j, or
+    (None, j)."""
+    for w in (3, 2, 1):
+        kind = _JOIN_KINDS.get(tuple(t.upper() for t in toks[j:j + w]))
+        if kind is not None:
+            return kind, j + w
+    return None, j
+
+
+def _span_end(toks, depths, k, d, stops, joins=False):
+    """End of the clause starting at token k of a depth-d block: the
+    first depth-d token in ``stops`` (or join word, with ``joins``), or
+    the block's close."""
+    n = len(toks)
+    while k < n and depths[k] >= d:
+        if depths[k] == d and (toks[k].upper() in stops
+                               or (joins and _join_kind(toks, k)[0])):
+            break
+        k += 1
+    return k
+
+
+def _scan_from(toks, depths, i):
+    """The FROM clause at token i -> (relations, join modes, ON spans
+    (None after a cross join), clause end)."""
+    n, d = len(toks), depths[i]
+    rel, j = _parse_rel(toks, i + 1)
+    rels, kinds, ons = [rel], [], []
+    while j < n and depths[j] == d:
+        kind, j = _join_kind(toks, j)
+        if kind is None:
+            break
+        rel, j = _parse_rel(toks, j)
+        on = None
+        if kind != "cross":
+            if not (j < n and toks[j].upper() == "ON"):
+                raise _Decline           # USING (...)
+            on = (j + 1, _span_end(toks, depths, j + 1, d, _BLOCK_END,
+                                   joins=True))
+            j = on[1]
+        rels.append(rel)
+        kinds.append(kind)
+        ons.append(on)
+    if j < n and depths[j] == d and toks[j].upper() not in _BLOCK_END:
+        raise _Decline                   # NATURAL / LATERAL / ...
+    return rels, kinds, ons, j
+
+
+# A FROM clause the rewrite may route: its relations, the join mode of
+# its spatial pair, and the ON / WHERE conjunct spans to classify.  The
+# emitter replaces tokens [from_idx, end) — the FROM clause — and turns
+# ``true_span`` (an EXISTS conjunct) into TRUE.
+_Match = namedtuple("_Match", "from_idx end rels how on where true_span",
+                    defaults=(None,))
+
+
+def _joins_outer(toks, depths, lo, hi, alias) -> bool:
+    """Whether the EXISTS conjunct toks[lo:hi] belongs in the join
+    condition: it holds an ``alias.col`` reference to the outer relation
+    or is a spatial-predicate call (whose bare geometry names resolve
+    against both sides)."""
+    lo, hi = _unparen(toks, depths, lo, hi)
+    if toks[lo].upper() in _SPATIAL_CALLS and toks[lo + 1:lo + 2] == ["("]:
+        return True
+    return any(_is_ident(toks[j]) and _unquote(toks[j]) == alias
+               and toks[j + 1] == "." for j in range(lo, hi - 2))
+
+
+def _matches(toks, depths):
+    """Every FROM clause of the query the core may route, in text order."""
+    for i, t in enumerate(toks):
+        if t.upper() != "FROM":
+            continue
+        try:
+            rels, kinds, ons, end = _scan_from(toks, depths, i)
+            where = None
+            if end < len(toks) and toks[end].upper() == "WHERE":
+                where = (end + 1, _span_end(toks, depths, end + 1, depths[i],
+                                            _BLOCK_END - {"WHERE"}))
+            if len(rels) == 1:
+                if depths[i] == 0 and where is not None:
+                    for lo, hi in _split_conjuncts(toks, *where):
+                        m = _exists_match(toks, depths, i, rels[0], lo, hi)
+                        if m is not None:
+                            yield m
+                continue
+            if len({r.alias for r in rels}) != len(rels):
+                continue
+            if len(rels) > 2 and (set(kinds) - {"inner", "cross"} or any(
+                    t2 == "*" and k and toks[k - 1] not in (".", "(")
+                    and not any(r.start <= k < r.end for r in rels)
+                    for k, t2 in enumerate(toks))):
+                continue
+            on = [c for span in ons if span is not None
+                  for c in _split_conjuncts(toks, *span)]
+            wh = (_split_conjuncts(toks, *where)
+                  if where is not None and (len(rels) > 2 or "cross" in kinds)
+                  else [])
+            how = kinds[0] if len(rels) == 2 and kinds[0] != "cross" \
+                else "inner"
+            yield _Match(i, end, rels, how, on, wh)
+        except _Decline:
+            continue
+
+
+def _exists_match(toks, depths, i, rel1, lo, hi):
+    """The conjunct toks[lo:hi] of ``FROM rel1 WHERE ...`` as a semi/anti
+    _Match when it is ``[NOT] EXISTS (SELECT .. FROM r2 b [WHERE ..])``,
+    else None.  The one conjunct that is a spatial predicate or names
+    rel1 becomes the ON clause; the others pre-filter r2 as
+    ``(SELECT * FROM r2 AS b WHERE ..) b`` (exact EXISTS semantics; a bare
+    name of rel1 there fails analysis, which declines), and that shape
+    keeps r2's certificate (_subquery_shadow_base)."""
+    p = lo + (toks[lo].upper() == "NOT")
+    if not (p + 1 < hi and toks[p].upper() == "EXISTS"
+            and toks[p + 1] == "(" and toks[hi - 1] == ")"):
+        return None
+    sub_lo, sub_hi = p + 2, hi - 1
+    ds = depths[sub_lo]
+    f = next((k for k in range(sub_lo, sub_hi) if depths[k] == ds
+              and toks[k].upper() in _BLOCK_END | {"FROM"}), None)
+    if f is None or toks[f].upper() != "FROM":
+        return None
+    try:
+        rels, _, _, end = _scan_from(toks, depths, f)
+        conjs = []
+        if end < sub_hi:
+            if toks[end].upper() != "WHERE" or any(
+                    depths[k] == ds and toks[k].upper() in _BLOCK_END
+                    for k in range(end + 1, sub_hi)):
+                return None
+            conjs = _split_conjuncts(toks, end + 1, sub_hi)
+    except _Decline:
+        return None
+    outer = [c for c in conjs if _joins_outer(toks, depths, *c, rel1.alias)]
+    if len(rels) != 1 or rels[0].alias == rel1.alias or len(outer) != 1:
+        return None
+    rel2 = rels[0]
+    pre = [c for c in conjs if c not in outer]
+    if pre:
+        src = f"( {rel2.text} )" if rel2.is_subquery else rel2.text
+        cond = " AND ".join("( " + _render(toks[a:b]) + " )" for a, b in pre)
+        rel2 = _Rel(rel2.start, rel2.end, rel2.alias, True,
+                    f"SELECT * FROM {src} AS `{rel2.alias}` WHERE {cond}")
+    return _Match(i, rel1.end, [rel1, rel2],
+                  "left_anti" if p > lo else "left_semi", outer, [],
+                  true_span=(lo, hi))
 
 
 # ----------------------------------------------------------------------
@@ -521,115 +750,9 @@ def _join_view_name(key) -> str:
         repr(key).encode()).hexdigest()[:12]
 
 
-class _Match:
-    pass
-
-
-def _find_match(toks, depths, spark, vanilla_sql):
-    """Find the first rewritable FROM clause; returns a _Match or raises
-    _Decline."""
-    n = len(toks)
-    for i in range(n):
-        if toks[i].upper() != "FROM":
-            continue
-        d = depths[i]
-        try:
-            rel1, j = _parse_rel(toks, i + 1)
-        except _Decline:
-            continue
-        how = None
-        comma_form = False
-        if j < n and toks[j] == ",":
-            how, comma_form = "inner", True
-            j += 1
-        elif j < n and toks[j].upper() == "JOIN":
-            how = "inner"
-            j += 1
-        elif j + 1 < n and toks[j].upper() == "INNER" and toks[j + 1].upper() == "JOIN":
-            how = "inner"
-            j += 2
-        elif j + 1 < n and toks[j].upper() == "CROSS" and toks[j + 1].upper() == "JOIN":
-            how, comma_form = "inner", True
-            j += 2
-        elif j + 1 < n and toks[j].upper() == "LEFT" and toks[j + 1].upper() == "JOIN":
-            how = "left"
-            j += 2
-        elif (j + 2 < n and toks[j].upper() == "LEFT"
-              and toks[j + 1].upper() == "OUTER" and toks[j + 2].upper() == "JOIN"):
-            how = "left"
-            j += 3
-        # full join-type lattice (reference SpatialJoinExec supports
-        # Left/Right/Full/LeftSemi/LeftAnti/RightSemi/RightAnti,
-        # rust/sedona-spatial-join/src/exec.rs:235-240)
-        elif j + 1 < n and toks[j].upper() == "RIGHT" and toks[j + 1].upper() == "JOIN":
-            how = "right"
-            j += 2
-        elif (j + 2 < n and toks[j].upper() == "RIGHT"
-              and toks[j + 1].upper() == "OUTER" and toks[j + 2].upper() == "JOIN"):
-            how = "right"
-            j += 3
-        elif j + 1 < n and toks[j].upper() == "FULL" and toks[j + 1].upper() == "JOIN":
-            how = "full"
-            j += 2
-        elif (j + 2 < n and toks[j].upper() == "FULL"
-              and toks[j + 1].upper() == "OUTER" and toks[j + 2].upper() == "JOIN"):
-            how = "full"
-            j += 3
-        elif (j + 2 < n and toks[j].upper() == "LEFT"
-              and toks[j + 1].upper() == "SEMI" and toks[j + 2].upper() == "JOIN"):
-            how = "left_semi"
-            j += 3
-        elif j + 1 < n and toks[j].upper() == "SEMI" and toks[j + 1].upper() == "JOIN":
-            how = "left_semi"
-            j += 2
-        elif (j + 2 < n and toks[j].upper() == "LEFT"
-              and toks[j + 1].upper() == "ANTI" and toks[j + 2].upper() == "JOIN"):
-            how = "left_anti"
-            j += 3
-        elif j + 1 < n and toks[j].upper() == "ANTI" and toks[j + 1].upper() == "JOIN":
-            how = "left_anti"
-            j += 2
-        else:
-            continue
-        try:
-            rel2, j = _parse_rel(toks, j)
-        except _Decline:
-            continue
-        if rel1.alias == rel2.alias:
-            continue
-
-        m = _Match()
-        m.rel1, m.rel2, m.how, m.comma_form = rel1, rel2, how, comma_form
-        m.from_idx, m.depth = i, d
-
-        if comma_form:
-            # conjuncts live in the WHERE clause of this block
-            if not (j < n and depths[j] == d and toks[j].upper() == "WHERE"):
-                continue
-            m.join_end = j          # FROM span ends before WHERE
-            cond_lo = j + 1
-        else:
-            if not (j < n and toks[j].upper() == "ON"):
-                continue
-            cond_lo = j + 1
-        # condition extends to next block keyword at depth d (or a
-        # further JOIN -> decline: single-join shapes only)
-        k = cond_lo
-        while k < n and depths[k] >= d:
-            if depths[k] == d:
-                u = toks[k].upper()
-                if u in _BLOCK_END and not comma_form:
-                    break
-                if comma_form and u in (_BLOCK_END - {"WHERE"}):
-                    break
-                if u in _JOIN_WORDS or u == ",":
-                    raise _Decline   # multi-join FROM clause
-            k += 1
-        m.cond_lo, m.cond_hi = cond_lo, k
-        if not comma_form:
-            m.join_end = k
-        return m
-    raise _Decline
+# the spatial pair handed to the join builders: its two relations in
+# FROM order and the join mode
+_Pair = namedtuple("_Pair", "rel1 rel2 how")
 
 
 def _resolve_df(spark, vanilla_sql, rel: _Rel) -> DataFrame:
@@ -687,140 +810,126 @@ def _run_over_view(joined, vname, out, vanilla_sql) -> DataFrame:
 def try_rewrite(spark: SparkSession, sql: str, vanilla_sql,
                 vname: str) -> DataFrame | None:
     """Attempt the spatial-join rewrite, registering the join under the
-    temp view ``vname``; None means 'use vanilla'."""
+    temp view ``vname``; None means 'use vanilla'.  The first FROM clause
+    (in text order) the core routes wins."""
     if not _PRECHECK.search(sql):
         return None
     toks = _tokenize(sql)
     if toks is None:
         return None
-    try:
-        return _rewrite(spark, sql, toks, vanilla_sql, vname)
-    except _Decline:
-        pass
-    try:
-        return _rewrite_exists(spark, sql, toks, vanilla_sql, vname)
-    except _Decline:
-        pass
-    try:
-        return _rewrite_chain(spark, sql, toks, vanilla_sql, vname)
-    except _Decline:
-        return None
-
-
-def _rewrite(spark, sql, toks, vanilla_sql, vname):
     depths = _depths(toks)
-    m = _find_match(toks, depths, spark, vanilla_sql)
+    for m in _matches(toks, depths):
+        try:
+            return _rewrite(spark, toks, depths, m, vanilla_sql, vname)
+        except _Decline:
+            continue
+    return None
 
-    ldf = _resolve_df(spark, vanilla_sql, m.rel1)
-    rdf = _resolve_df(spark, vanilla_sql, m.rel2)
-    aliases = (m.rel1.alias, m.rel2.alias)
+
+def _unparen(toks, depths, lo, hi) -> tuple[int, int]:
+    """A conjunct span without one pair of enclosing parentheses."""
+    if (toks[lo] == "(" and toks[hi - 1] == ")"
+            and min(depths[lo + 1:hi - 1] or [0]) > depths[lo]):
+        return lo + 1, hi - 1
+    return lo, hi
+
+
+def _candidate_rank(sc) -> int:
+    """Cheapest candidate cut first: plain relation bbox, then
+    literal-radius dwithin, then column-radius / comparison forms
+    (those add an eager MAX agg)."""
+    if sc.kind == "relation" and not sc.keep_refine:
+        return 0
+    if sc.kind == "dwithin" and sc.dist_col is None and not sc.keep_refine:
+        return 1
+    return 2
+
+
+def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
+    """The pair-join core: route the spatial pair of ``m`` through the
+    engine's operators and run the rebuilt query over the join view."""
+    from pyspark.sql import functions as F
+
+    dfs = {r.alias: _resolve_df(spark, vanilla_sql, r) for r in m.rels}
+    aliases = tuple(dfs)
+    full = dict(dfs)
 
     # column pruning through the rewrite boundary: the join view would
     # otherwise drag every source column through the operator's Arrow/
     # python stages (any SQL column reference appears as its literal
     # identifier token, so keeping every mentioned name is safe).
-    # `SELECT *` keeps both sides whole, `alias.*` keeps that side whole;
+    # A bare `*` keeps every side whole, `alias.*` keeps that side whole;
     # `count(*)`-style stars (token directly after "(") don't block.
     star_sides = set()
     for i, t in enumerate(toks):
         if t != "*" or (i > 0 and toks[i - 1] == "("):
             continue
-        if i > 0 and toks[i - 1] == "." and i >= 2 and _is_ident(toks[i - 2]):
+        if i >= 2 and toks[i - 1] == "." and _is_ident(toks[i - 2]):
             star_sides.add(_unquote(toks[i - 2]))
         else:
             star_sides.update(aliases)
     mentioned = {_unquote(t) for t in toks if _is_ident(t)}
-    ldf_full, rdf_full = ldf, rdf
-    if m.rel1.alias not in star_sides:
-        ldf = ldf.select([c for c in ldf.columns if c in mentioned])
-    if m.rel2.alias not in star_sides:
-        rdf = rdf.select([c for c in rdf.columns if c in mentioned])
-    schemas = {m.rel1.alias: set(ldf.columns),
-               m.rel2.alias: set(rdf.columns)}
+    for a in aliases:
+        if a not in star_sides:
+            dfs[a] = dfs[a].select([c for c in dfs[a].columns
+                                    if c in mentioned])
+    schemas = {a: set(df.columns) for a, df in dfs.items()}
 
-    conjuncts = _split_conjuncts(toks, m.cond_lo, m.cond_hi)
-    spatial = None
-    spatial_span = None
-    rest = []
-    spatials = []
-    for (lo, hi) in conjuncts:
-        span = (lo + 1, hi - 1) if (
-            toks[lo] == "(" and toks[hi - 1] == ")"
-            and min(depths[lo + 1:hi - 1] or [0]) > depths[lo]) else (lo, hi)
-        sc = _parse_spatial_conjunct(toks, span[0], span[1], aliases, schemas)
-        if sc is not None:
-            spatials.append((sc, (lo, hi)))
+    spatials, rest = [], []
+    for span in m.on + m.where:
+        sc = _parse_spatial_conjunct(toks, *_unparen(toks, depths, *span),
+                                     aliases, schemas)
+        if sc is None:
+            rest.append(span)
         else:
-            if _is_equi_conjunct(toks, span[0], span[1], aliases, schemas):
-                raise _Decline       # equi-key present: hash join wins
-            rest.append((lo, hi))
+            spatials.append((sc, span))
     if not spatials:
         raise _Decline
-    # For non-inner modes, every conjunct beyond the candidate-
-    # generating one must be applied INSIDE the inner core before the
-    # lattice bookkeeping (a refine only ever shrinks the inner result,
-    # so match tracking is unchanged — applying it as an outer WHERE
-    # would instead drop padded LEFT rows / flip anti verdicts).
-    inner_refines: list[tuple[int, int]] = []
-    if len(spatials) == 1:
-        spatial, spatial_span = spatials[0]
-    else:
-        # two+ spatial predicates (e.g. ST_Intersects(a,b) AND
-        # ST_DWithin(a,b,d)): one becomes the candidate-generating
-        # join, the others ride as exact per-row refines (the SAME
-        # dispatched kernels vanilla evaluates, so boundary semantics
-        # are unchanged; conjunction only ever shrinks the chosen
-        # join's result).  Inner joins put the refines in the rebuilt
-        # WHERE; the rest of the lattice (round 10) filters the inner
-        # core before row-id bookkeeping.  KNN is not a row filter, so
-        # any KNN conjunct declines.
+    # two+ spatial predicates (e.g. ST_Intersects(a,b) AND
+    # ST_DWithin(a,b,d)): the cheapest becomes the candidate-generating
+    # join, the others ride as exact per-row refines (the SAME
+    # dispatched kernels vanilla evaluates, so boundary semantics are
+    # unchanged; conjunction only ever shrinks the chosen join's
+    # result).  KNN is not a row filter, so any KNN conjunct declines.
+    if len(spatials) > 1:
         if any(sc.kind == "knn" for sc, _ in spatials):
             raise _Decline
-
-        def _rank(sc):
-            # prefer the cheapest candidate cut: plain relation bbox,
-            # then literal-radius dwithin, then column-radius/
-            # comparison forms (those add an eager MAX agg)
-            if sc.kind == "relation" and not sc.keep_refine:
-                return 0
-            if sc.kind == "dwithin" and sc.dist_col is None \
-                    and not sc.keep_refine:
-                return 1
-            return 2
-        spatials.sort(key=lambda p: _rank(p[0]))
-        spatial, spatial_span = spatials[0]
-        if not m.comma_form:
-            # ON-clause extras -> surviving WHERE conjuncts (inner) or
-            # inner-core refines (lattice); in comma form they already
-            # sit in the WHERE text and stay there
-            if m.how == "inner":
-                rest.extend(sp for _sc, sp in spatials[1:])
-            else:
-                inner_refines.extend(sp for _sc, sp in spatials[1:])
-    if spatial.keep_refine:
-        # comparison form: the exact refine survives as a WHERE
-        # conjunct (inner) or filters the inner core (lattice modes —
-        # an outer WHERE would break LEFT/anti match semantics)
-        if not m.comma_form:
-            if m.how == "inner":
-                rest.append(spatial_span)
-            else:
-                inner_refines.append(spatial_span)
-        elif m.how != "inner":       # comma form is always inner
-            raise _Decline
-    if m.how != "inner" and not m.comma_form and rest:
-        # extra non-spatial ON conjuncts likewise refine the inner core
-        # (round 10; previously a blanket decline that left vanilla
-        # ERRORING on any outer/semi/anti python-UDF join)
-        inner_refines.extend(rest)
-        rest = []
+        spatials.sort(key=lambda p: _candidate_rank(p[0]))
+    spatial, spatial_span = spatials[0]
+    pair = tuple(a for a in aliases if a in spatial.arg_rels)
+    if any(set(sc.arg_rels) != set(pair) for sc, _ in spatials):
+        raise _Decline
+    if any(_is_equi_conjunct(toks, *_unparen(toks, depths, *span),
+                             aliases, schemas, pair) for span in rest):
+        raise _Decline               # equi-key present: hash join wins
     if spatial.kind == "knn" and m.how != "inner":
         raise _Decline
-
-    # geometry columns must exist on their relations
+    if spatial.dist_col is not None and spatial.dist_col[0] not in pair:
+        raise _Decline               # radius on a third relation
     for a, c in zip(spatial.arg_rels, spatial.arg_cols):
         if c not in schemas[a]:
             raise _Decline
+
+    # ON conjuncts beyond the candidate-generating one (the other
+    # spatial predicates, a comparison form's exact refine, plain
+    # conjuncts): inner joins move them to the rebuilt WHERE; the rest
+    # of the lattice (round 10) filters the inner core with them before
+    # the row-id mode bookkeeping (a refine only ever shrinks the inner
+    # result, so match tracking is unchanged — an outer WHERE would
+    # instead drop padded LEFT rows / flip anti verdicts).  WHERE
+    # conjuncts stay in place; the spatial one there becomes TRUE.
+    extra = [span for _, span in spatials[1:]]
+    if spatial.keep_refine:
+        extra.append(spatial_span)
+    on_rest = [s for s in rest if s in m.on]
+    on_extra = [s for s in extra if s in m.on]
+    if m.how == "inner":
+        moved, refines = on_rest + on_extra, []
+    else:
+        moved, refines = [], on_extra + on_rest
+    true_at = dict([m.true_span] if m.true_span is not None else [])
+    if not spatial.keep_refine and spatial_span in m.where:
+        true_at[spatial_span[0]] = spatial_span[1]
 
     # -------- certified shadow coordinates (round 12) ----------------
     # When a side's geometry argument is a shadow-certified point
@@ -832,17 +941,11 @@ def _rewrite(spark, sql, toks, vanilla_sql, vname):
     # via _subst_certified_calls, and — when nothing else references
     # the geometry — its ST_Point constructor prunes out of the plan
     # entirely.
-    geom_by_alias = {a: c for a, c in zip(spatial.arg_rels,
-                                          spatial.arg_cols)}
-    rel_by_alias = {m.rel1.alias: m.rel1, m.rel2.alias: m.rel2}
-    df_by_alias = {m.rel1.alias: ldf, m.rel2.alias: rdf}
-    full_by_alias = {m.rel1.alias: ldf_full, m.rel2.alias: rdf_full}
+    geom = dict(zip(spatial.arg_rels, spatial.arg_cols))
+    rel_of = {r.alias: r for r in m.rels}
     shadows: dict[str, dict[str, tuple]] = {}
-    for a in aliases:
-        gcol = geom_by_alias.get(a)
-        rel = rel_by_alias.get(a)
-        if gcol is None or rel is None:
-            continue
+    for a in pair:
+        rel = rel_of[a]
         # a bare `SELECT * FROM <name> [WHERE ...]` subquery keeps the
         # base relation's certificate: the shadow invariant is per-row
         # (bit-equal doubles, matched NULLs), so any row FILTER
@@ -853,80 +956,65 @@ def _rewrite(spark, sql, toks, vanilla_sql, vname):
         if tbl is None:
             continue
         try:
-            xy = _relation_shadow(spark, tbl, gcol)
+            xy = _relation_shadow(spark, tbl, geom[a])
         except Exception:
             xy = None
-        full_cols = full_by_alias[a].columns
+        full_cols = full[a].columns
         if not xy or xy[0] not in full_cols or xy[1] not in full_cols:
             continue
-        cur = df_by_alias[a]
-        if any(c not in cur.columns for c in xy):
-            keep = set(cur.columns) | set(xy)
-            df_by_alias[a] = full_by_alias[a].select(
-                [c for c in full_cols if c in keep])
-        shadows[a] = {gcol: tuple(xy)}
+        if any(c not in dfs[a].columns for c in xy):
+            keep = set(dfs[a].columns) | set(xy)
+            dfs[a] = full[a].select([c for c in full_cols if c in keep])
+        shadows[a] = {geom[a]: tuple(xy)}
     if shadows:
-        ldf = df_by_alias[m.rel1.alias]
-        rdf = df_by_alias[m.rel2.alias]
-        schemas = {m.rel1.alias: set(ldf.columns),
-                   m.rel2.alias: set(rdf.columns)}
+        schemas.update({a: set(dfs[a].columns) for a in pair})
 
     # -------- column disambiguation (right side renamed on collision)
+    a1, a2 = pair
+    ldf, rdf = dfs[a1], dfs[a2]
     lcols = list(ldf.columns)
     collide = set(lcols) & set(rdf.columns)
-    rmap = {c: (f"{m.rel2.alias}__{c}" if c in collide else c)
-            for c in rdf.columns}
+    rmap = {c: (f"{a2}__{c}" if c in collide else c) for c in rdf.columns}
     if any(v in lcols for c, v in rmap.items() if v != c):
         raise _Decline               # pathological rename collision
-    from pyspark.sql import functions as F
-    rdf_r = rdf.select([F.col(c).alias(a) for c, a in rmap.items()])
+    rdf_r = rdf.select([F.col(c).alias(v) for c, v in rmap.items()])
 
     def out_name(alias, col):
-        if alias == m.rel1.alias:
-            return col
-        return rmap.get(col, col)
+        return col if alias == a1 else rmap.get(col, col)
 
-    g1 = geom_by_alias.get(m.rel1.alias)
-    g2_src = geom_by_alias.get(m.rel2.alias)
-    g2 = rmap.get(g2_src, g2_src)
-
+    g1, g2 = geom[a1], rmap.get(geom[a2], geom[a2])
     # shadow tuples resolved onto the operator-side column names
-    sxy1 = shadows.get(m.rel1.alias, {}).get(g1)
-    sxy2 = shadows.get(m.rel2.alias, {}).get(g2_src)
+    sxy1 = shadows.get(a1, {}).get(g1)
+    sxy2 = shadows.get(a2, {}).get(geom[a2])
     if sxy2 is not None:
         sxy2 = (rmap.get(sxy2[0], sxy2[0]), rmap.get(sxy2[1], sxy2[1]))
-
-    def _map_span(lo, hi):
-        """_map_alias_refs over a conjunct span, with certified-scalar calls
-        substituted by native shadow arithmetic first (round 12)."""
-        seg = toks[lo:hi]
-        if shadows:
-            sub = _subst_certified_calls(seg, shadows, aliases, schemas)
-            if sub is not None:
-                seg = sub
-        return _map_alias_refs(seg, aliases, out_name)
-
     if spatial.dist_col is not None:
         da, dc = spatial.dist_col
         spatial.dist_col_resolved = (da, out_name(da, dc))
 
-    if inner_refines and m.how != "inner":
+    def map_span(lo, hi, prefix=""):
+        """_map_alias_refs over a conjunct span, with certified-scalar
+        calls substituted by native shadow arithmetic first (round 12)."""
+        seg = toks[lo:hi]
+        if shadows:
+            seg = _subst_certified_calls(seg, shadows, aliases,
+                                         schemas) or seg
+        return _map_alias_refs(seg, pair, out_name, prefix)
+
+    pj = _Pair(rel_of[a1], rel_of[a2], m.how)
+    if refines:
         # lattice modes with extra conjuncts (round 10): build the
         # candidate join as INNER, filter it with the exact per-row
         # conjuncts (mapped onto the view's output names), then derive
         # the requested mode from row-id match tracking — semantically
         # `ON (c1 AND c2 AND ...)`, because the refined inner result IS
         # the true match set and a refine only ever shrinks it.
-        import copy
-        m_inner = copy.copy(m)
-        m_inner.how = "inner"
         refine_sql = " AND ".join(
-            "( " + _render(_map_span(lo, hi)) + " )"
-            for lo, hi in inner_refines)
+            "( " + _render(map_span(lo, hi)) + " )" for lo, hi in refines)
 
         def _refined_inner(l2, r2):
-            return _build_join(spark, m_inner, spatial, l2, r2, g1, g2,
-                               sxy1=sxy1, sxy2=sxy2) \
+            return _build_join(spark, pj._replace(how="inner"), spatial,
+                               l2, r2, g1, g2, sxy1=sxy1, sxy2=sxy2) \
                 .filter(F.expr(refine_sql))
 
         # shadow-certified geometries stay out of the lattice content
@@ -936,54 +1024,68 @@ def _rewrite(spark, sql, toks, vanilla_sql, vname):
                           l_exclude=(g1,) if sxy1 else (),
                           r_exclude=(g2,) if sxy2 else ())
     else:
-        joined = _build_join(spark, m, spatial, ldf, rdf_r, g1, g2,
+        joined = _build_join(spark, pj, spatial, ldf, rdf_r, g1, g2,
                              sxy1=sxy1, sxy2=sxy2)
 
-    # -------- rebuild the query text over the join view: the FROM span
-    # [from_idx, join_end) becomes the view; in comma form the spatial
-    # conjunct becomes TRUE inside the surviving WHERE
+    # -------- the emitter: the FROM clause becomes the relations outside
+    # the pair plus the join view; moved ON conjuncts open the WHERE;
+    # `alias.col` / `alias.*` of the view's sides map onto its columns
+    # (semi/anti views hold the left side only), and an unaliased
+    # select-list reference to a renamed column gets AS back to its own
+    # name, so the output schema matches vanilla planning
+    view = f"`{vname}`."
+    shown = pair if m.how not in ("left_semi", "left_anti") else (a1,)
+    d = depths[m.from_idx]
+    sel = next((k for k in range(m.from_idx - 1, -1, -1)
+                if depths[k] == d and toks[k].upper() == "SELECT"), None)
     out = []
-    i = 0
-    n = len(toks)
-    while i < n:
-        if i == m.from_idx:
+    k, n = 0, len(toks)
+    while k < n:
+        if k == m.from_idx:
             out.append("FROM")
-            out.append(vname)
-            if not m.comma_form and rest:
-                # surviving ON conjuncts -> WHERE conjuncts (inner join:
-                # identical semantics)
-                parts = []
-                for (lo, hi) in rest:
-                    parts.append("( " + _render(_map_span(lo, hi)) + " )")
-                nxt = m.join_end
-                if nxt < n and toks[nxt].upper() == "WHERE":
-                    out.extend(["WHERE", " AND ".join(parts), "AND"])
-                    i = nxt + 1
-                    continue
-                out.extend(["WHERE", " AND ".join(parts)])
-            i = m.join_end
+            out.append(" , ".join([_render(toks[r.start:r.end])
+                                   for r in m.rels if r.alias not in pair]
+                                  + [vname]))
+            k = m.end
+            if moved:
+                out.append("WHERE")
+                out.append(" AND ".join(
+                    "( " + _render(map_span(lo, hi, view)) + " )"
+                    for lo, hi in moved))
+                if k < n and toks[k].upper() == "WHERE":
+                    out.append("AND")
+                    k += 1
             continue
-        if (m.comma_form and not spatial.keep_refine
-                and spatial_span[0] <= i < spatial_span[1]):
-            if i == spatial_span[0]:
-                out.append("TRUE")
-            i += 1
+        if k in true_at:
+            out.append("TRUE")
+            k = true_at[k]
             continue
-        t = toks[i]
-        if _is_ident(t) and _unquote(t) in aliases and i + 1 < n and toks[i + 1] == ".":
+        t = toks[k]
+        if (_is_ident(t) and _unquote(t) in shown and k + 2 < n
+                and toks[k + 1] == "."):
             a = _unquote(t)
-            if i + 2 < n and toks[i + 2] == "*":
-                src = lcols if a == m.rel1.alias else list(rmap.values())
-                out.append(" , ".join(f"`{c}`" for c in src))
-                i += 3
+            in_select = (sel is not None and sel < k < m.from_idx
+                         and depths[k] == d)
+            if toks[k + 2] == "*":
+                cols = [(c, c) for c in lcols] if a == a1 \
+                    else list(rmap.items())
+                out.append(" , ".join(
+                    f"{view}`{v}`" + (f" AS `{c}`" if in_select and v != c
+                                      else "") for c, v in cols))
+                k += 3
                 continue
-            if i + 2 < n and _is_ident(toks[i + 2]):
-                out.append(f"`{out_name(a, _unquote(toks[i + 2]))}`")
-                i += 3
+            if _is_ident(toks[k + 2]):
+                col = _unquote(toks[k + 2])
+                v = out_name(a, col)
+                item = (in_select and toks[k - 1].upper() in (
+                    "SELECT", "DISTINCT", "ALL", ",")
+                    and (k + 3 == m.from_idx or toks[k + 3] == ","))
+                out.append(f"{view}`{v}`"
+                           + (f" AS `{col}`" if item and v != col else ""))
+                k += 3
                 continue
         out.append(t)
-        i += 1
-
+        k += 1
     return _run_over_view(joined, vname, out, vanilla_sql)
 
 
@@ -1372,436 +1474,6 @@ def _build_join(spark, m, spatial, ldf, rdf_r, g1, g2,
     return spatial_join(ldf, rdf_r, left_geom=g1, right_geom=g2,
                         predicate=pred, how=m.how,
                         left_xy=sxy1, right_xy=sxy2)
-
-
-# ----------------------------------------------------------------------
-# spatial WHERE [NOT] EXISTS: the subquery-correlation spelling of the
-# semi/anti spatial join (reference SpatialJoinExec LeftSemi/LeftAnti,
-# exec.rs:235-240).  Vanilla Spark cannot decorrelate a Python-UDF
-# predicate (UNSUPPORTED_SUBQUERY_EXPRESSION / nested-loop fallback), so
-#   SELECT ... FROM t1 a WHERE [NOT] EXISTS (
-#       SELECT ... FROM t2 b WHERE ST_Pred(a.g, b.g) [AND b-only...])
-# routes through spatial_join(how=left_semi/left_anti): inner-only
-# conjuncts filter the subquery side first (exact EXISTS semantics),
-# the EXISTS conjunct is replaced by TRUE, and the outer FROM is
-# re-aliased onto the joined view so every other outer reference
-# survives verbatim.  Declines: multi-relation outer FROM, KNN or
-# comparison-form/column-radius predicates (their refine cannot live
-# inside an EXISTS), conjuncts referencing the outer side, GROUP/etc
-# inside the subquery.
-# ----------------------------------------------------------------------
-
-
-def _rewrite_exists(spark, sql, toks, vanilla_sql, vname):
-    depths = _depths(toks)
-    n = len(toks)
-    for i in range(n):
-        if toks[i].upper() != "FROM" or depths[i] != 0:
-            continue
-        try:
-            rel1, j = _parse_rel(toks, i + 1)
-        except _Decline:
-            continue
-        if not (j < n and depths[j] == 0 and toks[j].upper() == "WHERE"):
-            continue                 # single-relation FROM + WHERE only
-        w_lo = j + 1
-        k = w_lo
-        stop = _BLOCK_END - {"WHERE"}
-        while k < n and (depths[k] > 0
-                         or toks[k].upper() not in stop):
-            k += 1
-        w_hi = k
-        for (lo, hi) in _split_conjuncts(toks, w_lo, w_hi):
-            p = lo
-            neg = False
-            if toks[p].upper() == "NOT":
-                neg, p = True, p + 1
-            if (p + 1 >= hi or toks[p].upper() != "EXISTS"
-                    or toks[p + 1] != "(" or toks[hi - 1] != ")"):
-                continue
-            try:
-                return _build_exists(spark, sql, toks, depths, rel1,
-                                     (i, j), (lo, hi),
-                                     (p + 2, hi - 1), neg, vanilla_sql,
-                                     vname)
-            except _Decline:
-                continue
-    raise _Decline
-
-
-def _build_exists(spark, sql, toks, depths, rel1, from_span, conj_span,
-                  sub_span, neg, vanilla_sql, vname):
-    from pyspark.sql import functions as F
-    n = len(toks)
-    sub_lo, sub_hi = sub_span
-    d_sub = depths[sub_lo]
-    # subquery: SELECT ... FROM rel2 [WHERE ...], nothing else
-    f_idx = None
-    for k in range(sub_lo, sub_hi):
-        if depths[k] == d_sub and toks[k].upper() == "FROM":
-            f_idx = k
-            break
-        if depths[k] == d_sub and toks[k].upper() in _BLOCK_END:
-            raise _Decline
-    if f_idx is None:
-        raise _Decline
-    rel2, k = _parse_rel(toks, f_idx + 1)
-    if rel2.alias == rel1.alias:
-        raise _Decline
-    inner_conjs: list[tuple[int, int]] = []
-    if k < sub_hi:
-        if depths[k] != d_sub or toks[k].upper() != "WHERE":
-            raise _Decline           # joins / GROUP BY etc inside EXISTS
-        for kk in range(k + 1, sub_hi):
-            if depths[kk] == d_sub and toks[kk].upper() in _BLOCK_END:
-                raise _Decline
-        inner_conjs = _split_conjuncts(toks, k + 1, sub_hi)
-
-    ldf = _resolve_df(spark, vanilla_sql, rel1)
-    rdf = _resolve_df(spark, vanilla_sql, rel2)
-    aliases = (rel1.alias, rel2.alias)
-    schemas = {rel1.alias: set(ldf.columns), rel2.alias: set(rdf.columns)}
-
-    spatial = None
-    rest = []
-    for (lo, hi) in inner_conjs:
-        span = (lo + 1, hi - 1) if (
-            toks[lo] == "(" and toks[hi - 1] == ")"
-            and min(depths[lo + 1:hi - 1] or [0]) > depths[lo]) else (lo, hi)
-        sc = _parse_spatial_conjunct(toks, span[0], span[1],
-                                     aliases, schemas)
-        if sc is not None:
-            if spatial is not None:
-                raise _Decline
-            spatial = sc
-        else:
-            refs = _refs_relations(toks, span[0], span[1],
-                                   aliases, schemas)
-            if rel1.alias in refs:
-                raise _Decline       # outer-correlated non-spatial conjunct
-            rest.append((lo, hi))
-    if spatial is None or spatial.kind == "knn" or spatial.keep_refine:
-        raise _Decline
-    for a, c in zip(spatial.arg_rels, spatial.arg_cols):
-        if c not in schemas[a]:
-            raise _Decline
-
-    # inner-only conjuncts filter the subquery side BEFORE the semi join
-    # (exact EXISTS semantics) — rebuilt as a vanilla subquery so their
-    # original token text runs unchanged
-    if rest:
-        src = (f"({rel2.text})" if rel2.is_subquery else rel2.text)
-        cond = " AND ".join(
-            "( " + _render(toks[lo:hi]) + " )" for lo, hi in rest)
-        rdf = vanilla_sql(
-            f"SELECT * FROM {src} AS {rel2.alias} WHERE {cond}")
-
-    # right-side collision rename (same convention as the main path)
-    lcols = list(ldf.columns)
-    rmap = {c: (f"{rel2.alias}__{c}" if c in lcols else c)
-            for c in rdf.columns}
-    if any(v in lcols for c, v in rmap.items() if v != c):
-        raise _Decline
-    rdf_r = rdf.select([F.col(c).alias(a) for c, a in rmap.items()])
-
-    m = _Match()
-    m.rel1, m.rel2 = rel1, rel2
-    m.how = "left_anti" if neg else "left_semi"
-    m.comma_form = False
-    lgeom = {a: c for a, c in zip(spatial.arg_rels, spatial.arg_cols)}
-    g1 = lgeom.get(rel1.alias)
-    g2 = rmap.get(lgeom.get(rel2.alias), lgeom.get(rel2.alias))
-    joined = _build_join(spark, m, spatial, ldf, rdf_r, g1, g2)
-
-    out = []
-    i = 0
-    f_lo, f_hi = from_span
-    c_lo, c_hi = conj_span
-    while i < n:
-        if i == f_lo:
-            # re-alias the view onto the outer relation's alias so every
-            # other outer reference keeps resolving
-            out.extend(["FROM", vname, "AS", f"`{rel1.alias}`"])
-            i = f_hi
-            continue
-        if i == c_lo:
-            out.append("TRUE")
-            i = c_hi
-            continue
-        out.append(toks[i])
-        i += 1
-    return _run_over_view(joined, vname, out, vanilla_sql)
-
-
-# ----------------------------------------------------------------------
-# multi-join FROM chains: the common reference shape
-#   FROM dims d JOIN facts f ON d.k = f.k JOIN zones z ON ST_Pred(f.g, z.g)
-# For an ALL-INNER chain every ON conjunct is equivalent to a WHERE
-# conjunct (inner joins commute and associate), so the one spatial pair
-# can be joined by the native operator and re-inserted as a view into a
-# comma-form FROM — Catalyst re-derives the hash joins for the surviving
-# equi conjuncts.  The single-join path above stays untouched; this path
-# only fires for 3+ relations, declines any outer/semi/anti join word,
-# a second spatial conjunct, a bare ``SELECT *`` (relation order changes
-# the output column order), or an equi key between the SPATIAL pair
-# itself (reference optimizer.rs:253-257 — hash join wins then).
-# ----------------------------------------------------------------------
-
-
-def _rewrite_chain(spark, sql, toks, vanilla_sql, vname):
-    depths = _depths(toks)
-    n = len(toks)
-    for i in range(n):
-        if toks[i].upper() != "FROM":
-            continue
-        d = depths[i]
-        rels, ons = [], []
-        try:
-            rel, j = _parse_rel(toks, i + 1)
-        except _Decline:
-            continue
-        rels.append(rel)
-        ok = True
-        while ok and j < n and depths[j] >= d:
-            if depths[j] != d:
-                ok = False
-                break
-            u = toks[j].upper()
-            if u == ",":
-                try:
-                    rel, j = _parse_rel(toks, j + 1)
-                except _Decline:
-                    ok = False
-                    break
-                rels.append(rel)
-                ons.append(None)
-                continue
-            if u == "JOIN" or (u in ("INNER", "CROSS") and j + 1 < n
-                               and toks[j + 1].upper() == "JOIN"):
-                cross = u == "CROSS"
-                j2 = j + (1 if u == "JOIN" else 2)
-                try:
-                    rel, j2 = _parse_rel(toks, j2)
-                except _Decline:
-                    ok = False
-                    break
-                if cross:
-                    rels.append(rel)
-                    ons.append(None)
-                    j = j2
-                    continue
-                if not (j2 < n and toks[j2].upper() == "ON"):
-                    ok = False
-                    break
-                k = j2 + 1
-                while k < n and depths[k] >= d:
-                    if depths[k] == d:
-                        uu = toks[k].upper()
-                        if uu in _BLOCK_END or uu in _JOIN_WORDS or uu == ",":
-                            break
-                    k += 1
-                rels.append(rel)
-                ons.append((j2 + 1, k))
-                j = k
-                continue
-            if u in _JOIN_WORDS:
-                ok = False       # outer / semi / anti / natural: not certified
-                break
-            break                # WHERE / GROUP / ... ends the chain
-        if not ok or len(rels) < 3:
-            continue
-        from_end = j
-        where_span = None
-        if j < n and depths[j] == d and toks[j].upper() == "WHERE":
-            k = j + 1
-            while k < n and depths[k] >= d:
-                if depths[k] == d and toks[k].upper() in (_BLOCK_END - {"WHERE"}):
-                    break
-                k += 1
-            where_span = (j + 1, k)
-        try:
-            return _chain_rewrite(spark, toks, depths, i, rels, ons,
-                                  from_end, where_span, vanilla_sql, vname)
-        except _Decline:
-            continue
-    raise _Decline
-
-
-def _chain_rewrite(spark, toks, depths, from_idx, rels, ons, from_end,
-                   where_span, vanilla_sql, vname):
-    from pyspark.sql import functions as F
-
-    aliases = [r.alias for r in rels]
-    if len(set(aliases)) != len(aliases):
-        raise _Decline
-
-    def _in_rel_span(ii):
-        return any(r.start <= ii < r.end for r in rels)
-
-    for ii, t in enumerate(toks):
-        if (t == "*" and (ii == 0 or toks[ii - 1] not in (".", "("))
-                and not _in_rel_span(ii)):
-            raise _Decline       # bare * output order depends on rel order
-    dfs = {r.alias: _resolve_df(spark, vanilla_sql, r) for r in rels}
-    schemas = {a: set(df.columns) for a, df in dfs.items()}
-
-    conjuncts = []
-    for span in ons:
-        if span is not None:
-            conjuncts += _split_conjuncts(toks, span[0], span[1])
-    if where_span is not None:
-        conjuncts += _split_conjuncts(toks, *where_span)
-
-    spatial = None
-    spatial_span = None
-    rest = []
-    for (lo, hi) in conjuncts:
-        span = (lo + 1, hi - 1) if (
-            toks[lo] == "(" and toks[hi - 1] == ")"
-            and min(depths[lo + 1:hi - 1] or [0]) > depths[lo]) else (lo, hi)
-        sc = _parse_spatial_conjunct(toks, span[0], span[1], aliases, schemas)
-        if sc is not None:
-            if spatial is not None:
-                raise _Decline
-            spatial, spatial_span = sc, (lo, hi)
-        else:
-            rest.append((lo, hi))
-    if spatial is None:
-        raise _Decline
-    pa, qa = spatial.arg_rels
-    # decline only on an equi key between the SPATIAL pair; equi keys
-    # touching other relations are exactly what this path exists to keep
-    for (lo, hi) in rest:
-        dd = 0
-        for jj in range(lo, hi):
-            t = toks[jj]
-            if t == "(":
-                dd += 1
-            elif t == ")":
-                dd -= 1
-            elif dd == 0 and t == "=":
-                lhs = _refs_relations(toks, lo, jj, aliases, schemas)
-                rhs = _refs_relations(toks, jj + 1, hi, aliases, schemas)
-                if lhs and rhs and lhs != rhs and (lhs | rhs) <= {pa, qa}:
-                    raise _Decline
-    if spatial.keep_refine:
-        rest.append(spatial_span)
-
-    order = {a: ix for ix, a in enumerate(aliases)}
-    first_alias, second_alias = (pa, qa) if order[pa] < order[qa] else (qa, pa)
-    ldf, rdf = dfs[first_alias], dfs[second_alias]
-
-    star_sides = set()
-    for ii, t in enumerate(toks):
-        if (t == "*" and ii >= 2 and toks[ii - 1] == "."
-                and _is_ident(toks[ii - 2]) and not _in_rel_span(ii)):
-            star_sides.add(_unquote(toks[ii - 2]))
-    mentioned = {_unquote(t) for t in toks if _is_ident(t)}
-    if first_alias not in star_sides:
-        ldf = ldf.select([c for c in ldf.columns if c in mentioned])
-    if second_alias not in star_sides:
-        rdf = rdf.select([c for c in rdf.columns if c in mentioned])
-    pair_schemas = {first_alias: set(ldf.columns),
-                    second_alias: set(rdf.columns)}
-    for a, c in zip(spatial.arg_rels, spatial.arg_cols):
-        if c not in pair_schemas[a]:
-            raise _Decline
-
-    lcols = list(ldf.columns)
-    collide = set(lcols) & set(rdf.columns)
-    rmap = {c: (f"{second_alias}__{c}" if c in collide else c)
-            for c in rdf.columns}
-    if any(v in lcols for c, v in rmap.items() if v != c):
-        raise _Decline
-    rdf_r = rdf.select([F.col(c).alias(a) for c, a in rmap.items()])
-
-    m = _Match()
-    m.rel1 = rels[order[first_alias]]
-    m.rel2 = rels[order[second_alias]]
-    m.how, m.comma_form = "inner", False
-    lgeom = {a: c for a, c in zip(spatial.arg_rels, spatial.arg_cols)}
-    g1 = lgeom.get(first_alias)
-    g2 = rmap.get(lgeom.get(second_alias), lgeom.get(second_alias))
-
-    if spatial.dist_col is not None:
-        da, dc = spatial.dist_col
-        # a radius column living on a THIRD relation has no owner inside
-        # the pair join — decline to vanilla
-        if da not in (first_alias, second_alias) \
-                or dc not in pair_schemas[da]:
-            raise _Decline
-        spatial.dist_col_resolved = (
-            da, dc if da == first_alias else rmap.get(dc, dc))
-
-    joined = _build_join(spark, m, spatial, ldf, rdf_r, g1, g2)
-
-    pair = {first_alias, second_alias}
-
-    def out_name(alias, col):
-        if alias == first_alias:
-            return col
-        return rmap.get(col, col)
-
-    surviving = [r for r in rels if r.alias not in pair]
-    skip_hi = where_span[1] if where_span else from_end
-    # select-list span of the matched block: unadorned pair references
-    # whose view column was rename-disambiguated get an AS back to their
-    # original name, so the output schema matches vanilla planning
-    sel_lo = None
-    for k2 in range(from_idx - 1, -1, -1):
-        if depths[k2] == depths[from_idx] and toks[k2].upper() == "SELECT":
-            sel_lo = k2
-            break
-    out = []
-    k = 0
-    n = len(toks)
-    while k < n:
-        if k == from_idx:
-            out.append("FROM")
-            parts = [_render(toks[r.start:r.end]) for r in surviving]
-            parts.append(vname)
-            out.append(" , ".join(parts))
-            # view-qualified (unlike the single-join path, other
-            # relations survive in the FROM: bare names could clash)
-            wparts = ["( " + _render(_map_alias_refs(
-                toks[lo:hi], pair, out_name, f"`{vname}`.")) + " )"
-                      for (lo, hi) in rest]
-            if wparts:
-                out.append("WHERE")
-                out.append(" AND ".join(wparts))
-            k = skip_hi
-            continue
-        t = toks[k]
-        in_select = sel_lo is not None and sel_lo < k < from_idx
-        if (_is_ident(t) and _unquote(t) in pair and k + 1 < n
-                and toks[k + 1] == "."):
-            a = _unquote(t)
-            if k + 2 < n and toks[k + 2] == "*":
-                if a == first_alias:
-                    pairs_ = [(c, c) for c in lcols]
-                else:
-                    pairs_ = [(c, rmap[c]) for c in rmap]
-                out.append(" , ".join(
-                    f"`{vname}`.`{v}`" + (f" AS `{c}`" if in_select and v != c
-                                          else "")
-                    for c, v in pairs_))
-                k += 3
-                continue
-            if k + 2 < n and _is_ident(toks[k + 2]):
-                col = _unquote(toks[k + 2])
-                out_col = out_name(a, col)
-                ref = f"`{vname}`.`{out_col}`"
-                nxt = toks[k + 3] if k + 3 < n else None
-                if (in_select and out_col != col
-                        and (nxt == "," or k + 3 == from_idx)):
-                    ref += f" AS `{col}`"
-                out.append(ref)
-                k += 3
-                continue
-        out.append(t)
-        k += 1
-
-    return _run_over_view(joined, vname, out, vanilla_sql)
 
 
 # ----------------------------------------------------------------------
@@ -2208,17 +1880,19 @@ def _relation_shadow(spark, tbl: str, col: str):
 
 
 def _subquery_shadow_base(text: str) -> str | None:
-    """``SELECT * FROM <name> [WHERE/ORDER/LIMIT ...]`` -> the base
-    relation name, else None.  Only this shape may inherit the base's
-    point-shadow certificate: the invariant is per-row, so filters and
-    row subsets preserve it, and bare ``*`` preserves column identity."""
+    """``SELECT * FROM <name> [[AS] alias] [WHERE/ORDER/LIMIT ...]`` ->
+    the base relation name, else None.  Only this shape may inherit the
+    base's point-shadow certificate: the invariant is per-row, so filters
+    and row subsets preserve it, and bare ``*`` preserves column
+    identity."""
     t = _tokenize(text)
     if not t or len(t) < 4:
         return None
     if (t[0].upper() != "SELECT" or t[1] != "*" or t[2].upper() != "FROM"
             or not _is_ident(t[3])):
         return None
-    if len(t) > 4 and t[4].upper() not in ("WHERE", "ORDER", "LIMIT"):
+    _alias, j = _parse_alias(t, 4)
+    if len(t) > j and t[j].upper() not in ("WHERE", "ORDER", "LIMIT"):
         return None
     return _unquote(t[3])
 

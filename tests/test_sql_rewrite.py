@@ -1778,3 +1778,133 @@ def test_join_views_dropped_with_their_memo_entries(spark, monkeypatch):
         assert len(join_views() - before) <= 2
     result_cache.reset()
     assert join_views() - before == set()
+
+
+# ----------------------------------------------------------------------
+# one matcher, one pair-join core: the single-join, EXISTS and chain
+# shapes share the same output naming, literals and certified shadows
+# ----------------------------------------------------------------------
+
+_NAMES_A = "(SELECT c_custkey AS id, geom FROM cust_pts WHERE c_custkey < 300) a"
+_NAMES_B = "(SELECT n_nationkey AS id, geom FROM nation_boxes) b"
+
+
+@pytest.mark.parametrize("kw", ["JOIN", "LEFT JOIN"])
+def test_collision_renamed_select_refs_keep_vanilla_names(spark, kw):
+    """``SELECT a.id, b.id`` over a collision-renamed view answers with
+    vanilla's output names (``['id', 'id']``), not the view's."""
+    _prep(spark)
+    q = (f"SELECT a.id, b.id FROM {_NAMES_A} {kw} {_NAMES_B} "
+         "ON ST_Within(a.geom, b.geom)")
+    df = spark.sql(q)
+    assert getattr(df, "_sedona_rewritten_sql", None) is not None
+    assert df.columns == _vanilla(spark, q).columns == ["id", "id"]
+    if kw == "JOIN":
+        assert sorted(tuple(r) for r in df.collect()) == \
+            sorted(tuple(r) for r in _vanilla(spark, q).collect())
+
+
+def test_typed_numeric_literals_route(spark):
+    """``2.5D`` as a distance and ``3L`` as the KNN k are literals of the
+    join: both shapes route and answer like vanilla / the operator twin."""
+    _prep(spark)
+    q = """
+      SELECT a.c_custkey AS ka, b.c_custkey AS kb
+      FROM (SELECT * FROM cust_pts WHERE c_custkey < 75) a
+      JOIN (SELECT * FROM cust_pts WHERE c_custkey >= 75) b
+      ON ST_DWithin(a.geom, b.geom, 2.5D)
+    """
+    df = spark.sql(q)
+    assert getattr(df, "_sedona_rewritten_sql", None) is not None
+    got = _rows(df, ["ka", "kb"])
+    assert got == _rows(_vanilla(spark, q), ["ka", "kb"]) and got
+    objects_sql = """SELECT n_nationkey,
+             ST_Point(CAST(n_nationkey % 5 AS DOUBLE) * 20.0 + 10.0,
+                      CAST(CAST(floor(n_nationkey / 5) AS INT) % 5 AS DOUBLE) * 20.0 + 10.0) AS geom
+      FROM nation"""
+    knn = spark.sql(f"""
+      SELECT c.c_custkey, n.n_nationkey, round(knn_distance, 6) AS dist
+      FROM (SELECT * FROM cust_pts WHERE c_custkey < 250) c
+      JOIN ({objects_sql}) n ON ST_KNN(c.geom, n.geom, 3L, false)""")
+    assert getattr(knn, "_sedona_rewritten_sql", None) is not None
+    from sedona_db_spark.operators.knn_join import knn_join
+    twin = knn_join(spark.table("cust_pts").filter("c_custkey < 250"),
+                    _vanilla(spark, objects_sql), k=3) \
+        .select("c_custkey", "n_nationkey",
+                F.round("knn_distance", 6).alias("dist"))
+    cols = ["c_custkey", "n_nationkey", "dist"]
+    n_q = spark.table("cust_pts").filter("c_custkey < 250").count()
+    assert _rows(knn, cols) == _rows(twin, cols) and len(_rows(knn, cols)) == 3 * n_q > 0
+
+
+def test_literal_number_suffixes():
+    from sedona_db_spark.plans.sql_rewrite import _literal_number, _tokenize
+    for text, want in [("0.5D", 0.5), ("0.5d", 0.5), ("0.5BD", 0.5),
+                       ("2.5e1D", 25.0), ("3L", 3.0), ("- 7S", -7.0),
+                       ("127Y", 127.0), ("- 128Y", -128.0), ("4", 4.0)]:
+        toks = _tokenize(text)
+        assert _literal_number(toks, 0, len(toks)) == want, text
+    for text in ["0.5F", "0.5L", "128Y", "40000S", "1e2L", "x"]:
+        toks = _tokenize(text)
+        assert _literal_number(toks, 0, len(toks)) is None, text
+
+
+@pytest.mark.parametrize("exists,join", [("EXISTS", "LEFT SEMI JOIN"),
+                                         ("NOT EXISTS", "LEFT ANTI JOIN")])
+def test_exists_keeps_certified_shadow(spark, exists, join):
+    """Over certified ``cust_pts`` the [NOT] EXISTS spelling plans like
+    its LEFT SEMI/ANTI JOIN spelling: same Python-node count, same rows."""
+    _prep(spark)
+    from sedona_db_spark.plans import inspect
+    ex = spark.sql(f"""SELECT c.c_custkey FROM cust_pts c
+        WHERE c.c_custkey < 700 AND {exists} (SELECT 1 FROM nation_boxes n
+                                       WHERE ST_Within(c.geom, n.geom))""")
+    sj = spark.sql(f"""SELECT c.c_custkey FROM cust_pts c {join} nation_boxes n
+        ON ST_Within(c.geom, n.geom) WHERE c.c_custkey < 700""")
+    assert getattr(ex, "_sedona_rewritten_sql", None) is not None
+    assert inspect.python_eval_count(ex) == inspect.python_eval_count(sj)
+    got = _rows(ex, ["c_custkey"])
+    assert got == _rows(sj, ["c_custkey"]) and got
+
+
+def test_exists_bare_outer_geometry_and_comparison_form(spark):
+    """Inside EXISTS, a spatial predicate over a bare outer column and
+    the ``ST_Distance(a, b) < d`` comparison form both route, answering
+    like their LEFT SEMI JOIN spellings (vanilla cannot plan either)."""
+    _prep(spark)
+    spark.sql("CREATE OR REPLACE TEMP VIEW ex_cpts AS "
+              "SELECT c_custkey, geom AS cgeom FROM cust_pts")
+    pairs = [
+        ("""SELECT c.c_custkey FROM ex_cpts c WHERE EXISTS (
+              SELECT 1 FROM nation_boxes n WHERE ST_Within(cgeom, n.geom))""",
+         """SELECT c.c_custkey FROM ex_cpts c LEFT SEMI JOIN nation_boxes n
+              ON ST_Within(cgeom, n.geom)"""),
+        ("""SELECT c.c_custkey FROM cust_pts c WHERE NOT EXISTS (
+              SELECT 1 FROM cust_pts d
+              WHERE ST_Distance(c.geom, d.geom) < 1.0 AND d.c_custkey < 20)""",
+         """SELECT c.c_custkey FROM cust_pts c LEFT ANTI JOIN
+              (SELECT * FROM cust_pts WHERE c_custkey < 20) d
+              ON ST_Distance(c.geom, d.geom) < 1.0"""),
+    ]
+    for ex, sj in pairs:
+        df = spark.sql(ex)
+        assert getattr(df, "_sedona_rewritten_sql", None) is not None, ex
+        got = _rows(df, ["c_custkey"])
+        assert got == _rows(spark.sql(sj), ["c_custkey"]) and got
+
+
+def test_chain_plans_like_its_spatial_pair(spark):
+    """A 3-relation chain routes its spatial pair through the same core
+    as the pair joined alone: no more Python nodes than that join."""
+    import __spark_entry__ as E
+    _prep(spark)
+    from sedona_db_spark.plans import inspect
+    chain = spark.sql(E._Q["sql_chain_spatial_join"])
+    pair = spark.sql("""
+      SELECT n.n_nationkey, count(*) AS n_pts, round(sum(c.c_acctbal), 2) AS bal
+      FROM nation_boxes n JOIN cust_pts c ON ST_Contains(n.geom, c.geom)
+      GROUP BY n.n_nationkey""")
+    assert inspect.python_eval_count(chain) <= inspect.python_eval_count(pair)
+    assert _rows(chain, ["n_name", "n_pts", "bal"]) == _rows(
+        _vanilla(spark, E._Q["sql_chain_spatial_join"]),
+        ["n_name", "n_pts", "bal"])

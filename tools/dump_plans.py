@@ -2,8 +2,11 @@
 
 Usage: python tools/dump_plans.py <out_dir> <suffix> [query ...]
 Writes <out_dir>/<query>_<suffix>.txt for each named query (default: all
-bench HEADLINE queries), creating <out_dir> if needed; e.g.
-``python tools/dump_plans.py plans/r12 after``.  Runs at
+bench HEADLINE queries), creating <out_dir> if needed.  A name may be a
+shell-style pattern over the declared queries, e.g.
+``python tools/dump_plans.py plans/r12 after`` (the HEADLINE set) or
+``python tools/dump_plans.py plans/sql after 'sql_*'`` (every query of
+the SQL front door).  Runs at
 $SPARK_GRAFT_SF_DIR (default sf0.1) so plans match the bench's AQE/stats
 decisions.
 
@@ -16,6 +19,7 @@ replaced by fixed placeholders.
 
 from __future__ import annotations
 
+import fnmatch
 import os
 import re
 import sys
@@ -50,12 +54,18 @@ def main() -> None:
     from bench import HEADLINE
     from sedona_db_spark import get_spark
 
+    qs = entrymod.queries()
+    picked = []
+    for pat in names or HEADLINE:
+        hits = [pat] if pat in qs else fnmatch.filter(qs, pat)
+        if not hits:
+            sys.exit(f"no declared query matches {pat!r}")
+        picked += hits
     spark = get_spark("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     entrymod._prep(spark, sf_dir)
-    qs = entrymod.queries()
     os.makedirs(out_dir, exist_ok=True)
-    for name in names or HEADLINE:
+    for name in picked:
         df = qs[name](spark, sf_dir)
         txt = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
