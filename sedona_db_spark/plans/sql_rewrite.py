@@ -571,8 +571,12 @@ def _is_equi_conjunct(toks, lo, hi, aliases, schemas, pair) -> bool:
 # outer-naming conjunct, and top-level OR / NOT in a conjunct list.  The core
 # declines when no conjunct is spatial, spatial conjuncts name different
 # pairs, an equi key links the pair (hash join wins — reference
-# optimizer.rs:253-257), KNN sits outside an inner join or a radius
-# column lives outside the pair.
+# optimizer.rs:253-257), KNN sits outside an inner join, a radius
+# column lives outside the pair, or a pair alias inside a moved ON
+# conjunct is re-declared by a subquery there.  The emitter maps only the
+# `alias.col` tokens that bind to the matched query block
+# (_query_scopes): a subquery or UNION branch that declares the alias
+# again keeps its own text.
 # ----------------------------------------------------------------------
 
 # join words -> the mode of the join they introduce; "cross" (a comma or
@@ -643,6 +647,43 @@ def _scan_from(toks, depths, i):
 # ``true_span`` (an EXISTS conjunct) into TRUE.
 _Match = namedtuple("_Match", "from_idx end rels how on where true_span",
                     defaults=(None,))
+
+
+_SET_OPS = {"UNION", "INTERSECT", "EXCEPT", "MINUS"}
+
+
+def _query_scopes(toks, depths):
+    """(lo, hi, depth, aliases) of every query block with a FROM clause:
+    its SELECT up to a set operator at its depth or the close of its
+    parentheses.  ``aliases`` (the FROM clause's relation aliases) is
+    None when the clause does not parse.  An ``alias.col`` token binds
+    to the innermost block that declares the alias."""
+    scopes = []
+    for f, t in enumerate(toks):
+        if t.upper() != "FROM":
+            continue
+        d = depths[f]
+        lo = f - 1
+        while lo >= 0 and depths[lo] >= d and not (
+                depths[lo] == d and toks[lo].upper() in _SET_OPS | {"SELECT"}):
+            lo -= 1
+        if lo < 0 or depths[lo] != d or toks[lo].upper() != "SELECT":
+            continue                     # EXTRACT(.. FROM ..) and kin
+        hi = _span_end(toks, depths, f + 1, d, _SET_OPS)
+        try:
+            aliases = {r.alias for r in _scan_from(toks, depths, f)[0]}
+        except _Decline:
+            aliases = None
+        scopes.append((lo, hi, d, aliases))
+    return scopes
+
+
+def _binding_scope(scopes, k, alias):
+    """The innermost query block around token k that declares ``alias``
+    (or whose FROM clause did not parse), or None."""
+    return max((s for s in scopes if s[0] <= k < s[1]
+                and (s[3] is None or alias in s[3])),
+               key=lambda s: s[2], default=None)
 
 
 def _joins_outer(toks, depths, lo, hi, alias) -> bool:
@@ -850,6 +891,22 @@ def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
     engine's operators and run the rebuilt query over the join view."""
     from pyspark.sql import functions as F
 
+    # the query block of the matched FROM clause: only its own
+    # `alias.col` / `alias.*` tokens (and correlated ones in blocks
+    # nested in it that do not declare the alias again) refer to the pair
+    scopes = _query_scopes(toks, depths)
+    d = depths[m.from_idx]
+    mine = next((s for s in scopes if s[0] < m.from_idx < s[1]
+                 and s[2] == d), None)
+    if mine is None:
+        raise _Decline
+
+    def binds_here(k, a) -> bool:
+        s = _binding_scope(scopes, k, a)
+        if s is not None and s[3] is None:
+            raise _Decline               # a nested FROM we cannot read
+        return s is mine
+
     dfs = {r.alias: _resolve_df(spark, vanilla_sql, r) for r in m.rels}
     aliases = tuple(dfs)
     full = dict(dfs)
@@ -858,14 +915,20 @@ def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
     # otherwise drag every source column through the operator's Arrow/
     # python stages (any SQL column reference appears as its literal
     # identifier token, so keeping every mentioned name is safe).
-    # A bare `*` keeps every side whole, `alias.*` keeps that side whole;
-    # `count(*)`-style stars (token directly after "(") don't block.
+    # A bare `*` keeps every side whole, `alias.*` of the matched block
+    # keeps that side whole; `count(*)`-style stars (token directly
+    # after "(") don't block, nor, in a 3+ chain, the stars inside a
+    # relation's own subquery.
+    skip = [r for r in m.rels if r.is_subquery] if len(m.rels) > 2 else []
     star_sides = set()
     for i, t in enumerate(toks):
-        if t != "*" or (i > 0 and toks[i - 1] == "("):
+        if (t != "*" or (i > 0 and toks[i - 1] == "(")
+                or any(r.start <= i < r.end for r in skip)):
             continue
         if i >= 2 and toks[i - 1] == "." and _is_ident(toks[i - 2]):
-            star_sides.add(_unquote(toks[i - 2]))
+            a = _unquote(toks[i - 2])
+            if a in aliases and binds_here(i - 2, a):
+                star_sides.add(a)
         else:
             star_sides.update(aliases)
     mentioned = {_unquote(t) for t in toks if _is_ident(t)}
@@ -995,11 +1058,26 @@ def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
     def map_span(lo, hi, prefix=""):
         """_map_alias_refs over a conjunct span, with certified-scalar
         calls substituted by native shadow arithmetic first (round 12)."""
+        for k in range(lo, hi - 1):
+            a = _unquote(toks[k])
+            if a in pair and toks[k + 1] == ".":
+                s = _binding_scope(scopes, k, a)
+                if s is not None and lo <= s[0] < hi:
+                    raise _Decline       # a subquery in it re-declares a
         seg = toks[lo:hi]
         if shadows:
             seg = _subst_certified_calls(seg, shadows, aliases,
                                          schemas) or seg
         return _map_alias_refs(seg, pair, out_name, prefix)
+
+    # the view's `alias.col` / `alias.*` tokens (semi/anti views hold the
+    # left side only) that bind to the matched block
+    shown = pair if m.how not in ("left_semi", "left_anti") else (a1,)
+    view_refs = {k for k in range(len(toks) - 2)
+                 if _is_ident(toks[k]) and _unquote(toks[k]) in shown
+                 and toks[k + 1] == "."
+                 and (toks[k + 2] == "*" or _is_ident(toks[k + 2]))
+                 and binds_here(k, _unquote(toks[k]))}
 
     pj = _Pair(rel_of[a1], rel_of[a2], m.how)
     if refines:
@@ -1028,19 +1106,18 @@ def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
                              sxy1=sxy1, sxy2=sxy2)
 
     # -------- the emitter: the FROM clause becomes the relations outside
-    # the pair plus the join view; moved ON conjuncts open the WHERE;
-    # `alias.col` / `alias.*` of the view's sides map onto its columns
-    # (semi/anti views hold the left side only), and an unaliased
-    # select-list reference to a renamed column gets AS back to its own
-    # name, so the output schema matches vanilla planning
+    # the pair plus the join view; moved ON conjuncts open the WHERE,
+    # ahead of the original WHERE in parentheses; the view's `alias.col` /
+    # `alias.*` tokens map onto its columns, and an unaliased select-list
+    # reference to a renamed column gets AS back to its own name, so the
+    # output schema matches vanilla planning
     view = f"`{vname}`."
-    shown = pair if m.how not in ("left_semi", "left_anti") else (a1,)
-    d = depths[m.from_idx]
-    sel = next((k for k in range(m.from_idx - 1, -1, -1)
-                if depths[k] == d and toks[k].upper() == "SELECT"), None)
+    sel = mine[0]
     out = []
-    k, n = 0, len(toks)
+    k, n, close_at = 0, len(toks), None
     while k < n:
+        if k == close_at:
+            out.append(")")
         if k == m.from_idx:
             out.append("FROM")
             out.append(" , ".join([_render(toks[r.start:r.end])
@@ -1053,28 +1130,25 @@ def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
                     "( " + _render(map_span(lo, hi, view)) + " )"
                     for lo, hi in moved))
                 if k < n and toks[k].upper() == "WHERE":
-                    out.append("AND")
+                    out.extend(["AND", "("])
+                    close_at = _span_end(toks, depths, k + 1, d,
+                                         _BLOCK_END - {"WHERE"})
                     k += 1
             continue
         if k in true_at:
             out.append("TRUE")
             k = true_at[k]
             continue
-        t = toks[k]
-        if (_is_ident(t) and _unquote(t) in shown and k + 2 < n
-                and toks[k + 1] == "."):
-            a = _unquote(t)
-            in_select = (sel is not None and sel < k < m.from_idx
-                         and depths[k] == d)
+        if k in view_refs:
+            a = _unquote(toks[k])
+            in_select = sel < k < m.from_idx and depths[k] == d
             if toks[k + 2] == "*":
                 cols = [(c, c) for c in lcols] if a == a1 \
                     else list(rmap.items())
                 out.append(" , ".join(
                     f"{view}`{v}`" + (f" AS `{c}`" if in_select and v != c
                                       else "") for c, v in cols))
-                k += 3
-                continue
-            if _is_ident(toks[k + 2]):
+            else:
                 col = _unquote(toks[k + 2])
                 v = out_name(a, col)
                 item = (in_select and toks[k - 1].upper() in (
@@ -1082,10 +1156,12 @@ def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
                     and (k + 3 == m.from_idx or toks[k + 3] == ","))
                 out.append(f"{view}`{v}`"
                            + (f" AS `{col}`" if item and v != col else ""))
-                k += 3
-                continue
-        out.append(t)
+            k += 3
+            continue
+        out.append(toks[k])
         k += 1
+    if close_at == n:
+        out.append(")")
     return _run_over_view(joined, vname, out, vanilla_sql)
 
 

@@ -6,6 +6,7 @@ Spark's default pair-explosion plan (condition-less BroadcastNestedLoopJoin
 + per-pair Python filter).
 """
 
+import re
 import warnings
 
 import pytest
@@ -1908,3 +1909,80 @@ def test_chain_plans_like_its_spatial_pair(spark):
     assert _rows(chain, ["n_name", "n_pts", "bal"]) == _rows(
         _vanilla(spark, E._Q["sql_chain_spatial_join"]),
         ["n_name", "n_pts", "bal"])
+
+
+def test_reused_alias_in_subquery_binds_to_its_own_block(spark):
+    """A subquery that declares a routed pair alias again keeps its own
+    ``alias.col`` references: they bind to the subquery's relation, not
+    to the join view."""
+    _prep(spark)
+    q = """SELECT c.c_custkey FROM cust_pts c JOIN nation_boxes n
+             ON ST_Within(c.geom, n.geom)
+           WHERE EXISTS (SELECT 1 FROM cust_pts c WHERE c.c_acctbal > 9000)"""
+    df = spark.sql(q)
+    assert getattr(df, "_sedona_rewritten_sql", None) is not None
+    got = _rows(df, ["c_custkey"])
+    assert got == _rows(_vanilla(spark, q), ["c_custkey"]) and got
+    ex = """SELECT c.c_custkey FROM cust_pts c
+            WHERE c.c_custkey < 500 AND EXISTS (
+              SELECT 1 FROM nation_boxes n WHERE ST_Within(c.geom, n.geom))
+            AND c.c_custkey IN (SELECT c.c_custkey FROM cust_pts c
+                                WHERE c.c_acctbal > 5000)"""
+    sj = """SELECT c.c_custkey FROM cust_pts c LEFT SEMI JOIN nation_boxes n
+            ON ST_Within(c.geom, n.geom)
+            WHERE c.c_custkey < 500 AND c.c_acctbal > 5000"""
+    df = spark.sql(ex)
+    assert getattr(df, "_sedona_rewritten_sql", None) is not None
+    got = _rows(df, ["c_custkey"])
+    assert got == _rows(spark.sql(sj), ["c_custkey"]) and got
+
+
+def test_union_branch_reusing_pair_aliases_routes(spark):
+    """Each UNION branch binds its own aliases: the first branch routes,
+    the second keeps its text, and the answer equals vanilla's."""
+    _prep(spark)
+    branch = """SELECT c.c_custkey, n.n_nationkey FROM cust_pts c
+                JOIN nation_boxes n ON {} WHERE c.c_custkey {}"""
+    q = (branch.format("ST_Within(c.geom, n.geom)", "< 300") + " UNION ALL "
+         + branch.format("ST_Within(c.geom, n.geom)", ">= 300"))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        df = spark.sql(q)
+    assert getattr(df, "_sedona_rewritten_sql", None) is not None
+    cols = ["c_custkey", "n_nationkey"]
+    got = _rows(df, cols)
+    assert got == _rows(_vanilla(spark, q), cols) and got
+
+
+def test_moved_on_conjuncts_bind_tighter_than_where_or(spark):
+    """An ON conjunct moved into the WHERE of the rewritten text holds
+    for every row, also when the original WHERE is a top-level OR."""
+    _prep(spark)
+    q = """SELECT a.c_custkey AS ka, b.c_custkey AS kb
+           FROM (SELECT * FROM cust_pts WHERE c_custkey < 120) a
+           JOIN (SELECT * FROM cust_pts WHERE c_custkey < 120) b
+           ON ST_DWithin(a.geom, b.geom, 5.0) AND a.c_custkey < b.c_custkey
+           WHERE a.c_nationkey = 1 OR b.c_nationkey = 2"""
+    df = spark.sql(q)
+    assert getattr(df, "_sedona_rewritten_sql", None) is not None
+    got = _rows(df, ["ka", "kb"])
+    assert all(ka < kb for ka, kb in got)
+    assert got == _rows(_vanilla(spark, q), ["ka", "kb"]) and got
+
+
+def test_star_inside_a_relation_subquery_keeps_pruning(spark):
+    """``SELECT *`` inside a chain relation's subquery expands that
+    subquery, not the pair: the join view keeps only mentioned columns."""
+    _prep(spark)
+    q = """SELECT c.c_custkey, n.n_nationkey, s.n_name
+           FROM (SELECT * FROM cust_pts WHERE c_custkey < 400) c
+           JOIN nation_boxes n ON ST_Within(c.geom, n.geom)
+           JOIN nation s ON s.n_nationkey = n.n_nationkey"""
+    df = spark.sql(q)
+    rewritten = getattr(df, "_sedona_rewritten_sql", None)
+    assert rewritten is not None
+    view = re.search(r"__sedona_sql_join_\w+", rewritten).group(0)
+    assert "c_acctbal" not in spark.table(view).columns
+    cols = ["c_custkey", "n_nationkey", "n_name"]
+    got = _rows(df, cols)
+    assert got == _rows(_vanilla(spark, q), cols) and got
