@@ -42,7 +42,7 @@ R_EARTH_M = 6371008.8                       # IUGG mean radius
 M_PER_DEG = math.pi * R_EARTH_M / 180.0     # meridian meters per degree
 
 
-def lon_pad_deg_col(band_lat_deg: Column, r_ang: float) -> Column:
+def lon_pad_deg_col(band_lat_deg: Column, r_ang: "float | Column") -> Column:
     """Worst-case |Δlon| in degrees between two points within
     great-circle angle ``r_ang`` when the band's max |lat| (degrees) is
     the given column: 2·asin(sin(r/2)/cos(L)) — the planar r/cos(L)
@@ -71,23 +71,13 @@ def haversine_m(lat1, lon1, lat2, lon2) -> Column:
 def geography_dwithin_join(build: DataFrame, probe: DataFrame,
                            dist_m: float,
                            build_lon: str = "lon", build_lat: str = "lat",
-                           probe_lon: str = "lon", probe_lat: str = "lat",
-                           max_lat: float = 88.0) -> DataFrame:
+                           probe_lon: str = "lon", probe_lat: str = "lat"
+                           ) -> DataFrame:
     """Inner join of `build` × `probe` on great-circle distance ≤ dist_m.
-
-    ``max_lat`` is DEPRECATED and ignored (the pad uses the true band
-    latitude; a fixed clamp under-padded the polar band).
 
     Pass the SMALLER side as `build` (it stays one-row-per-cell; the
     probe side fans out to its covering cells).  Returns all columns of
     both inputs plus `geo_dist_m`."""
-    if max_lat != 88.0:
-        import warnings
-        warnings.warn(
-            "geography_dwithin_join(max_lat=...) is deprecated and "
-            "ignored: the longitude pad uses the true band latitude (a "
-            "fixed clamp under-padded the polar band and dropped pairs)",
-            DeprecationWarning, stacklevel=2)
     cell = dist_m / M_PER_DEG                   # grid step in degrees (lat)
     ncx = int(math.ceil(360.0 / cell))          # lon cells wrap modulo ncx
     # exact-tiling longitude step: ncx * lon_cell == 360 exactly, so
@@ -336,10 +326,8 @@ def spherical_cover(g):
             acc["n_pole"], acc["s_pole"])
 
 
-def _cover_cells(cover, cell_lat, lon_cell, ncx, ncy, pad_m,
-                 max_lat, cap):
+def _cover_cells(cover, cell_lat, lon_cell, ncx, ncy, pad_m, cap):
     """Rasterize a spherical_cover into a sorted list of cell ids
-    (``max_lat`` is DEPRECATED and ignored — see geography_dwithin_join)
     (cy * ncx + cx).  pad_m expands the cover by a geodesic radius
     (dwithin probe side): exact latitude pad + latitude-aware
     longitude pad (same bound as geography_dwithin_join)."""
@@ -352,7 +340,7 @@ def _cover_cells(cover, cell_lat, lon_cell, ncx, ncy, pad_m,
             n_pole = True
         if lat_lo <= -90.0 + eps:
             s_pole = True
-        # TRUE band latitude (no max_lat clamp — clamping under-padded
+        # TRUE band latitude (no fixed clamp — clamping under-padded
         # the 88..90 band and dropped near-pole pairs, round-9 review);
         # a band at/through the pole wraps every longitude
         band = max(abs(lat_lo), abs(lat_hi))
@@ -425,7 +413,7 @@ def _geog_points_fast(vals) -> "np.ndarray | None":
     return raw[:, 5:21].copy().view("<f8").reshape(n, 2)
 
 
-def _cover_cells_udf(cell_deg, pad_m=0.0, max_lat=88.0, cap=200_000):
+def _cover_cells_udf(cell_deg, pad_m=0.0, cap=200_000):
     """array<long> pandas UDF: geography WKB -> covering cell ids."""
     ncx = int(math.ceil(360.0 / cell_deg))
     lon_cell = 360.0 / ncx                  # exact tiling (seam-safe)
@@ -463,7 +451,7 @@ def _cover_cells_udf(cell_deg, pad_m=0.0, max_lat=88.0, cap=200_000):
             cover = spherical_cover(g)
             out.append(None if cover is None else
                        _cover_cells(cover, cell_lat, lon_cell, ncx, ncy,
-                                    pad_m, max_lat, cap))
+                                    pad_m, cap))
         return pd.Series(out, dtype=object)
 
     # (Semantics-bearing flag, r11 advisor: the column must not be

@@ -2,28 +2,42 @@
 
 Reference semantics (/root/reference/rust/sedona-query-planner/src/
 spatial_predicate.rs:254-297 KNNPredicate; docs/reference/sql-joins.md:60-80):
-planar distance, optional tie inclusion, query-side filters may be pushed
-below the KNN, object-side filters must be applied AFTER the join.
+planar distance (or great-circle meters with ``use_spheroid``), optional
+tie inclusion, query-side filters may be pushed below the KNN,
+object-side filters must be applied AFTER the join.
 
 Spark design:
 - broadcast path (objects fit in a broadcast): objects collected once,
   a numpy uniform-grid index is built PER EXECUTOR BATCH inside
   `mapInPandas` (index rebuilt per partition, never shipped — same rule
   the reference applies to its per-partition R-trees).
-- large-large path (`knn_join_partitioned`): grid-cell candidate join
-  with a 3x3-neighborhood first round, provable per-query completion
-  bound, and an explicit-radius second round for the remainder — two
-  shuffles total, ranking fully native (window over distance).
+- large-large path: ONE two-round core (`_knn_two_round`) for both
+  metrics — grid-cell candidate join with a 3x3-block first round, a
+  provable per-query completion bound, and an explicit-reach second
+  round for the remainder; two shuffles total, ranking fully native
+  (window over distance).  The metric supplies only its grid
+  (`_planar_grid` behind `knn_join_partitioned`, `_sphere_grid` behind
+  `knn_join_spheroid_partitioned`).
+
+NULL and EMPTY geometries have no centre and take part in no pair, on
+either side: such a query gets no rows, such an object is nobody's
+neighbor.  An empty (or all-NULL) object side gives the full output
+schema with no rows.
 
 Tie-breaking: ties beyond k are dropped deterministically by object id
-unless include_ties=True (reference `knn_include_tie_breakers`).
+unless include_ties=True (reference `knn_include_tie_breakers`), which
+keeps every neighbor within TIE_TOLERANCE of the kth distance — one
+tolerance for every route and both metrics.
 """
 
 from __future__ import annotations
 
+import math
+from typing import Callable, NamedTuple
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -32,6 +46,10 @@ from sedona_db_spark.geom import algorithms as alg
 from sedona_db_spark.geom import core
 from sedona_db_spark.operators.result_cache import (BoundedPersistPool,
                                                     stats_memo)
+
+# A neighbor within this distance of the kth one ties with it
+# (reference DISTANCE_TOLERANCE, spatial_index.rs:28-60).
+TIE_TOLERANCE = 1e-9
 
 
 class _GridIndex:
@@ -318,16 +336,21 @@ def knn_join(
         except Exception:
             n_small = None
     if n_small is None or n_small > broadcast_threshold:
-        if use_spheroid:
-            return knn_join_spheroid_partitioned(
-                queries, objects, k, query_geom, object_geom,
-                include_ties=include_ties)
-        return knn_join_partitioned(queries, objects, k, query_geom,
-                                    object_geom, include_ties=include_ties)
+        partitioned = (knn_join_spheroid_partitioned if use_spheroid
+                       else knn_join_partitioned)
+        return partitioned(queries, objects, k, query_geom, object_geom,
+                           include_ties=include_ties)
     # object side fits: materialized driver-side once (broadcast path);
     # non-point objects are indexed by bbox center and exact-refined below
     obj_rows = objects.collect()
     obj_cols = [c for c in objects.columns]
+    out_schema = T.StructType(
+        list(queries.schema.fields)
+        + [T.StructField(f"o_{f.name}" if f.name in queries.columns else f.name, f.dataType)
+           for f in objects.schema.fields]
+        + [T.StructField("knn_distance", T.DoubleType())])
+    if not obj_rows:
+        return spark.createDataFrame([], out_schema)
     gi = obj_cols.index(object_geom)
     pts = []
     geoms = []
@@ -362,11 +385,6 @@ def knn_join(
         "o_hd_max": halfdiag,
     })
 
-    out_schema = T.StructType(
-        list(queries.schema.fields)
-        + [T.StructField(f"o_{f.name}" if f.name in queries.columns else f.name, f.dataType)
-           for f in objects.schema.fields]
-        + [T.StructField("knn_distance", T.DoubleType())])
     obj_out_names = [f"o_{c}" if c in queries.columns else c for c in obj_cols]
     qcols = list(queries.columns)
     qg_idx = qcols.index(query_geom)
@@ -450,6 +468,8 @@ def knn_join(
                 if qpts is not None:
                     q = qpts[i]
                     qgeom = None
+                    if np.isnan(q).any():       # POINT EMPTY
+                        continue
                 else:
                     qgeom = decoded[i]
                     if qgeom is None or qgeom.is_empty():
@@ -459,7 +479,8 @@ def knn_join(
                     q_hd = float(np.hypot((bb[2] - bb[0]) / 2.0,
                                           (bb[3] - bb[1]) / 2.0))
                 if use_spheroid:
-                    if qpts is None:
+                    # (a geography-tagged point decodes, not fast-parses)
+                    if qgeom is not None and qgeom.gt != core.POINT:
                         raise NotImplementedError(
                             "use_spheroid KNN supports POINT queries only")
                     # vectorized haversine against every broadcast object:
@@ -499,9 +520,9 @@ def knn_join(
                     ids, dists = idx.knn(q, kk)
                     ranked = list(zip(ids, dists))
                 if include_ties and len(ranked) > k:
-                    # reference DISTANCE_TOLERANCE (spatial_index.rs:28-60)
                     kth = ranked[k - 1][1]
-                    pairs = [p for p in ranked if p[1] <= kth + 1e-9]
+                    pairs = [p for p in ranked
+                             if p[1] <= kth + TIE_TOLERANCE]
                 else:
                     pairs = ranked[:k]
                 qrow = tuple(pdf.iloc[i])
@@ -519,217 +540,77 @@ def knn_join(
 # partitioned (large-large) KNN join — two-round bound-then-refine
 # ======================================================================
 
-# Bounded cache of persisted partitioned-KNN frames (see persist note in
-# the function body).  Keeps the TWO most recent calls' frames persisted
-# (2 frames per call) so a previous call's still-lazy result DataFrame is
-# not silently de-cached the moment a second join starts — the former
-# single-slot dict unpersisted frames the previous result still
-# referenced, losing its caching on interleaved calls, and was not
-# thread-safe (round-6 advisor).  Frames older than that are unpersisted:
-# their dependent results recompute correctly, just without the cache.
-# 2 frames/call x 2 recent calls
+# Persisted partitioned-KNN frames (the object frame and round A's top-k)
+# of the two most recent calls: a previous call's still-lazy result is
+# not de-cached the moment a second join starts.  Older frames are
+# unpersisted; their results recompute correctly, just without the cache.
 _PARTITIONED_POOL = BoundedPersistPool(keep=4)
 
 
-def _cache_persist(df: DataFrame) -> DataFrame:
-    """persist() df and enroll it in the bounded FIFO, releasing the
-    oldest frames past the retention window."""
-    return _PARTITIONED_POOL.persist(df)
+class _Grid(NamedTuple):
+    """A metric's cell grid: all the two-round core knows of the metric.
+
+    The SQL strings are spliced into the core's own expressions and read
+    its columns: the bbox centres ``__qx/__qy`` and ``__ox/__oy`` (the
+    core asks for no cell of a row without one), the half-diagonals
+    ``__qhd/__ohd`` and the query cell ``__qcx/__qcy``.  Distances are
+    in the metric's unit; a grid that ignores the half-diagonals must
+    only serve inputs whose half-diagonals are zero (points)."""
+    qcx: str          # query cell column
+    qcy: str          # query cell row
+    ocell: str        # object cell id
+    cells_a: Column   # round A: the 3x3 cell block around the query cell
+    margin: str       # lower bound on the exact distance to any object
+    #                   outside it
+    cells_b: Callable[[str], Column]   # round B: every cell that can
+    #                   hold an object within a distance (SQL; NULL is
+    #                   the whole grid)
+    dist: Column      # ranking distance, raising on rows the plan did
+    #                   not expect
 
 
-def knn_join_partitioned(
-    queries: DataFrame,
-    objects: DataFrame,
-    k: int,
-    query_geom: str = "geom",
-    object_geom: str = "geom",
-    grid_cells: int | None = None,
-    include_ties: bool = False,
-) -> DataFrame:
-    """Large-large KNN join: no broadcast, no driver collect.
-
-    Reference analogue: the out-of-core KNN path (SURVEY §2.10 "grid
-    partition + neighbor-ring expansion, or 2-round bound-then-refine").
-
-    Round A: objects hashed to a uniform grid (stats from one tiny agg);
-    each query probes its 3x3 cell neighborhood via an equi-join on cell id
-    and takes a candidate top-k -> upper bound d_k (native window, no
-    Python).  A query is PROVEN done when it found >= k candidates and
-    d_k <= the distance from the query to the edge of its searched block,
-    shrunk by the query halfdiag + max object halfdiag (sides clipped at
-    the grid boundary are safe: the grid covers every object).  Round B:
-    the remaining queries re-probe with an explicit radius (d_k plus the
-    halfdiag slack, or the full grid when <k candidates were found —
-    rare, sparse-region queries) and re-rank.  Both rounds are single
-    shuffles keyed by cell.
-
-    Exact for ALL geometry types: point inputs rank on native codegen
-    center distance (both halfdiags are zero so the bound is tight); any
-    non-point input (detected from WKB length — a 2D point is exactly 21
-    bytes) switches the ranking distance to the exact geometry-distance
-    kernel (Arrow-batched, point fast path) while candidate generation
-    stays on the bbox-center grid with the halfdiag-padded completion
-    proof.  Reference semantics: exact geometry distance
-    (spatial_predicate.rs:254-297, index/knn_adapter.rs).
-    """
-    from sedona_db_spark.operators.spatial_join import bbox_col
-
-    # disambiguate object columns (one selectExpr round trip — aliased
-    # F.col()s cost 2 RPCs per column at construction, guide §1.2)
-    from sedona_db_spark.operators.spatial_join import _bq
-    rcols = {c: (f"o_{c}" if c in queries.columns else c) for c in objects.columns}
-    obj = objects.selectExpr(
-        *[f"{_bq(c)} AS {_bq(a)}" if a != c else _bq(c)
-          for c, a in rcols.items()])
-    ogeom = rcols[object_geom]
-    obj_payload = [a for a in rcols.values()]
-
-    # width guard (round-6): both sides feed CPU-heavy bbox kernels next
-    from sedona_db_spark.plans.width import widen_if_starved
-    obj = widen_if_starved(obj)
-    queries = widen_if_starved(queries)
-
-    # Pin the id assignment to ONE evaluation: __qid flows into top_a
-    # (cached) AND the qstat/round-B branch, which re-evaluate this
-    # subtree independently — above a shuffle, positional ids permute
-    # between evaluations and the safe/unsafe split silently mixes
-    # queries (ADVICE r8 hazard class).  Content hashes are NOT a
-    # substitute here: duplicate query rows must keep distinct ids or
-    # the per-query top-k window under-emits.
-    # Plan construction uses single selectExpr batches (one py4j round
-    # trip per frame) instead of per-column withColumn chains: profiled
-    # at ~1.3 s of pure driver/py4j chatter per construction for the
-    # polygon-KNN shape — a fixed cost every caller paid per build
-    # (guide §1: the bench times construction + execution).
-    q = _pin_row_ids(queries, "__qid")
-    qb = q.select("*", bbox_col(F.col(query_geom)).alias("__qb")) \
-          .selectExpr(
-              "*",
-              "(__qb.xmin + __qb.xmax) / 2 AS __qx",
-              "(__qb.ymin + __qb.ymax) / 2 AS __qy",
-              "coalesce(sqrt(pow((__qb.xmax - __qb.xmin) / 2, 2) + "
-              "pow((__qb.ymax - __qb.ymin) / 2, 2)), 0.0d) AS __qhd") \
-          .drop("__qb")
-    # classed bbox (same decode pass as the plain bbox — zero extra
-    # Python): the corners + shape class stay as flat columns so the
-    # all-rectangle object census below can swap the per-pair Python
-    # distance kernel for the exact native point-to-rect formula
-    from sedona_db_spark.operators.spatial_join import _bbox_cls_col
-    ob = obj.select("*", _bbox_cls_col(F.col(ogeom)).alias("__ob")) \
-            .selectExpr(
-                "*",
-                "(__ob.xmin + __ob.xmax) / 2 AS __ox",
-                "(__ob.ymin + __ob.ymax) / 2 AS __oy",
-                "coalesce(sqrt(pow((__ob.xmax - __ob.xmin) / 2, 2) + "
-                "pow((__ob.ymax - __ob.ymin) / 2, 2)), 0.0d) AS __ohd",
-                "__ob.xmin AS __obx0", "__ob.ymin AS __oby0",
-                "__ob.xmax AS __obx1", "__ob.ymax AS __oby1",
-                "__ob.cls AS __ocls") \
-            .drop("__ob")
-
-    # One materialization of the bbox-augmented object side serves the
-    # stats agg AND both candidate rounds: without the cache, the Python
-    # bbox pass over the full object table ran three times (stats, round
-    # A, round B) — at 100 TB that is two full scans too many.  The
-    # stats collect() below fills the cache eagerly; frames from older
-    # calls are released by the bounded FIFO in _cache_persist.
-    # (frame, stats) memoized on the analyzed-plan hash (r11): repeated
-    # builds of the same join shape (bench reps, dashboards) were paying
-    # the full Python bbox pass + stats job per CONSTRUCTION.  The
-    # memoized frame is the persisted one, so a hit also reuses its
-    # cached partitions at execution; if the persist FIFO has since
-    # evicted it, the frame recomputes — slower, never wrong.  Stats
-    # steer grid sizing and plan choice only: round B's completion
-    # bound and the per-row exact-mode guards own correctness.
-    memo, remember = stats_memo("knnob", obj, ogeom)
-    if memo is not None:
-        ob, stats = memo
-    else:
-        ob = _cache_persist(ob)
-        stats = ob.agg(
-            F.min("__ox").alias("x0"), F.min("__oy").alias("y0"),
-            F.max("__ox").alias("x1"), F.max("__oy").alias("y1"),
-            F.count("*").alias("n"), F.max("__ohd").alias("ohd"),
-            F.max(F.length(ogeom)).alias("maxlen"),
-            F.min((F.col("__ocls") == 2).cast("int")).alias("allrect")
-        ).collect()[0]
-        remember((ob, stats))
-    if stats["n"] == 0:
-        empty_schema = qb.drop("__qid", "__qx", "__qy", "__qhd").schema
-        return queries.sparkSession.createDataFrame([], empty_schema)
-    x0, y0, x1, y1, n_obj = (stats["x0"], stats["y0"], stats["x1"],
-                             stats["y1"], stats["n"])
-    ohd_max = float(stats["ohd"] or 0.0)
-    # a 2D point WKB is exactly 21 bytes; anything else (or Z/M points,
-    # conservatively) flips on the exact-distance kernel.  Column-pruned
-    # native scans, no Python pass.
-    obj_nonpoint = stats["maxlen"] is not None and stats["maxlen"] != 21
-    # LIMIT-probe, not a full agg: a max(length) over the query side is an
-    # extra complete scan of a possibly-100TB table before any real work.
-    # The probe decides the PLAN; a per-row guard in the native branch
-    # below keeps correctness if a non-point row hides past the probe.
-    qry_nonpoint, remember = stats_memo("knnq", queries, query_geom)
-    if qry_nonpoint is None:
-        qprobe = [r[0] for r in queries.select(F.length(query_geom))
-                  .limit(4096).collect()]
-        qry_nonpoint = any(l is not None and l != 21 for l in qprobe)
-        remember(qry_nonpoint)
-    exact_mode = obj_nonpoint or qry_nonpoint
-    import math as _math
+def _planar_grid(stats: dict, grid_cells: int | None, qg: str,
+                 og: str) -> _Grid:
+    """Uniform grid over the objects' centre extent, clamped at its edges
+    (the grid covers every object, so a clamped side is no frontier)."""
+    x0, y0, x1, y1 = stats["x0"], stats["y0"], stats["x1"], stats["y1"]
     if grid_cells is None:
         # ~1 object per cell: a 3x3 probe yields ~9 candidates (>= any
         # practical k) while keeping the candidate join linear in the
-        # query count.  The old n_obj//64 sizing (9 objects/cell) made a
-        # 3x3 neighborhood cover most of the domain whenever the object
-        # side was small relative to the query side — the 625-box bulk
-        # benchmark generated 52M candidate pairs instead of 1.4M.
-        # Under-served queries are exactly what round B exists for.
-        grid_cells = min(max(n_obj, 64), 512 * 512)
-    nx = max(int(_math.sqrt(grid_cells)), 2)
-    ny = nx
+        # query count (9 objects/cell made the 625-box bulk benchmark
+        # generate 52M candidate pairs instead of 1.4M).  Under-served
+        # queries are what round B is for.
+        grid_cells = min(max(stats["n"], 64), 512 * 512)
+    nx = ny = max(int(math.sqrt(grid_cells)), 2)
     w = max((x1 - x0) / nx, 1e-9)
     h = max((y1 - y0) / ny, 1e-9)
+    # repr() literals: exact double round-trip
+    _x0, _y0, _x1, _y1, _w, _h = (repr(float(v))
+                                  for v in (x0, y0, x1, y1, w, h))
+    _ohd = repr(float(stats["ohd"] or 0.0))
 
-    # literal embeds use repr() — exact double round-trip, same values
-    # the Column-built version passed through F.lit
-    _x0, _y0, _x1, _y1 = (repr(float(x0)), repr(float(y0)),
-                          repr(float(x1)), repr(float(y1)))
-    _w, _h, _ohd = repr(float(w)), repr(float(h)), repr(float(ohd_max))
+    def cx(x: str) -> str:
+        return f"least(greatest(floor(({x} - {_x0}) / {_w}), 0), {nx - 1})"
 
-    # Per-row guard for the memoized stats (r11): the completion bound
-    # leans on ohd_max and the grid extent, so an object BEYOND the
-    # cached bounds (data changed under a memoized plan) must fail
-    # LOUD, never silently clip into an edge cell the bound doesn't
-    # model.  Null centers (null/empty geometry) keep dropping silently.
-    ob2 = ob.selectExpr(
-        "*",
-        f"CASE WHEN (__ox IS NULL OR __oy IS NULL OR "
-        f"(__ox >= {_x0} - 1e-9 AND __ox <= {_x1} + 1e-9 AND "
+    def cy(y: str) -> str:
+        return f"least(greatest(floor(({y} - {_y0}) / {_h}), 0), {ny - 1})"
+
+    # The completion bound leans on the memoized extent and max
+    # halfdiag, so an object beyond them (data changed under a memoized
+    # plan) fails LOUD instead of clipping into an edge cell.
+    ocell = (
+        f"CASE WHEN __ox >= {_x0} - 1e-9 AND __ox <= {_x1} + 1e-9 AND "
         f"__oy >= {_y0} - 1e-9 AND __oy <= {_y1} + 1e-9 AND "
-        f"coalesce(__ohd, 0.0d) <= {_ohd} + 1e-9)) THEN "
-        f"least(greatest(floor((__ox - {_x0}) / {_w}), 0), {nx - 1}) "
-        f"* {ny} + "
-        f"least(greatest(floor((__oy - {_y0}) / {_h}), 0), {ny - 1}) "
+        f"coalesce(__ohd, 0.0d) <= {_ohd} + 1e-9 THEN "
+        f"{cx('__ox')} * {ny} + {cy('__oy')} "
         "ELSE CAST(raise_error('knn_join_partitioned: object beyond the "
         "memoized planning stats (extent/halfdiag grew under a cached "
         "plan); rebuild the object DataFrame (new plan) to refresh the "
-        "stats') AS LONG) END AS __ocell")
+        "stats') AS LONG) END")
 
-    # (NOT cached: the query subtree feeds round A, the qstat join and
-    # round B, but persisting it was measured SLOWER at sf0.1 — the
-    # materialization barrier costs more than the two repeated
-    # scan+bbox passes, which are narrow and fuse into their stages.)
-    qb2 = qb.selectExpr(
-        "*",
-        f"least(greatest(floor((__qx - {_x0}) / {_w}), 0), {nx - 1}) "
-        "AS __qcx",
-        f"least(greatest(floor((__qy - {_y0}) / {_h}), 0), {ny - 1}) "
-        "AS __qcy")
-
-    def neighborhood_cells(radius_sql: str) -> str:
-        """Cell-id array expression for the (2r+1)^2 neighborhood;
-        ``radius_sql`` is a SQL sub-expression (constant or column)."""
-        return (
+    def block(radius_sql: str) -> Column:
+        """Cell ids of the (2r+1)^2 block around the query cell."""
+        return F.expr(
             f"flatten(transform("
             f"sequence(greatest(__qcx - ({radius_sql}), 0), "
             f"least(__qcx + ({radius_sql}), {nx - 1})), "
@@ -738,20 +619,51 @@ def knn_join_partitioned(
             f"least(__qcy + ({radius_sql}), {ny - 1})), "
             f"cy -> cx * {ny} + cy)))")
 
-    obj_allrect = bool(stats["n"]) and stats["allrect"] == 1
-    _qg = f"`{query_geom}`"
-    _og = f"`{ogeom}`"
-    if exact_mode and obj_allrect and not qry_nonpoint:
-        # All-rectangle object census + all-point query probe: the exact
-        # geometry distance IS the native point-to-axis-aligned-rect
-        # formula over the classed-bbox corners — zero Python on the
-        # candidate pairs (the pandas kernel below re-derived exactly
-        # this per batch through factorize + segment walks).  Guards per
-        # row: a query row that is not a 21-byte 2-D point, or an object
-        # row whose recomputed shape class is not rectangle (data changed
-        # under a memoized plan), fails LOUD like the point fast path.
+    # exact distance to any object outside the block >= the centre
+    # margin minus the two halfdiags (zero for points: the bound is tight)
+    _inf = "CAST('Infinity' AS DOUBLE)"
+    margin = (
+        "least("
+        f"CASE WHEN __qcx - 1 > 0 THEN __qx - ({_x0} + (__qcx - 1) * {_w}) "
+        f"ELSE {_inf} END, "
+        f"CASE WHEN __qcx + 1 < {nx - 1} THEN "
+        f"({_x0} + (__qcx + 2) * {_w}) - __qx ELSE {_inf} END, "
+        f"CASE WHEN __qcy - 1 > 0 THEN __qy - ({_y0} + (__qcy - 1) * {_h}) "
+        f"ELSE {_inf} END, "
+        f"CASE WHEN __qcy + 1 < {ny - 1} THEN "
+        f"({_y0} + (__qcy + 2) * {_h}) - __qy ELSE {_inf} END) "
+        f"- __qhd - {_ohd}")
+
+    def cells_b(dist: str) -> Column:
+        # the centre reach in cells, clamped at the full grid (a
+        # degenerate extent's 1e-9 cell overflows, and the full grid is
+        # always sound); least() skips NULL, so NULL is the full grid
+        return block(f"CAST(least(ceil((({dist}) + __qhd + {_ohd}) / "
+                     f"{repr(float(min(w, h)))}) + 1, {max(nx, ny)}) AS INT)")
+
+    # a 2D point WKB is exactly 21 bytes; anything else (or Z/M points,
+    # conservatively) needs exact geometry distance
+    qry_nonpoint = stats["qry_nonpoint"]
+    if not qry_nonpoint and stats["maxlen"] == 21:
+        # native centre distance; the guard makes a probe miss fail
+        # loudly instead of ranking a polygon by its bbox centre
         dist = F.expr(
-            f"CASE WHEN (length({_qg}) IS NULL OR length({_qg}) = 21) "
+            f"CASE WHEN (length({qg}) IS NULL OR length({qg}) = 21) "
+            f"AND (length({og}) IS NULL OR length({og}) = 21) THEN "
+            "sqrt(pow(__qx - __ox, 2) + pow(__qy - __oy, 2)) "
+            "ELSE CAST(raise_error('knn_join_partitioned: non-point "
+            "geometry appeared beyond the plan probe/stats (query probe "
+            "miss, or object data changed under a memoized plan); "
+            "re-run with a fresh object DataFrame or exact mode') "
+            "AS DOUBLE) END")
+    elif stats["allrect"] == 1 and not qry_nonpoint:
+        # all-rectangle objects, point queries: the exact distance IS the
+        # native point-to-rect formula over the classed-bbox corners —
+        # zero Python on the candidate pairs.  A non-point query or a
+        # non-rectangle object (data changed under a memoized plan)
+        # fails LOUD.
+        dist = F.expr(
+            f"CASE WHEN (length({qg}) IS NULL OR length({qg}) = 21) "
             "AND __ocls = 2 THEN "
             "sqrt(pow(greatest(__obx0 - __qx, __qx - __obx1, 0.0d), 2) + "
             "pow(greatest(__oby0 - __qy, __qy - __oby1, 0.0d), 2)) "
@@ -759,10 +671,8 @@ def knn_join_partitioned(
             "query or non-rectangle object appeared beyond the plan "
             "probe/stats (data changed under a memoized plan); re-run "
             "with a fresh object DataFrame') AS DOUBLE) END")
-    elif exact_mode:
-        from sedona_db_spark.functions.kernels import (
-            _decode_cached, _fast_points)
-        from sedona_db_spark.geom import algorithms as _alg
+    else:
+        from sedona_db_spark.functions.kernels import _decode_cached
 
         def _pair_dist(s1: pd.Series, s2: pd.Series) -> pd.Series:
             p1, p2 = _fast_points(s1), _fast_points(s2)
@@ -776,141 +686,318 @@ def knn_join_partitioned(
                 pts, poly_s = (p1, s2) if p1 is not None else (p2, s1)
                 codes, uniques = pd.factorize(poly_s)
                 if 0 < len(uniques) <= 2048 and not (codes < 0).any():
-                    from sedona_db_spark.geom import core as _core
-                    geoms = [_core.from_wkb(u) for u in uniques]
+                    geoms = [core.from_wkb(u) for u in uniques]
                     if all(g.dimension() == 2 and not list(g.lines())
                            and not list(g.points()) and list(g.polygons())
                            for g in geoms):
                         out = np.empty(len(codes))
                         for kdx, g in enumerate(geoms):
                             m = codes == kdx
-                            out[m] = _alg.points_to_polygon_distance_batch(
+                            out[m] = alg.points_to_polygon_distance_batch(
                                 pts[m], g)
                         return pd.Series(out)
             # candidate batches repeat the same few objects against many
-            # queries: memoized decode turns O(pairs) parses into
-            # O(distinct geometries)
+            # queries: memoized decode parses each distinct geometry once
             g1s, g2s = _decode_cached(s1), _decode_cached(s2)
             return pd.Series(
-                [None if (a is None or b is None) else _alg.distance(a, b)
+                [None if (a is None or b is None) else alg.distance(a, b)
                  for a, b in zip(g1s, g2s)], dtype=object)
 
         dist = F.pandas_udf(_pair_dist, T.DoubleType())(
-            F.col(query_geom), F.col(ogeom))
-    else:
-        # native fast path assumes every query is a 2-D point (probe said
-        # so); the guard makes a probe miss fail loudly instead of
-        # silently ranking a polygon by its bbox center
-        dist = F.expr(
-            f"CASE WHEN (length({_qg}) IS NULL OR length({_qg}) = 21) "
-            f"AND (length({_og}) IS NULL OR length({_og}) = 21) THEN "
-            "sqrt(pow(__qx - __ox, 2) + pow(__qy - __oy, 2)) "
-            "ELSE CAST(raise_error('knn_join_partitioned: non-point "
-            "geometry appeared beyond the plan probe/stats (query probe "
-            "miss, or object data changed under a memoized plan); "
-            "re-run with a fresh object DataFrame or exact mode') "
-            "AS DOUBLE) END")
+            F.expr(qg), F.expr(og))
+    return _Grid(cx("__qx"), cy("__qy"), ocell, block("1"), margin,
+                 cells_b, dist)
 
-    # deterministic tie-break mirroring the broadcast path: distance,
-    # then the object's orderable payload columns (id first by
-    # convention), then center coords as a final fallback
+
+def _sphere_grid(stats: dict, cell_deg: float | None, qg: str,
+                 og: str) -> _Grid:
+    """Equal-angle lon/lat grid with MODULAR longitude cells (the
+    geography join's construction): no seam at the antimeridian, no
+    planar edge in longitude.  Distances are great-circle meters
+    (haversine on the mean sphere)."""
+    from sedona_db_spark.operators.geography_join import (
+        M_PER_DEG, R_EARTH_M, haversine_m, lon_pad_deg_col)
+    from sedona_db_spark.operators.spatial_join import _dlit
+    if stats["qry_nonpoint"] or stats["maxlen"] != 21:
+        raise NotImplementedError(
+            "spheroid KNN supports 2-D POINT geometries only "
+            "(reference spatial_predicate.rs:254-297 validates the same)")
+    if cell_deg is None:
+        # ~64 objects per cell if uniformly spread over the globe
+        cell_deg = min(max(math.sqrt(64800.0 * 64.0 / stats["n"]), 0.05),
+                       45.0)
+    ncx = int(math.ceil(360.0 / cell_deg))
+    lon_cell = 360.0 / ncx                      # exact tiling (seam-safe)
+    ncy = int(math.ceil(180.0 / cell_deg))
+    _cd, _lc, _mpd = _dlit(cell_deg), _dlit(lon_cell), _dlit(M_PER_DEG)
+
+    def cx(lon: str) -> str:
+        return f"pmod(floor(({lon} + 180.0D) / {_lc}), {ncx})"
+
+    def cy(lat: str) -> str:
+        return f"least(floor(({lat} + 90.0D) / {_cd}), {ncy - 1})"
+
+    not_point = ("CAST(raise_error('spheroid KNN: non-point geometry "
+                 "beyond the plan probe/stats') AS {})")
+
+    # Geodesic margin beyond the 3x3 block: lat sides are the meridian
+    # arc to the lat circle (none past a pole); lon sides the distance to
+    # the boundary meridian's great circle, R*asin(sin(dlon)*cos(lat)).
+    # Both are LOWER bounds on any object beyond, so the proof holds.
+    inf = "CAST('Infinity' AS DOUBLE)"
+    lat_lo = f"((__qcy - 1) * {_cd} - 90.0D)"
+    lat_hi = f"((__qcy + 2) * {_cd} - 90.0D)"
+
+    def to_meridian(dlon: str) -> str:
+        return (f"{_dlit(R_EARTH_M)} * asin(least(abs(sin(radians({dlon})))"
+                " * cos(radians(__qy)), 1.0D))")
+
+    m_lon = inf if ncx <= 3 else (      # a 3-wide block wraps every lon
+        f"least({to_meridian(f'__qx + 180.0D - (__qcx - 1) * {_lc}')}, "
+        f"{to_meridian(f'(__qcx + 2) * {_lc} - (__qx + 180.0D)')})")
+    margin = (f"least(CASE WHEN {lat_lo} > -90.0D THEN "
+              f"(__qy - {lat_lo}) * {_mpd} ELSE {inf} END, "
+              f"CASE WHEN {lat_hi} < 90.0D THEN "
+              f"({lat_hi} - __qy) * {_mpd} ELSE {inf} END, {m_lon})")
+
+    def cells_b(dist: str) -> Column:
+        # the float-slop-padded distance as a lat pad plus the shared
+        # band-latitude lon pad (true band latitude up to the pole); NULL
+        # is the whole globe
+        rad_m = F.expr(f"coalesce(({dist}) * 1.0000001D + 1.0D, "
+                       f"{_dlit(math.pi * R_EARTH_M)})")
+        lat_pad = rad_m / M_PER_DEG
+        lon_pad = lon_pad_deg_col(F.abs(F.col("__qy")) + lat_pad,
+                                  rad_m / R_EARTH_M)
+        lon = F.col("__qx") + 180.0
+        cxs = F.array_distinct(F.transform(
+            F.sequence(F.floor((lon - lon_pad) / lon_cell),
+                       F.floor((lon + lon_pad) / lon_cell)),
+            lambda x: F.pmod(x, F.lit(ncx))))
+        cy0 = F.greatest(F.floor((F.col("__qy") - lat_pad + 90.0) / cell_deg),
+                         F.lit(0))
+        cy1 = F.least(F.floor((F.col("__qy") + lat_pad + 90.0) / cell_deg),
+                      F.lit(ncy - 1))
+        return F.array_distinct(F.flatten(F.transform(
+            cxs, lambda cx: F.transform(F.sequence(cy0, cy1),
+                                        lambda cy: cx * ncy + cy))))
+
+    return _Grid(
+        cx("__qx"), cy("__qy"),
+        ocell=(f"CASE WHEN length({og}) = 21 THEN "
+               f"{cx('__ox')} * {ncy} + {cy('__oy')} "
+               f"ELSE {not_point.format('LONG')} END"),
+        cells_a=F.expr(
+            "array_distinct(flatten(transform("
+            "sequence(__qcx - 1, __qcx + 1), cx -> transform("
+            f"sequence(greatest(__qcy - 1, 0), least(__qcy + 1, {ncy - 1})), "
+            f"cy -> pmod(cx, {ncx}) * {ncy} + cy))))"),
+        margin=margin, cells_b=cells_b,
+        dist=F.when(F.expr(f"length({qg}) = 21 AND length({og}) = 21"),
+                    haversine_m(F.col("__qy"), F.col("__qx"),
+                                F.col("__oy"), F.col("__ox"))
+                    ).otherwise(F.expr(not_point.format("DOUBLE"))))
+
+
+def _knn_two_round(queries: DataFrame, objects: DataFrame, k: int,
+                   query_geom: str, object_geom: str, include_ties: bool,
+                   planar_only: bool,
+                   make_grid: Callable[[dict, str, str], _Grid]
+                   ) -> DataFrame:
+    """The large-large KNN plan of both metrics; ``make_grid(stats,
+    query_geom_sql, object_geom_sql)`` supplies the metric's grid, and
+    ``planar_only`` (as in :func:`spatial_join.bbox_col`) whether a
+    geography-tagged object fails loud.
+
+    Round A: objects hashed to the grid; each query probes its 3x3 cell
+    block via an equi-join on cell id and takes a candidate top-k ->
+    upper bound d_k (native window, no Python).  A query is PROVEN done
+    when it found >= k candidates and d_k <= the grid's margin to the
+    unsearched region.  Round B: the other queries re-probe every cell
+    that can hold an object within d_k (the whole grid when round A found
+    fewer than k) and re-rank.  Both rounds are single shuffles keyed by
+    cell.
+
+    A row without a centre (NULL or EMPTY geometry) gets no cell on
+    either side, so it neither finds nor is found."""
+    from sedona_db_spark.operators.spatial_join import (_bbox_cls_col,
+                                                        _bq, bbox_col)
+    from sedona_db_spark.plans.width import widen_if_starved
+
+    # disambiguate object columns in one selectExpr round trip
+    rcols = {c: (f"o_{c}" if c in queries.columns else c)
+             for c in objects.columns}
+    obj = widen_if_starved(objects.selectExpr(
+        *[f"{_bq(c)} AS {_bq(a)}" if a != c else _bq(c)
+          for c, a in rcols.items()]))
+    ogeom = rcols[object_geom]
+    queries = widen_if_starved(queries)
+
+    # Pin the id assignment to ONE evaluation: __qid flows into top_a
+    # (cached) AND the qstat/round-B branch, which re-evaluate this
+    # subtree — above a shuffle, positional ids permute between
+    # evaluations and the safe/unsafe split silently mixes queries.
+    # Content hashes are no substitute: duplicate query rows must keep
+    # distinct ids or the per-query top-k under-emits.  Each frame is one
+    # selectExpr batch (one py4j round trip), not a withColumn chain.
+    q = _pin_row_ids(queries, "__qid")
+    qb = q.select("*", bbox_col(F.col(query_geom)).alias("__qb")) \
+          .selectExpr(
+              "*",
+              "(__qb.xmin + __qb.xmax) / 2 AS __qx",
+              "(__qb.ymin + __qb.ymax) / 2 AS __qy",
+              "coalesce(sqrt(pow((__qb.xmax - __qb.xmin) / 2, 2) + "
+              "pow((__qb.ymax - __qb.ymin) / 2, 2)), 0.0d) AS __qhd") \
+          .drop("__qb")
+    # classed bbox (same decode pass): the corners + shape class serve
+    # the planar all-rectangle native distance
+    ob = obj.select("*", _bbox_cls_col(F.col(ogeom), planar_only)
+                    .alias("__ob")) \
+            .selectExpr(
+                "*",
+                "(__ob.xmin + __ob.xmax) / 2 AS __ox",
+                "(__ob.ymin + __ob.ymax) / 2 AS __oy",
+                "coalesce(sqrt(pow((__ob.xmax - __ob.xmin) / 2, 2) + "
+                "pow((__ob.ymax - __ob.ymin) / 2, 2)), 0.0d) AS __ohd",
+                "__ob.xmin AS __obx0", "__ob.ymin AS __oby0",
+                "__ob.xmax AS __obx1", "__ob.ymax AS __oby1",
+                "__ob.cls AS __ocls") \
+            .drop("__ob")
+
+    # One persisted object frame serves the stats agg AND both candidate
+    # rounds (one Python bbox pass, not three).  (frame, stats) are
+    # memoized on the plan key, so a rebuild of the same join runs no
+    # job at construction; an evicted frame recomputes — slower, never
+    # wrong.  Stats steer the grid only: the completion bound and the
+    # per-row guards own correctness.
+    memo, remember = stats_memo("knnob", obj, ogeom)
+    if memo is not None:
+        ob, stats = memo
+    else:
+        ob = _PARTITIONED_POOL.persist(ob)
+        stats = ob.agg(
+            F.min("__ox").alias("x0"), F.min("__oy").alias("y0"),
+            F.max("__ox").alias("x1"), F.max("__oy").alias("y1"),
+            F.count("*").alias("n"), F.max("__ohd").alias("ohd"),
+            F.max(F.length(ogeom)).alias("maxlen"),
+            F.min((F.col("__ocls") == 2).cast("int")).alias("allrect")
+        ).collect()[0].asDict()
+        remember((ob, stats))
+    if stats["x0"] is None:      # no object has a centre: nothing is near
+        return queries.sparkSession.createDataFrame([], T.StructType(
+            queries.schema.fields + obj.schema.fields
+            + [T.StructField("knn_distance", T.DoubleType())]))
+    # a LIMIT probe, not a full agg over a possibly huge query side: it
+    # decides the plan, the grid's per-row guards keep correctness
+    qry_nonpoint, remember = stats_memo("knnq", queries, query_geom)
+    if qry_nonpoint is None:
+        qry_nonpoint = any(
+            r[0] is not None and r[0] != 21 for r in
+            queries.select(F.length(query_geom)).limit(4096).collect())
+        remember(qry_nonpoint)
+    grid = make_grid(dict(stats, qry_nonpoint=qry_nonpoint),
+                     _bq(query_geom), _bq(ogeom))
+
+    # a row without a centre gets no cell: a NULL object cell, a NULL
+    # query cell array (explode drops it)
+    centred = "__{0}x IS NOT NULL AND __{0}y IS NOT NULL"
+    ob2 = ob.selectExpr("*", f"CASE WHEN {centred.format('o')} THEN "
+                             f"{grid.ocell} END AS __ocell")
+
+    def cells(arr: Column) -> Column:
+        return F.explode(F.when(F.expr(centred.format("q")), arr))
+
+    # (not persisted: the query subtree feeds round A, qstat and round
+    # B, but the materialization barrier measured slower than the
+    # repeated narrow scan+bbox passes at sf0.1)
+    qb2 = qb.selectExpr("*", f"{grid.qcx} AS __qcx", f"{grid.qcy} AS __qcy")
+
+    # deterministic order mirroring the broadcast path: distance, then
+    # the object's orderable payload columns (id first by convention),
+    # then its centre; one SQL window string, not the Window builder's
+    # ~170 RPCs
     orderable = (T.NumericType, T.StringType, T.DateType, T.TimestampType,
                  T.BooleanType, T.BinaryType)
-    tie_cols = [f.name for f in obj.schema.fields
-                if f.name != ogeom and isinstance(f.dataType, orderable)]
-
-    # ranking window + tie handling as single SQL strings (round 12,
-    # guide §1.2): the Window-builder form cost ~170 RPCs per topk call
-    # (two calls per build); the SQL window function is the identical
-    # plan (ORDER BY defaults ASC NULLS FIRST like Column asc) in 2-3
-    # round trips.
-    _order_sql = ", ".join(["knn_distance"] + [_bq(c) for c in tie_cols]
-                           + ["__ox", "__oy"])
+    order_sql = ", ".join(
+        ["knn_distance"]
+        + [_bq(f.name) for f in obj.schema.fields
+           if f.name != ogeom and isinstance(f.dataType, orderable)]
+        + ["__ox", "__oy"])
 
     def topk(cand: DataFrame) -> DataFrame:
-        ranked = cand.withColumn("knn_distance", dist).selectExpr(
+        ranked = cand.withColumn("knn_distance", grid.dist).selectExpr(
             "*", "row_number() OVER (PARTITION BY __qid ORDER BY "
-            f"{_order_sql}) AS __rn")
+            f"{order_sql}) AS __rn")
         if include_ties:
-            # withColumn, not selectExpr("*", ...): round B's candidate
-            # frame already carries round A's __dk and must have it
-            # REPLACED by the tie threshold, not duplicated
+            # withColumn: round B's candidates carry round A's __dk,
+            # which the tie threshold must REPLACE
             ranked = ranked.withColumn("__dk", F.expr(
                 f"max(CASE WHEN __rn = {int(k)} THEN knn_distance END) "
                 "OVER (PARTITION BY __qid)"))
             return ranked.filter(
                 f"__rn <= {int(k)} OR (__dk IS NOT NULL AND "
-                "knn_distance <= __dk + 1.0e-9)").drop("__dk")
+                f"knn_distance <= __dk + {TIE_TOLERANCE!r})").drop("__dk")
         return ranked.filter(f"__rn <= {int(k)}")
 
-    keep_cols = ([c for c in queries.columns] + ["__qid"]
-                 + obj_payload + ["knn_distance"])
+    keep_cols = (list(queries.columns) + ["__qid"] + list(rcols.values())
+                 + ["knn_distance"])
 
-    # ---- round A: 3x3 neighborhood ----------------------------------
-    qa = qb2.withColumn("__cell",
-                        F.explode(F.expr(neighborhood_cells("1"))))
-    cand_a = qa.join(ob2, F.expr("__cell = __ocell"), "inner")
-    # persist round A's top-k: its lineage feeds the per-query outcome
-    # agg, the safe/unsafe split AND the final output — uncached, the
-    # candidate join + window would re-execute three to four times (a
-    # full re-shuffle of the big side each time at 100 TB).  Result-sized
-    # (n_queries x k rows), so the cache is small relative to the join.
-    # Projected to the output columns BEFORE the persist: the cache
-    # boundary blocks downstream column pruning, so an unprojected
-    # persist forced every helper column (cells, halfdiags, bbox
-    # corners — ~90 B/row) through the window exchange and into cache
-    # storage whether or not the caller reads them.
-    top_a = _cache_persist(topk(cand_a).select(*keep_cols))
+    # ---- round A: the 3x3 block --------------------------------------
+    cand_a = qb2.withColumn("__cell", cells(grid.cells_a)) \
+                .join(ob2, F.expr("__cell = __ocell"), "inner")
+    # round A's top-k feeds the per-query agg, the safe/unsafe split AND
+    # the output, so it is persisted (result-sized, n_queries x k rows),
+    # projected first: the cache boundary blocks column pruning
+    top_a = _PARTITIONED_POOL.persist(topk(cand_a).select(*keep_cols))
 
-    # per-query outcome of round A
+    # a query is safe when round A found k and d_k is within the grid's
+    # margin to the unsearched region
     agg_a = top_a.groupBy("__qid").agg(
         F.count("*").alias("__cnt"), F.max("knn_distance").alias("__dk"))
-    qstat = qb2.join(agg_a, "__qid", "left")
-
-    # margin to the unsearched region (sides at the grid edge are safe);
-    # exact distance to any unsearched object >= center margin minus the
-    # two halfdiags (zero for points, so the point bound stays tight)
-    min_needed = k if not include_ties else k
-    _inf = "CAST('Infinity' AS DOUBLE)"
-    margin_sql = (
-        "least("
-        f"CASE WHEN __qcx - 1 > 0 THEN __qx - ({_x0} + (__qcx - 1) * {_w}) "
-        f"ELSE {_inf} END, "
-        f"CASE WHEN __qcx + 1 < {nx - 1} THEN "
-        f"({_x0} + (__qcx + 2) * {_w}) - __qx ELSE {_inf} END, "
-        f"CASE WHEN __qcy - 1 > 0 THEN __qy - ({_y0} + (__qcy - 1) * {_h}) "
-        f"ELSE {_inf} END, "
-        f"CASE WHEN __qcy + 1 < {ny - 1} THEN "
-        f"({_y0} + (__qcy + 2) * {_h}) - __qy ELSE {_inf} END)")
-    qstat = qstat.selectExpr(
+    qstat = qb2.join(agg_a, "__qid", "left").selectExpr(
         "*",
-        f"(__cnt >= {min_needed}) AND "
-        f"(__dk <= {margin_sql} - __qhd - {_ohd}) AS __safe")
-
+        f"(__cnt >= {k}) AND (__dk <= {grid.margin}) AS __safe")
     unsafe = qstat.filter("NOT coalesce(__safe, false)")
 
-    # ---- round B: explicit-radius re-probe for unsafe queries --------
-    # clamped at the full grid: with a degenerate extent (min(w,h) bottoms
-    # out at 1e-9) the raw cell count overflows, and probing every cell is
-    # always a sound upper bound anyway
-    rad_sql = (
-        f"CAST(least(CASE WHEN __dk IS NOT NULL THEN "
-        f"ceil((__dk + __qhd + {_ohd}) / {repr(float(min(w, h)))}) + 1 "
-        f"ELSE {max(nx, ny)} END, {max(nx, ny)}) AS INT)")
-    qb_b = unsafe.withColumn(
-        "__cell", F.explode(F.expr(neighborhood_cells(rad_sql))))
-    cand_b = qb_b.join(ob2, F.expr("__cell = __ocell"), "inner")
-    top_b = topk(cand_b)
+    # ---- round B: every cell within d_k, for unsafe queries ----------
+    reach = f"CASE WHEN __cnt >= {k} THEN __dk END"
+    top_b = topk(unsafe.withColumn("__cell", cells(grid.cells_b(reach)))
+                 .join(ob2, F.expr("__cell = __ocell"), "inner"))
 
-    # out_a filters by ANTI-join against the unsafe ids (usually a small
-    # sparse-region remainder) instead of semi-join against the safe ids
-    # (usually ~every query): same set — every __qid is in exactly one —
-    # but AQE can broadcast the small remainder at runtime, where the
-    # query-sized safe list forced a sort-merge shuffle of top_a.
+    # anti-join against the (usually small) unsafe remainder, not a
+    # semi-join against the safe ids: same set, but AQE can broadcast it
     out_a = top_a.join(unsafe.select("__qid"), "__qid", "left_anti") \
                  .select(*keep_cols)
-    out_b = top_b.select(*keep_cols)
-    return out_a.unionByName(out_b).drop("__qid")
+    return out_a.unionByName(top_b.select(*keep_cols)).drop("__qid")
+
+
+def knn_join_partitioned(
+    queries: DataFrame,
+    objects: DataFrame,
+    k: int,
+    query_geom: str = "geom",
+    object_geom: str = "geom",
+    grid_cells: int | None = None,
+    include_ties: bool = False,
+) -> DataFrame:
+    """Large-large planar KNN join: no broadcast, no driver collect.
+
+    Reference analogue: the out-of-core KNN path (SURVEY §2.10, "2-round
+    bound-then-refine"): :func:`_knn_two_round` over a uniform grid on
+    the objects' bbox-centre extent (``grid_cells`` overrides its
+    ~1-object-per-cell sizing).
+
+    Exact for ALL geometry types: point inputs rank on native centre
+    distance (both halfdiags are zero, so the bound is tight); a
+    non-point input (a 2D point WKB is exactly 21 bytes) ranks on the
+    exact geometry distance — native for point queries against
+    rectangles, else an Arrow-batched kernel — while candidates stay on
+    the bbox-centre grid with the halfdiag-padded completion proof
+    (reference: spatial_predicate.rs:254-297, index/knn_adapter.rs).
+    """
+    return _knn_two_round(
+        queries, objects, k, query_geom, object_geom, include_ties, True,
+        lambda stats, qg, og: _planar_grid(stats, grid_cells, qg, og))
 
 
 def knn_join_spheroid_partitioned(
@@ -921,200 +1008,20 @@ def knn_join_spheroid_partitioned(
     object_geom: str = "geom",
     include_ties: bool = False,
     cell_deg: float | None = None,
-    max_lat: float = 88.0,
 ) -> DataFrame:
-    """Partitioned great-circle KNN join for lon/lat POINT inputs.
+    """Partitioned great-circle KNN join for lon/lat POINT inputs, plain
+    or geography-tagged.
 
-    ``max_lat`` is DEPRECATED and ignored (the round-B re-probe pads
-    with the true band latitude; a fixed clamp could return a farther
-    neighbor as "nearest" near the poles).
-
-    Scale path for ``use_spheroid=True`` when the object side exceeds the
-    broadcast threshold (reference option surface
-    spatial_predicate.rs:254-297; refinement is haversine on the mean
-    sphere, matching the broadcast spheroid path).  Plan shape mirrors
-    :func:`knn_join_partitioned` but on the sphere:
-
-    - equal-angle grid with MODULAR longitude cells (the geography
-      join's construction, operators/geography_join.py): no seam at the
-      antimeridian, no planar edge in longitude;
-    - round A probes the query's 3x3 cell neighborhood; a query is
-      complete when its kth distance is below the geodesic margin to the
-      unsearched region: min over the lat-circle distances (exact
-      meridian arc) and the lon-meridian great-circle distances
-      ``R*asin(sin(dlon)*cos(lat))`` — both LOWER bounds on any object
-      beyond that boundary, so the completion proof is admissible;
-    - round B re-probes the remainder with an explicit geodesic radius
-      (per-row latitude-aware lon padding, the exact
-      ``2*asin(sin(r/2)/cos(lat))`` bound) or the full lat band when
-      round A found fewer than k.
-
-    Ranking and refine are native codegen haversine — zero Python.
-    POINT-only: any non-point WKB in the LIMIT probe (or the guarded
-    native expression) raises.
+    The scale path of ``use_spheroid=True`` (reference option surface
+    spatial_predicate.rs:254-297; haversine on the mean sphere, as the
+    broadcast spheroid path): :func:`_knn_two_round` over an equal-angle
+    grid of ``cell_deg`` degrees (default ~64 objects per cell over the
+    globe) with modular longitude cells, a geodesic completion margin
+    and a round-B reach padded by the true band latitude.  Ranking is
+    native haversine — zero Python.  A non-point object, or one in the
+    query probe, raises at construction; the per-row guards raise on any
+    that appears later.
     """
-    if max_lat != 88.0:
-        import warnings
-        warnings.warn(
-            "knn_join_spheroid_partitioned(max_lat=...) is deprecated "
-            "and ignored: the round-B re-probe pads with the true band "
-            "latitude (a fixed clamp could return a farther neighbor as "
-            "nearest near the poles)", DeprecationWarning, stacklevel=2)
-    from sedona_db_spark.operators.geography_join import (
-        M_PER_DEG, R_EARTH_M, haversine_m)
-    from sedona_db_spark.operators.spatial_join import bbox_col
-
-    rcols = {c: (f"o_{c}" if c in queries.columns else c) for c in objects.columns}
-    obj = objects.select([F.col(c).alias(a) for c, a in rcols.items()])
-    ogeom = rcols[object_geom]
-    obj_payload = list(rcols.values())
-
-    def pts_of(df, gcol, px, py):
-        probe = [r[0] for r in df.select(F.length(gcol)).limit(4096).collect()]
-        if any(l is not None and l != 21 for l in probe):
-            raise NotImplementedError(
-                "spheroid KNN supports 2-D POINT geometries only "
-                "(reference spatial_predicate.rs:254-297 validates the same)")
-        b = bbox_col(F.col(gcol))
-        guard = F.length(F.col(gcol))
-        lon = F.when(guard.isNull() | (guard == 21), b["xmin"]) \
-               .otherwise(F.raise_error(F.lit(
-                   "spheroid KNN: non-point geometry beyond the probe"))
-                   .cast("double"))
-        return df.withColumn(px, lon).withColumn(py, b["ymin"])
-
-    # _pin_row_ids: the qstat branch re-evaluates this subtree and
-    # positional ids are not stable above a shuffle
-    q = pts_of(_pin_row_ids(queries, "__qid"),
-               query_geom, "__qlon", "__qlat")
-    ob = pts_of(obj, ogeom, "__olon", "__olat")
-
-    n_obj = ob.count()
-    if n_obj == 0:
-        return queries.sparkSession.createDataFrame(
-            [], q.drop("__qid", "__qlon", "__qlat").schema)
-    import math as _math
-    if cell_deg is None:
-        # ~64 objects per occupied cell if uniformly spread over the globe
-        cell_deg = _math.sqrt(64800.0 * 64.0 / max(n_obj, 1))
-        cell_deg = min(max(cell_deg, 0.05), 45.0)
-    ncx = int(_math.ceil(360.0 / cell_deg))
-    lon_cell = 360.0 / ncx                      # exact-tiling (seam-safe)
-    ncy = int(_math.ceil(180.0 / cell_deg))
-
-    def cy_of(lat):
-        return F.least(F.floor((lat + 90.0) / cell_deg), F.lit(ncy - 1))
-
-    def cx_of(lon):
-        return F.pmod(F.floor((lon + 180.0) / lon_cell), F.lit(ncx))
-
-    ob2 = ob.withColumn("__ocx", cx_of(F.col("__olon"))) \
-            .withColumn("__ocy", cy_of(F.col("__olat")))
-    qb = q.withColumn("__qcx", cx_of(F.col("__qlon"))) \
-          .withColumn("__qcy", cy_of(F.col("__qlat")))
-
-    dist = haversine_m(F.col("__qlat"), F.col("__qlon"),
-                       F.col("__olat"), F.col("__olon"))
-    tie_break = (T.NumericType, T.StringType, T.DateType, T.TimestampType,
-                 T.BooleanType, T.BinaryType)
-    tie_cols = [f.name for f in obj.schema.fields
-                if f.name != ogeom and isinstance(f.dataType, tie_break)]
-
-    def topk(cand: DataFrame) -> DataFrame:
-        win = Window.partitionBy("__qid").orderBy(
-            F.col("knn_distance"), *[F.col(c) for c in tie_cols],
-            F.col("__olon"), F.col("__olat"))
-        ranked = cand.withColumn("knn_distance", dist) \
-                     .withColumn("__rn", F.row_number().over(win))
-        if include_ties:
-            kth = Window.partitionBy("__qid")
-            ranked = ranked.withColumn(
-                "__dk", F.max(F.when(F.col("__rn") == k,
-                                     F.col("knn_distance"))).over(kth))
-            return ranked.filter(
-                (F.col("__rn") <= k) |
-                (F.col("__dk").isNotNull() &
-                 (F.col("knn_distance") <= F.col("__dk") + 1e-6))).drop("__dk")
-        return ranked.filter(F.col("__rn") <= k)
-
-    # ---- round A: 3x3 neighborhood (lon cells modular) ----------------
-    acx = F.flatten(F.transform(
-        F.sequence(F.col("__qcx") - 1, F.col("__qcx") + 1),
-        lambda cx: F.transform(
-            F.sequence(F.greatest(F.col("__qcy") - 1, F.lit(0)),
-                       F.least(F.col("__qcy") + 1, F.lit(ncy - 1))),
-            lambda cy: F.pmod(cx, F.lit(ncx)) * ncy + cy)))
-    qa = qb.withColumn("__cell", F.explode(F.array_distinct(acx)))
-    cand_a = qa.join(
-        ob2.withColumn("__cell", F.col("__ocx") * ncy + F.col("__ocy")),
-        "__cell", "inner")
-    top_a = topk(cand_a)
-
-    agg_a = top_a.groupBy("__qid").agg(
-        F.count("*").alias("__cnt"), F.max("knn_distance").alias("__dk"))
-    qstat = qb.join(agg_a, "__qid", "left")
-
-    # geodesic margin to the unsearched region beyond the 3x3 block:
-    # lat sides = exact meridian arc to the lat circle (edge rows at the
-    # poles are safe: nothing beyond ±90); lon sides = distance to the
-    # boundary meridian great circle (lower bound of the segment)
-    lat_lo = (F.col("__qcy") - 1) * cell_deg - 90.0
-    lat_hi = (F.col("__qcy") + 2) * cell_deg - 90.0
-    inf = F.lit(float("inf"))
-    m_lat_lo = F.when(lat_lo > -90.0,
-                      (F.col("__qlat") - lat_lo) * M_PER_DEG).otherwise(inf)
-    m_lat_hi = F.when(lat_hi < 90.0,
-                      (lat_hi - F.col("__qlat")) * M_PER_DEG).otherwise(inf)
-
-    def meridian_dist(dlon_deg):
-        s = F.abs(F.sin(F.radians(dlon_deg))) * F.cos(F.radians(F.col("__qlat")))
-        return F.lit(R_EARTH_M) * F.asin(F.least(s, F.lit(1.0)))
-
-    lon_w = F.col("__qlon") + 180.0 - (F.col("__qcx") - 1) * lon_cell
-    lon_e = (F.col("__qcx") + 2) * lon_cell - (F.col("__qlon") + 180.0)
-    # when the 3x3 block already wraps every lon cell there is no lon side
-    full_wrap = F.lit(ncx <= 3)
-    m_lon = F.when(full_wrap, inf).otherwise(
-        F.least(meridian_dist(lon_w), meridian_dist(lon_e)))
-    margin = F.least(m_lat_lo, m_lat_hi, m_lon)
-
-    qstat = qstat.withColumn(
-        "__safe", (F.col("__cnt") >= k) & (F.col("__dk") <= margin))
-    unsafe = qstat.filter(~F.coalesce(F.col("__safe"), F.lit(False)))
-
-    # ---- round B: explicit geodesic radius re-probe --------------------
-    rad_m = F.when(F.col("__dk").isNotNull() & (F.col("__cnt") >= k),
-                   F.col("__dk") * 1.0000001 + 1.0) \
-             .otherwise(F.lit(_math.pi * R_EARTH_M))   # found <k: whole globe
-    lat_pad = rad_m / M_PER_DEG
-    r_ang = rad_m / R_EARTH_M
-    # shared band-latitude bound (geography_join.lon_pad_deg_col): the
-    # former fixed max_lat clamp under-padded the 88..90 band and could
-    # return a farther neighbor as "nearest" near the poles
-    from sedona_db_spark.operators.geography_join import lon_pad_deg_col
-    lon_pad = lon_pad_deg_col(F.abs(F.col("__qlat")) + lat_pad, r_ang)
-    cy0 = F.greatest(F.floor((F.col("__qlat") - lat_pad + 90.0) / cell_deg),
-                     F.lit(0))
-    cy1 = F.least(F.floor((F.col("__qlat") + lat_pad + 90.0) / cell_deg),
-                  F.lit(ncy - 1))
-    bcx = F.array_distinct(F.transform(
-        F.sequence(F.floor((F.col("__qlon") + 180.0 - lon_pad) / lon_cell),
-                   F.floor((F.col("__qlon") + 180.0 + lon_pad) / lon_cell)),
-        lambda x: F.pmod(x, F.lit(ncx))))
-    bcells = F.flatten(F.transform(
-        bcx, lambda cx: F.transform(F.sequence(cy0, cy1),
-                                    lambda cy: cx * ncy + cy)))
-    qb_b = unsafe.withColumn("__cell", F.explode(F.array_distinct(bcells)))
-    cand_b = qb_b.join(
-        ob2.withColumn("__cell", F.col("__ocx") * ncy + F.col("__ocy")),
-        "__cell", "inner")
-    top_b = topk(cand_b)
-
-    keep_cols = (list(queries.columns) + ["__qid"]
-                 + obj_payload + ["knn_distance"])
-    # anti-join against the (usually tiny) unsafe remainder: same set as
-    # the former safe-ids semi-join, but AQE can broadcast it at runtime
-    out_a = top_a.join(unsafe.select("__qid"), "__qid", "left_anti") \
-                 .select(*keep_cols)
-    out_b = top_b.select(*keep_cols)
-    return out_a.unionByName(out_b).drop("__qid")
+    return _knn_two_round(
+        queries, objects, k, query_geom, object_geom, include_ties, False,
+        lambda stats, qg, og: _sphere_grid(stats, cell_deg, qg, og))

@@ -357,6 +357,10 @@ def _bbox_cls_kernel_planar(s: pd.Series) -> pd.DataFrame:
             "join; use operators.geography_join.geography_dwithin_join or "
             "the per-row ST_* kernels (spark.sql), which dispatch "
             "spherically")
+    return _bbox_cls_kernel(s)
+
+
+def _bbox_cls_kernel(s: pd.Series) -> pd.DataFrame:
     pts = _fast_points(s)
     if pts is not None:
         import numpy as np
@@ -397,12 +401,13 @@ def _bbox_cls_shadow_expr(xy: tuple) -> Column:
         f"'xmax', {x}, 'ymax', {y}, 'cls', CAST(1 AS TINYINT)) END")
 
 
-_bbox_cls_udf = None
+_bbox_cls_udfs: dict = {}
 
 
-def _bbox_cls_col(geom: Column) -> Column:
-    global _bbox_cls_udf
-    if _bbox_cls_udf is None:
+def _bbox_cls_col(geom: Column, planar_only: bool = True) -> Column:
+    """Classed bbox struct; ``planar_only`` as in :func:`bbox_col` (the
+    lon/lat consumers pass False)."""
+    if planar_only not in _bbox_cls_udfs:
         # asNondeterministic: the downstream cell explode carries an
         # inferred isnotnull(box.*) filter that the optimizer pushes
         # BELOW this projection, re-evaluating the kernel once for the
@@ -415,9 +420,10 @@ def _bbox_cls_col(geom: Column) -> Column:
         # (AnalysisException for nondeterministic expressions), and
         # user filters over it lose legitimate pushdown.  Project it
         # into a named column first, as every current call site does.
-        _bbox_cls_udf = F.pandas_udf(_bbox_cls_kernel_planar,
-                                     returnType=_BBOXC_T).asNondeterministic()
-    return _bbox_cls_udf(geom)
+        _bbox_cls_udfs[planar_only] = F.pandas_udf(
+            _bbox_cls_kernel_planar if planar_only else _bbox_cls_kernel,
+            returnType=_BBOXC_T).asNondeterministic()
+    return _bbox_cls_udfs[planar_only](geom)
 
 
 _bbox_udf = None

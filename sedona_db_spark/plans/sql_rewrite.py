@@ -1110,9 +1110,28 @@ def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
     # ahead of the original WHERE in parentheses; the view's `alias.col` /
     # `alias.*` tokens map onto its columns, and an unaliased select-list
     # reference to a renamed column gets AS back to its own name, so the
-    # output schema matches vanilla planning
+    # output schema matches vanilla planning.  A bare `*` select item is
+    # spelled as every visible relation's `alias.*`, in FROM order.
     view = f"`{vname}`."
     sel = mine[0]
+
+    def star(a, in_select):
+        if a not in pair:
+            return f"`{a}`.*"
+        cols = [(c, c) for c in lcols] if a == a1 else list(rmap.items())
+        return " , ".join(
+            f"{view}`{v}`" + (f" AS `{c}`" if in_select and v != c else "")
+            for c, v in cols)
+
+    # an ST_KNN view also carries knn_distance (vanilla cannot plan the
+    # join, so its `SELECT *` keeps the view's columns): after the pair
+    visible = [r.alias for r in m.rels if r.alias not in pair
+               or r.alias in shown]
+    stars = [star(a, True) for a in visible]
+    if spatial.kind == "knn":
+        last = max(i for i, a in enumerate(visible) if a in pair)
+        stars[last] += f" , {view}`knn_distance`"
+    bare_star = " , ".join(stars)
     out = []
     k, n, close_at = 0, len(toks), None
     while k < n:
@@ -1139,15 +1158,17 @@ def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
             out.append("TRUE")
             k = true_at[k]
             continue
+        if (toks[k] == "*" and sel < k < m.from_idx and depths[k] == d
+                and toks[k - 1].upper() in ("SELECT", "DISTINCT", "ALL", ",")
+                and (k + 1 == m.from_idx or toks[k + 1] == ",")):
+            out.append(bare_star)
+            k += 1
+            continue
         if k in view_refs:
             a = _unquote(toks[k])
             in_select = sel < k < m.from_idx and depths[k] == d
             if toks[k + 2] == "*":
-                cols = [(c, c) for c in lcols] if a == a1 \
-                    else list(rmap.items())
-                out.append(" , ".join(
-                    f"{view}`{v}`" + (f" AS `{c}`" if in_select and v != c
-                                      else "") for c, v in cols))
+                out.append(star(a, in_select))
             else:
                 col = _unquote(toks[k + 2])
                 v = out_name(a, col)
@@ -1491,7 +1512,8 @@ def _build_join(spark, m, spatial, ldf, rdf_r, g1, g2,
             "false")).lower() == "true"
         out = knn_join(ldf, rdf_r, int(k), query_geom=g1, object_geom=g2,
                        use_spheroid=bool(use_spheroid), include_ties=ties)
-        # the SQL surface exposes both sides' columns (+ knn_distance)
+        # the SQL surface exposes both sides' columns (+ knn_distance,
+        # which a bare `SELECT *` keeps)
         return out
     if spatial.kind == "dwithin":
         dist = spatial.extra[0]

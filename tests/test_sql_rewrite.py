@@ -1792,17 +1792,40 @@ _NAMES_B = "(SELECT n_nationkey AS id, geom FROM nation_boxes) b"
 
 @pytest.mark.parametrize("kw", ["JOIN", "LEFT JOIN"])
 def test_collision_renamed_select_refs_keep_vanilla_names(spark, kw):
-    """``SELECT a.id, b.id`` over a collision-renamed view answers with
-    vanilla's output names (``['id', 'id']``), not the view's."""
+    """``SELECT a.id, b.id`` and a bare ``SELECT *`` over a
+    collision-renamed view answer with vanilla's output names
+    (``['id', 'id']``, ``['id', 'geom', 'id', 'geom']``), not the
+    view's."""
     _prep(spark)
-    q = (f"SELECT a.id, b.id FROM {_NAMES_A} {kw} {_NAMES_B} "
-         "ON ST_Within(a.geom, b.geom)")
-    df = spark.sql(q)
+    for select, names in (("a.id, b.id", ["id", "id"]),
+                          ("*", ["id", "geom", "id", "geom"])):
+        q = (f"SELECT {select} FROM {_NAMES_A} {kw} {_NAMES_B} "
+             "ON ST_Within(a.geom, b.geom)")
+        df = spark.sql(q)
+        assert getattr(df, "_sedona_rewritten_sql", None) is not None
+        assert df.columns == _vanilla(spark, q).columns == names
+        if kw == "JOIN":
+            assert sorted(tuple(r) for r in df.collect()) == \
+                sorted(tuple(r) for r in _vanilla(spark, q).collect())
+
+
+def test_bare_star_over_knn_join_keeps_knn_distance(spark):
+    """A bare ``SELECT *`` over an ``ST_KNN`` join answers with both
+    sides' columns under their own names, then ``knn_distance``."""
+    _prep(spark)
+    df = spark.sql("""
+      SELECT * FROM (SELECT c_custkey, geom FROM cust_pts
+                     WHERE c_custkey < 40) c
+      JOIN (SELECT n_nationkey, ST_Point(CAST(n_nationkey AS DOUBLE),
+                                         0.0) AS geom FROM nation) n
+      ON ST_KNN(c.geom, n.geom, 2, false)""")
     assert getattr(df, "_sedona_rewritten_sql", None) is not None
-    assert df.columns == _vanilla(spark, q).columns == ["id", "id"]
-    if kw == "JOIN":
-        assert sorted(tuple(r) for r in df.collect()) == \
-            sorted(tuple(r) for r in _vanilla(spark, q).collect())
+    assert df.columns == ["c_custkey", "geom", "n_nationkey", "geom",
+                          "knn_distance"]
+    rows = df.collect()
+    n_q = spark.table("cust_pts").filter("c_custkey < 40").count()
+    assert len(rows) == 2 * n_q > 0
+    assert all(r[4] is not None and r[4] >= 0 for r in rows)
 
 
 def test_typed_numeric_literals_route(spark):

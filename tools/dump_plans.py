@@ -12,9 +12,11 @@ decisions.
 
 The dump is normalized so that two runs of the same code are
 byte-identical and plan identity is a plain ``diff -r``: expression ids
-(``#N``), ``plan_id=N`` and ``MapPartitionsRDD[N]`` counters, and the
-checkout's own path (tables written under it print their location) are
-replaced by fixed placeholders.
+(``#N``), ``plan_id=N`` and ``MapPartitionsRDD[N]`` counters, the
+process-wide counter in higher-order-function lambda variables
+(``lambda x_11`` -> ``lambda x_N``; it counts every lambda built
+earlier in the process), and the checkout's own path (tables written
+under it print their location) are replaced by fixed placeholders.
 """
 
 from __future__ import annotations
@@ -31,6 +33,7 @@ _RUN_COUNTERS = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"MapPartitionsRDD\[\d+\]"), "MapPartitionsRDD[N]"),
+    (re.compile(r"(lambda \w+?)_\d+\b"), r"\1_N"),
 ]
 
 
