@@ -216,11 +216,13 @@ def k_pointz(xs, ys, zs) -> pd.Series:
 
 
 def k_makeenvelope(x0, y0, x1, y1) -> pd.Series:
+    # a NULL double arrives as NaN, so NaN corners give NULL like
+    # k_point's (a NaN-cornered polygon is neither NULL nor a box)
     n = len(x0)
     out = []
     for i in range(n):
         a, b, c, d = x0.iloc[i], y0.iloc[i], x1.iloc[i], y1.iloc[i]
-        if any(v is None for v in (a, b, c, d)):
+        if any(v is None or v != v for v in (a, b, c, d)):
             out.append(None)
         else:
             out.append(core.to_wkb(alg.box_polygon(float(a), float(b), float(c), float(d))))

@@ -474,8 +474,18 @@ def _probe_extent_deg(df: DataFrame, col: str, n: int = 64) -> list[float]:
     and cos-adjusted lon span) of the first n rows — sets the grid
     scale only, never correctness.  Memoized on the analyzed-plan
     semantic hash like the skew histogram (r11): repeated builds of the
-    same join shape were paying one Spark job per side per build."""
+    same join shape were paying one Spark job per side per build.
+
+    A side the plan proves all-point (spatial_join.plan_geom_facts)
+    reads nothing: every off-pole point's extent is 0, so the empty
+    list gives the grid the probe would.  The one exception is a point
+    at a pole among the first n rows: it covers its whole polar row,
+    which the probe reads as 360 * cos(89 deg) = 6.28 deg, so the probe
+    would have chosen a coarser grid."""
     from sedona_db_spark.geom import core
+    from sedona_db_spark.operators.spatial_join import plan_geom_facts
+    if plan_geom_facts(df, col)[1]:
+        return []
     memo, remember = stats_memo("geoext", df, col, n)
     if memo is not None:
         return list(memo)

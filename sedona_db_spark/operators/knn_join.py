@@ -821,7 +821,8 @@ def _knn_two_round(queries: DataFrame, objects: DataFrame, k: int,
     A row without a centre (NULL or EMPTY geometry) gets no cell on
     either side, so it neither finds nor is found."""
     from sedona_db_spark.operators.spatial_join import (_bbox_cls_col,
-                                                        _bq, bbox_col)
+                                                        _bq, bbox_col,
+                                                        plan_geom_facts)
     from sedona_db_spark.plans.width import widen_if_starved
 
     # disambiguate object columns in one selectExpr round trip
@@ -887,14 +888,17 @@ def _knn_two_round(queries: DataFrame, objects: DataFrame, k: int,
         return queries.sparkSession.createDataFrame([], T.StructType(
             queries.schema.fields + obj.schema.fields
             + [T.StructField("knn_distance", T.DoubleType())]))
-    # a LIMIT probe, not a full agg over a possibly huge query side: it
+    # a query side the plan proves all-point starts no job; otherwise a
+    # LIMIT probe, not a full agg over a possibly huge query side: it
     # decides the plan, the grid's per-row guards keep correctness
-    qry_nonpoint, remember = stats_memo("knnq", queries, query_geom)
-    if qry_nonpoint is None:
-        qry_nonpoint = any(
-            r[0] is not None and r[0] != 21 for r in
-            queries.select(F.length(query_geom)).limit(4096).collect())
-        remember(qry_nonpoint)
+    qry_nonpoint = False
+    if not plan_geom_facts(queries, query_geom)[1]:
+        qry_nonpoint, remember = stats_memo("knnq", queries, query_geom)
+        if qry_nonpoint is None:
+            qry_nonpoint = any(
+                r[0] is not None and r[0] != 21 for r in
+                queries.select(F.length(query_geom)).limit(4096).collect())
+            remember(qry_nonpoint)
     grid = make_grid(dict(stats, qry_nonpoint=qry_nonpoint),
                      _bq(query_geom), _bq(ogeom))
 

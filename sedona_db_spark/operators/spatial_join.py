@@ -544,51 +544,80 @@ def _wkb_point2d(g: Column) -> Column:
     return (head == F.lit(_WKB_PT2D_LE)) | (head == F.lit(_WKB_PT2D_BE))
 
 
-def _point_constructor_certified(df: DataFrame, geom_col: str) -> bool:
-    """Plan-time all-point certificate: True iff ``geom_col`` in df's
-    analyzed plan is directly the aliased output of the 2-argument
-    ``ST_Point`` constructor — a simple 2D point BY CONSTRUCTION for
-    every row (null inputs yield null geometry, which the bbox join
-    condition drops, matching the exact kernel's verdict).  With the
-    certificate the straggler branch is provably empty and is not built
-    at all, restoring the pure whole-stage-codegen plan.  Conservative:
-    any parse doubt returns False and the per-row WKB-header split
-    handles correctness instead.
+# What the analyzed plan can prove about a geometry column, without
+# reading a row: ``(edges, all_points)`` — edges "planar" (untagged
+# WKB), "geog" (geography-tagged WKB) or None (nothing proven), and
+# whether every non-null value is a simple 2-D point.
+PLANAR_POINTS = ("planar", True)
+UNPROVEN = (None, False)
 
-    Memoized on the analyzed-plan semantic hash: the verdict derives
-    from the PLAN's alias structure alone (never from data), so a memo
-    hit under changed data is still exact — the constructor runs per
-    row whatever the rows are."""
-    memo, remember = stats_memo("ptcert", df, geom_col)
+# Constructors whose output type is fixed by the kernel: SQL name ->
+# (registry arg spec the proof assumes, facts of every value).  NULL and
+# NaN inputs give NULL geometry, which proves nothing either way.
+# ST_MakeEnvelope proves untagged only: degenerate corners (x0 = x1)
+# still return a polygon that is not a rectangle.
+_CONSTRUCTOR_FACTS = {
+    "ST_Point": ("dd", PLANAR_POINTS),
+    "ST_MakeEnvelope": ("dddd", ("planar", False)),
+    "ST_GeogPoint": ("dd", ("geog", True)),
+}
+
+_CERT_FACTS = (("planar", PLANAR_POINTS), ("geog", ("geog", True)))
+
+
+def plan_geom_facts(df: DataFrame, geom_col: str) -> tuple:
+    """``(edges, all_points)`` that df's analyzed plan proves about
+    ``geom_col`` (see PLANAR_POINTS / UNPROVEN), from the alias chain
+    that produces the column:
+
+    - a hop that is a view column holding a live view certificate
+      (certify_point_view: planar points; certify_geog_point_view:
+      geography points), or
+    - the constructor the chain ends at (_CONSTRUCTOR_FACTS), gated on
+      its registry signature.
+
+    Any parse doubt answers UNPROVEN, and callers then read data or take
+    the general path.  Memoized on the plan key plus the certificate
+    registry's state: the verdict derives from the plan and the
+    registry, never from rows."""
+    from sedona_db_spark.plans.sql_rewrite import _view_certs
+    spark = df.sparkSession
+    stamp = tuple(sorted((k, fp) for k, (_s, fp) in
+                         _view_certs(spark).items()))
+    memo, remember = stats_memo("geomfacts", df, geom_col, stamp)
     if memo is not None:
         return memo
-    res = _point_constructor_certified_impl(df, geom_col)
+    res = _plan_geom_facts_impl(spark, df, geom_col)
     remember(res)
     return res
 
 
-def _st_point_registered_2d() -> bool:
-    """The certificate's premise: the SQL name ``ST_Point`` resolves to
-    the 2-argument (lon, lat) -> BINARY kernel.  Registering any other
-    overload under that name (e.g. a 3-arg Z point) would mis-certify
-    plans that print ``ST_Point(...)`` — assert the registry signature
-    at certificate time instead of assuming it (r10 advisor)."""
+def _constructor_facts(name: str):
+    """The facts of constructor ``name`` when the SQL name resolves to
+    the kernel signature they assume, else None.  Registering another
+    overload under the name (e.g. a 3-arg Z point) would mis-certify
+    plans that print ``ST_Point(...)`` — so assert the registry
+    signature at proof time instead of assuming it."""
+    spec_facts = _CONSTRUCTOR_FACTS.get(name)
+    if spec_facts is None:
+        return None
     try:
         from sedona_db_spark.functions.kernels import BIN, KERNELS
-        ent = KERNELS.get("ST_Point")
-        return ent is not None and ent[2] == "dd" and ent[1] is BIN
+        ent = KERNELS.get(name)
+        ok = ent is not None and ent[2] == spec_facts[0] and ent[1] is BIN
     except Exception:
-        return False
+        return None
+    return spec_facts[1] if ok else None
 
 
-def _point_constructor_certified_impl(df: DataFrame, geom_col: str) -> bool:
+def _plan_geom_facts_impl(spark, df: DataFrame, geom_col: str) -> tuple:
     # Plan-string format assumption (pinned): Spark's analyzed-plan
     # toString prints a pandas-UDF projection as "ST_Point(<args>)#NNN
-    # AS geom#EID" with the full alias chain visible.  Truncation confs
+    # AS geom#EID" with the full alias chain visible, and a view as
+    # "View (`name`, [col#EID, ...])".  Truncation confs
     # (spark.sql.debug.maxToStringFields / maxPlanStringLength) can only
-    # HIDE that text, which fails closed into the per-row WKB split.
-    if not _st_point_registered_2d():
-        return False
+    # HIDE that text, which fails closed into UNPROVEN.
+    from sedona_db_spark.plans.sql_rewrite import _view_shadow
     try:
         qe = df._jdf.queryExecution().analyzed()
         out = qe.output()
@@ -597,20 +626,30 @@ def _point_constructor_certified_impl(df: DataFrame, geom_col: str) -> bool:
             a = out.apply(i)
             if a.name() == geom_col:
                 if eid is not None:          # ambiguous column name
-                    return False
+                    return UNPROVEN
                 eid = a.exprId().id()
         if eid is None:
-            return False
+            return UNPROVEN
         s = qe.toString()
     except Exception:
-        return False
+        return UNPROVEN
     import re
     # Union (and CTE refs) REUSE the first child's exprIds for their
     # output, so an alias found below one could certify rows that
-    # actually come from another branch — decline those plans outright
-    # (conservative: the per-row WKB-header split still applies).
+    # actually come from another branch — decline those plans outright.
     if re.search(r"\bUnion\b|\bCTERelationRef\b", s):
-        return False
+        return UNPROVEN
+    views = [(m.group(1).replace("``", "`"), m.group(2)) for m in
+             re.finditer(r"View \(`((?:[^`]|``)+)`, \[([^\]]*)\]", s)]
+
+    def cert_facts(name, cur):
+        attr = re.compile(r"(?<![\w#])%s#%d\b" % (re.escape(name), cur))
+        for view, cols in views:
+            if attr.search(cols):
+                for kind, facts in _CERT_FACTS:
+                    if _view_shadow(spark, view, name, kind):
+                        return facts
+        return None
 
     def match_open(i):
         # index of the '(' balancing the ')' at i, or None
@@ -639,6 +678,9 @@ def _point_constructor_certified_impl(df: DataFrame, geom_col: str) -> bool:
     seen = set()
     while (name, cur) not in seen and len(seen) < 8:
         seen.add((name, cur))
+        facts = cert_facts(name, cur) if views else None
+        if facts is not None:
+            return facts
         nxt = None
         for m in re.finditer(r" AS %s#%d\b" % (re.escape(name), cur), s):
             i = m.start() - 1
@@ -663,17 +705,19 @@ def _point_constructor_certified_impl(df: DataFrame, geom_col: str) -> bool:
                 e = j - 1
                 if e >= 0 and s[e] == ")":       # fn(<args>)#NNN
                     k = match_open(e)
-                    if k is not None and ident_ending_at(k - 1) == "ST_Point":
-                        return True
+                    facts = None if k is None else \
+                        _constructor_facts(ident_ending_at(k - 1))
+                    if facts is not None:
+                        return facts
                     continue
                 attr = ident_ending_at(e)        # bare attr#A AS name#B
                 if attr:
                     nxt = (attr, int(s[j + 1:i + 1]))
                     break
         if nxt is None:
-            return False
+            return UNPROVEN
         name, cur = nxt
-    return False
+    return UNPROVEN
 
 
 def _rect_fast_refine(cand: DataFrame, left: DataFrame, left_geom: str,
@@ -699,7 +743,8 @@ def _rect_fast_refine(cand: DataFrame, left: DataFrame, left_geom: str,
     # fails LOUD with the escape hatch named.
     certified = False
     if predicate in ("within", "intersects"):
-        certified = l_cert or _point_constructor_certified(left, left_geom)
+        certified = l_cert or \
+            plan_geom_facts(left, left_geom) == PLANAR_POINTS
     if predicate in ("within", "intersects") and not certified:
         l_ok, remember = stats_memo("rectfast_l", left, left_geom)
         if l_ok is None:
@@ -1276,8 +1321,8 @@ def _dwithin_fast_refine(cand: DataFrame, left: DataFrame, left_geom: str,
     Uncertified inputs keep the vectorized kernel refine."""
     if distance is None:
         return None
-    if not ((l_cert or _point_constructor_certified(left, left_geom))
-            and (r_cert or _point_constructor_certified(rb, rgeom))):
+    if not ((l_cert or plan_geom_facts(left, left_geom) == PLANAR_POINTS)
+            and (r_cert or plan_geom_facts(rb, rgeom) == PLANAR_POINTS)):
         return None
     # (d + 1e-12)^2: the unified alg.dwithin boundary convention.
     # One F.expr string (round 12) — the Column form cost ~14 RPCs.

@@ -11,14 +11,18 @@ These are how we *enforce* the 100 TB design rules mechanically in tests:
 - `shuffle_count` bounds the number of Exchanges an operator may emit;
 - `join_strategies` asserts broadcast vs shuffle choice (the reference's
   build-side swap, physical_planner.rs:69-90, maps to Spark's own
-  size-based selection — these helpers make it observable).
+  size-based selection — these helpers make it observable);
+- `jobs_started` names the Spark jobs a block of driver code started
+  (plan-time probes, stats aggs) by their call sites.
 """
 
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession
 
 
 def executed_plan(df: DataFrame) -> str:
@@ -98,3 +102,39 @@ def assert_scales(df: DataFrame, max_shuffles: int | None = None,
         pf = pushed_filters(df)
         assert any(require_pushed_filter in f for f in pf), \
             f"no pushed filter matching {require_pushed_filter!r} in {pf}"
+
+
+@contextmanager
+def jobs_started(spark: SparkSession):
+    """Context manager yielding a list that, when the block exits, holds
+    ``(job_id, name)`` for every Spark job started inside the block, in
+    id order.  ``name`` is the job's status-store name, which carries
+    its call site, e.g. ``collect at .../knn_join.py:896``.
+
+    Waits for the listener bus to drain first, so a job that finished
+    just before the block ended is counted.  Jobs run under a job group
+    are not seen (statusTracker's ungrouped ids)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jsc = sc._jsc.sc()
+
+    def drain():
+        try:
+            jsc.listenerBus().waitUntilEmpty()
+        except Py4JError:   # not reachable on this Spark: count as is
+            pass
+
+    drain()
+    before = set(tracker.getJobIdsForGroup())
+    started: list[tuple[int, str]] = []
+    try:
+        yield started
+    finally:
+        drain()
+        store = jsc.statusStore()
+        for jid in sorted(set(tracker.getJobIdsForGroup()) - before):
+            try:
+                name = str(store.job(jid).name())
+            except Py4JError:   # no longer in the status store
+                name = ""
+            started.append((jid, name))

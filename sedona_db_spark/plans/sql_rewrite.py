@@ -52,7 +52,8 @@ from collections import namedtuple
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-from sedona_db_spark.operators.result_cache import BoundedMemo, plan_key
+from sedona_db_spark.operators.result_cache import (BoundedMemo, plan_key,
+                                                    stats_memo)
 
 # ----------------------------------------------------------------------
 # tokenizer
@@ -1186,16 +1187,44 @@ def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
     return _run_over_view(joined, vname, out, vanilla_sql)
 
 
-def _probe_geography(df, col, n=64):
-    """(tagged_count, probed_count) over the first n non-null geometries.
-    The engine's geography values carry their edge tag in the VALUE
-    (same-name dispatch), so plan-time routing can only probe — the
-    planar operator's bbox stage re-checks every row and fails loud if
-    tagged values hide past the probe depth."""
+def _probe_geometry(df, col, n=64) -> tuple:
+    """(tagged, probed, all_points) over the first n non-null values of
+    a geometry column the plan proves nothing about (see
+    _side_facts): how many carry the geography edge tag, how many
+    were read, and whether all are 2-D points (point WKB, tagged or
+    not, is exactly 21 bytes).  The engine's geography values carry
+    their edge tag in the VALUE (same-name dispatch), so such a column
+    can only be read.  One job per plan, memoized on the plan key: the
+    verdict picks the route only — the planar operator's bbox stage,
+    the geography point extraction and the cover kernel each re-check
+    every row and fail loud on a value of the other kind."""
     from sedona_db_spark.operators.spatial_join import _wkb_is_geography
+    memo, remember = stats_memo("geomscan", df, col, n)
+    if memo is not None:
+        return memo
     vals = [r[0] for r in df.select(col).limit(n).collect()
             if r[0] is not None]
-    return sum(1 for v in vals if _wkb_is_geography(v)), len(vals)
+    res = (sum(1 for v in vals if _wkb_is_geography(v)), len(vals),
+           all(len(v) == 21 for v in vals))
+    remember(res)
+    return res
+
+
+def _side_facts(df, col) -> tuple:
+    """(edges, all_points) of one join side's geometry: what the plan
+    proves (spatial_join.plan_geom_facts), else what one memoized scan
+    reads — edges "geog" or "planar" when every read value is of that
+    kind, "mixed" when both occur, None when no non-null value was
+    read."""
+    from sedona_db_spark.operators.spatial_join import plan_geom_facts
+    edges, points = plan_geom_facts(df, col)
+    if edges is not None:
+        return edges, points
+    tagged, probed, points = _probe_geometry(df, col)
+    if not probed:
+        return None, points
+    return ("geog" if tagged == probed else "planar" if not tagged
+            else "mixed"), points
 
 
 def _plan_conf_fingerprint(spark) -> str:
@@ -1208,16 +1237,6 @@ def _plan_conf_fingerprint(spark) -> str:
             "false")).lower()
     except Exception:
         return "|ties=false"
-
-
-def _probe_geog_points(df, col, n=64) -> bool:
-    """True when the first n non-null geography values are 2-D points
-    (tagged point WKB is exactly 21 bytes).  Plan choice only: the
-    point route's extraction kernel re-checks every row and fails loud
-    if a non-point hides past the probe."""
-    vals = [r[0] for r in df.select(col).limit(n).collect()
-            if r[0] is not None]
-    return all(len(v) == 21 for v in vals)
 
 
 def _lattice(ldf, rdf_r, how, inner_fn, l_exclude: tuple = (),
@@ -1404,12 +1423,13 @@ def _build_join(spark, m, spatial, ldf, rdf_r, g1, g2,
     the planar operator so the certified side's bbox pruning column is
     pure codegen (see spatial_join left_xy/right_xy)."""
     from sedona_db_spark.operators.knn_join import knn_join
-    from sedona_db_spark.operators.spatial_join import spatial_join
+    from sedona_db_spark.operators.spatial_join import (PLANAR_POINTS,
+                                                        spatial_join)
 
     # raster-vs-geometry join (reference eligibility,
     # spatial_predicate.rs:203-205): materialize the footprint polygon
     # on the raster side and join it as ordinary geometry — placed
-    # BEFORE the geography probe (raster columns are structs, never
+    # BEFORE the geography routing (raster columns are structs, never
     # geography-tagged WKB).
     if spatial.raster0:
         from pyspark.sql import functions as F
@@ -1429,11 +1449,12 @@ def _build_join(spark, m, spatial, ldf, rdf_r, g1, g2,
         return out.drop(fp)
 
     # geography values (in-band edge tags) make the planar operators
-    # numerically wrong: probe and route.  Uniformly tagged sides get
-    # native geography joins — across the whole join-type lattice via
-    # the same inner-core + row-id bookkeeping the planar operator uses
-    # (vanilla cannot plan ANY outer/semi/anti over a UDF predicate, so
-    # declining would be an error, not a fallback):
+    # numerically wrong, so each side's edges pick the route.  Uniformly
+    # tagged sides get native geography joins — across the whole
+    # join-type lattice via the same inner-core + row-id bookkeeping
+    # the planar operator uses (vanilla cannot plan ANY outer/semi/anti
+    # over a UDF predicate, so declining would be an error, not a
+    # fallback):
     #   - all-point ST_DWithin: tight modular-cell great-circle join
     #   - any other dwithin shape: spherical cell-cover join (r9)
     #   - relation predicates (ST_Intersects/Contains/...): spherical
@@ -1442,22 +1463,25 @@ def _build_join(spark, m, spatial, ldf, rdf_r, g1, g2,
     #     per-pair Python kernel (r8 verdict "What's wrong #1")
     # Mixed tagged/planar columns decline to vanilla, whose per-row
     # kernels dispatch per value.
-    # a shadow-certified column is plain LE point WKB by certificate
-    # (the header check bans the geography tag), so its probe job is
-    # skipped — (0 tagged, 1 probed) keeps the mixed-side decline logic
-    nt1, n1 = (0, 1) if sxy1 is not None else _probe_geography(ldf, g1)
-    nt2, n2 = (0, 1) if sxy2 is not None else _probe_geography(rdf_r, g2)
-    if nt1 or nt2:
-        if not (nt1 == n1 and nt2 == n2 and n1 and n2):
+    # A side's edges come, in order, from: its shadow certificate (plain
+    # LE point WKB: the header check bans the geography tag), the plan
+    # facts (a live view certificate, or the ST_Point / ST_MakeEnvelope
+    # / ST_GeogPoint constructor the column comes from), and only then
+    # one memoized 64-row scan (_side_facts) — a proven side starts no
+    # job, and the per-row guards of every route catch anything else.
+    e1, p1 = PLANAR_POINTS if sxy1 is not None else _side_facts(ldf, g1)
+    e2, p2 = PLANAR_POINTS if sxy2 is not None else _side_facts(rdf_r, g2)
+    if {e1, e2} & {"geog", "mixed"}:
+        if not e1 == e2 == "geog":
             raise _Decline
         from sedona_db_spark.operators.geography_join import (
             _RELATION_SQL, _geography_relation_inner)
         if spatial.kind == "dwithin" and spatial.dist_col is None \
                 and not spatial.keep_refine:
             dist = spatial.extra[0]
-            if _probe_geog_points(ldf, g1) and _probe_geog_points(rdf_r, g2):
+            if p1 and p2:
                 # all-point fast path (per-row kernel guard keeps it
-                # honest if a non-point hides past the probe)
+                # honest if a non-point hides past the scan)
                 if m.how == "inner":
                     return _build_geography_dwithin(spark, ldf, rdf_r,
                                                     g1, g2, dist)
@@ -1939,11 +1963,17 @@ def geog_shadow_xy_for_view(spark, view: str, col: str):
     return _view_shadow(spark, view, col, "geog")
 
 
+def _view_certs(spark) -> dict:
+    """The session's view-certificate registry: (view, kind) ->
+    (shadow map, the view's plan key when certified)."""
+    return getattr(spark, "_sedona_point_view_shadows", {})
+
+
 def _view_shadow(spark, table: str, col: str, kind: str = "planar"):
     """(x_col, y_col) for a view column holding a ``kind`` certificate
     (certify_point_view / certify_geog_point_view), if the view's plan
     key is unchanged; else None."""
-    reg = getattr(spark, "_sedona_point_view_shadows", {})
+    reg = _view_certs(spark)
     shadow, fp = reg.get((table, kind), ({}, None))   # fp is never None
     if col not in shadow:
         return None
@@ -2129,8 +2159,8 @@ def rewrite_certified_scalar(spark, sql: str, vanilla_sql) -> str | None:
     toks, spans = _tokenize_spans(sql)
     if toks is None:
         return None
-    from sedona_db_spark.operators.spatial_join import (
-        _point_constructor_certified)
+    from sedona_db_spark.operators.spatial_join import (PLANAR_POINTS,
+                                                        plan_geom_facts)
     from sedona_db_spark.plans.native_point import (
         point_x_sql, point_y_sql)
     n = len(toks)
@@ -2191,7 +2221,8 @@ def rewrite_certified_scalar(spark, sql: str, vanilla_sql) -> str | None:
             ok = col in _point_table_cols(spark, tbl)
             if not ok:
                 try:
-                    ok = _point_constructor_certified(dfs[alias], col)
+                    ok = plan_geom_facts(dfs[alias], col) \
+                        == PLANAR_POINTS
                 except Exception:
                     ok = False
             if ok:

@@ -71,6 +71,19 @@ def test_null_in_null_out(spark):
     assert row["a"] is None and row["d"] is None and row["x"] is None and row["i"] is None
 
 
+def test_constructors_null_and_nan_in_null_out(spark):
+    """A NULL double reaches the kernels as NaN, so the point and
+    envelope constructors answer NULL for both (an envelope used to
+    come back as a NaN-cornered polygon that joins disagreed on)."""
+    row = spark.sql("""
+      SELECT ST_MakeEnvelope(CAST(NULL AS DOUBLE), 0.0D, 1.0D, 1.0D) AS en,
+             ST_MakeEnvelope(0.0D, 0.0D, double('NaN'), 1.0D) AS ei,
+             ST_Point(double('NaN'), 1.0D) AS p,
+             ST_GeogPoint(CAST(NULL AS DOUBLE), 1.0D) AS g
+    """).first()
+    assert all(row[c] is None for c in ("en", "ei", "p", "g"))
+
+
 def test_buffer_and_hull(spark):
     v = one(spark, "ST_Area(ST_Buffer(ST_Point(0.0,0.0), 1.0))")
     assert abs(v - math.pi) / math.pi < 0.01  # 32-gon underestimates by ~0.64%

@@ -161,14 +161,38 @@ def test_knn_spheroid_partitioned_rebuild_starts_no_job(spark):
                      "qid")
     objects = _frame(spark, [(10, "POINT (1 0)"), (11, "POINT (9 9)")],
                      "oid")
+    from sedona_db_spark.plans.inspect import jobs_started
     result_cache.reset()
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup())
-    first = knn_join_spheroid_partitioned(queries, objects, 1)
-    assert set(tracker.getJobIdsForGroup()) > before
+    with jobs_started(spark) as jobs:
+        first = knn_join_spheroid_partitioned(queries, objects, 1)
+    assert jobs
     want = sorted(map(tuple, first.select("qid", "oid").collect()))
-    before = set(tracker.getJobIdsForGroup())
-    again = knn_join_spheroid_partitioned(queries, objects, 1)
-    assert set(tracker.getJobIdsForGroup()) == before
+    with jobs_started(spark) as jobs:
+        again = knn_join_spheroid_partitioned(queries, objects, 1)
+    assert jobs == []
     assert sorted(map(tuple, again.select("qid", "oid").collect())) \
         == want == [(1, 10), (2, 11)]
+
+
+def test_knn_point_query_side_starts_no_probe(spark):
+    """A partitioned KNN build whose query side comes from ST_Point
+    reads no query rows at construction: its only collect call site is
+    the object stats agg, where a WKT query side adds the query probe."""
+    from sedona_db_spark.operators import result_cache
+    from sedona_db_spark.plans.inspect import jobs_started
+    objects = _frame(spark, [(10, "POINT (1 0)"), (11, "POINT (9 9)")],
+                     "oid")
+    wkt = _frame(spark, [(1, "POINT (0 0)"), (2, "POINT (10 10)")], "qid")
+    pts = spark.createDataFrame([(1, 0.0, 0.0), (2, 10.0, 10.0)],
+                                "qid int, x double, y double") \
+        .selectExpr("qid", "ST_Point(x, y) AS geom")
+    sites = {}
+    for name, queries in (("wkt", wkt), ("point", pts)):
+        result_cache.reset()
+        with jobs_started(spark) as jobs:
+            out = knn_join_partitioned(queries, objects, 1)
+        sites[name] = {n for _, n in jobs
+                       if n.startswith("collect at ") and "knn_join.py" in n}
+        assert sorted(map(tuple, out.select("qid", "oid").collect())) \
+            == [(1, 10), (2, 11)]
+    assert len(sites["point"]) == 1 and sites["point"] < sites["wkt"]

@@ -585,7 +585,7 @@ def test_chain_distance_comparison_form(spark):
 def test_geography_dwithin_sql_join_routes_spherically(spark):
     """Geography-tagged columns through the SQL front door must NOT get
     the planar distance join (degree-space bboxes + planar refine are
-    numerically wrong for meters): the probe routes point dwithin to the
+    numerically wrong for meters): point dwithin routes to the
     native geography join, refined by the SAME dispatched kernel vanilla
     runs — results identical to vanilla."""
     _prep(spark)
@@ -1671,15 +1671,15 @@ def test_memo_hit_starts_no_job(spark):
     q = ("SELECT p.id, b.bid FROM rw_pts4 p JOIN rw_box4 b "
          "ON ST_DWithin(p.geom, b.geom, 0.5)")
     from sedona_db_spark.operators import result_cache
+    from sedona_db_spark.plans.inspect import jobs_started
     result_cache.reset()          # no stats memoized by earlier tests
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup())
-    first = spark.sql(q)
-    assert set(tracker.getJobIdsForGroup()) > before    # the miss probes
+    with jobs_started(spark) as jobs:
+        first = spark.sql(q)
+    assert jobs                                          # the miss probes
     want = _ids(first)
-    before = set(tracker.getJobIdsForGroup())
-    again = spark.sql(q)
-    assert set(tracker.getJobIdsForGroup()) == before
+    with jobs_started(spark) as jobs:
+        again = spark.sql(q)
+    assert jobs == []
     assert not hasattr(again, "_sedona_rewritten_sql")   # replayed text
     assert _ids(again) == want == _ids(_vanilla(spark, q))
 
@@ -2009,3 +2009,214 @@ def test_star_inside_a_relation_subquery_keeps_pruning(spark):
     cols = ["c_custkey", "n_nationkey", "n_name"]
     got = _rows(df, cols)
     assert got == _rows(_vanilla(spark, q), cols) and got
+
+
+# ----------------------------------------------------------------------
+# plan facts route the join without reading data: a side whose geometry
+# comes from ST_Point / ST_MakeEnvelope / ST_GeogPoint, or from a
+# certified view column, starts no plan-time probe job
+# ----------------------------------------------------------------------
+
+def _probe_jobs(jobs, module="sedona_db_spark"):
+    """Names of the jobs a plan-time LIMIT probe started: a ``collect``
+    issued from the engine's own code (a job's status-store name carries
+    its call site)."""
+    return [n for _, n in jobs
+            if n.startswith("collect at ") and module in n]
+
+
+def _facts_views(spark):
+    """Constructor views over ``range`` (no file listing jobs): points
+    with a NaN and a NULL constructor input, boxes, degenerate boxes
+    (zero width, NaN and NULL corners), and geography points."""
+    spark.sql("""CREATE OR REPLACE TEMP VIEW pf_pts AS
+                 SELECT id, ST_Point(CASE WHEN id = 40 THEN double('NaN')
+                                          WHEN id = 41 THEN NULL
+                                          ELSE CAST(id % 8 AS DOUBLE) + 0.5
+                                     END,
+                                     CAST(id DIV 8 AS DOUBLE) + 0.5) AS geom
+                 FROM range(42)""")
+    spark.sql("""CREATE OR REPLACE TEMP VIEW pf_boxes AS
+                 SELECT id AS bid, ST_MakeEnvelope(CAST(id AS DOUBLE) * 2.0,
+                        0.0D, CAST(id AS DOUBLE) * 2.0 + 2.0, 2.0D) AS geom
+                 FROM range(3)""")
+    spark.sql("""CREATE OR REPLACE TEMP VIEW pf_dboxes AS
+                 SELECT id AS bid, ST_MakeEnvelope(
+                        CASE WHEN id = 1 THEN double('NaN')
+                             WHEN id = 2 THEN NULL ELSE 0.0D END,
+                        0.0D, CASE WHEN id = 3 THEN 0.0D ELSE 3.0D END,
+                        3.0D) AS geom
+                 FROM range(4)""")
+    for v, (x, y) in (("pf_ga", ("CAST(id % 10 AS DOUBLE) * 3.0",
+                                 "CAST(id DIV 10 AS DOUBLE) * 3.0")),
+                      ("pf_gb", ("CAST(id % 7 AS DOUBLE) * 4.0 + 0.1",
+                                 "CAST(id DIV 7 AS DOUBLE) * 4.0"))):
+        spark.sql(f"""CREATE OR REPLACE TEMP VIEW {v} AS
+                      SELECT id, {x} AS lon, {y} AS lat,
+                             ST_GeogPoint({x}, {y}) AS g FROM range(30)""")
+    # NaN and NULL inputs on the uncertified side
+    spark.sql("""CREATE OR REPLACE TEMP VIEW pf_gn AS
+                 SELECT id, ST_GeogPoint(CASE WHEN id = 0 THEN double('NaN')
+                                              WHEN id = 1 THEN NULL
+                                              ELSE CAST(id AS DOUBLE) END,
+                                         1.0D) AS g
+                 FROM range(20)""")
+    from sedona_db_spark.plans.sql_rewrite import certify_geog_point_view
+    certify_geog_point_view(spark, "pf_ga", {"g": ("lon", "lat")})
+
+
+def _lattice_oracle(spark, lids_sql, inner_sql, how):
+    """``how``'s answer derived from vanilla's INNER pairs (vanilla
+    cannot plan outer/semi/anti joins over a Python UDF predicate)."""
+    lids = sorted(r[0] for r in _vanilla(spark, lids_sql).collect())
+    pairs = sorted(tuple(r) for r in _vanilla(spark, inner_sql).collect())
+    hit = {a for a, _ in pairs}
+    if how == "JOIN":
+        return pairs
+    if how == "LEFT JOIN":
+        return sorted(pairs + [(a, None) for a in lids if a not in hit],
+                      key=lambda t: (t[0], t[1] is None, t[1] or 0))
+    if how == "LEFT SEMI JOIN":
+        return [a for a in lids if a in hit]
+    return [a for a in lids if a not in hit]
+
+
+def _lattice_got(df, how):
+    if how in ("LEFT SEMI JOIN", "LEFT ANTI JOIN"):
+        return sorted(r[0] for r in df.collect())
+    got = [tuple(r) for r in df.collect()]
+    if how == "LEFT JOIN":
+        return sorted(got, key=lambda t: (t[0], t[1] is None, t[1] or 0))
+    return sorted(got)
+
+
+@pytest.mark.parametrize("how", ["JOIN", "LEFT JOIN", "LEFT SEMI JOIN",
+                                 "LEFT ANTI JOIN"])
+@pytest.mark.parametrize("boxes", ["pf_boxes", "pf_dboxes"])
+def test_constructor_sides_route_without_probe(spark, how, boxes):
+    """ST_Within over an ST_Point view and an ST_MakeEnvelope view
+    routes with no plan-time probe job at any join type, and answers
+    like vanilla — NaN/NULL constructor inputs and degenerate envelopes
+    (the rect fast path's build check is a data agg, not a proof)
+    included."""
+    from sedona_db_spark.operators import result_cache
+    from sedona_db_spark.plans.inspect import jobs_started
+    _facts_views(spark)
+    result_cache.reset()
+    sel = "p.id" if "SEMI" in how or "ANTI" in how else "p.id, b.bid"
+    q = (f"SELECT {sel} FROM pf_pts p {how} {boxes} b "
+         "ON ST_Within(p.geom, b.geom)")
+    with jobs_started(spark) as jobs:
+        df = spark.sql(q)
+    assert getattr(df, "_sedona_rewritten_sql", None) is not None
+    assert _probe_jobs(jobs) == [], jobs
+    want = _lattice_oracle(
+        spark, "SELECT id FROM pf_pts",
+        f"SELECT p.id, b.bid FROM pf_pts p JOIN {boxes} b "
+        "ON ST_Within(p.geom, b.geom)", how)
+    assert _lattice_got(df, how) == want
+    if boxes == "pf_boxes":
+        assert len(want) > 0
+
+
+@pytest.mark.parametrize("how", ["JOIN", "LEFT JOIN"])
+@pytest.mark.parametrize("right", ["pf_gb", "pf_gn"])
+def test_geog_point_sides_route_without_probe(spark, how, right):
+    """ST_DWithin over two ST_GeogPoint views, the left one certified
+    (certify_geog_point_view), takes the geography point route with no
+    plan-time job of the engine's own (it took four probes), and
+    answers like vanilla; NaN and NULL constructor inputs included."""
+    from sedona_db_spark.operators import result_cache
+    from sedona_db_spark.plans.inspect import jobs_started
+    _facts_views(spark)
+    result_cache.reset()
+    q = (f"SELECT a.id, b.id FROM pf_ga a {how} {right} b "
+         "ON ST_DWithin(a.g, b.g, 500000.0)")
+    with jobs_started(spark) as jobs:
+        df = spark.sql(q)
+    assert getattr(df, "_sedona_rewritten_sql", None) is not None
+    assert [n for _, n in jobs if "sedona_db_spark" in n] == [], jobs
+    want = _lattice_oracle(
+        spark, "SELECT id FROM pf_ga",
+        f"SELECT a.id, b.id FROM pf_ga a JOIN {right} b "
+        "ON ST_DWithin(a.g, b.g, 500000.0)", how)
+    assert _lattice_got(df, how) == want and len(want) > 0
+
+
+def test_geog_point_relation_join_reads_no_extent(spark):
+    """A geography relation join over two ST_GeogPoint sides sizes its
+    cell grid without the per-side extent probe (a point's extent is
+    0), so construction starts no job of the engine's own."""
+    from sedona_db_spark.operators import result_cache
+    from sedona_db_spark.plans.inspect import jobs_started
+    _facts_views(spark)
+    result_cache.reset()
+    q = ("SELECT a.id, b.id FROM pf_ga a JOIN pf_ga b "
+         "ON ST_Intersects(a.g, b.g)")
+    with jobs_started(spark) as jobs:
+        df = spark.sql(q)
+    assert getattr(df, "_sedona_rewritten_sql", None) is not None
+    assert [n for _, n in jobs if "sedona_db_spark" in n] == [], jobs
+    assert sorted(map(tuple, df.collect())) == [(i, i) for i in range(30)]
+
+
+@pytest.mark.parametrize("how", ["JOIN", "LEFT JOIN"])
+def test_all_null_geog_point_side_routes_geography(spark, how):
+    """An all-NULL ST_GeogPoint side is geography by proof (a scan read
+    nothing and took the planar route): the geography route answers
+    like vanilla."""
+    _facts_views(spark)
+    spark.sql("""CREATE OR REPLACE TEMP VIEW pf_gnull AS
+                 SELECT id, ST_GeogPoint(CAST(NULL AS DOUBLE), 1.0D) AS g
+                 FROM range(6)""")
+    for a, b in (("pf_gnull", "pf_gb"), ("pf_gb", "pf_gnull")):
+        q = (f"SELECT a.id, b.id FROM {a} a {how} {b} b "
+             "ON ST_DWithin(a.g, b.g, 500000.0)")
+        df = spark.sql(q)
+        assert getattr(df, "_sedona_rewritten_sql", None) is not None
+        want = _lattice_oracle(
+            spark, f"SELECT id FROM {a}",
+            f"SELECT a.id, b.id FROM {a} a JOIN {b} b "
+            "ON ST_DWithin(a.g, b.g, 500000.0)", how)
+        assert _lattice_got(df, how) == want
+
+
+def test_raw_wkb_side_still_probes(spark, tmp_path):
+    """A raw-WKB parquet column proves nothing, so its side is read —
+    by one memoized scan: a single probe call site, and the same text
+    again starts no job."""
+    from sedona_db_spark.operators import result_cache
+    from sedona_db_spark.plans.inspect import jobs_started
+    _facts_views(spark)
+    d = str(tmp_path / "wkb")
+    spark.sql("SELECT id, ST_AsBinary(geom) AS geom FROM pf_pts") \
+        .write.parquet(d)
+    spark.read.parquet(d).createOrReplaceTempView("pf_wkb")
+    result_cache.reset()
+    q = ("SELECT p.id, b.bid FROM pf_wkb p JOIN pf_boxes b "
+         "ON ST_Within(p.geom, b.geom)")
+    with jobs_started(spark) as jobs:
+        df = spark.sql(q)
+    assert getattr(df, "_sedona_rewritten_sql", None) is not None
+    sites = {n for n in _probe_jobs(jobs, "sql_rewrite.py")}
+    assert len(sites) == 1, jobs
+    assert sorted(map(tuple, df.collect())) == \
+        sorted(map(tuple, _vanilla(spark, q).collect()))
+    with jobs_started(spark) as jobs:
+        spark.sql(q)
+    assert jobs == []
+
+
+def test_mixed_tagged_planar_pair_declines(spark):
+    """An ST_Point side against an ST_GeogPoint side declines to
+    vanilla (mixed edges), and deciding so reads no data."""
+    from sedona_db_spark.operators import result_cache
+    from sedona_db_spark.plans.inspect import jobs_started
+    _facts_views(spark)
+    result_cache.reset()
+    q = ("SELECT p.id, g.id FROM pf_pts p JOIN pf_gb g "
+         "ON ST_DWithin(p.geom, g.g, 1.0)")
+    with jobs_started(spark) as jobs:
+        df = spark.sql(q)
+    assert getattr(df, "_sedona_rewritten_sql", None) is None
+    assert _probe_jobs(jobs) == [], jobs

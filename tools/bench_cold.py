@@ -14,6 +14,12 @@ tool reports both:
   stays warm in both — the decomposition isolates exactly the pool
   effect.
 
+Per query it also prints the Spark jobs the cold construction started
+(plan-time probes, stats aggs), each with its call site
+(``plans.inspect.jobs_started``): a plan-time LIMIT probe over a Python
+stage discards the worker that served it, so these jobs are what a cold
+first call pays before execution starts.
+
 Usage: python tools/bench_cold.py [sf_dir] name [name...]
 """
 
@@ -34,6 +40,7 @@ def main():
     import __spark_entry__ as entry
     from sedona_db_spark import get_spark
     from sedona_db_spark.operators import result_cache
+    from sedona_db_spark.plans.inspect import jobs_started
     spark = get_spark("bench_cold")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
@@ -48,11 +55,16 @@ def main():
                 if cold:
                     result_cache.reset()
                 t0 = time.time()
-                fn(spark, sf_dir).write.mode("overwrite") \
-                    .format("noop").save()
+                with jobs_started(spark) as jobs:
+                    df = fn(spark, sf_dir)
+                df.write.mode("overwrite").format("noop").save()
                 dt = time.time() - t0
                 best = dt if best is None else min(best, dt)
             print(f"{name} {label}: min-of-3 {best:6.3f}s")
+            if cold:
+                print(f"{name} cold construction jobs: {len(jobs)}")
+                for jid, site in jobs:
+                    print(f"  job {jid}: {site}")
     spark.stop()
 
 
