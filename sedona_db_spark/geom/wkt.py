@@ -187,7 +187,9 @@ def _parse_ring_list(tk, k, has_z, has_m):
 # ---------------------------------------------------------------------
 
 def _fmt_num(v: float) -> str:
-    if v == int(v) and abs(v) < 1e15:
+    # the magnitude test first: it is False for inf and NaN, which
+    # int() cannot take, and repr prints them as inf / -inf / nan
+    if abs(v) < 1e15 and v == int(v):
         return str(int(v))
     return repr(float(v))
 

@@ -27,10 +27,15 @@ from collections import OrderedDict, deque
 from pyspark.sql import DataFrame
 
 
-def plan_key(df: DataFrame):
+def plan_key(df: DataFrame, optimized: bool = False):
     """(semantic hash, size fingerprint) of the analyzed plan — stable
     across re-construction of the same logical query, different for
     different inputs; None when the plan cannot be reached.
+
+    ``optimized``: fingerprint the optimized plan instead, so frames
+    that differ only in what the optimizer removes (pruned columns,
+    re-aliasing projections) share a key, at the cost of one optimizer
+    run.
 
     The size fingerprint (Catalyst's analyzed-plan sizeInBytes, a
     driver-side metadata scalar — r11 verdict #2b / advisor) invalidates
@@ -44,13 +49,14 @@ def plan_key(df: DataFrame):
     100 TB); the stats scalar is one RPC."""
     try:
         qe = df._jdf.queryExecution()
-        h = qe.analyzed().semanticHash()
+        plan = qe.optimizedPlan() if optimized else qe.analyzed()
+        h = plan.semanticHash()
     except Exception:
         return None
     try:
-        # ANALYZED-plan stats: reflects the leaf file sizes (what the
-        # fingerprint needs) without running the optimizer per probe
-        sz = int(str(qe.analyzed().stats().sizeInBytes()))
+        # the plan's stats reflect the leaf file sizes (what the
+        # fingerprint needs); the analyzed plan's need no optimizer run
+        sz = int(str(plan.stats().sizeInBytes()))
     except Exception:
         sz = -1
     return (h, sz)
@@ -109,13 +115,14 @@ class BoundedMemo:
 _STATS = BoundedMemo(64)
 
 
-def stats_memo(kind: str, df: DataFrame, *extra):
+def stats_memo(kind: str, df: DataFrame, *extra, optimized: bool = False):
     """``(value, remember)`` for the plan fact ``kind`` about ``df``
     (further key parts in ``extra``): ``value`` is the memoized entry
     or None, ``remember(v)`` stores ``v`` under the same key.  Fails
     closed: when df's plan key is unavailable nothing is served and
-    ``remember`` stores nothing."""
-    pk = plan_key(df)
+    ``remember`` stores nothing.  ``optimized``: key on
+    ``plan_key(df, optimized=True)``."""
+    pk = plan_key(df, optimized)
     if pk is None:
         return None, lambda v: None
     key = (kind, pk) + extra

@@ -25,6 +25,8 @@ entirely, mirroring the reference's single-partition in-memory mode
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -611,113 +613,232 @@ def _constructor_facts(name: str):
 
 
 def _plan_geom_facts_impl(spark, df: DataFrame, geom_col: str) -> tuple:
-    # Plan-string format assumption (pinned): Spark's analyzed-plan
-    # toString prints a pandas-UDF projection as "ST_Point(<args>)#NNN
-    # AS geom#EID" with the full alias chain visible, and a view as
-    # "View (`name`, [col#EID, ...])".  Truncation confs
-    # (spark.sql.debug.maxToStringFields / maxPlanStringLength) can only
-    # HIDE that text, which fails closed into UNPROVEN.
     from sedona_db_spark.plans.sql_rewrite import _view_shadow
-    try:
-        qe = df._jdf.queryExecution().analyzed()
-        out = qe.output()
-        eid = None
-        for i in range(out.size()):
-            a = out.apply(i)
-            if a.name() == geom_col:
-                if eid is not None:          # ambiguous column name
-                    return UNPROVEN
-                eid = a.exprId().id()
-        if eid is None:
-            return UNPROVEN
-        s = qe.toString()
-    except Exception:
+    chains = _PlanChains.read(df, geom_col)
+    eid = chains.eids.get(geom_col) if chains is not None else None
+    if eid is None:
         return UNPROVEN
-    import re
-    # Union (and CTE refs) REUSE the first child's exprIds for their
-    # output, so an alias found below one could certify rows that
-    # actually come from another branch — decline those plans outright.
-    if re.search(r"\bUnion\b|\bCTERelationRef\b", s):
-        return UNPROVEN
-    views = [(m.group(1).replace("``", "`"), m.group(2)) for m in
-             re.finditer(r"View \(`((?:[^`]|``)+)`, \[([^\]]*)\]", s)]
 
     def cert_facts(name, cur):
-        attr = re.compile(r"(?<![\w#])%s#%d\b" % (re.escape(name), cur))
-        for view, cols in views:
-            if attr.search(cols):
-                for kind, facts in _CERT_FACTS:
-                    if _view_shadow(spark, view, name, kind):
-                        return facts
+        for view in chains.views_listing(name, cur):
+            for kind, facts in _CERT_FACTS:
+                if _view_shadow(spark, view, name, kind):
+                    return facts
         return None
+    return chains.geom_facts(geom_col, eid, cert_facts)[0]
 
-    def match_open(i):
+
+def constructor_shadow_edges(df: DataFrame, geom_col: str, x_col: str,
+                             y_col: str):
+    """The edges ("planar" / "geog") of the point constructor
+    (``ST_Point`` / ``ST_GeogPoint``, registry-gated) that df's analyzed
+    plan builds ``geom_col`` with, when its two arguments are exactly
+    the attributes df outputs as ``x_col`` and ``y_col``, in that order;
+    else None.  An argument and an output column match when both reach
+    the same attribute through bare re-aliases and DOUBLE-to-DOUBLE
+    casts (a SQL view's type coercion), so every row of ``geom_col`` is
+    that kernel applied to the row's own ``(x_col, y_col)``.  View
+    certificates are not consulted: this is the proof a certificate is
+    stamped from.  An expression or cast argument, swapped columns, a
+    Union or CTE, and any parse doubt answer None."""
+    cols = (geom_col, x_col, y_col)
+    chains = _PlanChains.read(df, *cols)
+    if chains is None:
+        return None
+    ids = [chains.eids.get(c) for c in cols]
+    if None in ids:
+        return None
+    (edges, points), args = chains.geom_facts(geom_col, ids[0])
+    if not points or args is None:
+        return None
+    want = (chains.source(x_col, ids[1]), chains.source(y_col, ids[2]))
+    return edges if chains.args(args) == want and None not in want \
+        else None
+
+
+class _PlanChains:
+    """Alias chains of one analyzed plan, read from its string.
+
+    Plan-string format assumption (pinned): Spark's analyzed-plan
+    toString prints a pandas-UDF projection as "ST_Point(<args>)#NNN
+    AS geom#EID" with the full alias chain visible, and a view as
+    "View (`name`, [col#EID, ...])".  Truncation confs
+    (spark.sql.debug.maxToStringFields / maxPlanStringLength) can only
+    HIDE that text, which fails closed."""
+
+    _ATTR = re.compile(r"\s*([A-Za-z_]\w*)#(\d+)\s*")
+
+    def __init__(self, plan, s: str, eids: dict):
+        self._plan = plan
+        self.s = s
+        self.eids = eids          # name -> exprId (None: ambiguous)
+        self.views = [(m.group(1).replace("``", "`"), m.group(2))
+                      for m in re.finditer(
+                          r"View \(`((?:[^`]|``)+)`, \[([^\]]*)\]", s)]
+        self._types = None
+
+    @classmethod
+    def read(cls, df: DataFrame, *cols: str):
+        """The chains of df's analyzed plan, with the exprIds of its
+        output columns ``cols``; None when the plan cannot be read, or
+        when it has a Union or a CTE reference: those REUSE the first
+        child's exprIds for their output, so an alias found below one
+        could vouch for rows that come from another branch."""
+        try:
+            plan = df._jdf.queryExecution().analyzed()
+            out = plan.output()
+            eids: dict = {}
+            for i in range(out.size()):
+                a = out.apply(i)
+                n = a.name()
+                if n in cols:
+                    eids[n] = None if n in eids else a.exprId().id()
+            s = plan.toString()
+        except Exception:
+            return None
+        if re.search(r"\bUnion\b|\bCTERelationRef\b", s):
+            return None
+        return cls(plan, s, eids)
+
+    def views_listing(self, name: str, cur: int) -> list:
+        """Views whose output lists attribute ``name#cur``."""
+        attr = re.compile(r"(?<![\w#])%s#%d\b" % (re.escape(name), cur))
+        return [v for v, cols in self.views if attr.search(cols)]
+
+    def _open(self, i: int):
         # index of the '(' balancing the ')' at i, or None
-        depth, j = 0, i
-        while j >= 0:
+        s, depth = self.s, 0
+        for j in range(i, -1, -1):
             if s[j] == ")":
                 depth += 1
             elif s[j] == "(":
                 depth -= 1
                 if depth == 0:
                     return j
-            j -= 1
         return None
 
-    def ident_ending_at(i):
-        k = i
+    def _ident(self, i: int):
+        """The identifier ending at i, when a list entry starts with it
+        (after "[" or ", "), else "": a unary operator in front ("-x",
+        "NOT cast(...)") makes the entry an expression of it."""
+        s, k = self.s, i
         while k >= 0 and (s[k].isalnum() or s[k] == "_"):
             k -= 1
+        if k < 0 or not (s[k] == "[" or s[k - 1:k + 1] == ", "):
+            return ""
         return s[k + 1:i + 1]
 
-    # Follow the Alias chain for (name, exprId): a pandas-UDF output
-    # prints "ST_Point(<args>)#NNN AS geom#EID"; view type-coercion adds
-    # "cast(geom#A as binary) AS geom#B" and bare re-alias "geom#A AS
-    # geom#B" layers on top.
-    name, cur = geom_col, eid
-    seen = set()
-    while (name, cur) not in seen and len(seen) < 8:
-        seen.add((name, cur))
-        facts = cert_facts(name, cur) if views else None
-        if facts is not None:
-            return facts
-        nxt = None
+    def defs(self, name: str, cur: int):
+        """The definitions of attribute ``name#cur`` the walks read:
+        ``("cast", (name, id), type)`` for "cast(name#id as type) AS",
+        ``("call", fn, args text)`` for "fn(<args>)#NNN AS" and
+        ``("attr", (name, id))`` for a bare "name#id AS"."""
+        s = self.s
         for m in re.finditer(r" AS %s#%d\b" % (re.escape(name), cur), s):
             i = m.start() - 1
             if i < 0:
                 continue
             if s[i] == ")":                      # cast(inner as type)
-                j = match_open(i)
-                if j is None or ident_ending_at(j - 1) != "cast":
+                j = self._open(i)
+                if j is None or self._ident(j - 1) != "cast":
                     continue
-                inner = re.match(r"\s*([A-Za-z_]\w*)#(\d+) as \w",
-                                 s[j + 1:i])
+                inner = re.fullmatch(r"([A-Za-z_]\w*)#(\d+) as (\w+)",
+                                     s[j + 1:i])
                 if inner:
-                    nxt = (inner.group(1), int(inner.group(2)))
-                    break
+                    yield ("cast", (inner.group(1), int(inner.group(2))),
+                           inner.group(3))
                 continue
-            if s[i].isdigit():                   # expr#NNN
-                j = i
-                while j >= 0 and s[j].isdigit():
-                    j -= 1
-                if j < 0 or s[j] != "#":
-                    continue
-                e = j - 1
-                if e >= 0 and s[e] == ")":       # fn(<args>)#NNN
-                    k = match_open(e)
-                    facts = None if k is None else \
-                        _constructor_facts(ident_ending_at(k - 1))
+            if not s[i].isdigit():
+                continue
+            j = i                                # expr#NNN
+            while j >= 0 and s[j].isdigit():
+                j -= 1
+            if j < 0 or s[j] != "#":
+                continue
+            e = j - 1
+            if e >= 0 and s[e] == ")":           # fn(<args>)#NNN
+                k = self._open(e)
+                if k is not None:
+                    yield ("call", self._ident(k - 1), s[k + 1:e])
+                continue
+            attr = self._ident(e)                # bare attr#A AS name#B
+            if attr:
+                yield ("attr", (attr, int(s[j + 1:i + 1])))
+
+    def geom_facts(self, name: str, cur: int, cert_facts=None) -> tuple:
+        """``(facts, args)`` for geometry attribute ``name#cur``: the
+        facts a hop's live view certificate (``cert_facts(name, id)``)
+        or the constructor the chain ends at proves, else UNPROVEN; and
+        the constructor's argument text (see args), else None.  Follows
+        bare re-aliases and casts to binary (a view's type coercion of a
+        WKB column)."""
+        seen = set()
+        while (name, cur) not in seen and len(seen) < 8:
+            seen.add((name, cur))
+            facts = cert_facts(name, cur) if cert_facts else None
+            if facts is not None:
+                return facts, None
+            nxt = None
+            for d in self.defs(name, cur):
+                if d[0] == "call":
+                    facts = _constructor_facts(d[1])
                     if facts is not None:
-                        return facts
-                    continue
-                attr = ident_ending_at(e)        # bare attr#A AS name#B
-                if attr:
-                    nxt = (attr, int(s[j + 1:i + 1]))
+                        return facts, d[2]
+                elif d[0] == "attr" or d[2] == "binary":
+                    nxt = d[1]
                     break
-        if nxt is None:
-            return UNPROVEN
-        name, cur = nxt
-    return UNPROVEN
+            if nxt is None:
+                return UNPROVEN, None
+            name, cur = nxt
+        return UNPROVEN, None
+
+    def args(self, text: str):
+        """The sources (see source) of a call's arguments, when every
+        one is a bare attribute, else None."""
+        # a piece of an argument that is an expression holds a paren, so
+        # all pieces matching a bare attribute means all arguments are
+        out = []
+        for part in text.split(","):
+            m = self._ATTR.fullmatch(part)
+            if m is None:
+                return None
+            out.append(self.source(m.group(1), int(m.group(2))))
+        return None if None in out else tuple(out)
+
+    def source(self, name: str, cur: int):
+        """The attribute that ``name#cur`` passes through unchanged:
+        follows bare re-aliases and casts whose input is already DOUBLE
+        (a SQL view's type coercion); any other definition ends the
+        chain at the attribute it defines.  None past 16 hops."""
+        for _ in range(16):
+            d = next(self.defs(name, cur), None)
+            if d is None or d[0] == "call" or d[0] == "cast" and not (
+                    d[2] == "double" and self._dtype(d[1][1]) == "double"):
+                return name, cur
+            name, cur = d[1]
+        return None
+
+    def _dtype(self, eid: int):
+        """The data type name of attribute ``#eid`` (from the plan's
+        JSON, read on first use), or None."""
+        if self._types is None:
+            import json
+            self._types = {}
+
+            def collect(o):
+                if isinstance(o, dict):
+                    if o.get("class", "").endswith(".AttributeReference"):
+                        self._types[o["exprId"]["id"]] = o.get("dataType")
+                    for v in o.values():
+                        collect(v)
+                elif isinstance(o, list):
+                    for v in o:
+                        collect(v)
+            try:
+                collect(json.loads(self._plan.toJSON()))
+            except Exception:
+                pass
+        return self._types.get(eid)
 
 
 def _rect_fast_refine(cand: DataFrame, left: DataFrame, left_geom: str,
@@ -762,7 +883,12 @@ def _rect_fast_refine(cand: DataFrame, left: DataFrame, left_geom: str,
             remember(l_ok)
         if not l_ok:
             return None
-    allrect, remember = stats_memo("rectfast_r", rb)
+    # keyed on the build geometry alone, optimized: the join modes add
+    # row ids to the build frame and the SQL rewrite prunes its other
+    # columns per join type, so the frame's own key differs per mode
+    # while the verdict, a fact about the geometry values, does not
+    allrect, remember = stats_memo("rectfast_r", rb.select(_bq(rgeom)),
+                                   optimized=True)
     if allrect is None:
         # exact build-side verdict: one agg pass, bounded by the caller
         # (broadcast-tiny rows, or the partitioned path's 64 MB stats gate)

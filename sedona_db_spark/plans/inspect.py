@@ -13,7 +13,9 @@ These are how we *enforce* the 100 TB design rules mechanically in tests:
   build-side swap, physical_planner.rs:69-90, maps to Spark's own
   size-based selection — these helpers make it observable);
 - `jobs_started` names the Spark jobs a block of driver code started
-  (plan-time probes, stats aggs) by their call sites.
+  (plan-time probes, stats aggs) by their call sites;
+- `certificates` lists the session's view point certificates, whether
+  each still holds and how it was proven.
 """
 
 from __future__ import annotations
@@ -138,3 +140,22 @@ def jobs_started(spark: SparkSession):
             except Py4JError:   # no longer in the status store
                 name = ""
             started.append((jid, name))
+
+
+def certificates(spark: SparkSession) -> list[dict]:
+    """One dict per view point certificate of the session
+    (certify_point_view / certify_geog_point_view), sorted by view and
+    kind: ``view``, ``kind`` ("planar" / "geog"), ``shadow`` (geometry
+    column -> (x_col, y_col)), ``live`` (the view's plan key is still
+    the one stamped, so the certificate is served) and ``proof``
+    ("constructor": read from the plan plus a native check of the
+    shadow doubles; "scan": every value decoded)."""
+    from sedona_db_spark.plans.sql_rewrite import (
+        _cert_live, _view_cert_proofs, _view_certs)
+    proofs = _view_cert_proofs(spark)
+    return [{"view": view, "kind": kind,
+             "shadow": {c: tuple(xy) for c, xy in shadow.items()},
+             "live": _cert_live(spark, view, fp),
+             "proof": proofs.get((view, kind))}
+            for (view, kind), (shadow, fp)
+            in sorted(_view_certs(spark).items())]

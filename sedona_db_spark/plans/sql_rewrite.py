@@ -1868,6 +1868,11 @@ def _point_cert_scan(spark, relation: str, cols, shadow, what: str,
     checks = _point_cert_checks(cols, shadow, kind)
     row = spark.sql(
         f"SELECT {', '.join(checks)} FROM {relation}").first()
+    _refuse_bad(row, relation, cols, shadow, what, kind)
+
+
+def _refuse_bad(row, relation: str, cols, shadow, what: str, kind: str):
+    """Raise for the first column whose ``bad_<i>`` count is non-zero."""
     for i, c in enumerate(cols):
         bad = row[f"bad_{i}"]
         if bad:
@@ -1877,6 +1882,47 @@ def _point_cert_scan(spark, relation: str, cols, shadow, what: str,
                 + (" with bit-equal shadow coordinates"
                    if shadow and c in shadow else "")
                 + " — refusing to stamp the certificate")
+
+
+_BAD_SHADOW_ROW = "sedona view certificate: bad shadow row"
+
+
+def _shadow_value_check(df, view: str, shadow: dict, what: str,
+                        kind: str) -> None:
+    """The half of a certificate the constructor proof leaves open (see
+    _certify_view), in one native pass over the shadow doubles: a row is
+    bad when one shadow is NULL or NaN but not both are NULL (the
+    kernel's NULL geometry would meet a substituted value), and for
+    ``geog`` when its latitude is in the pole band.  The pass is a noop
+    write whose column raises on a bad row: one job, no shuffle, no
+    Python, no WKB decode.  Only a refusal aggregates, to count the bad
+    rows for the message."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    from sedona_db_spark.operators.spatial_join import _bq
+    bads = []
+    for xc, yc in shadow.values():
+        x, y = F.col(_bq(xc)), F.col(_bq(yc))
+        bad = ((x.isNull() | y.isNull() | F.isnan(x) | F.isnan(y))
+               & (x.isNotNull() | y.isNotNull()))
+        if kind == "geog":
+            bad = bad | (F.abs(y) >= F.lit(90.0 - 1.0e-9))
+        bads.append(bad)
+    flag = F.when(reduce(lambda a, b: a | b, bads),
+                  F.raise_error(F.lit(_BAD_SHADOW_ROW)))
+    try:
+        df.select(flag).write.format("noop").mode("overwrite").save()
+        return
+    except Exception as e:
+        if _BAD_SHADOW_ROW not in str(e):
+            raise
+    row = df.agg(*[F.sum(F.when(b, 1).otherwise(0)).alias(f"bad_{i}")
+                   for i, b in enumerate(bads)]).first()
+    _refuse_bad(row, view, list(shadow), shadow, what, kind)
+    raise ValueError(f"{what}({view}): a shadow row failed the check "
+                     "— refusing to stamp the certificate")
 
 
 def certify_point_table(spark, table: str, cols: list[str],
@@ -1906,23 +1952,62 @@ def certify_point_table(spark, table: str, cols: list[str],
 
 def _certify_view(spark, view: str, shadow: dict, kind: str,
                   what: str) -> None:
-    """Verify ``shadow``'s columns of ``view`` in one scan, then register
-    the shadow map in the session's view-certificate registry under
+    """Prove ``shadow`` (geometry column -> (x_col, y_col)) for ``view``
+    and register it in the session's view-certificate registry under
     (view, kind), stamped with the view's CURRENT plan key — a later
     CREATE OR REPLACE, or a file appended under the view's path, changes
-    the key and silently invalidates the certificate (fail-closed)."""
-    _point_cert_scan(spark, view, list(shadow), shadow, what, kind)
-    fp = plan_key(spark.table(view))
+    the key and silently invalidates the certificate (fail-closed).
+
+    Two proofs, each raising "refusing to stamp" on a bad row:
+
+    - ``constructor``: the plan builds every geometry column with the
+      ``kind``'s point constructor (``ST_Point`` planar, ``ST_GeogPoint``
+      geog) from exactly its two shadow columns, in order, and both
+      shadows are DOUBLE (spatial_join.constructor_shadow_edges).  The
+      kernel writes a 21-byte LE point of exactly its input doubles, and
+      NULL exactly when one is NULL or NaN, so only the doubles are
+      checked (_shadow_value_check): no Python, no WKB read.
+    - ``scan``: anything else — an expression or cast argument, swapped
+      shadows, a FLOAT / DECIMAL / INT shadow, a Union or CTE in the
+      plan, any parse doubt — takes the full scan (_point_cert_scan),
+      which decodes every WKB and compares it with the shadows."""
+    from sedona_db_spark.operators.spatial_join import \
+        constructor_shadow_edges
+    df = spark.table(view)
+    types = {f.name: f.dataType.typeName() for f in df.schema.fields}
+    proven = all(
+        types.get(xc) == types.get(yc) == "double"
+        and constructor_shadow_edges(df, c, xc, yc) == kind
+        for c, (xc, yc) in shadow.items())
+    if proven:
+        _shadow_value_check(df, view, shadow, what, kind)
+    else:
+        _point_cert_scan(spark, view, list(shadow), shadow, what, kind)
+    fp = plan_key(df)
     if fp is not None:
         if not hasattr(spark, "_sedona_point_view_shadows"):
             spark._sedona_point_view_shadows = {}
+            spark._sedona_point_view_proofs = {}
         spark._sedona_point_view_shadows[(view, kind)] = (dict(shadow), fp)
+        spark._sedona_point_view_proofs[(view, kind)] = \
+            "constructor" if proven else "scan"
 
 
 def certify_point_view(spark, view: str, shadow: dict) -> None:
     """certify_point_table for a (temp) view, which has no table
-    properties: the same predicate, registered as a "planar" view
-    certificate (see _certify_view)."""
+    properties: registers a "planar" view certificate for ``shadow``
+    (point column -> (x_col, y_col)).  Raises "refusing to stamp" on a
+    violating row.  Two proofs (_certify_view):
+
+    - a view whose column is ``ST_Point(x_col, y_col)`` over DOUBLE
+      shadows, read straight from the plan (re-aliases and a SQL view's
+      DOUBLE type coercion included), is proven from the plan; one
+      native pass checks that no row has exactly one NULL shadow or a
+      NaN shadow;
+    - anything else — an expression or cast argument, swapped shadows,
+      a FLOAT / DECIMAL / INT shadow, a Union or CTE, stored WKB — takes
+      the full scan: every WKB is a NaN-free 21-byte LE 2-D point
+      bit-equal to its shadows, and NULL geometry has NULL shadows."""
     _certify_view(spark, view, shadow, "planar", "certify_point_view")
 
 
@@ -1938,15 +2023,23 @@ def _geog_point_guard_sql(col: str) -> str:
 
 
 def certify_geog_point_view(spark, view: str, shadow: dict) -> None:
-    """certify_point_view for GEOGRAPHY point columns (round 12): one
-    scan proves every non-null value of each ``shadow`` key is a
-    21-byte LE geography-TAGGED 2-D point WKB whose lon/lat are
-    bit-equal to the sibling ``(lon_col, lat_col)`` DOUBLE shadows
-    (sign-of-zero included), NULL geography rows have NULL shadows,
-    and ``abs(lat) < 90 - 1e-9`` — the pole band takes the cover
-    kernel's general (degenerate-longitude) path, which the native
-    single-cell formula does not reproduce, so certification FAILS
-    there rather than stamping a lie.  Raises on any violating row.
+    """certify_point_view for GEOGRAPHY point columns (round 12):
+    registers a "geog" view certificate for ``shadow`` (geography column
+    -> (lon_col, lat_col)).  Every non-null value is a 21-byte LE
+    geography-TAGGED 2-D point whose lon/lat are bit-equal to the DOUBLE
+    shadows (sign of zero included), NULL geography rows have NULL
+    shadows, and ``abs(lat) < 90 - 1e-9`` — the pole band takes the
+    cover kernel's general (degenerate-longitude) path, which the native
+    single-cell formula does not reproduce, so certification FAILS there
+    rather than stamping a lie.  Raises "refusing to stamp" on any
+    violating row.  Two proofs (_certify_view):
+
+    - ``ST_GeogPoint(lon_col, lat_col)`` over DOUBLE shadows, read from
+      the plan: one native pass over the shadows checks the NULL / NaN
+      pattern and the pole band;
+    - anything else (an expression or cast argument, swapped shadows, a
+      non-DOUBLE shadow, a Union or CTE, ``ST_GeogFromWKT`` or stored
+      WKB) takes the full scan, which decodes every value.
 
     Consumers: geography_relation_join(left_lonlat=...) computes the
     probe side's covering cell, salt and refine inputs natively from
@@ -1965,8 +2058,22 @@ def geog_shadow_xy_for_view(spark, view: str, col: str):
 
 def _view_certs(spark) -> dict:
     """The session's view-certificate registry: (view, kind) ->
-    (shadow map, the view's plan key when certified)."""
+    (shadow map, the view's plan key when certified).  How each entry
+    was proven ("constructor" or "scan", see _certify_view) is kept
+    beside it, in _view_cert_proofs."""
     return getattr(spark, "_sedona_point_view_shadows", {})
+
+
+def _view_cert_proofs(spark) -> dict:
+    return getattr(spark, "_sedona_point_view_proofs", {})
+
+
+def _cert_live(spark, view: str, fp) -> bool:
+    """True while ``view``'s plan key is still ``fp``."""
+    try:
+        return plan_key(spark.table(view)) == fp
+    except Exception:       # the view is gone
+        return False
 
 
 def _view_shadow(spark, table: str, col: str, kind: str = "planar"):
@@ -1977,11 +2084,7 @@ def _view_shadow(spark, table: str, col: str, kind: str = "planar"):
     shadow, fp = reg.get((table, kind), ({}, None))   # fp is never None
     if col not in shadow:
         return None
-    try:
-        return tuple(shadow[col]) if plan_key(spark.table(table)) == fp \
-            else None
-    except Exception:       # the view is gone
-        return None
+    return tuple(shadow[col]) if _cert_live(spark, table, fp) else None
 
 
 def _point_table_shadow(spark, table: str, col: str):

@@ -84,6 +84,24 @@ def test_constructors_null_and_nan_in_null_out(spark):
     assert all(row[c] is None for c in ("en", "ei", "p", "g"))
 
 
+def test_astext_non_finite_coordinates(spark):
+    """ST_AsText prints a non-finite coordinate as repr does (inf,
+    -inf, nan) instead of raising in int(): ±inf through the point
+    constructor, NaN through a hand-built LINESTRING WKB (a NaN point is
+    POINT EMPTY, so the vertex has to sit in a line)."""
+    import struct
+    line = (b"\x01\x02\x00\x00\x00\x02\x00\x00\x00"
+            + struct.pack("<4d", 0.0, 0.0, math.nan, 1.0))
+    row = spark.sql(f"""
+      SELECT ST_AsText(ST_Point(double('Infinity'), 1.0D)) AS pinf,
+             ST_AsText(ST_Point(2.5D, double('-Infinity'))) AS ninf,
+             ST_AsText(ST_GeomFromWKB(X'{line.hex()}')) AS nan
+    """).first()
+    assert row["pinf"] == "POINT (inf 1)"
+    assert row["ninf"] == "POINT (2.5 -inf)"
+    assert row["nan"] == "LINESTRING (0 0, nan 1)"
+
+
 def test_buffer_and_hull(spark):
     v = one(spark, "ST_Area(ST_Buffer(ST_Point(0.0,0.0), 1.0))")
     assert abs(v - math.pi) / math.pi < 0.01  # 32-gon underestimates by ~0.64%

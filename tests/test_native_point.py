@@ -7,8 +7,10 @@ ST_X/ST_Y/ST_Distance kernels only under a point certificate.  These
 tests pin (a) bit-equality against the Python kernels over the full
 double domain including subnormals/zeros/inf/NaN, (b) the guard's
 rejection of non-point WKB, (c) certify_point_table's refusal to stamp
-a lying certificate, and (d) the rewrite firing (plan goes pure native)
-without changing results.
+a lying certificate, (d) the rewrite firing (plan goes pure native)
+without changing results, and (e) a view certificate's two proofs — the
+constructor read from the plan and the full scan — reaching the same
+verdict on adversarial rows.
 """
 
 import math
@@ -173,14 +175,15 @@ def test_view_shadow_invalidated_by_replace(spark):
     with different content must change the plan key so the rewrite
     falls back to the kernel (fail-closed).  A certificate is only ever
     served by its own kind's lookup."""
+    from sedona_db_spark.plans.inspect import certificates
     from sedona_db_spark.plans.sql_rewrite import (
         _view_shadow, certify_geog_point_view, certify_point_view,
         geog_shadow_xy_for_view)
-    kinds = [("ST_Point", certify_point_view, _view_shadow,
+    kinds = [("ST_Point", "planar", certify_point_view, _view_shadow,
               geog_shadow_xy_for_view),
-             ("ST_GeogPoint", certify_geog_point_view,
+             ("ST_GeogPoint", "geog", certify_geog_point_view,
               geog_shadow_xy_for_view, _view_shadow)]
-    for ctor, certify, lookup, other_lookup in kinds:
+    for ctor, kind, certify, lookup, other_lookup in kinds:
         spark.sql(f"""CREATE OR REPLACE TEMP VIEW np_vshadow AS
                   SELECT CAST(id AS DOUBLE) vx, CAST(-id AS DOUBLE) vy,
                          {ctor}(CAST(id AS DOUBLE), CAST(-id AS DOUBLE)) g
@@ -188,11 +191,22 @@ def test_view_shadow_invalidated_by_replace(spark):
         certify(spark, "np_vshadow", {"g": ("vx", "vy")})
         assert lookup(spark, "np_vshadow", "g") == ("vx", "vy")
         assert other_lookup(spark, "np_vshadow", "g") is None
+        # the constructor's arguments are expressions, not the shadow
+        # columns, so the certificate was proven by the scan
+        live = {c["kind"]: c for c in certificates(spark)
+                if c["view"] == "np_vshadow"}
+        assert live[kind] == {"view": "np_vshadow", "kind": kind,
+                              "shadow": {"g": ("vx", "vy")},
+                              "live": True, "proof": "scan"}
         spark.sql(f"""CREATE OR REPLACE TEMP VIEW np_vshadow AS
                   SELECT CAST(id AS DOUBLE) vx, CAST(id AS DOUBLE) vy,
                          {ctor}(CAST(id AS DOUBLE), CAST(id AS DOUBLE)) g
                   FROM range(10)""")
         assert lookup(spark, "np_vshadow", "g") is None
+        gone = {c["kind"]: c for c in certificates(spark)
+                if c["view"] == "np_vshadow"}
+        assert gone[kind] == dict(live[kind], live=False)
+        assert not any(c["live"] for c in gone.values())
     spark.catalog.dropTempView("np_vshadow")
 
 
@@ -244,3 +258,185 @@ def test_certified_scalar_rewrite_fires_and_matches(spark):
         assert x == ax
         assert d == pytest.approx(math.hypot(ax - bx, ay - by), abs=1e-9)
     spark.sql("DROP TABLE np_cert_pts")
+
+
+# ---------------------------------------------------------------------
+# constructor proof vs. full scan (sql_rewrite._certify_view)
+# ---------------------------------------------------------------------
+
+def _vanilla(spark, q):
+    """The query through Spark's own front door: no certified rewrite,
+    so every ST_* call is its kernel."""
+    from pyspark.sql.session import SparkSession
+    return SparkSession.sql.__get__(spark)(q)
+
+
+def _bits(v):
+    return None if v is None else struct.pack("<d", v)
+
+
+def _certify_verdict(spark, certify, view):
+    """True when ``view`` was stamped, False when refused."""
+    try:
+        certify(spark, view, {"g": ("x", "y")})
+        return True
+    except ValueError as e:
+        assert "refusing to stamp" in str(e)
+        return False
+
+
+def _proof(spark, view, kind):
+    from sedona_db_spark.plans.inspect import certificates
+    got = [c for c in certificates(spark)
+           if c["view"] == view and c["kind"] == kind and c["live"]]
+    return got[0]["proof"] if got else None
+
+
+_BASE = [(1.0, 2.0), (3.5, -4.25)]
+# case -> (rows appended to _BASE, stamps planar?, stamps geog?)
+_ADVERSARIAL = {
+    "nan_x": ([(math.nan, 2.0)], False, False),
+    "nan_y": ([(1.0, math.nan)], False, False),
+    "null_x": ([(None, 2.0)], False, False),
+    "null_both": ([(None, None)], True, True),
+    "neg_zero": ([(-0.0, -0.0), (0.0, -0.0)], True, True),
+    "inf": ([(math.inf, -math.inf)], True, False),     # geog: lat -inf
+    "lon_inf": ([(-math.inf, 1.0)], True, True),
+    "subnormal": ([(5e-324, -2.2250738585072e-309)], True, True),
+    "lat_90": ([(10.0, 90.0)], True, False),
+    "lat_m90": ([(10.0, -90.0)], True, False),
+    "lat_near_pole": ([(10.0, 89.9999999999)], True, False),
+    "lon_540": ([(540.0, 10.0)], True, True),
+}
+
+
+@pytest.mark.parametrize("kind", ["planar", "geog"])
+@pytest.mark.parametrize("case", sorted(_ADVERSARIAL))
+def test_constructor_proof_agrees_with_scan(spark, tmp_path, case, kind):
+    """Each adversarial table is certified twice: as a constructor view
+    (proven from the plan, only the shadow doubles checked) and as the
+    same rows with the WKB stored in parquet (the full scan).  Both
+    reach the same verdict, and a stamped view answers ST_X / ST_Y /
+    ST_Distance like the uncertified kernels."""
+    from sedona_db_spark.plans.sql_rewrite import (
+        certify_geog_point_view, certify_point_view)
+    extra, planar_ok, geog_ok = _ADVERSARIAL[case]
+    ctor, certify, want = (("ST_Point", certify_point_view, planar_ok)
+                           if kind == "planar" else
+                           ("ST_GeogPoint", certify_geog_point_view, geog_ok))
+    rows = [(i, x, y) for i, (x, y) in enumerate(_BASE + extra)]
+    con, scan = f"np_pc_{case}_{kind}_c", f"np_pc_{case}_{kind}_s"
+    spark.createDataFrame(rows, "k long, x double, y double") \
+        .selectExpr("k", "x", "y", f"{ctor}(x, y) AS g") \
+        .createOrReplaceTempView(con)
+    d = str(tmp_path / "stored")
+    spark.table(con).write.parquet(d)
+    spark.read.parquet(d).createOrReplaceTempView(scan)
+    verdicts = [_certify_verdict(spark, certify, v) for v in (con, scan)]
+    assert verdicts == [want, want]
+    if not want:
+        return
+    assert _proof(spark, con, kind) == "constructor"
+    assert _proof(spark, scan, kind) == "scan"
+    for q in ("SELECT k, ST_X(g) AS a, ST_Y(g) AS b FROM {v}",
+              "SELECT p.k, ST_Distance(p.g, q.g) AS a, 0.0D AS b "
+              "FROM {v} p JOIN {v} q ON q.k = p.k + 1"):
+        kernel = sorted((r[0], _bits(r[1]), _bits(r[2])) for r in
+                        _vanilla(spark, q.format(v=con)).collect())
+        for v in (con, scan):
+            got = sorted((r[0], _bits(r[1]), _bits(r[2])) for r in
+                         spark.sql(q.format(v=v)).collect())
+            assert got == kernel, (v, q)
+
+
+@pytest.mark.parametrize("shape", ["expr_arg", "cast_shadow", "float",
+                                   "decimal", "union"])
+def test_certify_fallback_shapes_take_the_scan(spark, shape):
+    """A view the plan cannot prove takes the full scan: an expression
+    argument, a shadow that is a cast of the constructor's argument, a
+    FLOAT or DECIMAL shadow, a Union.  Each still stamps (the scan
+    compares the WKB with the shadows' DOUBLE images)."""
+    from sedona_db_spark.plans.sql_rewrite import certify_point_view
+    base = spark.createDataFrame(
+        [(i, float(i) + 0.5, float(-i) - 0.25) for i in range(6)],
+        "k long, x double, y double")
+    view = f"np_fallback_{shape}"
+    if shape == "expr_arg":
+        df = base.selectExpr("k", "x", "y", "ST_Point(x + 0.0D, y) AS g")
+    elif shape == "cast_shadow":
+        df = base.selectExpr("k", "CAST(x AS FLOAT) AS f", "y") \
+            .selectExpr("k", "CAST(f AS DOUBLE) AS x", "y",
+                        "ST_Point(f, y) AS g")
+    elif shape == "union":
+        df = base.selectExpr("k", "x", "y", "ST_Point(x, y) AS g")
+        df = df.union(df)
+    else:
+        t = "FLOAT" if shape == "float" else "DECIMAL(10, 2)"
+        df = base.selectExpr("k", f"CAST(x AS {t}) AS x", "y") \
+            .selectExpr("k", "x", "y", "ST_Point(x, y) AS g")
+    df.createOrReplaceTempView(view)
+    certify_point_view(spark, view, {"g": ("x", "y")})
+    assert _proof(spark, view, "planar") == "scan"
+
+
+def test_certify_swapped_shadows_refused(spark):
+    """{"g": ("y", "x")} over ST_Point(x, y) does not match the
+    constructor's argument order, so the scan runs — and refuses."""
+    from sedona_db_spark.plans.sql_rewrite import certify_point_view
+    spark.createDataFrame([(1.0, 2.0), (3.0, 4.0)], "x double, y double") \
+        .selectExpr("x", "y", "ST_Point(x, y) AS g") \
+        .createOrReplaceTempView("np_swapped")
+    with pytest.raises(ValueError, match="refusing to stamp"):
+        certify_point_view(spark, "np_swapped", {"g": ("y", "x")})
+    assert _proof(spark, "np_swapped", "planar") is None
+
+
+def test_sql_view_coercion_takes_the_proof(spark, tmp_path):
+    """A SQL view re-casts every output to its stored type (a DOUBLE
+    shadow is cast to DOUBLE); that identity cast is followed, so the
+    view is proven from the plan.  A cast that changes the value is
+    not: an attribute negated under its own name takes the scan."""
+    from sedona_db_spark.plans.sql_rewrite import certify_point_view
+    d = str(tmp_path / "xy")
+    spark.createDataFrame([(i, float(i), 2.0) for i in range(5)],
+                          "k long, x double, y double").write.parquet(d)
+    spark.sql(f"""CREATE OR REPLACE TEMP VIEW np_sqlview AS
+                  SELECT k, x, y, ST_Point(x, y) AS g FROM parquet.`{d}`""")
+    certify_point_view(spark, "np_sqlview", {"g": ("x", "y")})
+    assert _proof(spark, "np_sqlview", "planar") == "constructor"
+    spark.sql("""CREATE OR REPLACE TEMP VIEW np_sqlview_neg AS
+                 SELECT k, -x AS x, y, g FROM np_sqlview""")
+    with pytest.raises(ValueError, match="refusing to stamp"):
+        certify_point_view(spark, "np_sqlview_neg", {"g": ("x", "y")})
+
+
+def _execution_plan(spark, job_id: int):
+    """The physical plan of the SQL execution that ran ``job_id``."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    for i in range(execs.size() - 1, -1, -1):
+        e = execs.apply(i)
+        if e.jobs().contains(job_id):
+            return e.physicalPlanDescription()
+    return None
+
+
+def test_constructor_proof_starts_one_native_job(spark):
+    """Certifying an ST_Point view and an ST_GeogPoint view starts one
+    job each, and that job's plan runs no Python."""
+    from sedona_db_spark.plans.inspect import jobs_started
+    from sedona_db_spark.plans.sql_rewrite import (
+        certify_geog_point_view, certify_point_view)
+    base = spark.createDataFrame(
+        [(i, float(i), float(i) / 2.0) for i in range(20)],
+        "k long, x double, y double")
+    for ctor, certify in (("ST_Point", certify_point_view),
+                          ("ST_GeogPoint", certify_geog_point_view)):
+        view = f"np_onejob_{ctor}"
+        base.selectExpr("k", "x", "y", f"{ctor}(x, y) AS g") \
+            .createOrReplaceTempView(view)
+        with jobs_started(spark) as jobs:
+            certify(spark, view, {"g": ("x", "y")})
+        assert len(jobs) == 1, jobs
+        plan = _execution_plan(spark, jobs[0][0])
+        assert plan is not None and "ArrowEvalPython" not in plan, plan

@@ -2119,6 +2119,34 @@ def test_constructor_sides_route_without_probe(spark, how, boxes):
         assert len(want) > 0
 
 
+def test_rect_verdict_shared_across_join_types(spark):
+    """The rect fast path's build-side rectangle verdict is a fact about
+    the build geometry, so an ANTI join after an INNER one over the same
+    two views reuses it — the lattice's row ids and the rewrite's
+    per-join-type column pruning do not re-key it — and still answers
+    like vanilla."""
+    from sedona_db_spark.operators import result_cache
+    from sedona_db_spark.plans.inspect import jobs_started
+    _facts_views(spark)
+    result_cache.reset()
+    inner = ("SELECT p.id, b.bid FROM pf_pts p JOIN pf_boxes b "
+             "ON ST_Within(p.geom, b.geom)")
+    with jobs_started(spark) as jobs:
+        spark.sql(inner)
+    verdict = [n for _, n in jobs if n.startswith("first at ")
+               and "spatial_join.py" in n]
+    assert verdict, jobs          # the INNER ran the verdict agg
+    with jobs_started(spark) as jobs:
+        df = spark.sql("SELECT p.id FROM pf_pts p LEFT ANTI JOIN pf_boxes b "
+                       "ON ST_Within(p.geom, b.geom)")
+    assert getattr(df, "_sedona_rewritten_sql", None) is not None
+    assert [n for _, n in jobs if n.startswith("first at ")
+            and "spatial_join.py" in n] == [], jobs
+    want = _lattice_oracle(spark, "SELECT id FROM pf_pts", inner,
+                           "LEFT ANTI JOIN")
+    assert _lattice_got(df, "LEFT ANTI JOIN") == want
+
+
 @pytest.mark.parametrize("how", ["JOIN", "LEFT JOIN"])
 @pytest.mark.parametrize("right", ["pf_gb", "pf_gn"])
 def test_geog_point_sides_route_without_probe(spark, how, right):
