@@ -1052,22 +1052,16 @@ def spatial_join(
     expand = float(distance) + 1e-12 if distance is not None else 0.0
 
     # Path choice probe: limit-capped count scans at most threshold+1 rows
-    # (a plain count() would be a full pass over the build side at 100 TB).
-    n_small = None
-    large, remember = stats_memo("nsmall", right_r, broadcast_threshold)
-    if large:
-        # memoized "build side is large" verdict: skip the probe job.
-        # Only the LARGE outcome is ever memoized — the partitioned path
-        # stays safe if the underlying files grow or shrink, while a
-        # stale "small" verdict could broadcast an oversized side.
-        n_small = broadcast_threshold + 1
-    else:
+    # (a plain count() would be a full pass over the build side at 100 TB),
+    # memoized on the plan key, whose size fingerprint a file append or a
+    # replaced view changes.
+    n_small, remember = stats_memo("nsmall", right_r, broadcast_threshold)
+    if n_small is None:
         try:
             n_small = right_r.limit(broadcast_threshold + 1).count()
+            remember(n_small)
         except Exception:
             pass
-        if n_small is not None and n_small > broadcast_threshold:
-            remember(True)
 
     # Two broadcast regimes (reference single-partition in-memory mode,
     # prepare.rs:62-117): a tiny build side joins fastest as a JVM

@@ -34,22 +34,26 @@ Architecture note ("why not a Catalyst rule"): injecting a logical rule
 needs JVM code; a pure-PySpark engine intercepts at its session front door
 instead.  ``install_sql_rewrite(spark)`` (called by ``register_all``) wraps
 the session's ``sql`` method: a cheap regex precheck skips everything
-without a spatial predicate + join, a token-level matcher handles the
-supported shapes, and ANY non-matching or ambiguous query falls back to the
-original planner unchanged.  The rewritten join subtree is registered as a
-temp view and the rest of the query (projection, WHERE, GROUP BY, ORDER BY,
-set ops above) runs over it verbatim, so SQL semantics outside the join are
-Spark's own.
+without a spatial predicate + join, the matcher finds the supported shapes
+on Spark's own parse tree of the query (``parsePlan``: its joins and join
+types, ``[NOT] EXISTS``, relation aliases, conjuncts, and the query blocks
+that scope every ``alias.col``), and ANY non-matching or ambiguous query
+falls back to the original planner unchanged.  The rewritten join subtree
+is registered as a temp view, and the emitter splices the original text at
+the tree's character offsets, so the rest of the query (projection, WHERE,
+GROUP BY, ORDER BY, set ops above, comments and hints) runs over the view
+verbatim and SQL semantics outside the join are Spark's own.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import re
 import warnings
 from collections import namedtuple
 
-from pyspark.errors import AnalysisException
+from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession
 
 from sedona_db_spark.operators.result_cache import (BoundedMemo, plan_key,
@@ -75,17 +79,35 @@ _TOKEN_RE = re.compile(
 
 def _tokenize(sql: str) -> list[str] | None:
     """SQL -> token list (whitespace/comments dropped).  None on oddities."""
-    toks = []
+    return _tokenize_spans(sql)[0]
+
+
+def _tokenize_spans(sql: str):
+    """(tokens, each token's (start, end) in ``sql``), or (None, None) on
+    oddities.  The spans let a rewrite splice the source string: token
+    re-rendering drops comments, and with them any /*+ ... */ hints."""
+    toks, spans = [], []
     pos = 0
     for m in _TOKEN_RE.finditer(sql):
         if m.start() != pos:
-            return None
+            return None, None
         pos = m.end()
         if m.lastgroup != "ws":
             toks.append(m.group())
+            spans.append((m.start(), m.end()))
     if pos != len(sql):
-        return None
-    return toks
+        return None, None
+    return toks, spans
+
+
+def _close_paren(toks: list[str], i: int) -> int | None:
+    """Index of the ``)`` closing the ``(`` at token i, or None."""
+    d = 0
+    for j in range(i, len(toks)):
+        d += (toks[j] == "(") - (toks[j] == ")")
+        if d == 0:
+            return j
+    return None
 
 
 def _render(toks: list[str]) -> str:
@@ -157,13 +179,13 @@ _PRECHECK = re.compile(
     re.I,
 )
 
-_BLOCK_END = {
+# keywords a relation alias cannot be
+_NOT_ALIAS = {
     "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "UNION", "INTERSECT",
-    "EXCEPT", "WINDOW", "QUALIFY", "DISTRIBUTE", "CLUSTER", "SORT",
+    "EXCEPT", "WINDOW", "QUALIFY", "DISTRIBUTE", "CLUSTER", "SORT", "JOIN",
+    "INNER", "LEFT", "RIGHT", "FULL", "CROSS", "SEMI", "ANTI", "NATURAL",
+    "LATERAL", "ON", "USING", "AS",
 }
-_JOIN_WORDS = {"JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS", "SEMI",
-               "ANTI", "NATURAL", "LATERAL"}
-_NOT_ALIAS = _BLOCK_END | _JOIN_WORDS | {"ON", "USING", "AS"}
 
 
 class _Decline(Exception):
@@ -171,16 +193,22 @@ class _Decline(Exception):
 
 
 class _Rel:
-    """One relation in the FROM clause: a (multi-part) table name or a
-    parenthesized subquery, plus its alias."""
+    """One relation in a FROM clause: a (multi-part) table name or a
+    parenthesized subquery, plus its alias.  ``text`` is the name or the
+    subquery's SQL; a relation read from the parse tree keeps its
+    ``node`` and reads ``text`` from the node's offsets."""
 
-    def __init__(self, start: int, end: int, alias: str, is_subquery: bool,
-                 text: str):
-        self.start = start          # token span [start, end)
-        self.end = end
-        self.alias = alias
-        self.is_subquery = is_subquery
-        self.text = text            # table name or subquery SQL
+    def __init__(self, alias: str, is_subquery: bool, text: str | None = None,
+                 node=None):
+        self.alias, self.is_subquery, self.node = alias, is_subquery, node
+        self._text = text
+
+    @property
+    def text(self) -> str:
+        if self._text is None:
+            n = self.node
+            self._text = (n.kids[0] if n.cls == "SubqueryAlias" else n).text()
+        return self._text
 
 
 def _depths(toks: list[str]) -> list[int]:
@@ -214,24 +242,15 @@ def _parse_rel(toks: list[str], i: int) -> tuple[_Rel, int]:
     if i >= n:
         raise _Decline
     if toks[i] == "(":
-        d = 0
-        j = i
-        while j < n:
-            if toks[j] == "(":
-                d += 1
-            elif toks[j] == ")":
-                d -= 1
-                if d == 0:
-                    break
-            j += 1
-        if j >= n:
+        j = _close_paren(toks, i)
+        if j is None:
             raise _Decline
         body = _render(toks[i + 1:j])
         j += 1
         alias, j = _parse_alias(toks, j)
         if alias is None:
             raise _Decline   # subquery needs an alias
-        return _Rel(i, j, alias, True, body), j
+        return _Rel(alias, True, body), j
     # multipart identifier
     if not _is_ident(toks[i]) or toks[i].upper() in _NOT_ALIAS:
         raise _Decline
@@ -244,7 +263,7 @@ def _parse_rel(toks: list[str], i: int) -> tuple[_Rel, int]:
     name = ".".join(parts)
     if alias is None:
         alias = _unquote(parts[-1])
-    return _Rel(i, j, alias, False, name), j
+    return _Rel(alias, False, name), j
 
 
 def _parse_alias(toks: list[str], j: int) -> tuple[str | None, int]:
@@ -254,32 +273,6 @@ def _parse_alias(toks: list[str], j: int) -> tuple[str | None, int]:
     if j < n and _is_ident(toks[j]) and toks[j].upper() not in _NOT_ALIAS:
         return _unquote(toks[j]), j + 1
     return None, j
-
-
-def _split_conjuncts(toks: list[str], lo: int, hi: int) -> list[tuple[int, int]]:
-    """Split toks[lo:hi] on top-level AND -> list of (start, end) spans."""
-    spans = []
-    d = 0
-    start = lo
-    for j in range(lo, hi):
-        t = toks[j]
-        if t == "(":
-            d += 1
-        elif t == ")":
-            d -= 1
-        elif d == 0 and t.upper() == "AND":
-            spans.append((start, j))
-            start = j + 1
-        elif d == 0 and (t.upper() == "OR"
-                         or (t.upper() == "NOT"
-                             and not (j + 1 < hi
-                                      and toks[j + 1].upper() == "EXISTS"))):
-            # disjunctions / negations not rewritable — except NOT
-            # EXISTS, which stays inside its own conjunct span and is
-            # handled by the anti-join rewrite
-            raise _Decline
-    spans.append((start, hi))
-    return [s for s in spans if s[1] > s[0]]
 
 
 class _SpatialConjunct:
@@ -326,142 +319,304 @@ def _qualified_ref(toks, lo, hi, aliases, schemas):
     return None
 
 
-# integer literal suffixes -> magnitude of the type's most negative value
-_INT_SUFFIX_MAX = {"L": 2 ** 63, "S": 2 ** 15, "Y": 2 ** 7}
-_NUM_LITERAL = re.compile(r"(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?(BD|D|L|S|Y)?",
-                          re.I)
+# ----------------------------------------------------------------------
+# Spark's parse tree
+#
+# The matcher reads a query's structure from Spark's own parser:
+# ``parsePlan`` returns the unresolved logical plan, and its JSON carries
+# every node (class, fields, children; a subquery expression's plan; a
+# literal's value and type).  The JSON holds no text offsets: a node's
+# offsets come from its JVM twin's ``origin()``, fetched only for the
+# nodes the emitter splices (each fetch is a few py4j commands).
+# ----------------------------------------------------------------------
+
+# the origin's character offsets (start, inclusive stop) are its third
+# and fourth fields
+_ORIGIN = re.compile(r"Origin\((?:Some\(\d+\)|None),(?:Some\(\d+\)|None),"
+                     r"Some\((\d+)\),Some\((\d+)\),")
+
+# plan nodes that make up one query block above its FROM clause
+_BLOCK_NODES = {"Project", "Aggregate", "Filter", "UnresolvedHaving", "Sort",
+                "GlobalLimit", "LocalLimit", "Offset", "Distinct",
+                "WithWindowDefinition", "UnresolvedHint"}
+_SET_NODES = {"Union", "Intersect", "Except"}
+# what a derived table's parentheses may hold: a query
+_QUERY_NODES = _BLOCK_NODES | _SET_NODES | {"UnresolvedWith"}
+_JOIN_TYPES = {"Inner$": "inner", "Cross$": "inner", "LeftOuter$": "left",
+               "RightOuter$": "right", "FullOuter$": "full",
+               "LeftSemi$": "left_semi", "LeftAnti$": "left_anti"}
+_NAME_FIELDS = {"UnresolvedAttribute": "nameParts", "UnresolvedStar": "target",
+                "UnresolvedRelation": "multipartIdentifier"}
+_COMPARISONS = {"LessThan", "LessThanOrEqual", "GreaterThan",
+                "GreaterThanOrEqual"}
 
 
-def _literal_number(toks, lo, hi):
-    """A (negated) numeric literal span -> the double vanilla Spark hands
-    the kernel, else None.  Plain, ``D`` and ``BD`` literals are the
-    decimal's nearest double; ``L``/``S``/``Y`` integers must fit their
-    type; ``F`` (a float32, rounded before the kernel sees it) is not a
-    literal here, so its conjunct declines."""
-    span = toks[lo:hi]
-    sign = 1
-    if len(span) == 2 and span[0] == "-":
-        sign, span = -1, span[1:]
-    m = _NUM_LITERAL.fullmatch(span[0]) if len(span) == 1 else None
-    if m is None:
-        return None
-    body, exp, suffix = m.group(1), m.group(2), (m.group(3) or "").upper()
-    if suffix in _INT_SUFFIX_MAX:
-        if not body.isdigit() or exp \
-                or int(body) > _INT_SUFFIX_MAX[suffix] - (sign > 0):
-            return None
-        return float(sign * int(body))
-    return sign * float(body + (exp or ""))
+class _Block:
+    """A query block's scope: the aliases its FROM clause declares and
+    the block it is nested in.  ``top`` marks a block outside every
+    parenthesis (the statement's own, or a set-operation branch of it)."""
+
+    def __init__(self, outer, top=False):
+        self.outer, self.top, self.aliases = outer, top, set()
+
+    def binding(self, alias):
+        """The innermost block, from this one outwards, declaring
+        ``alias`` (Spark's own resolution order), or None."""
+        b = self
+        while b is not None and alias not in b.aliases:
+            b = b.outer
+        return b
 
 
-def _parse_distance_comparison(toks, lo, hi, aliases, schemas):
-    """``ST_Distance(g1, g2) < d`` / ``<= d`` and the reversed
-    ``d > ST_Distance(g1, g2)`` / ``>= ...`` forms — the reference
-    accepts exactly these as distance-join predicates
-    (sedona-expr/src/utils.rs parse_distance_predicate; Lt/LtEq with the
-    call on either side).  Returns a dwithin _SpatialConjunct with
-    ``keep_refine`` set, or None."""
-    depth = 0
-    for j in range(lo, hi):
-        t = toks[j]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and t in ("<", "<=", ">", ">="):
-            if t in ("<", "<="):
-                fn_lo, fn_hi, num_lo, num_hi = lo, j, j + 1, hi
+class _Node:
+    """One node of the parse tree: its short class name, JSON fields,
+    children, the trees its fields hold (a plan node's expressions, in
+    the order of the JVM node's ``expressions()``; a subquery's plan; a
+    CTE's definitions), its query block, and on demand its [start, end)
+    offsets in the text."""
+
+    def __init__(self, tree, d, up, step):
+        self.tree, self.d, self.up, self.step = tree, d, up, step
+        self.cls = d["class"].rsplit(".", 1)[-1]
+        self.kids, self.exprs, self.plans = [], [], []
+        self.block = self.field = self._jvm = self._span = None
+
+    def parts(self) -> list[str]:
+        """An attribute's name parts, a star's target, a relation's
+        multi-part name."""
+        s = self.d.get(_NAME_FIELDS.get(self.cls, ""))
+        return s[1:-1].split(", ") if s else []
+
+    def walk(self):
+        """This node and every node under it, subqueries included."""
+        yield self
+        for n in self.kids + self.exprs + self.plans:
+            yield from n.walk()
+
+    def jvm(self):
+        if self._jvm is None:
+            kind, i = self.step
+            up = self.up.jvm()
+            if kind == "kid":
+                self._jvm = up.children().apply(i)
+            elif kind == "expr":
+                self._jvm = up.expressions().apply(i)
+            elif kind == "plan":
+                self._jvm = up.plan()
             else:
-                fn_lo, fn_hi, num_lo, num_hi = j + 1, hi, lo, j
-            if (fn_hi - fn_lo < 4 or toks[fn_lo].upper() != "ST_DISTANCE"
-                    or toks[fn_lo + 1] != "(" or toks[fn_hi - 1] != ")"):
-                return None
-            dist = _literal_number(toks, num_lo, num_hi)
-            dref = None
-            if dist is None or dist < 0:
-                # column-valued bound: ST_Distance(a.g, b.g) < a.radius
-                # (reference distance_side, spatial_predicate.rs:44-99)
-                dref = _qualified_ref(toks, num_lo, num_hi,
-                                      aliases, schemas)
-                if dref is None or dref[1] not in schemas[dref[0]]:
-                    return None
-            args = _split_args(toks, fn_lo + 2, fn_hi - 1)
-            if args is None or len(args) != 2:
-                return None
-            ref_a = _qualified_ref(toks, args[0][0], args[0][1],
-                                   aliases, schemas)
-            ref_b = _qualified_ref(toks, args[1][0], args[1][1],
-                                   aliases, schemas)
-            if ref_a is None or ref_b is None:
-                return None
-            (ra, ca), (rb, cb) = ref_a, ref_b
-            if ra == rb:
-                return None
-            sc = _SpatialConjunct("dwithin", None, [ra, rb], [ca, cb],
-                                  [dist])
-            sc.dist_col = dref
-            sc.keep_refine = True
-            return sc
+                self._jvm = up.cteRelations().apply(i)._2()
+        return self._jvm
+
+    def span(self) -> tuple[int, int]:
+        if self._span is not None:
+            return self._span
+        if self.cls == "Literal":
+            raise _Decline       # a literal may carry its parent's origin
+        if self.cls == "Exists":
+            # so does an Exists: its text is ``EXISTS ( <subquery> )``
+            # around its plan's
+            lo, hi = self.plans[0].span()
+            head = re.search(r"\bEXISTS\s*\(\s*$", self.tree.text[:lo], re.I)
+            tail = re.match(r"\s*\)", self.tree.text[hi:])
+            if head is None or tail is None:
+                raise _Decline
+            self._span = (head.start(), hi + tail.end())
+            return self._span
+        m = _ORIGIN.match(self.jvm().origin().toString())
+        if m is None:
+            raise _Decline
+        self._span = (int(m.group(1)), int(m.group(2)) + 1)
+        return self._span
+
+    def text(self) -> str:
+        lo, hi = self.span()
+        return self.tree.text[lo:hi]
+
+
+def _flat_trees(v) -> list:
+    """The flattened node lists a JSON field value holds, in the order
+    ``QueryPlan.expressions`` lists them (nested sequences flattened)."""
+    if isinstance(v, list) and v and isinstance(v[0], dict) \
+            and "class" in v[0]:
+        return [v]
+    if isinstance(v, list):
+        return [t for x in v for t in _flat_trees(x)]
+    return []
+
+
+class _Tree:
+    """Spark's unresolved plan of ``text``: the root _Node (its JVM twin
+    is ``jplan``, its JSON ``js``), every node assigned to its query
+    block."""
+
+    def __init__(self, text, jplan, js):
+        self.text, self.js = text, js
+        self.root = self._read(json.loads(js), 0, None, None, True)[0]
+        self.root._jvm = jplan
+        self._scope(self.root, _Block(None, top=True))
+
+    def names(self) -> set[str]:
+        """Every name the query mentions, over-inclusively: each string
+        of the JSON, and each part of a multi-part name."""
+        out = set()
+        for q in re.findall(r'"((?:[^"\\]|\\.)*)"', self.js):
+            v = json.loads(f'"{q}"')
+            out.update([v] + (v[1:-1].split(", ") if v[:1] == "[" else []))
+        return out
+
+    def _read(self, flat, i, up, step, is_plan):
+        node = _Node(self, flat[i], up, step)
+        i += 1
+        for k in range(node.d["num-children"]):
+            kid, i = self._read(flat, i, node, ("kid", k), is_plan)
+            node.kids.append(kid)
+        for field, v in node.d.items():
+            if field == "plan" and not is_plan:
+                node.plans.append(self._read(v, 0, node, ("plan", 0), True)[0])
+            elif field == "cteRelations":
+                node.plans += [self._read(r["_2"], 0, node, ("cte", j),
+                                          True)[0] for j, r in enumerate(v)]
+            elif is_plan:
+                for t in _flat_trees(v):
+                    if ".plans.logical." in t[0]["class"] \
+                            or t[0]["class"].endswith("UnresolvedRelation"):
+                        continue         # a plan in a field (INSERT's table)
+                    e = self._read(t, 0, node, ("expr", len(node.exprs)),
+                                   False)[0]
+                    e.field = field
+                    node.exprs.append(e)
+        return node, i
+
+    def _scope(self, node, block):
+        """Assign ``node``'s subtree to query blocks: a derived table, a
+        subquery, a CTE definition and a set-operation branch each open a
+        block of their own, nested in the one around it."""
+        node.block = block
+        if node.cls == "SubqueryAlias":
+            block.aliases.add(node.d["identifier"]["name"])
+        elif node.cls == "UnresolvedRelation" \
+                and getattr(node.up, "cls", None) != "SubqueryAlias":
+            block.aliases.add(node.parts()[-1])
+        for e in node.exprs:
+            self._scope(e, block)
+        for p in node.plans:
+            self._scope(p, _Block(block))
+        for kid in node.kids:
+            if node.cls in _SET_NODES:
+                self._scope(kid, _Block(block, block.top))
+            elif node.cls == "SubqueryAlias" \
+                    and kid.cls != "UnresolvedRelation":
+                self._scope(kid, _Block(block))
+            else:
+                self._scope(kid, block)
+
+
+def _parse_plan(spark, sql: str):
+    """Spark's unresolved plan of ``sql`` as a _Tree, or None when the
+    text does not parse (a parse error is logged, so callers parse only a
+    text vanilla analysis accepted or the peephole produced)."""
+    parser = getattr(spark, "_sedona_sql_parser", None)
+    if parser is None:
+        parser = spark._jsparkSession.sessionState().sqlParser()
+        spark._sedona_sql_parser = parser
+    try:
+        jplan = parser.parsePlan(sql)
+    except Exception:
+        return None
+    return _Tree(sql, jplan, jplan.toJSON())
+
+
+def _conjuncts(e) -> list:
+    """An expression's top-level AND operands (the parser has already
+    dropped every parenthesis)."""
+    if e.cls == "And":
+        return _conjuncts(e.kids[0]) + _conjuncts(e.kids[1])
+    return [e]
+
+
+def _call_name(e) -> str | None:
+    """The upper-cased name of a plain function call, else None."""
+    if e.cls != "UnresolvedFunction" or e.d.get("isDistinct") \
+            or len(e.d.get("arguments", ())) != len(e.kids):
+        return None
+    return e.d["nameParts"][1:-1].rsplit(", ", 1)[-1].upper()
+
+
+def _args(e) -> list:
+    return [e.kids[i] for i in e.d["arguments"]]
+
+
+def _distance_comparison(e):
+    """``ST_Distance(g1, g2) < d`` / ``<= d`` and the reversed ``d >
+    ST_Distance(g1, g2)`` / ``>= ...`` -> (the call, the bound), else
+    None — the reference accepts exactly these as distance-join
+    predicates (sedona-expr/src/utils.rs parse_distance_predicate; Lt/LtEq
+    with the call on either side)."""
+    if e.cls not in _COMPARISONS:
+        return None
+    fn, bound = e.kids if e.cls.startswith("Less") else e.kids[::-1]
+    return (fn, bound) if _call_name(fn) == "ST_DISTANCE" else None
+
+
+def _maybe_spatial(e) -> bool:
+    """Whether conjunct ``e`` has a spatial join predicate's shape (the
+    core still checks its arguments)."""
+    return (_call_name(e) in _SPATIAL_CALLS
+            or _distance_comparison(e) is not None)
+
+
+def _literal_value(e):
+    """A numeric literal node -> the double vanilla Spark hands the
+    kernel, else None.  The parser has typed and range-checked it
+    (``0.5D``, ``0.5BD``, ``3L``, ``- 7S``); a FLOAT literal (``0.5F``) is
+    a float32 rounded before the kernel sees it, so it is no number here."""
+    if e.cls != "Literal":
+        return None
+    t = e.d.get("dataType")
+    if t in ("byte", "short", "integer", "long", "double") \
+            or str(t).startswith("decimal("):
+        return float(e.d["value"])
     return None
 
 
-def _parse_spatial_conjunct(toks, lo, hi, aliases, schemas):
-    """Parse toks[lo:hi] as ST_Pred(...) over the two join relations.
-    Returns _SpatialConjunct or None (not spatial)."""
-    if hi - lo < 4 or toks[lo + 1] != "(" or toks[hi - 1] != ")":
-        return _parse_distance_comparison(toks, lo, hi, aliases, schemas)
-    fname = toks[lo].upper()
+def _attr_ref(e, aliases, schemas):
+    """An attribute naming one column of a join relation -> (alias,
+    col): ``alias.col``, or a bare name exactly one relation holds."""
+    if e.cls != "UnresolvedAttribute":
+        return None
+    parts = e.parts()
+    if len(parts) == 2:
+        return tuple(parts) if parts[0] in aliases else None
+    if len(parts) == 1:
+        owners = [a for a in aliases if parts[0] in schemas[a]]
+        return (owners[0], parts[0]) if len(owners) == 1 else None
+    return None
+
+
+def _spatial_conjunct(e, aliases, schemas):
+    """Conjunct ``e`` as ST_Pred(...) over two join relations ->
+    _SpatialConjunct, None when it is not spatial; raises _Decline on a
+    spatial call the operators cannot take."""
+    fname = _call_name(e)
     if fname not in _SPATIAL_CALLS:
-        return _parse_distance_comparison(toks, lo, hi, aliases, schemas)
-    # split args on top-level commas inside the call
-    d = 0
-    args = []
-    start = lo + 2
-    for j in range(lo + 2, hi - 1):
-        t = toks[j]
-        if t == "(":
-            d += 1
-        elif t == ")":
-            d -= 1
-        elif d == 0 and t == ",":
-            args.append((start, j))
-            start = j + 1
-    args.append((start, hi - 1))
-    if d != 0:
+        return _distance_conjunct(e, aliases, schemas)
+    args = _args(e)
+    arity = 4 if fname == "ST_KNN" else 3 if fname == "ST_DWITHIN" else 2
+    refs = [_attr_ref(x, aliases, schemas) for x in args[:2]]
+    if len(args) != arity or None in refs or refs[0][0] == refs[1][0]:
         raise _Decline
-
-    def geo(idx):
-        ref = _qualified_ref(toks, args[idx][0], args[idx][1], aliases, schemas)
-        if ref is None:
-            raise _Decline
-        return ref
-
+    (ra, ca), (rb, cb) = refs
     if fname in _PRED_NAMES:
-        if len(args) != 2:
-            raise _Decline
-        (ra, ca), (rb, cb) = geo(0), geo(1)
-        if ra == rb:
-            raise _Decline
         return _SpatialConjunct("relation", _PRED_NAMES[fname],
                                 [ra, rb], [ca, cb], [])
     if fname in _RS_PRED_NAMES:
         # RS_Pred(raster, geometry): arg0 is the raster side
-        if len(args) != 2:
-            raise _Decline
-        (ra, ca), (rb, cb) = geo(0), geo(1)
-        if ra == rb:
-            raise _Decline
         sc = _SpatialConjunct("relation", _RS_PRED_NAMES[fname],
                               [ra, rb], [ca, cb], [])
         sc.raster0 = True
         return sc
     if fname == "ST_DWITHIN":
-        if len(args) != 3:
-            raise _Decline
-        (ra, ca), (rb, cb) = geo(0), geo(1)
-        if ra == rb:
-            raise _Decline
-        dist = _literal_number(toks, args[2][0], args[2][1])
+        dist = _literal_value(args[2])
         if dist is not None:
             return _SpatialConjunct("dwithin", None, [ra, rb], [ca, cb],
                                     [dist])
@@ -471,8 +626,7 @@ def _parse_spatial_conjunct(toks, lo, hi, aliases, schemas):
         # radius must live on exactly ONE side; an expression mixing
         # both sides has no single owning relation to max over ->
         # decline to vanilla.
-        dref = _qualified_ref(toks, args[2][0], args[2][1],
-                              aliases, schemas)
+        dref = _attr_ref(args[2], aliases, schemas)
         if dref is None or dref[1] not in schemas[dref[0]]:
             raise _Decline
         sc = _SpatialConjunct("dwithin", None, [ra, rb], [ca, cb], [None])
@@ -480,304 +634,294 @@ def _parse_spatial_conjunct(toks, lo, hi, aliases, schemas):
         sc.keep_refine = True     # original conjunct = exact per-row refine
         return sc
     # ST_KNN(q, o, k, use_spheroid)
-    if len(args) != 4:
-        raise _Decline
-    (ra, ca), (rb, cb) = geo(0), geo(1)
-    k = _literal_number(toks, args[2][0], args[2][1])
-    sph_span = toks[args[3][0]:args[3][1]]
-    if (ra == rb or k is None or k != int(k) or k <= 0
-            or len(sph_span) != 1
-            or sph_span[0].upper() not in ("TRUE", "FALSE")):
+    k = _literal_value(args[2])
+    sph = args[3].d.get("value") if args[3].cls == "Literal" \
+        and args[3].d.get("dataType") == "boolean" else None
+    if k is None or k != int(k) or k <= 0 or sph is None:
         raise _Decline
     return _SpatialConjunct("knn", None, [ra, rb], [ca, cb],
-                            [int(k), sph_span[0].upper() == "TRUE"])
+                            [int(k), sph == "true"])
 
 
-def _refs_relations(toks, lo, hi, aliases, schemas) -> set[str]:
-    """Which of the two join relations does toks[lo:hi] reference?"""
-    out = set()
-    j = lo
-    while j < hi:
-        t = toks[j]
-        if _is_ident(t):
-            a = _unquote(t)
-            if a in aliases and j + 2 < hi and toks[j + 1] == ".":
-                out.add(a)
-                j += 3
-                continue
-            is_fn_call = j + 1 < hi and toks[j + 1] == "("
-            if not is_fn_call and t.upper() not in _NOT_ALIAS:
-                col = _unquote(t)
-                owners = [al for al in aliases if col in schemas[al]]
-                if len(owners) == 1:
-                    out.add(owners[0])
-        j += 1
-    return out
+def _distance_conjunct(e, aliases, schemas):
+    """The comparison form (_distance_comparison) as a dwithin
+    _SpatialConjunct with ``keep_refine`` set, or None."""
+    cmp = _distance_comparison(e)
+    if cmp is None:
+        return None
+    fn, bound = cmp
+    dist = _literal_value(bound)
+    dref = None
+    if dist is None or dist < 0:
+        # column-valued bound: ST_Distance(a.g, b.g) < a.radius
+        # (reference distance_side, spatial_predicate.rs:44-99)
+        dref = _attr_ref(bound, aliases, schemas)
+        if dref is None or dref[1] not in schemas[dref[0]]:
+            return None
+    refs = [_attr_ref(x, aliases, schemas) for x in _args(fn)]
+    if len(refs) != 2 or None in refs or refs[0][0] == refs[1][0]:
+        return None
+    sc = _SpatialConjunct("dwithin", None, [r[0] for r in refs],
+                          [r[1] for r in refs], [dist])
+    sc.dist_col = dref
+    sc.keep_refine = True
+    return sc
 
 
-def _is_equi_conjunct(toks, lo, hi, aliases, schemas, pair) -> bool:
+def _equi_links_pair(e, aliases, schemas, pair) -> bool:
     """x = y with x and y from the two different relations of ``pair``
     (reference declines the spatial rewrite then — optimizer.rs:253-257);
     equi keys touching any other relation are what a chain keeps for
     Catalyst's hash joins."""
-    d = 0
-    for j in range(lo, hi):
-        t = toks[j]
-        if t == "(":
-            d += 1
-        elif t == ")":
-            d -= 1
-        elif d == 0 and t == "=":
-            lhs = _refs_relations(toks, lo, j, aliases, schemas)
-            rhs = _refs_relations(toks, j + 1, hi, aliases, schemas)
-            if lhs and rhs and lhs != rhs and (lhs | rhs) <= set(pair):
-                return True
-    return False
+    if e.cls != "EqualTo":
+        return False
+    lhs, rhs = ({r[0] for x in side.walk()
+                 for r in [_attr_ref(x, aliases, schemas)] if r}
+                for side in e.kids)
+    return bool(lhs and rhs and lhs != rhs and (lhs | rhs) <= set(pair))
 
 
 # ----------------------------------------------------------------------
-# the matcher: one FROM-clause scanner for every routed shape
+# the matcher: one reading of the parse tree for every routed shape
 #
-#   FROM a <join word> b ON c1 AND ...    two relations: the join word
-#                                         picks the mode, across the whole
-#                                         lattice (INNER / LEFT / RIGHT /
-#                                         FULL / SEMI / ANTI)
-#   FROM a, b / a CROSS JOIN b WHERE ...  inner; the conjuncts live in the
-#                                         WHERE (the reference merges the
-#                                         filter into the join first,
-#                                         optimizer.rs:197-261)
-#   FROM a JOIN b ON .. JOIN c ON ..      three or more relations, all
-#   / FROM a, b, c WHERE ...              inner (inner joins commute and
-#                                         associate, so every ON conjunct
-#                                         is a WHERE conjunct): the spatial
-#                                         conjunct picks the pair, the
-#                                         other relations stay in the FROM
-#                                         and Catalyst re-derives their
-#                                         hash joins
-#   FROM a WHERE .. [NOT] EXISTS (        normalized onto FROM a LEFT
-#     SELECT .. FROM b WHERE ..)          SEMI/ANTI JOIN b' ON <the one
-#                                         spatial or a-naming conjunct>,
-#                                         where b' is b pre-filtered by
-#                                         the others
-#                                         (reference SpatialJoinExec
-#                                         LeftSemi/LeftAnti; vanilla Spark
-#                                         cannot decorrelate a Python-UDF
-#                                         predicate)
+#   Join(a, b, type, ON c1 AND ..)      two relations: the join type picks
+#                                       the mode, across the whole lattice
+#                                       (INNER/LEFT/RIGHT/FULL/SEMI/ANTI)
+#   FROM a, b / a CROSS JOIN b WHERE .. inner; the conjuncts live in the
+#                                       WHERE (the reference merges the
+#                                       filter into the join first,
+#                                       optimizer.rs:197-261)
+#   a chain of 3+ inner Joins           the spatial conjunct picks the
+#                                       pair; the other relations stay in
+#                                       the FROM, and every ON conjunct
+#                                       moves to the WHERE, where Catalyst
+#                                       re-derives their hash joins
+#   FROM a WHERE .. AND                 onto FROM a LEFT SEMI/ANTI JOIN b'
+#     Not?(Exists(FROM b WHERE ..))     ON <the one spatial or a-naming
+#                                       conjunct>, b' being b pre-filtered
+#                                       by the others (reference
+#                                       SpatialJoinExec LeftSemi/LeftAnti;
+#                                       vanilla Spark cannot decorrelate a
+#                                       Python-UDF predicate)
 #
-# Every shape then runs the one pair-join core (_rewrite).  The matcher
-# declines NATURAL / USING / LATERAL joins, repeated aliases, a 3+ chain
-# with an outer/semi/anti join word or a bare ``*`` (the output column
-# order would follow the view, not the FROM list), an EXISTS subquery with
-# joins / GROUP BY / ... or with other than exactly one spatial or
-# outer-naming conjunct, and top-level OR / NOT in a conjunct list.  The core
-# declines when no conjunct is spatial, spatial conjuncts name different
-# pairs, an equi key links the pair (hash join wins — reference
-# optimizer.rs:253-257), KNN sits outside an inner join, a radius
-# column lives outside the pair, or a pair alias inside a moved ON
-# conjunct is re-declared by a subquery there.  The emitter maps only the
-# `alias.col` tokens that bind to the matched query block
-# (_query_scopes): a subquery or UNION branch that declares the alias
-# again keeps its own text.
+# Relations are SubqueryAlias / UnresolvedRelation nodes, conjuncts the
+# AND operands of Join and Filter conditions, and an ``alias.col`` binds
+# to the innermost query block declaring the alias (_Block: Spark's own
+# scoping).  Every shape then runs the one pair-join core (_rewrite).
+# The matcher declines NATURAL / USING / LATERAL joins, repeated aliases,
+# a chain with an outer/semi/anti join or a bare ``*`` in its block (the
+# output column order would follow the view, not the FROM list), an
+# EXISTS outside the statement's own block or over anything but one
+# relation, calls in its select list (an aggregate always has a row), or
+# other than one spatial or outer-naming conjunct.  The core declines
+# when no conjunct is spatial, spatial conjuncts name different pairs, an
+# equi key links the pair (hash join wins — reference
+# optimizer.rs:253-257), KNN sits outside an inner join, a radius column
+# lives outside the pair, or a subquery in a moved ON conjunct declares a
+# pair alias again.  The emitter splices only the references bound to
+# the matched block: a subquery or set-operation branch that declares a
+# pair alias again keeps its own text.
 # ----------------------------------------------------------------------
-
-# join words -> the mode of the join they introduce; "cross" (a comma or
-# CROSS JOIN) is an inner join whose condition lives in the WHERE clause
-_JOIN_KINDS = {
-    (",",): "cross", ("CROSS", "JOIN"): "cross",
-    ("JOIN",): "inner", ("INNER", "JOIN"): "inner",
-    ("LEFT", "JOIN"): "left", ("LEFT", "OUTER", "JOIN"): "left",
-    ("RIGHT", "JOIN"): "right", ("RIGHT", "OUTER", "JOIN"): "right",
-    ("FULL", "JOIN"): "full", ("FULL", "OUTER", "JOIN"): "full",
-    ("SEMI", "JOIN"): "left_semi", ("LEFT", "SEMI", "JOIN"): "left_semi",
-    ("ANTI", "JOIN"): "left_anti", ("LEFT", "ANTI", "JOIN"): "left_anti",
-}
-
-
-def _join_kind(toks, j):
-    """(mode, index past the words) of the join words at token j, or
-    (None, j)."""
-    for w in (3, 2, 1):
-        kind = _JOIN_KINDS.get(tuple(t.upper() for t in toks[j:j + w]))
-        if kind is not None:
-            return kind, j + w
-    return None, j
-
-
-def _span_end(toks, depths, k, d, stops, joins=False):
-    """End of the clause starting at token k of a depth-d block: the
-    first depth-d token in ``stops`` (or join word, with ``joins``), or
-    the block's close."""
-    n = len(toks)
-    while k < n and depths[k] >= d:
-        if depths[k] == d and (toks[k].upper() in stops
-                               or (joins and _join_kind(toks, k)[0])):
-            break
-        k += 1
-    return k
-
-
-def _scan_from(toks, depths, i):
-    """The FROM clause at token i -> (relations, join modes, ON spans
-    (None after a cross join), clause end)."""
-    n, d = len(toks), depths[i]
-    rel, j = _parse_rel(toks, i + 1)
-    rels, kinds, ons = [rel], [], []
-    while j < n and depths[j] == d:
-        kind, j = _join_kind(toks, j)
-        if kind is None:
-            break
-        rel, j = _parse_rel(toks, j)
-        on = None
-        if kind != "cross":
-            if not (j < n and toks[j].upper() == "ON"):
-                raise _Decline           # USING (...)
-            on = (j + 1, _span_end(toks, depths, j + 1, d, _BLOCK_END,
-                                   joins=True))
-            j = on[1]
-        rels.append(rel)
-        kinds.append(kind)
-        ons.append(on)
-    if j < n and depths[j] == d and toks[j].upper() not in _BLOCK_END:
-        raise _Decline                   # NATURAL / LATERAL / ...
-    return rels, kinds, ons, j
-
 
 # A FROM clause the rewrite may route: its relations, the join mode of
-# its spatial pair, and the ON / WHERE conjunct spans to classify.  The
-# emitter replaces tokens [from_idx, end) — the FROM clause — and turns
-# ``true_span`` (an EXISTS conjunct) into TRUE.
-_Match = namedtuple("_Match", "from_idx end rels how on where true_span",
-                    defaults=(None,))
+# its spatial pair, the ON / WHERE conjuncts to classify, the conjuncts
+# the emitter turns into TRUE (an EXISTS), the query block, its
+# select-list node, the WHERE condition, the FROM clause's first and
+# last nodes (the text the emitter replaces), and every condition's
+# (conjuncts, node its text follows, whole condition) for _check_clause.
+_Match = namedtuple("_Match", "rels how on where true block proj "
+                              "where_cond first last clauses")
 
 
-_SET_OPS = {"UNION", "INTERSECT", "EXCEPT", "MINUS"}
+def _check_clause(conjs, after, whole) -> None:
+    """Decline unless the conjuncts' offsets read as their clause: each
+    inside the whole condition and after the node ``after`` (the clause
+    follows it), and no two overlapping.  A node the parser built outside
+    its own origin scope carries an enclosing clause's offsets, which
+    fails this."""
+    spans = sorted(c.span() for c in conjs)
+    lo, hi = whole.span()
+    if spans[0][0] < max(lo, after.span()[1]) or spans[-1][1] > hi \
+            or any(a[1] > b[0] for a, b in zip(spans, spans[1:])):
+        raise _Decline
 
 
-def _query_scopes(toks, depths):
-    """(lo, hi, depth, aliases) of every query block with a FROM clause:
-    its SELECT up to a set operator at its depth or the close of its
-    parentheses.  ``aliases`` (the FROM clause's relation aliases) is
-    None when the clause does not parse.  An ``alias.col`` token binds
-    to the innermost block that declares the alias."""
-    scopes = []
-    for f, t in enumerate(toks):
-        if t.upper() != "FROM":
+def _from_rel(node) -> _Rel:
+    """A FROM-clause relation node -> _Rel (raises _Decline on a table
+    function, a parenthesized join, VALUES, ...)."""
+    inner = node.kids[0] if node.cls == "SubqueryAlias" else node
+    if inner.cls == "UnresolvedRelation":
+        alias = (node.d["identifier"]["name"] if node is not inner
+                 else inner.parts()[-1])
+        return _Rel(alias, False, node=node)
+    if node.cls != "SubqueryAlias" or inner.cls not in _QUERY_NODES:
+        raise _Decline
+    return _Rel(node.d["identifier"]["name"], True, node=node)
+
+
+def _shadow_base(node):
+    """The UnresolvedRelation whose point certificate a relation keeps:
+    its own, or under ``(SELECT * FROM <name> [WHERE/ORDER/LIMIT ...])``
+    — the shadow invariant is per-row (bit-equal doubles, matched NULLs),
+    so any row FILTER or subset preserves it and a bare ``*`` preserves
+    the columns; any other projection shape declines (column identity
+    not tracked)."""
+    n = node.kids[0] if node.cls == "SubqueryAlias" else node
+    while n.cls in ("GlobalLimit", "LocalLimit", "Sort"):
+        n = n.kids[0]
+    if n.cls == "Project":
+        star = n.exprs[0] if len(n.exprs) == 1 else None
+        if star is None or star.cls != "UnresolvedStar" or star.parts():
+            return None
+        n = n.kids[0]
+        if n.cls == "Filter":
+            n = n.kids[0]
+        if n.cls == "SubqueryAlias":
+            n = n.kids[0]
+    return n if n.cls == "UnresolvedRelation" else None
+
+
+def _block_of(f):
+    """(plan nodes top down, select-list node, WHERE Filter or None) of
+    the query block whose FROM clause is ``f``, or None when ``f`` is not
+    a FROM clause under exactly one Project / Aggregate."""
+    chain, n = [], f.up
+    while n is not None and n.cls in _BLOCK_NODES and n.block is f.block:
+        chain.insert(0, n)
+        n = n.up
+    projs = [c for c in chain if c.cls in ("Project", "Aggregate")]
+    if len(projs) != 1:
+        return None
+    below = chain[chain.index(projs[0]) + 1:]
+    return chain, projs[0], (below[0] if below and below[0].cls == "Filter"
+                             else None)
+
+
+def _tree_matches(tree):
+    """Every FROM clause of the query the core may route: a Join tree,
+    or one relation whose WHERE holds an EXISTS; outer query blocks
+    before the blocks nested in them."""
+    for f in tree.root.walk():
+        if f.cls not in ("Join", "SubqueryAlias", "UnresolvedRelation") \
+                or f.up is None or f.up.cls not in _BLOCK_NODES:
             continue
-        d = depths[f]
-        lo = f - 1
-        while lo >= 0 and depths[lo] >= d and not (
-                depths[lo] == d and toks[lo].upper() in _SET_OPS | {"SELECT"}):
-            lo -= 1
-        if lo < 0 or depths[lo] != d or toks[lo].upper() != "SELECT":
-            continue                     # EXTRACT(.. FROM ..) and kin
-        hi = _span_end(toks, depths, f + 1, d, _SET_OPS)
+        blk = _block_of(f)
+        if blk is None:
+            continue
+        chain, proj, where = blk
         try:
-            aliases = {r.alias for r in _scan_from(toks, depths, f)[0]}
-        except _Decline:
-            aliases = None
-        scopes.append((lo, hi, d, aliases))
-    return scopes
-
-
-def _binding_scope(scopes, k, alias):
-    """The innermost query block around token k that declares ``alias``
-    (or whose FROM clause did not parse), or None."""
-    return max((s for s in scopes if s[0] <= k < s[1]
-                and (s[3] is None or alias in s[3])),
-               key=lambda s: s[2], default=None)
-
-
-def _joins_outer(toks, depths, lo, hi, alias) -> bool:
-    """Whether the EXISTS conjunct toks[lo:hi] belongs in the join
-    condition: it holds an ``alias.col`` reference to the outer relation
-    or is a spatial-predicate call (whose bare geometry names resolve
-    against both sides)."""
-    lo, hi = _unparen(toks, depths, lo, hi)
-    if toks[lo].upper() in _SPATIAL_CALLS and toks[lo + 1:lo + 2] == ["("]:
-        return True
-    return any(_is_ident(toks[j]) and _unquote(toks[j]) == alias
-               and toks[j + 1] == "." for j in range(lo, hi - 2))
-
-
-def _matches(toks, depths):
-    """Every FROM clause of the query the core may route, in text order."""
-    for i, t in enumerate(toks):
-        if t.upper() != "FROM":
-            continue
-        try:
-            rels, kinds, ons, end = _scan_from(toks, depths, i)
-            where = None
-            if end < len(toks) and toks[end].upper() == "WHERE":
-                where = (end + 1, _span_end(toks, depths, end + 1, depths[i],
-                                            _BLOCK_END - {"WHERE"}))
-            if len(rels) == 1:
-                if depths[i] == 0 and where is not None:
-                    for lo, hi in _split_conjuncts(toks, *where):
-                        m = _exists_match(toks, depths, i, rels[0], lo, hi)
-                        if m is not None:
-                            yield m
-                continue
-            if len({r.alias for r in rels}) != len(rels):
-                continue
-            if len(rels) > 2 and (set(kinds) - {"inner", "cross"} or any(
-                    t2 == "*" and k and toks[k - 1] not in (".", "(")
-                    and not any(r.start <= k < r.end for r in rels)
-                    for k, t2 in enumerate(toks))):
-                continue
-            on = [c for span in ons if span is not None
-                  for c in _split_conjuncts(toks, *span)]
-            wh = (_split_conjuncts(toks, *where)
-                  if where is not None and (len(rels) > 2 or "cross" in kinds)
-                  else [])
-            how = kinds[0] if len(rels) == 2 and kinds[0] != "cross" \
-                else "inner"
-            yield _Match(i, end, rels, how, on, wh)
+            if f.cls == "Join":
+                m = _join_match(f, chain, proj, where)
+                if m is not None:
+                    yield m
+            elif where is not None and f.block.top:
+                rel1 = _from_rel(f)
+                for c in _conjuncts(where.exprs[0]):
+                    m = _semi_match(rel1, c, proj, where)
+                    if m is not None:
+                        yield m
         except _Decline:
             continue
 
 
-def _exists_match(toks, depths, i, rel1, lo, hi):
-    """The conjunct toks[lo:hi] of ``FROM rel1 WHERE ...`` as a semi/anti
+def _join_match(f, chain, proj, where):
+    """The _Match of the Join tree ``f`` (None when it has no spatial
+    conjunct); raises _Decline on a shape the core does not take."""
+    rels, kinds, on, clauses = [], [], [], []
+
+    def flatten(n):
+        if n.cls != "Join":
+            rels.append(_from_rel(n))
+            return
+        how = _JOIN_TYPES.get(n.d["joinType"].get("object", "")
+                              .rsplit(".", 1)[-1])
+        if how is None:
+            raise _Decline                  # NATURAL / USING
+        flatten(n.kids[0])
+        flatten(n.kids[1])
+        cond = n.exprs[0] if n.exprs else None
+        kinds.append("cross" if cond is None and how == "inner" else how)
+        if cond is not None:
+            on.extend(_conjuncts(cond))
+            clauses.append((_conjuncts(cond), n.kids[1], cond))
+
+    flatten(f)
+    if len({r.alias for r in rels}) != len(rels):
+        raise _Decline
+    if len(rels) > 2 and (set(kinds) - {"inner", "cross"} or any(
+            x.cls == "UnresolvedStar" and not x.parts()
+            and x.block is f.block for c in chain for e in c.exprs
+            for x in e.walk())):
+        raise _Decline
+    cond = where.exprs[0] if where is not None else None
+    if cond is not None:
+        clauses.append((_conjuncts(cond), f, cond))
+    wh = (_conjuncts(cond)
+          if cond is not None and (len(rels) > 2 or "cross" in kinds)
+          else [])
+    if not any(_maybe_spatial(c) for c in on + wh):
+        return None
+    how = kinds[0] if len(rels) == 2 and kinds[0] != "cross" else "inner"
+    return _Match(rels, how, on, wh, (), f.block, proj, cond,
+                  rels[0].node, f, clauses)
+
+
+def _semi_match(rel1, c, proj, where):
+    """The WHERE conjunct ``c`` of ``FROM rel1 WHERE ...`` as a semi/anti
     _Match when it is ``[NOT] EXISTS (SELECT .. FROM r2 b [WHERE ..])``,
     else None.  The one conjunct that is a spatial predicate or names
     rel1 becomes the ON clause; the others pre-filter r2 as
     ``(SELECT * FROM r2 AS b WHERE ..) b`` (exact EXISTS semantics; a bare
     name of rel1 there fails analysis, which declines), and that shape
-    keeps r2's certificate (_subquery_shadow_base)."""
-    p = lo + (toks[lo].upper() == "NOT")
-    if not (p + 1 < hi and toks[p].upper() == "EXISTS"
-            and toks[p + 1] == "(" and toks[hi - 1] == ")"):
+    keeps r2's certificate (_shadow_base)."""
+    ex = c.kids[0] if c.cls == "Not" else c
+    if ex.cls != "Exists":
         return None
-    sub_lo, sub_hi = p + 2, hi - 1
-    ds = depths[sub_lo]
-    f = next((k for k in range(sub_lo, sub_hi) if depths[k] == ds
-              and toks[k].upper() in _BLOCK_END | {"FROM"}), None)
-    if f is None or toks[f].upper() != "FROM":
-        return None
+    n = ex.plans[0]
+    if n.cls == "Distinct":
+        n = n.kids[0]
+    if n.cls != "Project" or any(_call_name(x) is not None for e in n.exprs
+                                 for x in e.walk()):
+        return None                  # an aggregate always has one row
+    n = n.kids[0]
+    conjs, inner = [], n
+    if n.cls == "Filter":
+        conjs = _conjuncts(n.exprs[0])
+        n = n.kids[0]
     try:
-        rels, _, _, end = _scan_from(toks, depths, f)
-        conjs = []
-        if end < sub_hi:
-            if toks[end].upper() != "WHERE" or any(
-                    depths[k] == ds and toks[k].upper() in _BLOCK_END
-                    for k in range(end + 1, sub_hi)):
-                return None
-            conjs = _split_conjuncts(toks, end + 1, sub_hi)
+        rel2 = _from_rel(n)
     except _Decline:
         return None
-    outer = [c for c in conjs if _joins_outer(toks, depths, *c, rel1.alias)]
-    if len(rels) != 1 or rels[0].alias == rel1.alias or len(outer) != 1:
+
+    def joins_outer(x):
+        # an ``alias.col`` reference to the outer relation, or a spatial
+        # predicate call (whose bare geometry names resolve against
+        # both sides)
+        return _call_name(x) in _SPATIAL_CALLS or any(
+            y.cls == "UnresolvedAttribute" and len(y.parts()) > 1
+            and y.parts()[0] == rel1.alias for y in x.walk())
+
+    outer = [x for x in conjs if joins_outer(x)]
+    if rel2.alias == rel1.alias or len(outer) != 1 \
+            or not _maybe_spatial(outer[0]):
         return None
-    rel2 = rels[0]
-    pre = [c for c in conjs if c not in outer]
+    clauses = [(_conjuncts(where.exprs[0]), rel1.node, where.exprs[0])]
+    if conjs:
+        clauses.append((conjs, rel2.node, inner.exprs[0]))
+    pre = [x for x in conjs if x is not outer[0]]
     if pre:
+        try:
+            _check_clause(*clauses[1])
+        except _Decline:
+            return None
         src = f"( {rel2.text} )" if rel2.is_subquery else rel2.text
-        cond = " AND ".join("( " + _render(toks[a:b]) + " )" for a, b in pre)
-        rel2 = _Rel(rel2.start, rel2.end, rel2.alias, True,
-                    f"SELECT * FROM {src} AS `{rel2.alias}` WHERE {cond}")
-    return _Match(i, rel1.end, [rel1, rel2],
-                  "left_anti" if p > lo else "left_semi", outer, [],
-                  true_span=(lo, hi))
+        cond = " AND ".join(f"( {x.text()} )" for x in pre)
+        rel2 = _Rel(rel2.alias, True,
+                    f"SELECT * FROM {src} AS `{rel2.alias}` WHERE {cond}",
+                    node=rel2.node)
+    return _Match([rel1, rel2], "left_anti" if c is not ex else "left_semi",
+                  outer, [], (c,), rel1.node.block, proj, where.exprs[0],
+                  rel1.node, rel1.node, clauses)
 
 
 # ----------------------------------------------------------------------
@@ -839,11 +983,10 @@ def _map_alias_refs(span, aliases, out_name, prefix="") -> list[str]:
     return res
 
 
-def _run_over_view(joined, vname, out, vanilla_sql) -> DataFrame:
-    """Register ``joined`` as ``vname`` and run the rebuilt query tokens
-    ``out`` over it, tagged with their text for the rewrite memo."""
+def _run_over_view(joined, vname, rewritten, vanilla_sql) -> DataFrame:
+    """Register ``joined`` as ``vname`` and run the rebuilt query text
+    over it, tagged with its text for the rewrite memo."""
     joined.createOrReplaceTempView(vname)
-    rewritten = _render(out)
     result = vanilla_sql(rewritten)
     result._sedona_rewritten_sql = rewritten
     return result
@@ -853,27 +996,18 @@ def try_rewrite(spark: SparkSession, sql: str, vanilla_sql,
                 vname: str) -> DataFrame | None:
     """Attempt the spatial-join rewrite, registering the join under the
     temp view ``vname``; None means 'use vanilla'.  The first FROM clause
-    (in text order) the core routes wins."""
+    the core routes wins, outer query blocks first."""
     if not _PRECHECK.search(sql):
         return None
-    toks = _tokenize(sql)
-    if toks is None:
+    tree = _parse_plan(spark, sql)
+    if tree is None:
         return None
-    depths = _depths(toks)
-    for m in _matches(toks, depths):
+    for m in _tree_matches(tree):
         try:
-            return _rewrite(spark, toks, depths, m, vanilla_sql, vname)
+            return _rewrite(spark, m, vanilla_sql, vname)
         except _Decline:
             continue
     return None
-
-
-def _unparen(toks, depths, lo, hi) -> tuple[int, int]:
-    """A conjunct span without one pair of enclosing parentheses."""
-    if (toks[lo] == "(" and toks[hi - 1] == ")"
-            and min(depths[lo + 1:hi - 1] or [0]) > depths[lo]):
-        return lo + 1, hi - 1
-    return lo, hi
 
 
 def _candidate_rank(sc) -> int:
@@ -887,52 +1021,65 @@ def _candidate_rank(sc) -> int:
     return 2
 
 
-def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
+def _splice(text: str, edits) -> str:
+    """``text`` with each (start, end, replacement) edit applied; edits
+    must not overlap (an insertion sorts before a replacement starting at
+    its offset)."""
+    out, pos = [], 0
+    for lo, hi, rep in sorted(edits, key=lambda e: e[:2]):
+        if lo < pos:
+            raise _Decline
+        out += [text[pos:lo], rep]
+        pos = hi
+    return "".join(out) + text[pos:]
+
+
+def _ref_text(x) -> str:
+    """The text of a spliced ``alias.col`` / ``alias.*`` / ``*`` node,
+    checked against its name parts (the splice must replace exactly that
+    reference)."""
+    txt = x.text()
+    toks = _tokenize(txt) or []
+    want = x.parts() + (["*"] if x.cls == "UnresolvedStar" else [])
+    if [_unquote(t) for t in toks[::2]] != want \
+            or any(t != "." for t in toks[1::2]):
+        raise _Decline
+    return txt
+
+
+def _rewrite(spark, m: _Match, vanilla_sql, vname):
     """The pair-join core: route the spatial pair of ``m`` through the
     engine's operators and run the rebuilt query over the join view."""
     from pyspark.sql import functions as F
 
-    # the query block of the matched FROM clause: only its own
-    # `alias.col` / `alias.*` tokens (and correlated ones in blocks
-    # nested in it that do not declare the alias again) refer to the pair
-    scopes = _query_scopes(toks, depths)
-    d = depths[m.from_idx]
-    mine = next((s for s in scopes if s[0] < m.from_idx < s[1]
-                 and s[2] == d), None)
-    if mine is None:
-        raise _Decline
-
-    def binds_here(k, a) -> bool:
-        s = _binding_scope(scopes, k, a)
-        if s is not None and s[3] is None:
-            raise _Decline               # a nested FROM we cannot read
-        return s is mine
-
+    tree = m.first.tree
     dfs = {r.alias: _resolve_df(spark, vanilla_sql, r) for r in m.rels}
     aliases = tuple(dfs)
     full = dict(dfs)
+    refs = [x for x in tree.root.walk()
+            if x.cls in ("UnresolvedAttribute", "UnresolvedStar")]
+
+    def bound_here(x) -> bool:
+        # an ``alias.col`` / ``alias.*`` naming a relation of the
+        # matched block (Spark's innermost-declaring-block scoping)
+        p = x.parts()
+        return (len(p) > (x.cls == "UnresolvedAttribute") and p[0] in aliases
+                and x.block.binding(p[0]) is m.block)
 
     # column pruning through the rewrite boundary: the join view would
     # otherwise drag every source column through the operator's Arrow/
-    # python stages (any SQL column reference appears as its literal
-    # identifier token, so keeping every mentioned name is safe).
-    # A bare `*` keeps every side whole, `alias.*` of the matched block
-    # keeps that side whole; `count(*)`-style stars (token directly
-    # after "(") don't block, nor, in a 3+ chain, the stars inside a
-    # relation's own subquery.
-    skip = [r for r in m.rels if r.is_subquery] if len(m.rels) > 2 else []
+    # python stages (keeping every name the query mentions is safe).  A
+    # bare `*` of the matched block keeps every side whole, and an
+    # `alias.*` bound to it keeps that side whole; a `*` of any other
+    # block (a relation's own subquery, a nested subquery) is that
+    # block's.
     star_sides = set()
-    for i, t in enumerate(toks):
-        if (t != "*" or (i > 0 and toks[i - 1] == "(")
-                or any(r.start <= i < r.end for r in skip)):
-            continue
-        if i >= 2 and toks[i - 1] == "." and _is_ident(toks[i - 2]):
-            a = _unquote(toks[i - 2])
-            if a in aliases and binds_here(i - 2, a):
-                star_sides.add(a)
-        else:
+    for x in refs:
+        if x.cls == "UnresolvedStar" and not x.parts() and x.block is m.block:
             star_sides.update(aliases)
-    mentioned = {_unquote(t) for t in toks if _is_ident(t)}
+        elif x.cls == "UnresolvedStar" and bound_here(x):
+            star_sides.add(x.parts()[0])
+    mentioned = tree.names()
     for a in aliases:
         if a not in star_sides:
             dfs[a] = dfs[a].select([c for c in dfs[a].columns
@@ -940,13 +1087,12 @@ def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
     schemas = {a: set(df.columns) for a, df in dfs.items()}
 
     spatials, rest = [], []
-    for span in m.on + m.where:
-        sc = _parse_spatial_conjunct(toks, *_unparen(toks, depths, *span),
-                                     aliases, schemas)
+    for c in m.on + m.where:
+        sc = _spatial_conjunct(c, aliases, schemas)
         if sc is None:
-            rest.append(span)
+            rest.append(c)
         else:
-            spatials.append((sc, span))
+            spatials.append((sc, c))
     if not spatials:
         raise _Decline
     # two+ spatial predicates (e.g. ST_Intersects(a,b) AND
@@ -959,12 +1105,11 @@ def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
         if any(sc.kind == "knn" for sc, _ in spatials):
             raise _Decline
         spatials.sort(key=lambda p: _candidate_rank(p[0]))
-    spatial, spatial_span = spatials[0]
+    spatial, spatial_c = spatials[0]
     pair = tuple(a for a in aliases if a in spatial.arg_rels)
     if any(set(sc.arg_rels) != set(pair) for sc, _ in spatials):
         raise _Decline
-    if any(_is_equi_conjunct(toks, *_unparen(toks, depths, *span),
-                             aliases, schemas, pair) for span in rest):
+    if any(_equi_links_pair(c, aliases, schemas, pair) for c in rest):
         raise _Decline               # equi-key present: hash join wins
     if spatial.kind == "knn" and m.how != "inner":
         raise _Decline
@@ -982,18 +1127,18 @@ def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
     # result, so match tracking is unchanged — an outer WHERE would
     # instead drop padded LEFT rows / flip anti verdicts).  WHERE
     # conjuncts stay in place; the spatial one there becomes TRUE.
-    extra = [span for _, span in spatials[1:]]
+    extra = [c for _, c in spatials[1:]]
     if spatial.keep_refine:
-        extra.append(spatial_span)
-    on_rest = [s for s in rest if s in m.on]
-    on_extra = [s for s in extra if s in m.on]
+        extra.append(spatial_c)
+    on_rest = [c for c in rest if c in m.on]
+    on_extra = [c for c in extra if c in m.on]
     if m.how == "inner":
         moved, refines = on_rest + on_extra, []
     else:
         moved, refines = [], on_extra + on_rest
-    true_at = dict([m.true_span] if m.true_span is not None else [])
-    if not spatial.keep_refine and spatial_span in m.where:
-        true_at[spatial_span[0]] = spatial_span[1]
+    true = list(m.true)
+    if not spatial.keep_refine and spatial_c in m.where:
+        true.append(spatial_c)
 
     # -------- certified shadow coordinates (round 12) ----------------
     # When a side's geometry argument is a shadow-certified point
@@ -1004,23 +1149,17 @@ def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
     # doubles (no Python bbox pass), refine conjuncts substitute them
     # via _subst_certified_calls, and — when nothing else references
     # the geometry — its ST_Point constructor prunes out of the plan
-    # entirely.
+    # entirely.  A `SELECT * FROM <name> [WHERE ...]` subquery keeps the
+    # name's certificate (_shadow_base).
     geom = dict(zip(spatial.arg_rels, spatial.arg_cols))
     rel_of = {r.alias: r for r in m.rels}
     shadows: dict[str, dict[str, tuple]] = {}
     for a in pair:
-        rel = rel_of[a]
-        # a bare `SELECT * FROM <name> [WHERE ...]` subquery keeps the
-        # base relation's certificate: the shadow invariant is per-row
-        # (bit-equal doubles, matched NULLs), so any row FILTER
-        # preserves it and `*` preserves the columns; any other
-        # projection shape declines (column identity not tracked)
-        tbl = (_subquery_shadow_base(rel.text) if rel.is_subquery
-               else rel.text)
-        if tbl is None:
+        base = _shadow_base(rel_of[a].node)
+        if base is None:
             continue
         try:
-            xy = _relation_shadow(spark, tbl, geom[a])
+            xy = _relation_shadow(spark, base.text(), geom[a])
         except Exception:
             xy = None
         full_cols = full[a].columns
@@ -1056,29 +1195,21 @@ def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
         da, dc = spatial.dist_col
         spatial.dist_col_resolved = (da, out_name(da, dc))
 
-    def map_span(lo, hi, prefix=""):
-        """_map_alias_refs over a conjunct span, with certified-scalar
-        calls substituted by native shadow arithmetic first (round 12)."""
-        for k in range(lo, hi - 1):
-            a = _unquote(toks[k])
-            if a in pair and toks[k + 1] == ".":
-                s = _binding_scope(scopes, k, a)
-                if s is not None and lo <= s[0] < hi:
-                    raise _Decline       # a subquery in it re-declares a
-        seg = toks[lo:hi]
+    def map_conj(c, prefix=""):
+        """A moved or refine conjunct's text with its pair references
+        mapped onto the view (_map_alias_refs), certified-scalar calls
+        substituted by native shadow arithmetic first (round 12)."""
+        if any(x.block.aliases & set(pair) for x in c.walk()
+               if x.block is not c.block):
+            raise _Decline           # a subquery in it re-declares a pair alias
+        seg = _tokenize(c.text())
+        if seg is None:
+            raise _Decline
         if shadows:
             seg = _subst_certified_calls(seg, shadows, aliases,
                                          schemas) or seg
-        return _map_alias_refs(seg, pair, out_name, prefix)
-
-    # the view's `alias.col` / `alias.*` tokens (semi/anti views hold the
-    # left side only) that bind to the matched block
-    shown = pair if m.how not in ("left_semi", "left_anti") else (a1,)
-    view_refs = {k for k in range(len(toks) - 2)
-                 if _is_ident(toks[k]) and _unquote(toks[k]) in shown
-                 and toks[k + 1] == "."
-                 and (toks[k + 2] == "*" or _is_ident(toks[k + 2]))
-                 and binds_here(k, _unquote(toks[k]))}
+        return "( " + _render(_map_alias_refs(seg, pair, out_name,
+                                              prefix)) + " )"
 
     pj = _Pair(rel_of[a1], rel_of[a2], m.how)
     if refines:
@@ -1088,8 +1219,7 @@ def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
         # the requested mode from row-id match tracking — semantically
         # `ON (c1 AND c2 AND ...)`, because the refined inner result IS
         # the true match set and a refine only ever shrinks it.
-        refine_sql = " AND ".join(
-            "( " + _render(map_span(lo, hi)) + " )" for lo, hi in refines)
+        refine_sql = " AND ".join(map_conj(c) for c in refines)
 
         def _refined_inner(l2, r2):
             return _build_join(spark, pj._replace(how="inner"), spatial,
@@ -1106,15 +1236,16 @@ def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
         joined = _build_join(spark, pj, spatial, ldf, rdf_r, g1, g2,
                              sxy1=sxy1, sxy2=sxy2)
 
-    # -------- the emitter: the FROM clause becomes the relations outside
-    # the pair plus the join view; moved ON conjuncts open the WHERE,
-    # ahead of the original WHERE in parentheses; the view's `alias.col` /
-    # `alias.*` tokens map onto its columns, and an unaliased select-list
-    # reference to a renamed column gets AS back to its own name, so the
-    # output schema matches vanilla planning.  A bare `*` select item is
-    # spelled as every visible relation's `alias.*`, in FROM order.
+    # -------- the emitter: splices the text at the tree's offsets.  The
+    # FROM clause becomes the relations outside the pair plus the join
+    # view; moved ON conjuncts open the WHERE, ahead of the original
+    # WHERE in parentheses; the view's `alias.col` / `alias.*` references
+    # bound to the matched block map onto its columns, and an unaliased
+    # select-list reference to a renamed column gets AS back to its own
+    # name, so the output schema matches vanilla planning.  A bare `*`
+    # select item is spelled as every visible relation's `alias.*`, in
+    # FROM order.
     view = f"`{vname}`."
-    sel = mine[0]
 
     def star(a, in_select):
         if a not in pair:
@@ -1126,65 +1257,67 @@ def _rewrite(spark, toks, depths, m: _Match, vanilla_sql, vname):
 
     # an ST_KNN view also carries knn_distance (vanilla cannot plan the
     # join, so its `SELECT *` keeps the view's columns): after the pair
+    shown = pair if m.how not in ("left_semi", "left_anti") else (a1,)
     visible = [r.alias for r in m.rels if r.alias not in pair
                or r.alias in shown]
     stars = [star(a, True) for a in visible]
     if spatial.kind == "knn":
         last = max(i for i, a in enumerate(visible) if a in pair)
         stars[last] += f" , {view}`knn_distance`"
-    bare_star = " , ".join(stars)
-    out = []
-    k, n, close_at = 0, len(toks), None
-    while k < n:
-        if k == close_at:
-            out.append(")")
-        if k == m.from_idx:
-            out.append("FROM")
-            out.append(" , ".join([_render(toks[r.start:r.end])
-                                   for r in m.rels if r.alias not in pair]
-                                  + [vname]))
-            k = m.end
-            if moved:
-                out.append("WHERE")
-                out.append(" AND ".join(
-                    "( " + _render(map_span(lo, hi, view)) + " )"
-                    for lo, hi in moved))
-                if k < n and toks[k].upper() == "WHERE":
-                    out.extend(["AND", "("])
-                    close_at = _span_end(toks, depths, k + 1, d,
-                                         _BLOCK_END - {"WHERE"})
-                    k += 1
+
+    def spliced_away(x) -> bool:
+        # inside the replaced FROM clause or a conjunct that becomes TRUE
+        while x is not None:
+            if x is m.last or any(x is c for c in true):
+                return True
+            x = x.up
+        return False
+
+    used = moved + refines + true
+    for conjs, after, whole in m.clauses:
+        if any(c is u for c in conjs for u in used) \
+                or (moved and whole is m.where_cond):
+            _check_clause(conjs, after, whole)
+    lo, hi = m.first.span()[0], m.last.span()[1]
+    new_from = " , ".join([r.node.text() for r in m.rels
+                           if r.alias not in pair] + [vname])
+    edits = []
+    if moved:
+        cond = " AND ".join(map_conj(c, view) for c in moved)
+        if m.where_cond is None:
+            new_from += f" WHERE {cond}"
+        else:
+            wlo, whi = m.where_cond.span()
+            edits += [(wlo, wlo, f"{cond} AND ( "), (whi, whi, " )")]
+    edits.append((lo, hi, f" {new_from} "))
+    edits += [(*c.span(), " TRUE ") for c in true]
+    for x in refs:
+        item = x.up is m.proj and x.field in ("projectList",
+                                              "aggregateExpressions")
+        if x.cls == "UnresolvedStar" and not x.parts() \
+                and x.block is m.block and not spliced_away(x):
+            if not item:
+                raise _Decline       # `f(*)` over the view's columns
+            _ref_text(x)
+            edits.append((*x.span(), " " + " , ".join(stars) + " "))
             continue
-        if k in true_at:
-            out.append("TRUE")
-            k = true_at[k]
+        if not (bound_here(x) and x.parts()[0] in shown) \
+                or spliced_away(x):
             continue
-        if (toks[k] == "*" and sel < k < m.from_idx and depths[k] == d
-                and toks[k - 1].upper() in ("SELECT", "DISTINCT", "ALL", ",")
-                and (k + 1 == m.from_idx or toks[k + 1] == ",")):
-            out.append(bare_star)
-            k += 1
-            continue
-        if k in view_refs:
-            a = _unquote(toks[k])
-            in_select = sel < k < m.from_idx and depths[k] == d
-            if toks[k + 2] == "*":
-                out.append(star(a, in_select))
-            else:
-                col = _unquote(toks[k + 2])
-                v = out_name(a, col)
-                item = (in_select and toks[k - 1].upper() in (
-                    "SELECT", "DISTINCT", "ALL", ",")
-                    and (k + 3 == m.from_idx or toks[k + 3] == ","))
-                out.append(f"{view}`{v}`"
-                           + (f" AS `{col}`" if item and v != col else ""))
-            k += 3
-            continue
-        out.append(toks[k])
-        k += 1
-    if close_at == n:
-        out.append(")")
-    return _run_over_view(joined, vname, out, vanilla_sql)
+        _ref_text(x)
+        a = x.parts()[0]
+        if x.cls == "UnresolvedStar":
+            rep = star(a, item)
+        else:
+            col = x.parts()[1]
+            v = out_name(a, col)
+            rep = "".join([f"{view}`{v}`"]
+                          + [f".`{p}`" for p in x.parts()[2:]])
+            if item and len(x.parts()) == 2 and v != col:
+                rep += f" AS `{col}`"
+        edits.append((*x.span(), f" {rep} "))
+    return _run_over_view(joined, vname, _splice(tree.text, edits),
+                          vanilla_sql)
 
 
 def _probe_geometry(df, col, n=64) -> tuple:
@@ -1698,16 +1831,8 @@ def rewrite_relate_pattern(sql: str) -> str | None:
                     or i + 1 >= len(toks) or toks[i + 1] != "(":
                 i += 1
                 continue
-            d, j = 0, i + 1
-            while j < len(toks):
-                if toks[j] == "(":
-                    d += 1
-                elif toks[j] == ")":
-                    d -= 1
-                    if d == 0:
-                        break
-                j += 1
-            if j >= len(toks):
+            j = _close_paren(toks, i + 1)
+            if j is None:
                 i += 1
                 continue
             spans = _split_args(toks, i + 2, j)
@@ -1763,25 +1888,6 @@ _EUCLID_SQL = ("( SQRT ( POW ( ( {lon2} ) - ( {lon1} ) , 2 ) "
 
 _CERT_PRECHECK = re.compile(
     r"\bST_(DISTANCESPHERE|DISTANCE|DWITHIN|X|Y)\s*\(", re.I)
-
-
-def _tokenize_spans(sql: str):
-    """Like _tokenize but also returns each token's (start, end) char
-    span in the ORIGINAL text, so rewrites can splice replacements into
-    the source string — token re-rendering drops comments, and with
-    them any /*+ ... */ join hints the query depends on."""
-    toks, spans = [], []
-    pos = 0
-    for m in _TOKEN_RE.finditer(sql):
-        if m.start() != pos:
-            return None, None
-        pos = m.end()
-        if m.lastgroup != "ws":
-            toks.append(m.group())
-            spans.append((m.start(), m.end()))
-    if pos != len(sql):
-        return None, None
-    return toks, spans
 
 
 def _point_table_cols(spark, table: str) -> list[str]:
@@ -2110,22 +2216,63 @@ def _relation_shadow(spark, tbl: str, col: str):
     return _view_shadow(spark, tbl, col) or _point_table_shadow(spark, tbl, col)
 
 
-def _subquery_shadow_base(text: str) -> str | None:
-    """``SELECT * FROM <name> [[AS] alias] [WHERE/ORDER/LIMIT ...]`` ->
-    the base relation name, else None.  Only this shape may inherit the
-    base's point-shadow certificate: the invariant is per-row, so filters
-    and row subsets preserve it, and bare ``*`` preserves column
-    identity."""
-    t = _tokenize(text)
-    if not t or len(t) < 4:
-        return None
-    if (t[0].upper() != "SELECT" or t[1] != "*" or t[2].upper() != "FROM"
-            or not _is_ident(t[3])):
-        return None
-    _alias, j = _parse_alias(t, 4)
-    if len(t) > j and t[j].upper() not in ("WHERE", "ORDER", "LIMIT"):
-        return None
-    return _unquote(t[3])
+_POINT_CALLS = ("ST_DISTANCESPHERE", "ST_DISTANCE", "ST_DWITHIN", "ST_X",
+                "ST_Y")
+
+
+def _point_calls(toks, calls, coords, arg_text):
+    """``[(i, j, sql)]``: the native arithmetic replacing each call
+    toks[i..j] of the upper-cased ``calls`` (among _POINT_CALLS) whose
+    point arguments ``coords(lo, hi)`` maps to ``(x_sql, y_sql)``; None
+    on unbalanced parentheses.  Distances are the kernels' formulas
+    (_EUCLID_SQL / _HAVERSINE_SQL), ST_DWithin keeps the kernel's ``r <=
+    d + 1e-12`` boundary (algorithms.dwithin _EPS) over the radius
+    ``arg_text(lo, hi)`` spells."""
+    edits, i = [], 0
+    while i < len(toks):
+        u = toks[i].upper()
+        if u not in calls or toks[i + 1:i + 2] != ["("]:
+            i += 1
+            continue
+        j = _close_paren(toks, i + 1)
+        if j is None:
+            return None
+        repl = None
+        if u in ("ST_X", "ST_Y"):
+            xy = coords(i + 2, j)
+            if xy is not None:
+                repl = xy[u == "ST_Y"]
+        else:
+            args = _split_args(toks, i + 2, j)
+            if args is not None \
+                    and len(args) == (3 if u == "ST_DWITHIN" else 2):
+                xy1, xy2 = coords(*args[0]), coords(*args[1])
+                if xy1 is not None and xy2 is not None:
+                    repl = (_HAVERSINE_SQL if u == "ST_DISTANCESPHERE"
+                            else _EUCLID_SQL).format(
+                        lon1=xy1[0], lat1=xy1[1], lon2=xy2[0], lat2=xy2[1])
+                    if u == "ST_DWITHIN":
+                        repl = (f"( {repl} <= ( ( {arg_text(*args[2])} ) "
+                                "+ 1e-12 ) )")
+        if repl is None:
+            i += 1
+        else:
+            edits.append((i, j, repl))
+            i = j + 1
+    return edits
+
+
+def _edit_tokens(toks, edits, as_tokens):
+    """``toks`` with each (i, j, sql) edit's tokens [i..j] replaced by
+    ``as_tokens(sql)``; None when that returns None."""
+    out, pos = [], 0
+    for i, j, repl in edits:
+        rt = as_tokens(repl)
+        if rt is None:
+            return None
+        out += toks[pos:i] + rt
+        pos = j + 1
+    return out + toks[pos:]
 
 
 def _subst_certified_calls(span: list[str], shadows: dict,
@@ -2158,59 +2305,9 @@ def _subst_certified_calls(span: list[str], shadows: dict,
         return (f"CAST ( {q[0]} . {xy[0]} AS DOUBLE )",
                 f"CAST ( {q[0]} . {xy[1]} AS DOUBLE )")
 
-    out: list[str] = []
-    changed = False
-    i, n = 0, len(span)
-    while i < n:
-        u = span[i].upper()
-        if u in ("ST_DISTANCESPHERE", "ST_DISTANCE", "ST_DWITHIN",
-                 "ST_X", "ST_Y") and i + 1 < n and span[i + 1] == "(":
-            d, j = 0, i + 1
-            while j < n:
-                if span[j] == "(":
-                    d += 1
-                elif span[j] == ")":
-                    d -= 1
-                    if d == 0:
-                        break
-                j += 1
-            if j >= n:
-                return None
-            repl = None
-            if u in ("ST_X", "ST_Y"):
-                xy = pt_xy(i + 2, j)
-                if xy is not None:
-                    repl = xy[0] if u == "ST_X" else xy[1]
-            elif u == "ST_DWITHIN":
-                parts = _split_args(span, i + 2, j)
-                if parts is not None and len(parts) == 3:
-                    xy1, xy2 = pt_xy(*parts[0]), pt_xy(*parts[1])
-                    if xy1 is not None and xy2 is not None:
-                        dist = _render(span[parts[2][0]:parts[2][1]])
-                        repl = ("( " + _EUCLID_SQL.format(
-                            lon1=xy1[0], lat1=xy1[1],
-                            lon2=xy2[0], lat2=xy2[1])
-                            + f" <= ( ( {dist} ) + 1e-12 ) )")
-            else:
-                args = _split_two_args(span, i + 2, j)
-                if args is not None:
-                    xy1, xy2 = pt_xy(*args[0]), pt_xy(*args[1])
-                    if xy1 is not None and xy2 is not None:
-                        fmt = (_HAVERSINE_SQL if u == "ST_DISTANCESPHERE"
-                               else _EUCLID_SQL)
-                        repl = fmt.format(lon1=xy1[0], lat1=xy1[1],
-                                          lon2=xy2[0], lat2=xy2[1])
-            if repl is not None:
-                repl_toks = _tokenize(repl)
-                if repl_toks is None:
-                    return None
-                out.extend(repl_toks)
-                changed = True
-                i = j + 1
-                continue
-        out.append(span[i])
-        i += 1
-    return out if changed else None
+    edits = _point_calls(span, _POINT_CALLS, pt_xy,
+                         lambda lo, hi: _render(span[lo:hi]))
+    return _edit_tokens(span, edits, _tokenize) if edits else None
 
 
 # WKB bit extraction is exact but costs ~10 us/row/coordinate in
@@ -2357,85 +2454,12 @@ def rewrite_certified_scalar(spark, sql: str, vanilla_sql) -> str | None:
         ref = sql[spans[lo][0]:spans[hi - 1][1]]
         return (point_x_sql(ref), point_y_sql(ref))
 
-    # --- scan calls and build splice list
-    edits: list[tuple[int, int, str]] = []
-    i = 0
-    while i < n:
-        u = toks[i].upper()
-        if u in ("ST_DISTANCESPHERE", "ST_DISTANCE", "ST_DWITHIN",
-                 "ST_X", "ST_Y") and i + 1 < n and toks[i + 1] == "(":
-            d, j = 0, i + 1
-            while j < n:
-                if toks[j] == "(":
-                    d += 1
-                elif toks[j] == ")":
-                    d -= 1
-                    if d == 0:
-                        break
-                j += 1
-            if j >= n:
-                return None
-            repl = None
-            if u in ("ST_X", "ST_Y"):
-                xy = pt_xy(i + 2, j)
-                if xy is not None:
-                    repl = xy[0] if u == "ST_X" else xy[1]
-            elif u == "ST_DWITHIN":
-                parts = _split_args(toks, i + 2, j)
-                if parts is not None and len(parts) == 3:
-                    xy1 = pt_xy(*parts[0])
-                    xy2 = pt_xy(*parts[1])
-                    if xy1 is not None and xy2 is not None:
-                        dist = sql[spans[parts[2][0]][0]:
-                                   spans[parts[2][1] - 1][1]]
-                        # kernel boundary: r <= d + 1e-12 (_EPS)
-                        repl = ("( " + _EUCLID_SQL.format(
-                            lon1=xy1[0], lat1=xy1[1],
-                            lon2=xy2[0], lat2=xy2[1])
-                            + f" <= ( ( {dist} ) + 1e-12 ) )")
-            else:
-                args = _split_two_args(toks, i + 2, j)
-                if args is not None:
-                    xy1 = pt_xy(*args[0])
-                    xy2 = pt_xy(*args[1])
-                    if xy1 is not None and xy2 is not None:
-                        fmt = (_HAVERSINE_SQL if u == "ST_DISTANCESPHERE"
-                               else _EUCLID_SQL)
-                        repl = fmt.format(
-                            lon1=xy1[0], lat1=xy1[1],
-                            lon2=xy2[0], lat2=xy2[1])
-            if repl is not None:
-                edits.append((spans[i][0], spans[j][1], repl))
-                i = j + 1
-                continue
-        i += 1
+    edits = _point_calls(toks, _POINT_CALLS, pt_xy,
+                         lambda lo, hi: sql[spans[lo][0]:spans[hi - 1][1]])
     if not edits:
         return None
-    out = sql
-    for s, e, txt in reversed(edits):
-        out = out[:s] + txt + out[e:]
-    return out
-
-
-def _split_two_args(toks, lo, hi):
-    """toks[lo:hi] = contents of a call; split on the single top-level
-    comma -> ((a_lo, a_hi), (b_lo, b_hi)) or None."""
-    d = 0
-    cut = None
-    for j in range(lo, hi):
-        t = toks[j]
-        if t == "(":
-            d += 1
-        elif t == ")":
-            d -= 1
-        elif d == 0 and t == ",":
-            if cut is not None:
-                return None
-            cut = j
-    if cut is None or cut == lo or cut == hi - 1:
-        return None
-    return (lo, cut), (cut + 1, hi)
-
+    return _splice(sql, [(spans[i][0], spans[j][1], repl)
+                         for i, j, repl in edits])
 
 def _split_args(toks, lo, hi):
     """toks[lo:hi] = call contents; split on top-level commas -> list of
@@ -2463,7 +2487,8 @@ def _match_point_call(toks, lo, hi):
     if (hi - lo < 6 or toks[lo].upper() != "ST_POINT" or toks[lo + 1] != "("
             or toks[hi - 1] != ")"):
         return None
-    return _split_two_args(toks, lo + 2, hi - 1)
+    args = _split_args(toks, lo + 2, hi - 1)
+    return args if args is not None and len(args) == 2 else None
 
 
 def peephole_scalar(sql: str) -> str | None:
@@ -2477,65 +2502,18 @@ def peephole_scalar(sql: str) -> str | None:
     toks = _tokenize(sql)
     if toks is None:
         return None
-    changed = False
-    out: list[str] = []
-    i = 0
-    n = len(toks)
-    while i < n:
-        t = toks[i]
-        u = t.upper()
-        if u in ("ST_DISTANCESPHERE", "ST_DISTANCE", "ST_DWITHIN") \
-                and i + 1 < n and toks[i + 1] == "(":
-            d = 0
-            j = i + 1
-            while j < n:
-                if toks[j] == "(":
-                    d += 1
-                elif toks[j] == ")":
-                    d -= 1
-                    if d == 0:
-                        break
-                j += 1
-            if j < n:
-                def _span(s):
-                    inner = _render(toks[s[0]:s[1]])
-                    return peephole_scalar(inner) or inner
 
-                repl = None
-                if u == "ST_DWITHIN":
-                    parts = _split_args(toks, i + 2, j)
-                    if parts is not None and len(parts) == 3:
-                        pa = _match_point_call(toks, *parts[0])
-                        pb = _match_point_call(toks, *parts[1])
-                        if pa is not None and pb is not None:
-                            dist = _span(parts[2])
-                            # the kernel compares r <= d + 1e-12
-                            # (algorithms.dwithin _EPS): keep the
-                            # boundary semantics identical
-                            repl = ("( " + _EUCLID_SQL.format(
-                                lon1=_span(pa[0]), lat1=_span(pa[1]),
-                                lon2=_span(pb[0]), lat2=_span(pb[1]))
-                                + f" <= ( ( {dist} ) + 1e-12 ) )")
-                else:
-                    args = _split_two_args(toks, i + 2, j)
-                    if args is not None:
-                        pa = _match_point_call(toks, *args[0])
-                        pb = _match_point_call(toks, *args[1])
-                        if pa is not None and pb is not None:
-                            fmt = (_HAVERSINE_SQL
-                                   if u == "ST_DISTANCESPHERE"
-                                   else _EUCLID_SQL)
-                            repl = fmt.format(
-                                lon1=_span(pa[0]), lat1=_span(pa[1]),
-                                lon2=_span(pb[0]), lat2=_span(pb[1]))
-                if repl is not None:
-                    out.append(repl)
-                    changed = True
-                    i = j + 1
-                    continue
-        out.append(t)
-        i += 1
-    return _render(out) if changed else None
+    def arg(lo, hi):
+        inner = _render(toks[lo:hi])
+        return peephole_scalar(inner) or inner
+
+    def coords(lo, hi):
+        pt = _match_point_call(toks, lo, hi)
+        return None if pt is None else (arg(*pt[0]), arg(*pt[1]))
+
+    edits = _point_calls(toks, _POINT_CALLS[:3], coords, arg)
+    return _render(_edit_tokens(toks, edits, lambda r: [r])) if edits \
+        else None
 
 
 # ----------------------------------------------------------------------
@@ -2620,6 +2598,8 @@ def install_sql_rewrite(spark: SparkSession) -> None:
         if _is_query(query):
             try:
                 base = vanilla(query)
+            except ParseException:
+                raise           # the rewrite parses only what Spark parsed
             except Exception:
                 pass            # re-raised by the vanilla answer below
             pk = plan_key(base) if base is not None else None

@@ -1861,16 +1861,90 @@ def test_typed_numeric_literals_route(spark):
     assert _rows(knn, cols) == _rows(twin, cols) and len(_rows(knn, cols)) == 3 * n_q > 0
 
 
-def test_literal_number_suffixes():
-    from sedona_db_spark.plans.sql_rewrite import _literal_number, _tokenize
-    for text, want in [("0.5D", 0.5), ("0.5d", 0.5), ("0.5BD", 0.5),
-                       ("2.5e1D", 25.0), ("3L", 3.0), ("- 7S", -7.0),
-                       ("127Y", 127.0), ("- 128Y", -128.0), ("4", 4.0)]:
-        toks = _tokenize(text)
-        assert _literal_number(toks, 0, len(toks)) == want, text
-    for text in ["0.5F", "0.5L", "128Y", "40000S", "1e2L", "x"]:
-        toks = _tokenize(text)
-        assert _literal_number(toks, 0, len(toks)) is None, text
+def _literal_views(spark):
+    _memo_points(spark, "lit_a")
+    _memo_points(spark, "lit_b")
+
+
+@pytest.mark.parametrize("lit,want", [
+    ("0.5D", 0.5), ("0.5d", 0.5), ("0.5BD", 0.5), ("2.5e1D", 25.0),
+    ("3L", 3.0), ("- 7S", -7.0), ("127Y", 127.0), ("- 128Y", -128.0),
+    ("4", 4.0)])
+def test_typed_radius_literal_reaches_the_operator(spark, monkeypatch,
+                                                   lit, want):
+    """A typed numeric literal as the ST_DWithin radius routes: the
+    operator receives the double vanilla hands the kernel (Spark's parser
+    types the literal and folds the sign), and the rows equal vanilla's."""
+    from sedona_db_spark.operators import spatial_join as sj
+    _literal_views(spark)
+    seen = []
+    real = sj.spatial_join
+
+    def spy(*a, **k):
+        seen.append(k.get("distance"))
+        return real(*a, **k)
+
+    monkeypatch.setattr(sj, "spatial_join", spy)
+    q = ("SELECT a.id AS ia, b.id AS ib FROM lit_a a JOIN lit_b b "
+         f"ON ST_DWithin(a.geom, b.geom, {lit})")
+    df = spark.sql(q)
+    assert getattr(df, "_sedona_rewritten_sql", None) is not None
+    assert seen and all(d == want for d in seen), seen
+    assert _rows(df, ["ia", "ib"]) == _rows(_vanilla(spark, q), ["ia", "ib"])
+
+
+def test_float_radius_literal_declines(spark):
+    """``0.5F`` is a float32, rounded before the kernel sees it: the join
+    declines and answers like vanilla."""
+    _literal_views(spark)
+    q = ("SELECT a.id AS ia, b.id AS ib FROM lit_a a JOIN lit_b b "
+         "ON ST_DWithin(a.geom, b.geom, 0.5F)")
+    df = spark.sql(q)
+    assert getattr(df, "_sedona_rewritten_sql", None) is None
+    got = _rows(df, ["ia", "ib"])
+    assert got == _rows(_vanilla(spark, q), ["ia", "ib"]) and got
+
+
+@pytest.mark.parametrize("lit", ["0.5L", "128Y", "40000S", "1e2L", "x"])
+def test_bad_radius_literal_raises_vanillas_error(spark, lit):
+    """``0.5L``, ``128Y`` and ``40000S`` do not parse, ``1e2L`` and ``x``
+    are column names the relations lack: each raises exactly the error
+    vanilla ``spark.sql`` raises."""
+    _literal_views(spark)
+    q = ("SELECT a.id FROM lit_a a JOIN lit_b b "
+         f"ON ST_DWithin(a.geom, b.geom, {lit})")
+    with pytest.raises(Exception) as routed:
+        spark.sql(q)
+    with pytest.raises(Exception) as plain:
+        _vanilla(spark, q)
+    assert type(routed.value) is type(plain.value)
+    assert routed.value.getCondition() == plain.value.getCondition()
+    assert routed.value.getMessageParameters() \
+        == plain.value.getMessageParameters()
+
+
+def test_memo_hit_parses_nothing(spark, monkeypatch):
+    """Only a memo miss asks Spark's parser for the tree: the second
+    ``spark.sql`` of the same text replays the memo without parsing."""
+    from sedona_db_spark.plans import sql_rewrite
+    calls = []
+    real = sql_rewrite._parse_plan
+
+    def spy(session, text):
+        calls.append(text)
+        return real(session, text)
+
+    monkeypatch.setattr(sql_rewrite, "_parse_plan", spy)
+    _memo_points(spark, "rw_pts6")
+    _memo_box(spark, 0, "rw_box6")
+    q = ("SELECT p.id FROM rw_pts6 p JOIN rw_box6 b "
+         "ON ST_Intersects(p.geom, b.geom)")
+    first = spark.sql(q)
+    assert getattr(first, "_sedona_rewritten_sql", None) is not None
+    assert calls == [q]
+    again = spark.sql(q)
+    assert calls == [q]
+    assert _ids(again) == _ids(first) == [0, 1, 2]
 
 
 @pytest.mark.parametrize("exists,join", [("EXISTS", "LEFT SEMI JOIN"),
@@ -1889,6 +1963,20 @@ def test_exists_keeps_certified_shadow(spark, exists, join):
     assert inspect.python_eval_count(ex) == inspect.python_eval_count(sj)
     got = _rows(ex, ["c_custkey"])
     assert got == _rows(sj, ["c_custkey"]) and got
+
+
+def test_exists_over_an_aggregate_declines(spark):
+    """``EXISTS (SELECT count(*) FROM ... WHERE ST_Within(..))`` is true
+    for every outer row (an aggregate always returns one row), so it is
+    no semi join: the text declines and answers like vanilla."""
+    _prep(spark)
+    q = """SELECT c.c_custkey FROM cust_pts c WHERE c.c_custkey < 50
+           AND EXISTS (SELECT count(*) FROM nation_boxes n
+                       WHERE ST_Within(c.geom, n.geom))"""
+    df = spark.sql(q)
+    assert getattr(df, "_sedona_rewritten_sql", None) is None
+    got = _rows(df, ["c_custkey"])
+    assert got == _rows(_vanilla(spark, q), ["c_custkey"]) and got
 
 
 def test_exists_bare_outer_geometry_and_comparison_form(spark):
@@ -2009,6 +2097,29 @@ def test_star_inside_a_relation_subquery_keeps_pruning(spark):
     cols = ["c_custkey", "n_nationkey", "n_name"]
     got = _rows(df, cols)
     assert got == _rows(_vanilla(spark, q), cols) and got
+
+
+def test_semi_join_prunes_through_a_star_subquery(spark):
+    """``(SELECT * FROM cust_pts WHERE ...) c LEFT SEMI JOIN ...``: the
+    star belongs to the relation's own subquery, so the pair is still
+    pruned to the columns the query names — the plan neither reads nor
+    hashes ``c_nationkey`` — and the rows equal the semi join of
+    vanilla's inner pairs."""
+    import __spark_entry__ as E
+    _prep(spark)
+    q = E._Q["sql_spatial_join_semi"]
+    df = spark.sql(q)
+    assert getattr(df, "_sedona_rewritten_sql", None) is not None
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    reads = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
+    hashes = re.findall(r"xxhash64\(([^)]*)\)", plan)
+    assert reads and hashes
+    assert not any("c_nationkey" in x for x in reads + hashes), plan
+    inner = _vanilla(spark, """SELECT DISTINCT c.c_custkey
+        FROM (SELECT * FROM cust_pts WHERE c_custkey < 800) c
+        JOIN nation_boxes n ON ST_Within(c.geom, n.geom)""")
+    got = _rows(df, ["c_custkey"])
+    assert got == _rows(inner, ["c_custkey"]) and got
 
 
 # ----------------------------------------------------------------------
@@ -2145,6 +2256,30 @@ def test_rect_verdict_shared_across_join_types(spark):
     want = _lattice_oracle(spark, "SELECT id FROM pf_pts", inner,
                            "LEFT ANTI JOIN")
     assert _lattice_got(df, "LEFT ANTI JOIN") == want
+
+
+def test_build_size_probe_shared_across_join_types(spark):
+    """The build side's capped row count (the broadcast-or-partition
+    probe) is memoized for a small side too: after an INNER text, an
+    ANTI text over the same two views starts no job, and answers like
+    vanilla."""
+    from sedona_db_spark.operators import result_cache
+    from sedona_db_spark.plans.inspect import jobs_started
+    _facts_views(spark)
+    result_cache.reset()
+    with jobs_started(spark) as jobs:
+        spark.sql("SELECT p.id FROM pf_pts p JOIN pf_boxes b "
+                  "ON ST_Within(p.geom, b.geom)")
+    assert jobs                   # the INNER ran the probe
+    with jobs_started(spark) as jobs:
+        df = spark.sql("SELECT p.id FROM pf_pts p LEFT ANTI JOIN pf_boxes b "
+                       "ON ST_Within(p.geom, b.geom)")
+    assert getattr(df, "_sedona_rewritten_sql", None) is not None
+    assert jobs == [], jobs
+    want = _lattice_oracle(spark, "SELECT id FROM pf_pts",
+                           "SELECT p.id, b.bid FROM pf_pts p JOIN pf_boxes b "
+                           "ON ST_Within(p.geom, b.geom)", "LEFT ANTI JOIN")
+    assert _lattice_got(df, "LEFT ANTI JOIN") == want and want
 
 
 @pytest.mark.parametrize("how", ["JOIN", "LEFT JOIN"])
