@@ -33,16 +33,27 @@ logical optimizer rules ``MergeSpatialFilterIntoJoin`` +
 Architecture note ("why not a Catalyst rule"): injecting a logical rule
 needs JVM code; a pure-PySpark engine intercepts at its session front door
 instead.  ``install_sql_rewrite(spark)`` (called by ``register_all``) wraps
-the session's ``sql`` method: a cheap regex precheck skips everything
-without a spatial predicate + join, the matcher finds the supported shapes
-on Spark's own parse tree of the query (``parsePlan``: its joins and join
-types, ``[NOT] EXISTS``, relation aliases, conjuncts, and the query blocks
-that scope every ``alias.col``), and ANY non-matching or ambiguous query
-falls back to the original planner unchanged.  The rewritten join subtree
-is registered as a temp view, and the emitter splices the original text at
-the tree's character offsets, so the rest of the query (projection, WHERE,
-GROUP BY, ORDER BY, set ops above, comments and hints) runs over the view
-verbatim and SQL semantics outside the join are Spark's own.
+the session's ``sql`` method.  A name gate (the predicate, scalar and
+overload tables) skips every text that names none of them.  A text the
+rewrite memo has not seen is read by Spark's own parser (``parsePlan``);
+when it calls a function the pass edits, the pass reads that tree and
+collects its edits:
+
+- the matcher finds the supported join shapes (its joins and join types,
+  ``[NOT] EXISTS``, relation aliases, conjuncts, and the query blocks that
+  scope every ``alias.col``); the rewritten join subtree is registered as
+  a temp view;
+- extra-arity calls are renamed onto the kernels that take them
+  (``_ARITY_RENAMES`` / ``_ARITY_TEMPLATES``);
+- one scalar rewrite turns ST_Distance / ST_DistanceSphere / ST_DWithin /
+  ST_X / ST_Y over points it can read (an ``ST_Point`` constructor, a
+  certified point column) into native arithmetic.
+
+The edits are spliced into the original text at the tree's character
+offsets, so everything else (projection, WHERE, GROUP BY, ORDER BY, set
+ops, comments and hints) runs verbatim and SQL semantics outside the
+edits are Spark's own.  ANY non-matching or ambiguous shape falls back to
+the original planner unchanged.
 """
 
 from __future__ import annotations
@@ -50,72 +61,15 @@ from __future__ import annotations
 import hashlib
 import json
 import re
+import threading
 import warnings
 from collections import namedtuple
 
-from pyspark.errors import AnalysisException, ParseException
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from sedona_db_spark.operators.result_cache import (BoundedMemo, plan_key,
                                                     stats_memo)
-
-# ----------------------------------------------------------------------
-# tokenizer
-# ----------------------------------------------------------------------
-
-_TOKEN_RE = re.compile(
-    r"""
-      (?P<ws>\s+|--[^\n]*|/\*.*?\*/)
-    | (?P<str>'(?:[^']|'')*')
-    | (?P<qid>"(?:[^"]|"")*"|`(?:[^`]|``)*`)
-    | (?P<num>(?:\d+\.\d*(?:[eE][+-]?\d+)?|\.\d+(?:[eE][+-]?\d+)?|\d+(?:[eE][+-]?\d+)?)(?:[dDlLfFsSyY]|[bB][dD])?(?![A-Za-z_0-9]))
-    | (?P<id>[A-Za-z_][A-Za-z_0-9]*)
-    | (?P<op><=>|<>|<=|>=|!=|\|\||::|->>?|==)
-    | (?P<ch>.)
-    """,
-    re.S | re.X,
-)
-
-
-def _tokenize(sql: str) -> list[str] | None:
-    """SQL -> token list (whitespace/comments dropped).  None on oddities."""
-    return _tokenize_spans(sql)[0]
-
-
-def _tokenize_spans(sql: str):
-    """(tokens, each token's (start, end) in ``sql``), or (None, None) on
-    oddities.  The spans let a rewrite splice the source string: token
-    re-rendering drops comments, and with them any /*+ ... */ hints."""
-    toks, spans = [], []
-    pos = 0
-    for m in _TOKEN_RE.finditer(sql):
-        if m.start() != pos:
-            return None, None
-        pos = m.end()
-        if m.lastgroup != "ws":
-            toks.append(m.group())
-            spans.append((m.start(), m.end()))
-    if pos != len(sql):
-        return None, None
-    return toks, spans
-
-
-def _close_paren(toks: list[str], i: int) -> int | None:
-    """Index of the ``)`` closing the ``(`` at token i, or None."""
-    d = 0
-    for j in range(i, len(toks)):
-        d += (toks[j] == "(") - (toks[j] == ")")
-        if d == 0:
-            return j
-    return None
-
-
-def _render(toks: list[str]) -> str:
-    """Token list -> SQL text.  A space between every token is valid Spark
-    SQL except inside qualified names, which the rewrite collapses into
-    single tokens before rendering."""
-    return " ".join(toks)
-
 
 # ----------------------------------------------------------------------
 # predicate tables (reference spatial_predicate.rs:44-214 relation set)
@@ -172,21 +126,6 @@ _RS_PRED_NAMES = {
 _SPATIAL_CALLS = set(_PRED_NAMES) | set(_RS_PRED_NAMES) | {"ST_DWITHIN",
                                                            "ST_KNN"}
 
-_PRECHECK = re.compile(
-    r"\b(?:ST_(INTERSECTS|CONTAINS|WITHIN|COVERS|COVERED_?BY|TOUCHES|CROSSES|"
-    r"OVERLAPS|EQUALS|DWITHIN|KNN|DISTANCE)|"
-    r"RS_(INTERSECTS|CONTAINS|WITHIN))\s*\(",
-    re.I,
-)
-
-# keywords a relation alias cannot be
-_NOT_ALIAS = {
-    "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "UNION", "INTERSECT",
-    "EXCEPT", "WINDOW", "QUALIFY", "DISTRIBUTE", "CLUSTER", "SORT", "JOIN",
-    "INNER", "LEFT", "RIGHT", "FULL", "CROSS", "SEMI", "ANTI", "NATURAL",
-    "LATERAL", "ON", "USING", "AS",
-}
-
 
 class _Decline(Exception):
     """Shape not rewritable — fall back to vanilla planning."""
@@ -194,9 +133,9 @@ class _Decline(Exception):
 
 class _Rel:
     """One relation in a FROM clause: a (multi-part) table name or a
-    parenthesized subquery, plus its alias.  ``text`` is the name or the
-    subquery's SQL; a relation read from the parse tree keeps its
-    ``node`` and reads ``text`` from the node's offsets."""
+    parenthesized subquery, plus its alias and its tree ``node``.
+    ``text`` is the name or the subquery's SQL, read at the node's
+    offsets with the pass's edits applied (``_Tree.render``)."""
 
     def __init__(self, alias: str, is_subquery: bool, text: str | None = None,
                  node=None):
@@ -207,72 +146,9 @@ class _Rel:
     def text(self) -> str:
         if self._text is None:
             n = self.node
-            self._text = (n.kids[0] if n.cls == "SubqueryAlias" else n).text()
+            self._text = n.tree.render(n.kids[0] if n.cls == "SubqueryAlias"
+                                       else n)
         return self._text
-
-
-def _depths(toks: list[str]) -> list[int]:
-    out = []
-    d = 0
-    for t in toks:
-        if t == ")":
-            d -= 1
-        out.append(d)
-        if t == "(":
-            d += 1
-    return out
-
-
-def _is_ident(t: str) -> bool:
-    return bool(re.fullmatch(r"[A-Za-z_][A-Za-z_0-9]*", t)) or (
-        t[:1] in "`\"" and len(t) >= 2)
-
-
-def _unquote(t: str) -> str:
-    if t[:1] == "`" and t[-1:] == "`":
-        return t[1:-1].replace("``", "`")
-    if t[:1] == '"' and t[-1:] == '"':
-        return t[1:-1].replace('""', '"')
-    return t
-
-
-def _parse_rel(toks: list[str], i: int) -> tuple[_Rel, int]:
-    """Parse a relation reference starting at token i."""
-    n = len(toks)
-    if i >= n:
-        raise _Decline
-    if toks[i] == "(":
-        j = _close_paren(toks, i)
-        if j is None:
-            raise _Decline
-        body = _render(toks[i + 1:j])
-        j += 1
-        alias, j = _parse_alias(toks, j)
-        if alias is None:
-            raise _Decline   # subquery needs an alias
-        return _Rel(alias, True, body), j
-    # multipart identifier
-    if not _is_ident(toks[i]) or toks[i].upper() in _NOT_ALIAS:
-        raise _Decline
-    parts = [toks[i]]
-    j = i + 1
-    while j + 1 < n and toks[j] == "." and _is_ident(toks[j + 1]):
-        parts.append(toks[j + 1])
-        j += 2
-    alias, j = _parse_alias(toks, j)
-    name = ".".join(parts)
-    if alias is None:
-        alias = _unquote(parts[-1])
-    return _Rel(alias, False, name), j
-
-
-def _parse_alias(toks: list[str], j: int) -> tuple[str | None, int]:
-    n = len(toks)
-    if j < n and toks[j].upper() == "AS" and j + 1 < n and _is_ident(toks[j + 1]):
-        return _unquote(toks[j + 1]), j + 2
-    if j < n and _is_ident(toks[j]) and toks[j].upper() not in _NOT_ALIAS:
-        return _unquote(toks[j]), j + 1
-    return None, j
 
 
 class _SpatialConjunct:
@@ -302,23 +178,6 @@ class _SpatialConjunct:
         self.raster0 = False
 
 
-def _qualified_ref(toks, lo, hi, aliases, schemas):
-    """Span is exactly one geometry reference -> (alias, col) or None."""
-    span = toks[lo:hi]
-    if len(span) == 3 and span[1] == "." and _is_ident(span[0]) and _is_ident(span[2]):
-        a = _unquote(span[0])
-        if a in aliases:
-            return a, _unquote(span[2])
-        return None
-    if len(span) == 1 and _is_ident(span[0]):
-        col = _unquote(span[0])
-        owners = [a for a in aliases if col in schemas[a]]
-        if len(owners) == 1:
-            return owners[0], col
-        return None
-    return None
-
-
 # ----------------------------------------------------------------------
 # Spark's parse tree
 #
@@ -342,6 +201,14 @@ _BLOCK_NODES = {"Project", "Aggregate", "Filter", "UnresolvedHaving", "Sort",
 _SET_NODES = {"Union", "Intersect", "Except"}
 # what a derived table's parentheses may hold: a query
 _QUERY_NODES = _BLOCK_NODES | _SET_NODES | {"UnresolvedWith"}
+# a statement's parsed root when it is a query (VALUES, TABLE t, DISTRIBUTE BY)
+_QUERY_ROOTS = _QUERY_NODES | {"LocalRelation", "UnresolvedInlineTable",
+                               "UnresolvedRelation", "RepartitionByExpression",
+                               "Repartition"}
+# FROM-clause nodes whose columns a block can name (anything else there,
+# a table function or LATERAL VIEW, makes the block ``opaque``)
+_FROM_NODES = _QUERY_NODES | {"Join", "SubqueryAlias", "UnresolvedRelation",
+                              "OneRowRelation"}
 _JOIN_TYPES = {"Inner$": "inner", "Cross$": "inner", "LeftOuter$": "left",
                "RightOuter$": "right", "FullOuter$": "full",
                "LeftSemi$": "left_semi", "LeftAnti$": "left_anti"}
@@ -352,18 +219,29 @@ _COMPARISONS = {"LessThan", "LessThanOrEqual", "GreaterThan",
 
 
 class _Block:
-    """A query block's scope: the aliases its FROM clause declares and
-    the block it is nested in.  ``top`` marks a block outside every
-    parenthesis (the statement's own, or a set-operation branch of it)."""
+    """A query block's scope: the relations its FROM clause declares
+    (alias -> relation node, None for an alias declared twice), whether
+    the FROM clause also reads something that declares no alias
+    (``opaque``: a table function, a LATERAL VIEW), and the block it is
+    nested in.  ``top`` marks a block outside every parenthesis (the
+    statement's own, or a set-operation branch of it)."""
 
     def __init__(self, outer, top=False):
-        self.outer, self.top, self.aliases = outer, top, set()
+        self.outer, self.top = outer, top
+        self.rels, self.opaque = {}, False
+
+    @property
+    def aliases(self):
+        return self.rels.keys()
+
+    def declare(self, alias, node):
+        self.rels[alias] = None if alias in self.rels else node
 
     def binding(self, alias):
         """The innermost block, from this one outwards, declaring
         ``alias`` (Spark's own resolution order), or None."""
         b = self
-        while b is not None and alias not in b.aliases:
+        while b is not None and alias not in b.rels:
             b = b.outer
         return b
 
@@ -372,11 +250,12 @@ class _Node:
     """One node of the parse tree: its short class name, JSON fields,
     children, the trees its fields hold (a plan node's expressions, in
     the order of the JVM node's ``expressions()``; a subquery's plan; a
-    CTE's definitions), its query block, and on demand its [start, end)
-    offsets in the text."""
+    CTE's definitions), whether it is a plan node, its query block, and
+    on demand its [start, end) offsets in the text."""
 
-    def __init__(self, tree, d, up, step):
+    def __init__(self, tree, d, up, step, is_plan):
         self.tree, self.d, self.up, self.step = tree, d, up, step
+        self.is_plan = is_plan
         self.cls = d["class"].rsplit(".", 1)[-1]
         self.kids, self.exprs, self.plans = [], [], []
         self.block = self.field = self._jvm = self._span = None
@@ -387,10 +266,13 @@ class _Node:
         s = self.d.get(_NAME_FIELDS.get(self.cls, ""))
         return s[1:-1].split(", ") if s else []
 
+    def subtrees(self) -> list:
+        return self.kids + self.exprs + self.plans
+
     def walk(self):
         """This node and every node under it, subqueries included."""
         yield self
-        for n in self.kids + self.exprs + self.plans:
+        for n in self.subtrees():
             yield from n.walk()
 
     def jvm(self):
@@ -410,11 +292,9 @@ class _Node:
     def span(self) -> tuple[int, int]:
         if self._span is not None:
             return self._span
-        if self.cls == "Literal":
-            raise _Decline       # a literal may carry its parent's origin
         if self.cls == "Exists":
-            # so does an Exists: its text is ``EXISTS ( <subquery> )``
-            # around its plan's
+            # an Exists carries its clause's origin: its text is
+            # ``EXISTS ( <subquery> )`` around its plan's
             lo, hi = self.plans[0].span()
             head = re.search(r"\bEXISTS\s*\(\s*$", self.tree.text[:lo], re.I)
             tail = re.match(r"\s*\)", self.tree.text[hi:])
@@ -425,8 +305,16 @@ class _Node:
         m = _ORIGIN.match(self.jvm().origin().toString())
         if m is None:
             raise _Decline
-        self._span = (int(m.group(1)), int(m.group(2)) + 1)
-        return self._span
+        span = (int(m.group(1)), int(m.group(2)) + 1)
+        if self.cls == "Literal":
+            # a literal may carry its parent's origin (a comparison's);
+            # a call's argument carries its own, strictly inside the call
+            up = self.up
+            if _call_name(up) is None or self not in _args(up) \
+                    or not up.span()[0] < span[0] <= span[1] < up.span()[1]:
+                raise _Decline
+        self._span = span
+        return span
 
     def text(self) -> str:
         lo, hi = self.span()
@@ -444,13 +332,21 @@ def _flat_trees(v) -> list:
     return []
 
 
+# a render context (_Tree.render): ``replace(node)`` is a node's
+# replacement in the caller's context (a text, or a (start, end, text)
+# edit; None for none) and ``coords(ref)`` the coordinates of a column
+# reference (_point_coords)
+_Ctx = namedtuple("_Ctx", "replace coords")
+
+
 class _Tree:
     """Spark's unresolved plan of ``text``: the root _Node (its JVM twin
     is ``jplan``, its JSON ``js``), every node assigned to its query
-    block."""
+    block, the CTE names it defines, and the session that parsed it."""
 
-    def __init__(self, text, jplan, js):
-        self.text, self.js = text, js
+    def __init__(self, spark, text, jplan, js):
+        self.spark, self.text, self.js = spark, text, js
+        self.ctes, self._cols, self._certs = set(), {}, {}
         self.root = self._read(json.loads(js), 0, None, None, True)[0]
         self.root._jvm = jplan
         self._scope(self.root, _Block(None, top=True))
@@ -465,7 +361,7 @@ class _Tree:
         return out
 
     def _read(self, flat, i, up, step, is_plan):
-        node = _Node(self, flat[i], up, step)
+        node = _Node(self, flat[i], up, step, is_plan)
         i += 1
         for k in range(node.d["num-children"]):
             kid, i = self._read(flat, i, node, ("kid", k), is_plan)
@@ -474,6 +370,7 @@ class _Tree:
             if field == "plan" and not is_plan:
                 node.plans.append(self._read(v, 0, node, ("plan", 0), True)[0])
             elif field == "cteRelations":
+                self.ctes.update(r["_1"].lower() for r in v)
                 node.plans += [self._read(r["_2"], 0, node, ("cte", j),
                                           True)[0] for j, r in enumerate(v)]
             elif is_plan:
@@ -493,10 +390,13 @@ class _Tree:
         block of their own, nested in the one around it."""
         node.block = block
         if node.cls == "SubqueryAlias":
-            block.aliases.add(node.d["identifier"]["name"])
+            block.declare(node.d["identifier"]["name"], node)
         elif node.cls == "UnresolvedRelation" \
                 and getattr(node.up, "cls", None) != "SubqueryAlias":
-            block.aliases.add(node.parts()[-1])
+            block.declare(node.parts()[-1], node)
+        elif node.is_plan and node.cls not in _FROM_NODES and node.up \
+                is not None and node.up.cls in _BLOCK_NODES | {"Join"}:
+            block.opaque = True
         for e in node.exprs:
             self._scope(e, block)
         for p in node.plans:
@@ -510,11 +410,115 @@ class _Tree:
             else:
                 self._scope(kid, block)
 
+    # -------- the edits: every rewrite splices text at node offsets
 
-def _parse_plan(spark, sql: str):
-    """Spark's unresolved plan of ``sql`` as a _Tree, or None when the
-    text does not parse (a parse error is logged, so callers parse only a
-    text vanilla analysis accepted or the peephole produced)."""
+    def render(self, node, ctx=None) -> str:
+        """``node``'s text with the pass's edits applied: its replacement
+        in ``ctx`` or its call edit (_call_edit), else its own text with
+        the edits under it (``inner``)."""
+        rep = self._edit(node, ctx)
+        if rep is None:
+            return self.inner(node, ctx)
+        return rep if isinstance(rep, str) else rep[2]
+
+    def inner(self, node, ctx=None, extra=(), whole=False) -> str:
+        """``node``'s own text (the whole statement's when ``whole``) with
+        the ``extra`` (start, end, text) edits and the edit of every
+        topmost edited node under it spliced in.  Only an edited node's
+        offsets are fetched."""
+        lo, hi = (0, len(self.text)) if whole else node.span()
+        edits, todo = list(extra), node.subtrees()
+        while todo:
+            x = todo.pop()
+            rep = self._edit(x, ctx)
+            if rep is None:
+                todo += x.subtrees()
+            else:
+                edits.append((*x.span(), rep) if isinstance(rep, str)
+                             else rep)
+        return _splice(self.text, edits, lo, hi)
+
+    def _edit(self, x, ctx):
+        rep = ctx.replace(x) if ctx is not None else None
+        return rep if rep is not None else _call_edit(self, x, ctx)
+
+    # -------- what a column reference names
+
+    def column(self, x):
+        """(alias, column, relation node) of the attribute ``x``:
+        ``alias.col`` binds to the innermost block declaring the alias
+        (_Block.binding), a bare name to the one relation of its own
+        block holding that column.  None when unsure: a lambda variable,
+        an alias declared twice, a relation whose columns are unknown
+        (``columns``), a bare name where a select-list alias could win
+        (ORDER BY, HAVING) or that no relation of its block holds."""
+        if x.cls != "UnresolvedAttribute":
+            return None
+        up = x.up
+        while not up.is_plan:
+            if up.cls == "LambdaFunction":
+                return None
+            up = up.up
+        p = x.parts()
+        if len(p) == 2:
+            b = x.block.binding(p[0])
+            found = [] if b is None else [(p[0], b.rels[p[0]])]
+        elif len(p) == 1 and not x.block.opaque \
+                and up.cls in ("Project", "Aggregate", "Filter", "Join"):
+            found = list(x.block.rels.items())
+        else:
+            return None
+        owners = []
+        for alias, rel in found:
+            cols = self.columns(rel)
+            if cols is None:
+                return None
+            owners += [(alias, c, rel) for c in cols
+                       if c.lower() == p[-1].lower()]
+        return owners[0] if len(owners) == 1 else None
+
+    def relation_name(self, rel) -> str | None:
+        """The catalog name (table or view) a FROM relation node reads,
+        or None: a derived table, a CTE."""
+        from sedona_db_spark.operators.spatial_join import _bq
+        n = rel.kids[0] if rel is not None and rel.cls == "SubqueryAlias" \
+            else rel
+        if n is None or n.cls != "UnresolvedRelation":
+            return None
+        parts = n.parts()
+        if len(parts) == 1 and parts[0].lower() in self.ctes:
+            return None
+        return ".".join(p if re.fullmatch(r"\w+", p) else _bq(p)
+                        for p in parts)
+
+    def columns(self, rel) -> list[str] | None:
+        """A FROM relation node's column names, None when unknown (a
+        derived table, a CTE, a name the catalog lacks).  The join core
+        seeds the relations it resolved."""
+        if id(rel) not in self._cols:
+            name = self.relation_name(rel)
+            try:
+                cols = None if name is None else \
+                    self.spark.table(name).columns
+            except Exception:
+                cols = None
+            self._cols[id(rel)] = cols
+        return self._cols[id(rel)]
+
+    def cert(self, rel, col):
+        """_column_cert of column ``col`` of relation node ``rel``,
+        memoized per catalog name."""
+        name = self.relation_name(rel)
+        if name is None:
+            return None
+        if (name, col) not in self._certs:
+            self._certs[(name, col)] = _column_cert(self.spark, name, col)
+        return self._certs[(name, col)]
+
+
+def _statement(spark, sql: str):
+    """Spark's parse of ``sql``: (the JVM plan, its JSON), or None when
+    the text does not parse."""
     parser = getattr(spark, "_sedona_sql_parser", None)
     if parser is None:
         parser = spark._jsparkSession.sessionState().sqlParser()
@@ -523,7 +527,14 @@ def _parse_plan(spark, sql: str):
         jplan = parser.parsePlan(sql)
     except Exception:
         return None
-    return _Tree(sql, jplan, jplan.toJSON())
+    return jplan, jplan.toJSON()
+
+
+def _parse_plan(spark, sql: str):
+    """Spark's unresolved plan of ``sql`` as a _Tree, or None when the
+    text does not parse."""
+    stmt = _statement(spark, sql)
+    return None if stmt is None else _Tree(spark, sql, *stmt)
 
 
 def _conjuncts(e) -> list:
@@ -751,6 +762,8 @@ def _from_rel(node) -> _Rel:
     function, a parenthesized join, VALUES, ...)."""
     inner = node.kids[0] if node.cls == "SubqueryAlias" else node
     if inner.cls == "UnresolvedRelation":
+        if node.tree.relation_name(node) is None:
+            raise _Decline                   # a CTE
         alias = (node.d["identifier"]["name"] if node is not inner
                  else inner.parts()[-1])
         return _Rel(alias, False, node=node)
@@ -915,7 +928,7 @@ def _semi_match(rel1, c, proj, where):
         except _Decline:
             return None
         src = f"( {rel2.text} )" if rel2.is_subquery else rel2.text
-        cond = " AND ".join(f"( {x.text()} )" for x in pre)
+        cond = " AND ".join(f"( {x.tree.render(x)} )" for x in pre)
         rel2 = _Rel(rel2.alias, True,
                     f"SELECT * FROM {src} AS `{rel2.alias}` WHERE {cond}",
                     node=rel2.node)
@@ -966,23 +979,6 @@ def _resolve_df(spark, vanilla_sql, rel: _Rel) -> DataFrame:
     return df
 
 
-def _map_alias_refs(span, aliases, out_name, prefix="") -> list[str]:
-    """Rewrite ``alias.col`` references to ``aliases`` within a token
-    span onto the join view's column names (``prefix`` qualifies them)."""
-    res, i = [], 0
-    while i < len(span):
-        t = span[i]
-        if (_is_ident(t) and _unquote(t) in aliases and i + 2 < len(span)
-                and span[i + 1] == "." and _is_ident(span[i + 2])):
-            col = out_name(_unquote(t), _unquote(span[i + 2]))
-            res.append(f"{prefix}`{col}`")
-            i += 3
-            continue
-        res.append(t)
-        i += 1
-    return res
-
-
 def _run_over_view(joined, vname, rewritten, vanilla_sql) -> DataFrame:
     """Register ``joined`` as ``vname`` and run the rebuilt query text
     over it, tagged with its text for the rewrite memo."""
@@ -990,24 +986,6 @@ def _run_over_view(joined, vname, rewritten, vanilla_sql) -> DataFrame:
     result = vanilla_sql(rewritten)
     result._sedona_rewritten_sql = rewritten
     return result
-
-
-def try_rewrite(spark: SparkSession, sql: str, vanilla_sql,
-                vname: str) -> DataFrame | None:
-    """Attempt the spatial-join rewrite, registering the join under the
-    temp view ``vname``; None means 'use vanilla'.  The first FROM clause
-    the core routes wins, outer query blocks first."""
-    if not _PRECHECK.search(sql):
-        return None
-    tree = _parse_plan(spark, sql)
-    if tree is None:
-        return None
-    for m in _tree_matches(tree):
-        try:
-            return _rewrite(spark, m, vanilla_sql, vname)
-        except _Decline:
-            continue
-    return None
 
 
 def _candidate_rank(sc) -> int:
@@ -1021,30 +999,29 @@ def _candidate_rank(sc) -> int:
     return 2
 
 
-def _splice(text: str, edits) -> str:
-    """``text`` with each (start, end, replacement) edit applied; edits
-    must not overlap (an insertion sorts before a replacement starting at
-    its offset)."""
-    out, pos = [], 0
-    for lo, hi, rep in sorted(edits, key=lambda e: e[:2]):
-        if lo < pos:
+def _splice(text: str, edits, lo: int = 0, hi: int | None = None) -> str:
+    """``text[lo:hi]`` with each (start, end, replacement) edit applied;
+    edits must lie inside it and not overlap (an insertion sorts before a
+    replacement starting at its offset)."""
+    hi = len(text) if hi is None else hi
+    out, pos = [], lo
+    for a, b, rep in sorted(edits, key=lambda e: e[:2]):
+        if a < pos or b > hi:
             raise _Decline
-        out += [text[pos:lo], rep]
-        pos = hi
-    return "".join(out) + text[pos:]
+        out += [text[pos:a], rep]
+        pos = b
+    return "".join(out) + text[pos:hi]
 
 
-def _ref_text(x) -> str:
-    """The text of a spliced ``alias.col`` / ``alias.*`` / ``*`` node,
-    checked against its name parts (the splice must replace exactly that
-    reference)."""
-    txt = x.text()
-    toks = _tokenize(txt) or []
-    want = x.parts() + (["*"] if x.cls == "UnresolvedStar" else [])
-    if [_unquote(t) for t in toks[::2]] != want \
-            or any(t != "." for t in toks[1::2]):
+def _ref_text(x) -> None:
+    """Decline unless the text of a spliced ``alias.col`` / ``alias.*``
+    / ``*`` node reads as its name parts, each bare or backquoted (the
+    splice must replace exactly that reference)."""
+    pats = [r"\*" if p == "*" else "(?:%s|`%s`)" % (
+                re.escape(p), re.escape(p.replace("`", "``")))
+            for p in x.parts() + (["*"] if x.cls == "UnresolvedStar" else [])]
+    if not re.fullmatch(r"\s*\.\s*".join(pats), x.text()):
         raise _Decline
-    return txt
 
 
 def _rewrite(spark, m: _Match, vanilla_sql, vname):
@@ -1056,15 +1033,21 @@ def _rewrite(spark, m: _Match, vanilla_sql, vname):
     dfs = {r.alias: _resolve_df(spark, vanilla_sql, r) for r in m.rels}
     aliases = tuple(dfs)
     full = dict(dfs)
+    for r in m.rels:
+        tree._cols[id(r.node)] = full[r.alias].columns
+    rel_of = {r.alias: r for r in m.rels}
     refs = [x for x in tree.root.walk()
             if x.cls in ("UnresolvedAttribute", "UnresolvedStar")]
 
-    def bound_here(x) -> bool:
-        # an ``alias.col`` / ``alias.*`` naming a relation of the
-        # matched block (Spark's innermost-declaring-block scoping)
+    def bound(x):
+        # the alias of the match's relation an ``alias.col`` / ``alias.*``
+        # names (Spark's innermost-declaring-block scoping), or None
         p = x.parts()
-        return (len(p) > (x.cls == "UnresolvedAttribute") and p[0] in aliases
-                and x.block.binding(p[0]) is m.block)
+        if len(p) <= (x.cls == "UnresolvedAttribute") or p[0] not in rel_of:
+            return None
+        b = x.block.binding(p[0])
+        return p[0] if b is not None and b.rels[p[0]] is rel_of[p[0]].node \
+            else None
 
     # column pruning through the rewrite boundary: the join view would
     # otherwise drag every source column through the operator's Arrow/
@@ -1077,7 +1060,7 @@ def _rewrite(spark, m: _Match, vanilla_sql, vname):
     for x in refs:
         if x.cls == "UnresolvedStar" and not x.parts() and x.block is m.block:
             star_sides.update(aliases)
-        elif x.cls == "UnresolvedStar" and bound_here(x):
+        elif x.cls == "UnresolvedStar" and bound(x):
             star_sides.add(x.parts()[0])
     mentioned = tree.names()
     for a in aliases:
@@ -1146,20 +1129,20 @@ def _rewrite(spark, m: _Match, vanilla_sql, vname):
     # certify_point_table), keep the shadow doubles through pruning and
     # thread them into the operator: that side's bbox pruning column
     # and the codegen dwithin refine come straight from the stored
-    # doubles (no Python bbox pass), refine conjuncts substitute them
-    # via _subst_certified_calls, and — when nothing else references
-    # the geometry — its ST_Point constructor prunes out of the plan
-    # entirely.  A `SELECT * FROM <name> [WHERE ...]` subquery keeps the
-    # name's certificate (_shadow_base).
+    # doubles (no Python bbox pass), the scalar rewrite reads that
+    # side's points from them (_point_coords), and — when nothing else
+    # references the geometry — its ST_Point constructor prunes out of
+    # the plan entirely.  A `SELECT * FROM <name> [WHERE ...]` subquery
+    # keeps the name's certificate (_shadow_base).
     geom = dict(zip(spatial.arg_rels, spatial.arg_cols))
-    rel_of = {r.alias: r for r in m.rels}
     shadows: dict[str, dict[str, tuple]] = {}
     for a in pair:
         base = _shadow_base(rel_of[a].node)
-        if base is None:
-            continue
+        name = base and tree.relation_name(base)
+        if name is None:
+            continue                 # not a catalog relation (a CTE)
         try:
-            xy = _relation_shadow(spark, base.text(), geom[a])
+            xy = _relation_shadow(spark, name, geom[a])
         except Exception:
             xy = None
         full_cols = full[a].columns
@@ -1195,21 +1178,83 @@ def _rewrite(spark, m: _Match, vanilla_sql, vname):
         da, dc = spatial.dist_col
         spatial.dist_col_resolved = (da, out_name(da, dc))
 
-    def map_conj(c, prefix=""):
-        """A moved or refine conjunct's text with its pair references
-        mapped onto the view (_map_alias_refs), certified-scalar calls
-        substituted by native shadow arithmetic first (round 12)."""
+    # -------- the emitter: the pass's edits in the view's terms.  The
+    # FROM clause becomes the relations outside the pair plus the join
+    # view; moved ON conjuncts open the WHERE, ahead of the original
+    # WHERE in parentheses; the view's `alias.col` / `alias.*` references
+    # bound to the matched block map onto its columns, and an unaliased
+    # select-list reference to a renamed column gets AS back to its own
+    # name, so the output schema matches vanilla planning.  A bare `*`
+    # select item is spelled as every visible relation's `alias.*`, in
+    # FROM order.  A pair side's point coordinates are its shadow
+    # doubles in the view (round 12); every other call edit is the
+    # pass's own (_call_edit).
+    view = f"`{vname}`."
+    pair_of = {id(rel_of[a].node): a for a in pair}
+
+    def star(a, in_select, prefix):
+        if a not in pair:
+            return f"`{a}`.*"
+        cols = [(c, c) for c in lcols] if a == a1 else list(rmap.items())
+        return " , ".join(
+            f"{prefix}`{v}`" + (f" AS `{c}`" if in_select and v != c else "")
+            for c, v in cols)
+
+    # an ST_KNN view also carries knn_distance (vanilla cannot plan the
+    # join, so its `SELECT *` keeps the view's columns): after the pair
+    shown = pair if m.how not in ("left_semi", "left_anti") else (a1,)
+    visible = [r.alias for r in m.rels if r.alias not in pair
+               or r.alias in shown]
+    stars = [star(a, True, view) for a in visible]
+    if spatial.kind == "knn":
+        last = max(i for i, a in enumerate(visible) if a in pair)
+        stars[last] += f" , {view}`knn_distance`"
+
+    def map_ref(x, prefix, seen, root=False):
+        """A reference's replacement in the view's terms: pair aliases
+        in ``seen`` map onto the columns qualified by ``prefix``; in the
+        ``root`` text a bare ``*`` select item expands."""
+        if x.cls not in ("UnresolvedAttribute", "UnresolvedStar"):
+            return None
+        item = root and x.up is m.proj \
+            and x.field in ("projectList", "aggregateExpressions")
+        if x.cls == "UnresolvedStar" and not x.parts() \
+                and x.block is m.block and root:
+            if not item:
+                raise _Decline       # `f(*)` over the view's columns
+            _ref_text(x)
+            return " " + " , ".join(stars) + " "
+        a = bound(x)
+        if a not in seen:
+            return None
+        _ref_text(x)
+        if x.cls == "UnresolvedStar":
+            return f" {star(a, item, prefix)} "
+        col = x.parts()[1]
+        v = out_name(a, col)
+        rep = "".join([f"{prefix}`{v}`"] + [f".`{p}`" for p in x.parts()[2:]])
+        if item and len(x.parts()) == 2 and v != col:
+            rep += f" AS `{col}`"
+        return f" {rep} "
+
+    def ctx(prefix, seen, replace=None):
+        def coords(ref):
+            a, col, rel = ref
+            if id(rel) not in pair_of:
+                return _column_coords(tree, *ref)
+            xy = shadows.get(a, {}).get(col)
+            return None if xy is None else tuple(
+                _shadow_cast_sql(f"{prefix}`{out_name(a, c)}`")
+                for c in xy) + (None,)
+        return _Ctx(replace or (lambda x: map_ref(x, prefix, seen)), coords)
+
+    def map_conj(c, prefix):
+        """A moved (``prefix`` the view) or refine ("") conjunct's text
+        over the view's columns."""
         if any(x.block.aliases & set(pair) for x in c.walk()
                if x.block is not c.block):
             raise _Decline           # a subquery in it re-declares a pair alias
-        seg = _tokenize(c.text())
-        if seg is None:
-            raise _Decline
-        if shadows:
-            seg = _subst_certified_calls(seg, shadows, aliases,
-                                         schemas) or seg
-        return "( " + _render(_map_alias_refs(seg, pair, out_name,
-                                              prefix)) + " )"
+        return "( " + tree.render(c, ctx(prefix, pair)) + " )"
 
     pj = _Pair(rel_of[a1], rel_of[a2], m.how)
     if refines:
@@ -1219,7 +1264,7 @@ def _rewrite(spark, m: _Match, vanilla_sql, vname):
         # the requested mode from row-id match tracking — semantically
         # `ON (c1 AND c2 AND ...)`, because the refined inner result IS
         # the true match set and a refine only ever shrinks it.
-        refine_sql = " AND ".join(map_conj(c) for c in refines)
+        refine_sql = " AND ".join(map_conj(c, "") for c in refines)
 
         def _refined_inner(l2, r2):
             return _build_join(spark, pj._replace(how="inner"), spatial,
@@ -1236,88 +1281,29 @@ def _rewrite(spark, m: _Match, vanilla_sql, vname):
         joined = _build_join(spark, pj, spatial, ldf, rdf_r, g1, g2,
                              sxy1=sxy1, sxy2=sxy2)
 
-    # -------- the emitter: splices the text at the tree's offsets.  The
-    # FROM clause becomes the relations outside the pair plus the join
-    # view; moved ON conjuncts open the WHERE, ahead of the original
-    # WHERE in parentheses; the view's `alias.col` / `alias.*` references
-    # bound to the matched block map onto its columns, and an unaliased
-    # select-list reference to a renamed column gets AS back to its own
-    # name, so the output schema matches vanilla planning.  A bare `*`
-    # select item is spelled as every visible relation's `alias.*`, in
-    # FROM order.
-    view = f"`{vname}`."
-
-    def star(a, in_select):
-        if a not in pair:
-            return f"`{a}`.*"
-        cols = [(c, c) for c in lcols] if a == a1 else list(rmap.items())
-        return " , ".join(
-            f"{view}`{v}`" + (f" AS `{c}`" if in_select and v != c else "")
-            for c, v in cols)
-
-    # an ST_KNN view also carries knn_distance (vanilla cannot plan the
-    # join, so its `SELECT *` keeps the view's columns): after the pair
-    shown = pair if m.how not in ("left_semi", "left_anti") else (a1,)
-    visible = [r.alias for r in m.rels if r.alias not in pair
-               or r.alias in shown]
-    stars = [star(a, True) for a in visible]
-    if spatial.kind == "knn":
-        last = max(i for i, a in enumerate(visible) if a in pair)
-        stars[last] += f" , {view}`knn_distance`"
-
-    def spliced_away(x) -> bool:
-        # inside the replaced FROM clause or a conjunct that becomes TRUE
-        while x is not None:
-            if x is m.last or any(x is c for c in true):
-                return True
-            x = x.up
-        return False
-
     used = moved + refines + true
     for conjs, after, whole in m.clauses:
         if any(c is u for c in conjs for u in used) \
                 or (moved and whole is m.where_cond):
             _check_clause(conjs, after, whole)
-    lo, hi = m.first.span()[0], m.last.span()[1]
-    new_from = " , ".join([r.node.text() for r in m.rels
+    new_from = " , ".join([tree.render(r.node) for r in m.rels
                            if r.alias not in pair] + [vname])
-    edits = []
-    if moved:
-        cond = " AND ".join(map_conj(c, view) for c in moved)
-        if m.where_cond is None:
-            new_from += f" WHERE {cond}"
-        else:
-            wlo, whi = m.where_cond.span()
-            edits += [(wlo, wlo, f"{cond} AND ( "), (whi, whi, " )")]
-    edits.append((lo, hi, f" {new_from} "))
-    edits += [(*c.span(), " TRUE ") for c in true]
-    for x in refs:
-        item = x.up is m.proj and x.field in ("projectList",
-                                              "aggregateExpressions")
-        if x.cls == "UnresolvedStar" and not x.parts() \
-                and x.block is m.block and not spliced_away(x):
-            if not item:
-                raise _Decline       # `f(*)` over the view's columns
-            _ref_text(x)
-            edits.append((*x.span(), " " + " , ".join(stars) + " "))
-            continue
-        if not (bound_here(x) and x.parts()[0] in shown) \
-                or spliced_away(x):
-            continue
-        _ref_text(x)
-        a = x.parts()[0]
-        if x.cls == "UnresolvedStar":
-            rep = star(a, item)
-        else:
-            col = x.parts()[1]
-            v = out_name(a, col)
-            rep = "".join([f"{view}`{v}`"]
-                          + [f".`{p}`" for p in x.parts()[2:]])
-            if item and len(x.parts()) == 2 and v != col:
-                rep += f" AS `{col}`"
-        edits.append((*x.span(), f" {rep} "))
-    return _run_over_view(joined, vname, _splice(tree.text, edits),
-                          vanilla_sql)
+    cond = " AND ".join(map_conj(c, view) for c in moved)
+    if moved and m.where_cond is None:
+        new_from += f" WHERE {cond}"
+
+    def replace(x):
+        if x is m.last:
+            return (m.first.span()[0], m.last.span()[1], f" {new_from} ")
+        is_true = any(x is c for c in true)
+        if x is m.where_cond and moved:
+            kept = " TRUE " if is_true else tree.inner(x, root)
+            return f"{cond} AND ( {kept} )"
+        return " TRUE " if is_true else map_ref(x, view, shown, True)
+
+    root = ctx(view, shown, replace)
+    return _run_over_view(joined, vname, tree.inner(tree.root, root,
+                                                    whole=True), vanilla_sql)
 
 
 def _probe_geometry(df, col, n=64) -> tuple:
@@ -1732,12 +1718,9 @@ def _build_join(spark, m, spatial, ldf, rdf_r, g1, g2,
 
 
 # ----------------------------------------------------------------------
-# scalar peepholes: kernel calls over directly-constructed points
-# become native codegen expressions (no WKB, no python stage)
+# call edits: extra-arity overloads onto their kernels, and point-reading
+# scalars as native codegen expressions (no WKB, no python stage)
 # ----------------------------------------------------------------------
-
-_PEEP_PRECHECK = re.compile(
-    r"\bST_(DISTANCESPHERE|DISTANCE|DWITHIN)\s*\(\s*ST_POINT\s*\(", re.I)
 
 # (UPPER name, arity) -> auxiliary SQL name carrying that arity's kernel.
 # The reference registers several kernels under ONE SQL name with
@@ -1803,73 +1786,10 @@ _ARITY_TEMPLATES = {
     ("RS_VALUE", 2): "RS_ValueGeom ( {0} , {1} , 1 )",
 }
 
-_OVERLOAD_PRECHECK = re.compile(
-    "\\b(" + "|".join(sorted({k for k, _ in
-                              list(_ARITY_RENAMES) + list(_ARITY_TEMPLATES)}))
-    + ")\\s*\\(", re.I)
-
-
-def rewrite_relate_pattern(sql: str) -> str | None:
-    """Rename/expand extra-arity ST_* calls onto their auxiliary kernels
-    (see _ARITY_RENAMES / _ARITY_TEMPLATES).  Returns None when the
-    query has no overloaded call.  Template expansion can nest (an
-    overloaded constructor inside another overloaded call), so passes
-    repeat to a small fixpoint."""
-    out_sql = sql
-    any_change = False
-    for _ in range(4):
-        toks = _tokenize(out_sql)
-        if toks is None:
-            return out_sql if any_change else None
-        changed = False
-        i = 0
-        while i < len(toks):
-            t = toks[i]
-            up = t.upper()
-            if (up not in {k for k, _ in _ARITY_RENAMES}
-                    and up not in {k for k, _ in _ARITY_TEMPLATES}) \
-                    or i + 1 >= len(toks) or toks[i + 1] != "(":
-                i += 1
-                continue
-            j = _close_paren(toks, i + 1)
-            if j is None:
-                i += 1
-                continue
-            spans = _split_args(toks, i + 2, j)
-            arity = len(spans) if spans is not None else -1
-            if j + 1 < len(toks) and toks[j + 1].upper() == "OVER":
-                i += 1     # window invocation: leave untouched
-                continue
-            if (up, arity) in _ARITY_RENAMES:
-                toks[i] = _ARITY_RENAMES[(up, arity)]
-                changed = True
-                i += 1
-            elif (up, arity) in _ARITY_TEMPLATES:
-                # positional substitution (not str.format: argument SQL
-                # may contain literal braces)
-                repl_toks = []
-                for tt in _ARITY_TEMPLATES[(up, arity)].split(" "):
-                    if tt.startswith("{") and tt.endswith("}"):
-                        lo, hi = spans[int(tt[1:-1])]
-                        repl_toks.extend(toks[lo:hi])
-                    else:
-                        repl_toks.append(tt)
-                toks[i:j + 1] = repl_toks
-                changed = True
-                # restart scan past the replacement head
-                i += 1
-            else:
-                i += 1
-        if not changed:
-            break
-        any_change = True
-        out_sql = " ".join(toks)
-    return out_sql if any_change else None
-
 # the engine's own haversine (kernels.k_distance_sphere /
 # algorithms._EARTH_RADIUS_M) restated in Spark built-ins; java.lang.Math
 # and numpy agree to the ulp on these inputs and every contract query
-# rounds its output, so the peephole is value-equivalent.  The min(1, .)
+# rounds its output, so the rewrite is value-equivalent.  The min(1, .)
 # clamp is a CASE, NOT LEAST: Spark's LEAST ignores NULL arguments,
 # which would break the kernels' NULL-in-NULL-out contract (the CASE's
 # NULL condition falls through to the ELSE, where NULL propagates).
@@ -1885,9 +1805,109 @@ _HAVERSINE_SQL = ("( 2.0 * 6371008.8 * ( CASE WHEN " + _HAV_ROOT
 _EUCLID_SQL = ("( SQRT ( POW ( ( {lon2} ) - ( {lon1} ) , 2 ) "
                "+ POW ( ( {lat2} ) - ( {lat1} ) , 2 ) ) )")
 
+# the point-reading scalars the rewrite computes natively, and the
+# functions whose text it must not repeat (a constructor's arguments
+# appear several times in the arithmetic)
+_POINT_CALLS = ("ST_DISTANCESPHERE", "ST_DISTANCE", "ST_DWITHIN", "ST_X",
+                "ST_Y")
+_VOLATILE = {"RAND", "RANDN", "RANDOM", "UUID", "SHUFFLE"}
 
-_CERT_PRECHECK = re.compile(
-    r"\bST_(DISTANCESPHERE|DISTANCE|DWITHIN|X|Y)\s*\(", re.I)
+
+def _call_edit(tree, x, ctx):
+    """The replacement of the call ``x``, its arguments rendered in
+    ``ctx``: an extra-arity overload renamed or expanded onto its kernel
+    (_ARITY_RENAMES / _ARITY_TEMPLATES), or a point-reading scalar as
+    native arithmetic (_scalar_sql).  None for any other node, a window
+    function, or a call whose edit declines."""
+    name = _call_name(x)
+    if name is None or getattr(x.up, "cls", None) == "WindowExpression":
+        return None
+    args = _args(x)
+    try:
+        if (name, len(args)) in _ARITY_RENAMES:
+            head = (x.span()[0], args[0].span()[0],
+                    _ARITY_RENAMES[(name, len(args))] + "(")
+            return tree.inner(x, ctx, extra=[head])
+        if (name, len(args)) in _ARITY_TEMPLATES:
+            # positional substitution (not str.format: argument SQL may
+            # contain literal braces)
+            texts = [tree.render(a, ctx) for a in args]
+            return re.sub(r"\{(\d+)\}", lambda g: texts[int(g.group(1))],
+                          _ARITY_TEMPLATES[(name, len(args))])
+        if name in _POINT_CALLS:
+            return _scalar_sql(tree, name, args, ctx)
+    except _Decline:
+        pass
+    return None
+
+
+def _scalar_sql(tree, name, args, ctx):
+    """ST_Distance / ST_DistanceSphere / ST_DWithin / ST_X / ST_Y as
+    native arithmetic over the coordinates of its point arguments
+    (_point_coords), or None when one is unknown.  Distances are the
+    kernels' formulas (_EUCLID_SQL / _HAVERSINE_SQL), ST_DWithin keeps
+    the kernel's ``r <= d + 1e-12`` boundary (algorithms.dwithin _EPS),
+    and the answer is NULL wherever a constructed point is.
+
+    ST_X/ST_Y are bit-exact (the same double).  The distance forms'
+    sqrt(dx^2+dy^2) differs from the kernel's np.hypot only in the last
+    ulp (the DuckDB oracles compute the sqrt form)."""
+    n = {"ST_X": 1, "ST_Y": 1, "ST_DWITHIN": 3}.get(name, 2)
+    if len(args) != n:
+        return None
+    pts = [_point_coords(tree, a, ctx) for a in args[:min(n, 2)]]
+    if None in pts:
+        return None
+    bad = " OR ".join(p[2] for p in pts if p[2])
+    if n == 1:
+        x, y, _ = pts[0]
+        v, other = (x, y) if name == "ST_X" else (y, x)
+        return f"( CASE WHEN {other} IS NULL OR {bad} THEN NULL " \
+               f"ELSE {v} END )" if bad else v
+    (x1, y1, _), (x2, y2, _) = pts
+    sql = (_HAVERSINE_SQL if name == "ST_DISTANCESPHERE" else _EUCLID_SQL) \
+        .format(lon1=x1, lat1=y1, lon2=x2, lat2=y2)
+    if n == 3:
+        sql = f"( {sql} <= ( ( {tree.render(args[2], ctx)} ) + 1e-12 ) )"
+    return f"( CASE WHEN {bad} THEN NULL ELSE {sql} END )" if bad else sql
+
+
+def _point_coords(tree, node, ctx):
+    """(x_sql, y_sql, guard_sql) of a point argument, None when unknown:
+
+    - an ``ST_Point(x, y)`` call: its arguments as the doubles the kernel
+      receives, and a guard true where k_point's point is NULL for a NaN
+      coordinate (a NULL one propagates through the arithmetic);
+      declined over a volatile argument, which the arithmetic repeats;
+    - a certified point column, bound through its query block
+      (_Tree.column): its coordinates in ``ctx`` (a join view's side) or
+      the relation's own (_column_coords); guard None."""
+    if _call_name(node) == "ST_POINT" and len(_args(node)) == 2:
+        if any(_call_name(y) in _VOLATILE for y in node.walk()):
+            return None
+        x, y = (f"CAST( {tree.render(a, ctx)} AS DOUBLE )"
+                for a in _args(node))
+        return x, y, f"isnan({x}) OR isnan({y})"
+    ref = tree.column(node)
+    if ref is None:
+        return None
+    return ctx.coords(ref) if ctx is not None else _column_coords(tree, *ref)
+
+
+def _column_coords(tree, alias, col, rel):
+    """Coordinates of the certified point column ``alias.col`` of a
+    catalog relation (_column_cert): its shadow doubles, or its WKB bits
+    (plans/native_point.py)."""
+    from sedona_db_spark.operators.spatial_join import _bq
+    from sedona_db_spark.plans.native_point import point_x_sql, point_y_sql
+    cert = tree.cert(rel, col)
+    if cert is None:
+        return None
+    if cert[0] == "shadow":
+        return tuple(_shadow_cast_sql(f"{_bq(alias)}.{_bq(c)}")
+                     for c in cert[1:]) + (None,)
+    ref = f"{_bq(alias)}.{_bq(col)}"
+    return point_x_sql(ref), point_y_sql(ref), None
 
 
 def _point_table_cols(spark, table: str) -> list[str]:
@@ -2216,107 +2236,12 @@ def _relation_shadow(spark, tbl: str, col: str):
     return _view_shadow(spark, tbl, col) or _point_table_shadow(spark, tbl, col)
 
 
-_POINT_CALLS = ("ST_DISTANCESPHERE", "ST_DISTANCE", "ST_DWITHIN", "ST_X",
-                "ST_Y")
-
-
-def _point_calls(toks, calls, coords, arg_text):
-    """``[(i, j, sql)]``: the native arithmetic replacing each call
-    toks[i..j] of the upper-cased ``calls`` (among _POINT_CALLS) whose
-    point arguments ``coords(lo, hi)`` maps to ``(x_sql, y_sql)``; None
-    on unbalanced parentheses.  Distances are the kernels' formulas
-    (_EUCLID_SQL / _HAVERSINE_SQL), ST_DWithin keeps the kernel's ``r <=
-    d + 1e-12`` boundary (algorithms.dwithin _EPS) over the radius
-    ``arg_text(lo, hi)`` spells."""
-    edits, i = [], 0
-    while i < len(toks):
-        u = toks[i].upper()
-        if u not in calls or toks[i + 1:i + 2] != ["("]:
-            i += 1
-            continue
-        j = _close_paren(toks, i + 1)
-        if j is None:
-            return None
-        repl = None
-        if u in ("ST_X", "ST_Y"):
-            xy = coords(i + 2, j)
-            if xy is not None:
-                repl = xy[u == "ST_Y"]
-        else:
-            args = _split_args(toks, i + 2, j)
-            if args is not None \
-                    and len(args) == (3 if u == "ST_DWITHIN" else 2):
-                xy1, xy2 = coords(*args[0]), coords(*args[1])
-                if xy1 is not None and xy2 is not None:
-                    repl = (_HAVERSINE_SQL if u == "ST_DISTANCESPHERE"
-                            else _EUCLID_SQL).format(
-                        lon1=xy1[0], lat1=xy1[1], lon2=xy2[0], lat2=xy2[1])
-                    if u == "ST_DWITHIN":
-                        repl = (f"( {repl} <= ( ( {arg_text(*args[2])} ) "
-                                "+ 1e-12 ) )")
-        if repl is None:
-            i += 1
-        else:
-            edits.append((i, j, repl))
-            i = j + 1
-    return edits
-
-
-def _edit_tokens(toks, edits, as_tokens):
-    """``toks`` with each (i, j, sql) edit's tokens [i..j] replaced by
-    ``as_tokens(sql)``; None when that returns None."""
-    out, pos = [], 0
-    for i, j, repl in edits:
-        rt = as_tokens(repl)
-        if rt is None:
-            return None
-        out += toks[pos:i] + rt
-        pos = j + 1
-    return out + toks[pos:]
-
-
-def _subst_certified_calls(span: list[str], shadows: dict,
-                           aliases: tuple, schemas: dict) -> list[str] | None:
-    """Span-local certified-scalar substitution for the join rewrite's
-    refine conjuncts (round 12, extending the r11 scalar rewrite into
-    the lattice's refine position): ST_Distance / ST_DWithin / ST_X /
-    ST_Y calls whose geometry arguments are references to
-    shadow-certified point columns are replaced by the SAME native
-    arithmetic rewrite_certified_scalar emits — the shadow doubles
-    substitute the coordinates (bit-equal by certificate), sqrt-form
-    distance, the dwithin ``<= d + 1e-12`` kernel boundary.  Emitted
-    references stay alias-qualified token triples (``a . px``) so the
-    caller's _map_alias_refs pass renames them onto the joined view.
-
-    ``shadows``: alias -> {geom_col: (x_col, y_col)}.  Returns the new
-    token list, or None when nothing substituted (callers keep the
-    original span — the kernels stay exact for every shape this
-    declines).  ``aliases`` is the FULL alias tuple (not just the
-    shadow-bearing ones) so bare-column owner resolution matches the
-    main parser's."""
-
-    def pt_xy(lo, hi):
-        q = _qualified_ref(span, lo, hi, aliases, schemas)
-        if q is None:
-            return None
-        xy = shadows.get(q[0], {}).get(q[1])
-        if xy is None:
-            return None
-        return (f"CAST ( {q[0]} . {xy[0]} AS DOUBLE )",
-                f"CAST ( {q[0]} . {xy[1]} AS DOUBLE )")
-
-    edits = _point_calls(span, _POINT_CALLS, pt_xy,
-                         lambda lo, hi: _render(span[lo:hi]))
-    return _edit_tokens(span, edits, _tokenize) if edits else None
-
-
 # WKB bit extraction is exact but costs ~10 us/row/coordinate in
 # interpreted string machinery (hex/conv/concat); above this estimated
-# relation size the rewrite declines extraction and leaves the
-# vectorized Arrow kernel in place (~4 us/row/pass).  Shadow columns
-# (zero decode cost) are preferred at ANY size and ignore this gate.
-_EXTRACT_MAX_BYTES_CONF = "spark.sedona.scalarRewrite.extractMaxBytes"
-_EXTRACT_MAX_BYTES_DEFAULT = 4 * 1024 * 1024
+# relation size the rewrite leaves the vectorized Arrow kernel in place
+# (~4 us/row/pass).  Shadow columns (zero decode cost) are preferred at
+# ANY size and ignore this gate.
+_EXTRACT_MAX_BYTES = 4 * 1024 * 1024
 
 
 def _rel_size_bytes(df) -> int | None:
@@ -2327,211 +2252,90 @@ def _rel_size_bytes(df) -> int | None:
         return None
 
 
-def rewrite_certified_scalar(spark, sql: str, vanilla_sql) -> str | None:
-    """Rewrite scalar ST_X/ST_Y/ST_Distance/ST_DWithin/ST_DistanceSphere
-    calls over CERTIFIED all-point columns into pure whole-stage-codegen
-    arithmetic — no Arrow/Python round trip.  Coordinate sources, in
-    preference order:
-
-    1. SHADOW COLUMNS — sibling DOUBLE columns proven bit-equal to the
-       point's coordinates at certify time (certify_point_table /
-       certify_point_view).  Zero per-row decode; the only form whose
-       cost scales (a stored-column scan reads 16 B/row).
-    2. WKB BIT EXTRACTION (plans/native_point.py) — exact but ~10 us/
-       row/coordinate of interpreted string machinery, so gated on the
-       relation's estimated size (spark.sedona.scalarRewrite.
-       extractMaxBytes, default 4 MiB); above the gate the vectorized
-       Arrow kernel stays.  Available when the table property names the
-       column or the relation's analyzed plan proves it is the 2-arg
-       ST_Point constructor's output (the r10 plan-time certificate).
-
-    Conservative: any alias ambiguity, subquery-sourced arg, or
-    uncertified column leaves that call untouched.  Returns spliced SQL
-    text (comments/hints of the original preserved) or None.
-
-    ST_X/ST_Y substitution is bit-exact (same stored double).  The
-    distance forms use the same _EUCLID/_HAVERSINE formulas as the
-    ST_Point-literal peephole — sqrt(dx^2+dy^2) vs the kernel's
-    np.hypot differs only in the last ulp (the DuckDB oracles compute
-    the sqrt form, so the rewrite moves Spark CLOSER to the oracle)."""
-    if not _CERT_PRECHECK.search(sql):
-        return None
-    toks, spans = _tokenize_spans(sql)
-    if toks is None:
-        return None
+def _column_cert(spark, name: str, col: str):
+    """How the scalar rewrite reads the points of column ``col`` of the
+    catalog relation ``name``: ``("shadow", x_col, y_col)``, sibling
+    doubles proven bit-equal to the coordinates at certify time
+    (certify_point_table / certify_point_view; zero per-row decode, the
+    only form whose cost scales); ``("extract",)``, WKB bit extraction
+    (plans/native_point.py) when the table property names the column or
+    the relation's analyzed plan proves it is the 2-arg ST_Point
+    constructor's output, and the relation's estimated size is at most
+    _EXTRACT_MAX_BYTES; else None (the kernel stays)."""
     from sedona_db_spark.operators.spatial_join import (PLANAR_POINTS,
                                                         plan_geom_facts)
-    from sedona_db_spark.plans.native_point import (
-        point_x_sql, point_y_sql)
-    n = len(toks)
-    # --- collect relations (any depth; duplicate/subquery alias poisons)
-    rels: dict[str, str | None] = {}
-    i = 0
-    while i < n:
-        if toks[i].upper() in ("FROM", "JOIN"):
-            j = i + 1
-            while True:
-                try:
-                    rel, j = _parse_rel(toks, j)
-                except _Decline:
-                    break
-                if rel.is_subquery:
-                    rels[rel.alias] = None
-                elif rel.alias in rels and rels[rel.alias] != rel.text:
-                    rels[rel.alias] = None
-                else:
-                    rels.setdefault(rel.alias, rel.text)
-                if j < n and toks[j] == ",":
-                    j += 1
-                    continue
-                break
-            i = j
-            continue
-        i += 1
-    if not rels:
+    try:
+        df = spark.table(name)
+    except Exception:
         return None
-    dfs: dict[str, DataFrame] = {}
-    schemas: dict[str, list[str]] = {}
-    for a, tbl in list(rels.items()):
-        if tbl is None:
-            schemas[a] = []
-            continue
+    xy = _relation_shadow(spark, name, col)
+    if xy and xy[0] in df.columns and xy[1] in df.columns:
+        return ("shadow",) + tuple(xy)
+    ok = col in _point_table_cols(spark, name)
+    if not ok:
         try:
-            dfs[a] = spark.table(tbl)
-            schemas[a] = dfs[a].columns
+            ok = plan_geom_facts(df, col) == PLANAR_POINTS
         except Exception:
-            rels[a] = None
-            schemas[a] = []
-    cert_memo: dict[tuple[str, str], tuple | None] = {}
-
-    def cert_kind(alias: str, col: str):
-        """('shadow', xc, yc) | ('extract',) | None for a relation
-        column, memoized per (table, col)."""
-        tbl = rels.get(alias)
-        if tbl is None or col not in schemas[alias]:
-            return None
-        key = (tbl, col)
-        if key in cert_memo:
-            return cert_memo[key]
-        out = None
-        xy = _relation_shadow(spark, tbl, col)
-        if xy and xy[0] in schemas[alias] and xy[1] in schemas[alias]:
-            out = ("shadow",) + tuple(xy)
-        else:
-            ok = col in _point_table_cols(spark, tbl)
-            if not ok:
-                try:
-                    ok = plan_geom_facts(dfs[alias], col) \
-                        == PLANAR_POINTS
-                except Exception:
-                    ok = False
-            if ok:
-                try:
-                    cap = int(spark.conf.get(
-                        _EXTRACT_MAX_BYTES_CONF,
-                        str(_EXTRACT_MAX_BYTES_DEFAULT)))
-                except Exception:
-                    cap = _EXTRACT_MAX_BYTES_DEFAULT
-                size = _rel_size_bytes(dfs[alias])
-                if size is not None and size <= cap:
-                    out = ("extract",)
-        cert_memo[key] = out
-        return out
-
-    def pt_xy(lo, hi):
-        """Arg span -> (x_sql, y_sql) coordinate expressions of a
-        certified point column ref, or None."""
-        q = _qualified_ref(toks, lo, hi, rels, schemas)
-        if q is None:
-            return None
-        kind = cert_kind(*q)
-        if kind is None:
-            return None
-        alias = q[0]
-        if kind[0] == "shadow":
-            return (_shadow_cast_sql(f"{alias}.{kind[1]}"),
-                    _shadow_cast_sql(f"{alias}.{kind[2]}"))
-        ref = sql[spans[lo][0]:spans[hi - 1][1]]
-        return (point_x_sql(ref), point_y_sql(ref))
-
-    edits = _point_calls(toks, _POINT_CALLS, pt_xy,
-                         lambda lo, hi: sql[spans[lo][0]:spans[hi - 1][1]])
-    if not edits:
-        return None
-    return _splice(sql, [(spans[i][0], spans[j][1], repl)
-                         for i, j, repl in edits])
-
-def _split_args(toks, lo, hi):
-    """toks[lo:hi] = call contents; split on top-level commas -> list of
-    (a_lo, a_hi) spans (no arity constraint), or None when empty."""
-    d = 0
-    spans = []
-    start = lo
-    for j in range(lo, hi):
-        t = toks[j]
-        if t == "(":
-            d += 1
-        elif t == ")":
-            d -= 1
-        elif d == 0 and t == ",":
-            spans.append((start, j))
-            start = j + 1
-    spans.append((start, hi))
-    if any(s[1] <= s[0] for s in spans):
-        return None
-    return spans
-
-
-def _match_point_call(toks, lo, hi):
-    """toks[lo:hi] == ST_Point ( X , Y ) -> (x_span, y_span) or None."""
-    if (hi - lo < 6 or toks[lo].upper() != "ST_POINT" or toks[lo + 1] != "("
-            or toks[hi - 1] != ")"):
-        return None
-    args = _split_args(toks, lo + 2, hi - 1)
-    return args if args is not None and len(args) == 2 else None
-
-
-def peephole_scalar(sql: str) -> str | None:
-    """Rewrite ST_DistanceSphere/ST_Distance over two directly
-    constructed ST_Point(x, y) calls into the equivalent native
-    arithmetic (whole-stage codegen: the measured sf10 wall of the
-    haversine bulk kernel drops ~5x by deleting the WKB build +
-    Arrow/python round trip).  Returns the rewritten SQL or None."""
-    if not _PEEP_PRECHECK.search(sql):
-        return None
-    toks = _tokenize(sql)
-    if toks is None:
-        return None
-
-    def arg(lo, hi):
-        inner = _render(toks[lo:hi])
-        return peephole_scalar(inner) or inner
-
-    def coords(lo, hi):
-        pt = _match_point_call(toks, lo, hi)
-        return None if pt is None else (arg(*pt[0]), arg(*pt[1]))
-
-    edits = _point_calls(toks, _POINT_CALLS[:3], coords, arg)
-    return _render(_edit_tokens(toks, edits, lambda r: [r])) if edits \
-        else None
+            ok = False
+    size = _rel_size_bytes(df) if ok else None
+    return ("extract",) if size is not None \
+        and size <= _EXTRACT_MAX_BYTES else None
 
 
 # ----------------------------------------------------------------------
 # session installation
 # ----------------------------------------------------------------------
 
-def _route(spark, query: str, vanilla, vname: str):
-    """The rewrite of ``query``: a routed DataFrame (its join registered
-    as ``vname``), a rewritten text to run vanilla, or None (decline)."""
-    peeped = peephole_scalar(query)
-    text = peeped if peeped is not None else query
-    out = try_rewrite(spark, text, vanilla, vname)
-    if out is not None:
-        return out
-    # scalar spatial calls over certified all-point columns -> native
-    # bit-extraction arithmetic (runs on the peepholed text, so both
-    # rewrites compose)
-    return rewrite_certified_scalar(spark, text, vanilla) or peeped
+# the name gate: a text naming none of the functions the pass edits (the
+# join predicates, the point-reading scalars, the overloads) goes
+# straight to vanilla
+_GATE = re.compile(r"\b(?:%s)\b" % "|".join(sorted(
+    _SPATIAL_CALLS | set(_POINT_CALLS)
+    | {k for k, _ in [*_ARITY_RENAMES, *_ARITY_TEMPLATES]})), re.I)
+
+
+def _calls_to_edit(js: str) -> bool:
+    """Whether a parsed statement (its JSON) calls a function the pass
+    edits: a join predicate, a point-reading scalar, or an overload at
+    an arity the tables take."""
+    for parts, args in re.findall(
+            r'"nameParts":"\[([^"]*)\]","arguments":\[([\d,]*)\]', js):
+        name = parts.rsplit(", ", 1)[-1].upper()
+        arity = len(args.split(",")) if args else 0
+        if name in _SPATIAL_CALLS or name in _POINT_CALLS \
+                or (name, arity) in _ARITY_RENAMES \
+                or (name, arity) in _ARITY_TEMPLATES:
+            return True
+    return False
+
+
+def _edited_text(tree) -> str | None:
+    """The statement with its call edits spliced in, None without any."""
+    try:
+        text = tree.inner(tree.root, whole=True)
+    except _Decline:
+        return None
+    return text if text != tree.text else None
+
+
+def rewrite_calls(spark, sql: str) -> str | None:
+    """``sql`` with its call edits (overloads, point-reading scalars)
+    applied, None when it has none or does not parse."""
+    tree = _parse_plan(spark, sql)
+    return None if tree is None else _edited_text(tree)
+
+
+def _route(tree, vanilla, vname: str):
+    """The pass over a parsed statement: a routed DataFrame (its join
+    registered as ``vname``), the edited text to run vanilla, or None.
+    The first FROM clause the join core routes wins, outer query blocks
+    first; without one, the call edits alone apply."""
+    for m in _tree_matches(tree):
+        try:
+            return _rewrite(tree.spark, m, vanilla, vname)
+        except _Decline:
+            continue
+    return _edited_text(tree)
 
 
 def _warn_rewrite_failed(exc: Exception) -> None:
@@ -2542,86 +2346,108 @@ def _warn_rewrite_failed(exc: Exception) -> None:
                   stacklevel=3)
 
 
-def _is_query(sql: str) -> bool:
-    """Whether ``sql`` is a plain query, which ``spark.sql`` only
-    analyses; a command (INSERT, CTAS, CREATE VIEW) runs at once, so it
-    must never run again for a plan key.  Anything odd is a command."""
-    toks = _tokenize(sql)
-    if not toks or toks[0].upper() not in ("SELECT", "WITH", "FROM",
-                                           "VALUES", "TABLE", "("):
-        return False
-    # WITH ... INSERT, FROM s INSERT ... (multi-insert)
-    return not any(d == 0 and t.upper() in ("INSERT", "UPDATE", "DELETE",
-                                            "MERGE")
-                   for t, d in zip(toks, _depths(toks)))
+def _is_command(tree) -> bool:
+    """Whether the parsed statement is a command (INSERT, a multi-insert's
+    Union of them, CTAS, CREATE VIEW, ...), which ``spark.sql`` runs at
+    once, so it must never run again for a plan key; a plain query is
+    only analysed."""
+    root = tree.root.kids[0] if tree.root.cls == "UnresolvedWith" \
+        else tree.root
+    return root.cls not in _QUERY_ROOTS or (
+        root.cls == "Union"
+        and all(k.cls == "InsertIntoStatement" for k in root.kids))
 
 
 def install_sql_rewrite(spark: SparkSession) -> None:
     """Wrap ``spark.sql`` so spatial joins plan through the engine's
-    operators.  Idempotent per session; vanilla behavior for every
-    non-matching query (including parameterized sql(..., args)).
+    operators and the call edits apply.  Idempotent per session; vanilla
+    behavior for every non-matching text (including parameterized
+    sql(..., args), a syntax error and a SQL script).
 
-    Rewrites and declines of queries are memoized on (query text, plan
-    confs, ``plan_key`` of the query's vanilla analyzed plan, which
-    inlines every view, table and file listing it reads), so a replaced
-    view, an appended file or a changed conf is a new key; a hit replays
-    the rewritten SQL against the join view named from its key, which is
-    dropped with the entry.  Commands and queries without a plan key are
-    routed per call, never memoized; a rewrite that raises warns and
-    answers vanilla, unmemoized."""
+    The pass runs on queries once per memo key: (query text, plan confs,
+    ``plan_key`` of the text's vanilla analyzed plan, which inlines every
+    view, table and file listing it reads), so a replaced view, an
+    appended file or a changed conf is a new key; a hit replays the
+    rewritten SQL against the join view named from its key, which is
+    dropped with the entry.  Only queries are stored, so a text the memo
+    holds is a query: a repeated text is neither parsed nor re-routed,
+    and neither is one whose parse called nothing the pass edits (kept
+    in ``plain``).  Commands and queries without a plan key are routed
+    per call, never memoized; a rewrite that raises warns and answers
+    vanilla, unmemoized."""
     if getattr(spark, "_sedona_sql_rewrite_memo", None) is not None:
         return
     vanilla = spark.sql
+    queries: dict = {}       # (text, confs) -> the plan keys stored for it
+    lock = threading.Lock()
 
-    def _drop_join_view(key, routed) -> None:
+    def _evicted(key, routed) -> None:
+        with lock:
+            keys = queries.get(key[:2], set())
+            keys.discard(key[2])
+            if not keys:
+                queries.pop(key[:2], None)
         if routed is not None:
             try:
                 spark.catalog.dropTempView(_join_view_name(key))
             except Exception:
                 pass            # session already stopped
 
-    memo = BoundedMemo(256, on_evict=_drop_join_view)
+    memo = BoundedMemo(256, on_evict=_evicted)
+    plain = BoundedMemo(256)     # texts that call nothing the pass edits
     _MISS = object()
 
+    def run_pass(tree, key, base):
+        """(the answer, what the memo stores for ``key``: the edited
+        text, None for a decline, _MISS when the pass raised)."""
+        try:
+            out = _route(tree, vanilla, _join_view_name(key))
+        except Exception as exc:
+            _warn_rewrite_failed(exc)
+            return base if base is not None else vanilla(key[0]), _MISS
+        routed = getattr(out, "_sedona_rewritten_sql", out)
+        if isinstance(out, DataFrame):
+            return out, routed
+        if routed is not None:
+            return vanilla(routed), routed
+        return (base if base is not None else vanilla(key[0])), routed
+
     def sql(query, *args, **kwargs):
-        if args or kwargs or not isinstance(query, str):
+        if args or kwargs or not isinstance(query, str) \
+                or not _GATE.search(query) or plain.get(query):
             return vanilla(query, *args, **kwargs)
-        if _OVERLOAD_PRECHECK.search(query):
-            try:
-                query = rewrite_relate_pattern(query) or query
-            except Exception as exc:
-                _warn_rewrite_failed(exc)
-        if not (_PRECHECK.search(query) or _PEEP_PRECHECK.search(query)
-                or _CERT_PRECHECK.search(query)):
-            return vanilla(query)
-        base = pk = None
-        if _is_query(query):
-            try:
-                base = vanilla(query)
-            except ParseException:
-                raise           # the rewrite parses only what Spark parsed
-            except Exception:
-                pass            # re-raised by the vanilla answer below
-            pk = plan_key(base) if base is not None else None
-        key = (query, _plan_conf_fingerprint(spark), pk)
+        confs = _plan_conf_fingerprint(spark)
+        tree = None
+        if (query, confs) not in queries:
+            # a text the memo has not seen: read what it calls, and
+            # whether it is a command, which runs as soon as vanilla
+            # sees it
+            stmt = _statement(spark, query)
+            if stmt is None or not _calls_to_edit(stmt[1]):
+                plain.put(query, True)    # a syntax error raises vanilla's
+                return vanilla(query)
+            tree = _parse_plan(spark, query)
+            if tree is None or tree.root.cls == "CompoundBody":
+                return vanilla(query)     # a SQL script runs as it is
+            if _is_command(tree):
+                return run_pass(tree, (query, confs, None), None)[0]
+        try:
+            base = vanilla(query)
+        except Exception:
+            base = None         # re-raised by the vanilla answer below
+        pk = plan_key(base) if base is not None else None
+        key = (query, confs, pk)
         hit = memo.get(key, _MISS)       # pk None is never stored
         if hit is None:          # a memoized decline
             return base
         if hit is not _MISS:
             return vanilla(hit)
-        try:
-            out = _route(spark, query, vanilla, _join_view_name(key))
-        except Exception as exc:
-            _warn_rewrite_failed(exc)
-            return base if base is not None else vanilla(query)
-        routed = getattr(out, "_sedona_rewritten_sql", out)
-        if pk is not None:
+        out, routed = run_pass(tree or _parse_plan(spark, query), key, base)
+        if pk is not None and routed is not _MISS:
+            with lock:
+                queries.setdefault(key[:2], set()).add(pk)
             memo.put(key, routed)
-        if isinstance(out, DataFrame):
-            return out
-        if routed is not None:
-            return vanilla(routed)
-        return base if base is not None else vanilla(query)
+        return out
 
     spark.sql = sql
     spark._sedona_sql_rewrite_memo = memo

@@ -2,7 +2,7 @@
 
 plans/native_point.py reconstructs IEEE-754 doubles from point-WKB bit
 patterns with pure whole-stage-codegen SQL; the certified-scalar rewrite
-(plans/sql_rewrite.rewrite_certified_scalar) substitutes it for the
+(plans/sql_rewrite._scalar_sql) substitutes it for the
 ST_X/ST_Y/ST_Distance kernels only under a point certificate.  These
 tests pin (a) bit-equality against the Python kernels over the full
 double domain including subnormals/zeros/inf/NaN, (b) the guard's

@@ -290,17 +290,19 @@ def test_scalar_peephole_distance_sphere(spark):
     import pyspark.sql.functions as F
 
     from sedona_db_spark.functions import get_udf
-    from sedona_db_spark.plans.sql_rewrite import peephole_scalar
+    from sedona_db_spark.plans.sql_rewrite import rewrite_calls
 
-    s = peephole_scalar(
+    s = rewrite_calls(
+        spark,
         "SELECT ST_DistanceSphere(ST_Point(a - 1.0, b), ST_Point(0.0, 0.0))"
         " FROM t")
     assert s is not None and "ASIN" in s and "ST_DistanceSphere" not in s
     assert "LEAST" not in s                   # NULL-swallowing clamp banned
-    assert peephole_scalar(
-        "SELECT ST_DistanceSphere(a.geom, b.geom) FROM t") is None
-    assert peephole_scalar("SELECT ST_Buffer(g, 1.0) FROM t") is None
-    e = peephole_scalar(
+    assert rewrite_calls(
+        spark, "SELECT ST_DistanceSphere(a.geom, b.geom) FROM t") is None
+    assert rewrite_calls(spark, "SELECT ST_Buffer(g, 1.0) FROM t") is None
+    e = rewrite_calls(
+        spark,
         "SELECT ST_Distance(ST_Point(x1, y1), ST_Point(x2, y2)) FROM t")
     assert e is not None and "SQRT" in e and "ASIN" not in e
 
@@ -374,12 +376,14 @@ def test_scalar_peephole_dwithin(spark):
     import pyspark.sql.functions as F
 
     from sedona_db_spark.functions import get_udf
-    from sedona_db_spark.plans.sql_rewrite import peephole_scalar
+    from sedona_db_spark.plans.sql_rewrite import rewrite_calls
 
-    s = peephole_scalar(
+    s = rewrite_calls(
+        spark,
         "SELECT ST_DWithin(ST_Point(a, b), ST_Point(c, d), 5.0) FROM t")
     assert s is not None and "<=" in s and "ST_DWithin" not in s
-    assert peephole_scalar("SELECT ST_DWithin(g1, g2, 5.0) FROM t") is None
+    assert rewrite_calls(
+        spark, "SELECT ST_DWithin(g1, g2, 5.0) FROM t") is None
 
     df = spark.range(0, 3000).selectExpr(
         "CAST(id % 100 AS DOUBLE) AS x1", "CAST(id % 37 AS DOUBLE) AS y1",
@@ -1723,24 +1727,36 @@ def test_commands_through_the_wrapper_run_once(spark):
     wrapper never runs one again to take a plan key: an INSERT whose
     spatial scalar is rewritten, or whose join routes, adds each row
     once, and a spatial CTAS or CREATE TEMP VIEW does not fail on a
-    second run with 'already exists'."""
+    second run with 'already exists'.  So do a ``WITH ... INSERT`` and a
+    multi-insert ``FROM s INSERT ... INSERT ...``."""
     _memo_points(spark, "rw_pts6")
     _memo_box(spark, 0, "rw_box6")
     dist = ("ST_Distance(ST_Point(CAST(id AS DOUBLE), 0.0D), "
             "ST_Point(0.0D, 0.0D))")
-    for t in ("rw_ins", "rw_ins_join", "rw_ctas"):
+    tables = ("rw_ins", "rw_ins_join", "rw_ctas", "rw_ins_cte", "rw_multi_a",
+              "rw_multi_b")
+    for t in tables:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
     try:
         spark.sql("CREATE TABLE rw_ins (d DOUBLE) USING parquet")
         spark.sql("CREATE TABLE rw_ins_join (id BIGINT) USING parquet")
+        for t in ("rw_ins_cte", "rw_multi_a", "rw_multi_b"):
+            spark.sql(f"CREATE TABLE {t} (d DOUBLE) USING parquet")
         ins = f"INSERT INTO rw_ins SELECT {dist} FROM range(5)"
         ins_join = ("INSERT INTO rw_ins_join SELECT p.id FROM rw_pts6 p "
                     "JOIN rw_box6 b ON ST_Intersects(p.geom, b.geom)")
+        ins_cte = (f"WITH c AS (SELECT id FROM range(4)) "
+                   f"INSERT INTO rw_ins_cte SELECT {dist} FROM c")
+        multi = (f"FROM range(6) INSERT INTO rw_multi_a SELECT {dist} "
+                 f"INSERT INTO rw_multi_b SELECT {dist} WHERE id < 2")
         for n in (1, 2):      # the second call of the same text too
-            spark.sql(ins)
-            spark.sql(ins_join)
+            for q in (ins, ins_join, ins_cte, multi):
+                spark.sql(q)
             assert _count(spark, "rw_ins") == 5 * n
             assert _count(spark, "rw_ins_join") == 3 * n
+            assert _count(spark, "rw_ins_cte") == 4 * n
+            assert _count(spark, "rw_multi_a") == 6 * n
+            assert _count(spark, "rw_multi_b") == 2 * n
         assert sorted(r[0] for r in spark.table("rw_ins").collect()) == \
             [0.0, 0.0, 1.0, 1.0, 2.0, 2.0, 3.0, 3.0, 4.0, 4.0]
         spark.sql(f"CREATE TABLE rw_ctas USING parquet AS "
@@ -1751,7 +1767,7 @@ def test_commands_through_the_wrapper_run_once(spark):
         assert _count(spark, "rw_cview") == 4
     finally:
         spark.catalog.dropTempView("rw_cview")
-        for t in ("rw_ins", "rw_ins_join", "rw_ctas"):
+        for t in tables:
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
@@ -1945,6 +1961,42 @@ def test_memo_hit_parses_nothing(spark, monkeypatch):
     again = spark.sql(q)
     assert calls == [q]
     assert _ids(again) == _ids(first) == [0, 1, 2]
+
+
+def _certified_points(spark, view):
+    """A view whose ``geom`` is ST_Point over DOUBLE ``x``, ``y``,
+    certified with those shadows."""
+    from sedona_db_spark.plans.sql_rewrite import certify_point_view
+    spark.sql(f"""CREATE OR REPLACE TEMP VIEW {view} AS
+                  SELECT id, x, y, ST_Point(x, y) AS geom FROM (
+                    SELECT id, CAST(id AS DOUBLE) + 0.5 AS x, 2.0D AS y
+                    FROM range(6))""")
+    certify_point_view(spark, view, {"geom": ("x", "y")})
+
+
+@pytest.mark.parametrize("kind", ["overload", "certified scalar"])
+def test_memo_hit_parses_nothing_for_call_edits(spark, monkeypatch, kind):
+    """A repeated text whose only edits are calls (an extra-arity
+    overload, a scalar over a certified column) parses once over two
+    calls, and the second call answers the same rows."""
+    from sedona_db_spark.plans import sql_rewrite
+    _certified_points(spark, "rw_cpts7")
+    q = {"overload": "SELECT id, ST_Area(ST_Buffer(geom, 1.0, "
+                     "'quad_segs=2')) AS a FROM rw_cpts7",
+         "certified scalar": "SELECT id, ST_X(geom) AS a FROM rw_cpts7"}[kind]
+    calls = []
+    real = sql_rewrite._parse_plan
+
+    def spy(session, text):
+        calls.append(text)
+        return real(session, text)
+
+    monkeypatch.setattr(sql_rewrite, "_parse_plan", spy)
+    first = _rows(spark.sql(q), ["id", "a"])
+    assert calls == [q]
+    again = _rows(spark.sql(q), ["id", "a"])
+    assert calls == [q]
+    assert again == first and len(first) == 6
 
 
 @pytest.mark.parametrize("exists,join", [("EXISTS", "LEFT SEMI JOIN"),
@@ -2383,3 +2435,105 @@ def test_mixed_tagged_planar_pair_declines(spark):
         df = spark.sql(q)
     assert getattr(df, "_sedona_rewritten_sql", None) is None
     assert _probe_jobs(jobs) == [], jobs
+
+
+# ---------------------------------------------------------------------
+# the scalar rewrite: NULL where the kernels answer NULL, columns bound
+# through their query blocks, the text's hints kept
+# ---------------------------------------------------------------------
+
+def _nan_points(spark):
+    """Rows whose constructed point ``ST_Point(a, b)`` is NULL (a NaN or
+    NULL coordinate) or not, beside a certified ``geom``."""
+    from sedona_db_spark.plans.sql_rewrite import certify_point_view
+    nan = float("nan")
+    spark.createDataFrame(
+        [(0, nan, 0.0), (1, 0.0, nan), (2, None, 0.0), (3, 0.0, None),
+         (4, 3.0, 4.0), (5, -0.0, 1.5)], "id long, a double, b double") \
+        .selectExpr("id", "a", "b", "CAST(id AS DOUBLE) AS x",
+                    "2.0D AS y").createOrReplaceTempView("nan_src")
+    spark.sql("CREATE OR REPLACE TEMP VIEW nan_pts AS "
+              "SELECT id, a, b, x, y, ST_Point(x, y) AS geom FROM nan_src")
+    certify_point_view(spark, "nan_pts", {"geom": ("x", "y")})
+
+
+@pytest.mark.parametrize("other", ["ST_Point(0.0D, 0.0D)", "geom"])
+def test_constructed_point_nulls_match_the_kernels(spark, other):
+    """``ST_Point(x, y)`` is NULL when x or y is NULL or NaN, so every
+    call over it answers NULL there: the rewritten ST_Distance,
+    ST_DistanceSphere, ST_DWithin, ST_X and ST_Y (against a constructed
+    point and against a certified column) plan with no Python node and
+    answer exactly what the kernels answer."""
+    from sedona_db_spark.functions import get_udf
+    _nan_points(spark)
+    p = "ST_Point(a, b)"
+    calls = {"d": f"ST_Distance({p}, {other})",
+             "ds": f"ST_DistanceSphere({p}, {other})",
+             "dw": f"ST_DWithin({p}, {other}, 1e9)",
+             "gx": f"ST_X({p})", "gy": f"ST_Y({p})"}
+    q = ("SELECT id, " + ", ".join(f"{v} AS {k}" for k, v in calls.items())
+         + " FROM nan_pts")
+    df = spark.sql(q)
+    assert _python_node_count(df) == 0
+    pt = get_udf("ST_Point")
+    mine = pt(F.col("a"), F.col("b"))
+    theirs = F.col("geom") if other == "geom" \
+        else pt(F.lit(0.0), F.lit(0.0))
+    want = spark.table("nan_pts").select(
+        "id", get_udf("ST_Distance")(mine, theirs).alias("d"),
+        get_udf("ST_DistanceSphere")(mine, theirs).alias("ds"),
+        get_udf("ST_DWithin")(mine, theirs, F.lit(1e9)).alias("dw"),
+        get_udf("ST_X")(mine).alias("gx"), get_udf("ST_Y")(mine).alias("gy"))
+    cols = ["id"] + list(calls)
+    got, exp = _rows_nullsafe(df, cols), _rows_nullsafe(want, cols)
+    assert [r[:1] + r[3:] for r in got] == [r[:1] + r[3:] for r in exp]
+    for g, e in zip(got, exp):
+        assert g[1][0] == e[1][0] and g[1][1] == pytest.approx(e[1][1])
+        assert g[2][0] == e[2][0] and g[2][1] == pytest.approx(e[2][1])
+    assert sum(r[1][0] for r in got) == 4      # the four NULL points
+
+
+@pytest.mark.parametrize("q", [
+    "WITH t AS (SELECT geom FROM nan_pts) SELECT ST_X(geom) AS gx FROM t",
+    "SELECT ST_X(geom) AS gx FROM (SELECT geom FROM nan_pts) d",
+    "SELECT ST_X(geom) AS gx FROM (SELECT id, geom FROM nan_pts) d "
+    "WHERE d.id IN (SELECT id FROM nan_pts WHERE ST_Y(geom) > 1.0)",
+])
+def test_certified_column_binds_through_its_block(spark, q):
+    """A certified column named outside the block that reads the
+    certified relation (through a CTE, a derived table, or beside an
+    ``IN`` subquery over it) answers like vanilla instead of naming the
+    relation where it is not in scope."""
+    _nan_points(spark)
+    got = _rows(spark.sql(q), ["gx"])
+    assert got == _rows(_vanilla(spark, q), ["gx"]) and len(got) == 6
+
+
+@pytest.mark.parametrize("call", [
+    "ST_Distance(ST_Point(a.x, a.y), ST_Point(b.x, b.y))",
+    "ST_Area(ST_Buffer(ST_Point(a.x, a.y), 1.0, 'quad_segs=2'))"])
+def test_call_edits_keep_the_texts_hints(spark, call):
+    """The call edits splice the original text, so its comments and
+    hints stay: ``/*+ SHUFFLE_MERGE(b) */`` still plans a SortMergeJoin
+    over relations small enough to broadcast."""
+    spark.sql("CREATE OR REPLACE TEMP VIEW hint_pts AS SELECT id, "
+              "CAST(id AS DOUBLE) AS x, 1.0D AS y FROM range(20)")
+    q = (f"SELECT /*+ SHUFFLE_MERGE(b) */ a.id, {call} AS v "
+         f"FROM hint_pts a JOIN hint_pts b ON a.id = b.id")
+    df = spark.sql(q)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan
+    assert len(df.collect()) == 20
+
+
+def test_cte_named_like_a_catalog_view_is_the_cte(spark):
+    """A CTE that shares its name with a catalog view is what the query
+    reads there: the spatial join over it answers like vanilla instead
+    of joining the catalog view."""
+    _memo_points(spark, "cte_shadowed")
+    _memo_points(spark, "cte_source")
+    _memo_box(spark, 0, "cte_box")
+    q = ("WITH cte_shadowed AS (SELECT * FROM cte_source WHERE id >= 2) "
+         "SELECT p.id FROM cte_shadowed p JOIN cte_box b "
+         "ON ST_Intersects(p.geom, b.geom)")
+    assert _ids(spark.sql(q)) == _ids(_vanilla(spark, q)) == [2]
